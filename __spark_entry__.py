@@ -14,7 +14,7 @@ queries()     — every implemented operator from SURVEY.md §2 (+ §2.5
                 MapReduce-face q80-q84, streaming
                 q90-q99+q122+q124+q136+q138+q143+q149+q159+q163+q171+q205+q207,
                 graph/iterative q146+q157-q158+q168-q169+q172+q175-q176,
-                lakehouse (minitable) q162-q163+q166-q167+q170+q173+
+                lakehouse (minitable) q162-q163+q167+q170+q173+
                 q177-q203+q205-q207 (time travel, MERGE incl. schema
                 evolution, UPDATE, DELETE incl. NULL-safe tiers,
                 OPTIMIZE/ZORDER verbs with recorded cluster keys,
@@ -27,13 +27,10 @@ queries()     — every implemented operator from SURVEY.md §2 (+ §2.5
                 ROW TRACKING, shallow clone), storage/scale
                 q110+q112-q114+q117+q121+q128+q131-q135+q137+
                 q141-q142+q144+q148+q150-q153+q155-q156+q160-q161.
-                Round 11 retired ten near-duplicates into strictly-more-
-                general survivors (q42-q43, q51, q53, q56, q105, q130,
-                q164-q165, q174) — their functions and oracles live on in
-                the package and their assertions run in
-                tests/test_retired_parity.py.  q204 was DELETED outright:
-                its explicit-CDF streaming path and assertions moved into
-                q205's replace_where step.
+                Retired near-duplicates are out of the registry; q43,
+                q53, q105 and q130 stay in the package as machinery for
+                their survivors (assertions in
+                tests/test_retired_parity.py), the rest were deleted.
 oracle_sql()  — DuckDB twins for ALL of the above, including q104 since
                 round 11 (the library MinHashLSH hash family re-derived
                 from its seed via java.util.Random's LCG + straight-line

@@ -63,16 +63,38 @@ def test_gate_rotation_orders_reworked_then_stalest():
     re-verification."""
     from tinymr_spark.operators import (
         _REWORKED_THIS_ROUND,
-        _VERIFIED_ROUND,
+        _verified_rounds,
         all_queries,
     )
 
     order = list(all_queries())
-    fresh = [n for n in order if n not in _VERIFIED_ROUND or n in _REWORKED_THIS_ROUND]
+    verified = _verified_rounds()
+    fresh = [n for n in order if n not in verified or n in _REWORKED_THIS_ROUND]
     # every fresh/reworked entry precedes every verified backlog entry
     assert order[: len(fresh)] == fresh
     # the backlog is non-decreasing in last-verified round
-    rounds = [_VERIFIED_ROUND[n] for n in order[len(fresh):]]
+    rounds = [verified[n] for n in order[len(fresh):]]
     assert rounds == sorted(rounds)
     # and every reworked name actually exists in the registry
     assert _REWORKED_THIS_ROUND <= set(order)
+
+
+def test_verified_rounds_derived_from_correctness_files(tmp_path):
+    """The rotation's last-verified round is the highest CORRECTNESS_rNN
+    whose entry hash-matched: a later failed check does not erase it, and
+    a name that never hash-matched stays unverified."""
+    import json
+
+    from tinymr_spark.operators import _verified_rounds
+
+    def entry(ok):
+        return {"rows_match": True, "schema_match": True, "hash_match": ok}
+
+    (tmp_path / "CORRECTNESS_r03.json").write_text(
+        json.dumps({"q01_a": entry(True), "q03_c": entry(True)})
+    )
+    (tmp_path / "CORRECTNESS_r05.json").write_text(
+        json.dumps({"q01_a": entry(False), "q02_b": entry(False), "q03_c": entry(True)})
+    )
+    (tmp_path / "CORRECTNESS_r05_c8.json").write_text(json.dumps({"q04_d": entry(True)}))
+    assert _verified_rounds(tmp_path) == {"q01_a": 3, "q03_c": 5}

@@ -1,37 +1,18 @@
-"""Round-11 registry consolidation: ten near-duplicate queries were
-retired from the driver-gated registry (their gate/bench slots were
-approaching the bench-line ladder's capacity), each superseded by a
-strictly-more-general survivor:
+"""Retired queries that stay in the package as machinery.
 
-    q42 minhash (r=1,b=8)      -> q45 banded minhash + q104 ML MinHashLSH
+Near-duplicate queries were retired from the driver-gated registry, each
+superseded by a strictly-more-general survivor.  Four of them remain in
+the package because their survivors build on them:
+
     q43 simhash                -> q47 banded simhash (reuses q43's signature)
-    q51 grid-bucketed ANN      -> q54 IVF (learned buckets) + q53 machinery
     q53 LSH buckets            -> q55 LSH dedup + q159 streaming sign-buckets
-    q56 normalize+quantize     -> q147 int8 quantization gate + q58/q59 PQ
     q105 small-file compaction -> q173 OPTIMIZE binpack (the lakehouse verb)
     q130 z-order layout        -> q200 ZORDER verb + q203 clustered compaction
-    q164 append change feed    -> q181 change feed across DML
-    q165 append incremental MV -> q182 incremental MV through update/delete
-    q174 OPTIMIZE ZORDER       -> q200 zorder verb (where-scoped, recorded keys)
-    (q204 explicit-CDF streaming was absorbed INTO q205's history, not here)
 
-Round 12 added one more:
-
-    q166 merge upsert          -> q208 conditional merge (update_where +
-                                  delete clause + CDF; plain upsert is its
-                                  degenerate no-condition case)
-
-Round 13 added one more:
-
-    q191 NULL-scrub delete     -> q178 delete NULL-safety tiers (same
-                                  three-tier delete semantics) + q209
-                                  column defaults (the new DDL-era delete
-                                  coverage took its gate/bench slot)
-
-The functions and their DuckDB oracles remain in the package (several
-are load-bearing machinery for the survivors); THIS file keeps every
-retired query's oracle assertion running in CI — out of the driver gate
-and the bench line, never out of the test suite.
+THIS file keeps their oracle assertions running in CI — out of the
+driver gate and the bench line, never out of the test suite.  The other
+retired names were deleted outright; the registry test below pins that
+none of them comes back.
 """
 
 from __future__ import annotations
@@ -53,28 +34,28 @@ def _retired():
     from tinymr_spark.operators import dedup, scale, similarity
 
     return {
-        "q42_dedup_minhash": (dedup.q42_dedup_minhash, dedup.ORACLE_Q42),
         "q43_dedup_simhash": (dedup.q43_dedup_simhash, dedup.ORACLE_Q43),
-        "q51_ann_bucketed": (similarity.q51_ann_bucketed, similarity.ORACLE_Q51),
         "q53_lsh_buckets": (similarity.q53_lsh_buckets, similarity.ORACLE_Q53),
-        "q56_normalize_quantize": (
-            similarity.q56_normalize_quantize, similarity.ORACLE_Q56,
-        ),
         "q105_compact_small_files": (
             scale.q105_compact_small_files, scale.ORACLE_Q105,
         ),
         "q130_zorder_layout": (scale.q130_zorder_layout, scale.ORACLE_Q130),
-        "q164_change_feed": (scale.q164_change_feed, scale.ORACLE_Q164),
-        "q165_incremental_mv": (scale.q165_incremental_mv, scale.ORACLE_Q165),
-        "q174_optimize_zorder": (scale.q174_optimize_zorder, scale.ORACLE_Q174),
-        "q166_merge_upsert": (scale.q166_merge_upsert, scale.ORACLE_Q166),
-        "q191_null_scrub_delete": (
-            scale.q191_null_scrub_delete, scale.ORACLE_Q191,
-        ),
     }
 
 
 RETIRED = _retired()
+
+DELETED = (
+    "q42_dedup_minhash",
+    "q51_ann_bucketed",
+    "q56_normalize_quantize",
+    "q164_change_feed",
+    "q165_incremental_mv",
+    "q166_merge_upsert",
+    "q174_optimize_zorder",
+    "q191_null_scrub_delete",
+    "q204_stream_change_feed",
+)
 
 
 @pytest.mark.parametrize("name", sorted(RETIRED))
@@ -97,5 +78,5 @@ def test_retired_names_absent_from_registry():
     from tinymr_spark.operators import all_oracles, all_queries
 
     qs, oracles = set(all_queries()), set(all_oracles())
-    for name in list(RETIRED) + ["q204_stream_change_feed"]:
+    for name in list(RETIRED) + list(DELETED):
         assert name not in qs and name not in oracles, name

@@ -7,385 +7,44 @@ ML-randomized) and get the driver's weaker rows-only check.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Queries the driver's capped 50-entry correctness gate has hash-verified,
-# keyed by the MOST RECENT round that verified them (union of the
-# CORRECTNESS_r01-r13 keys).  The round number drives the backlog
-# rotation in all_queries(): least-recently-verified queries re-enter
-# the gate first, so every query is periodically re-confirmed instead of
-# q01-q31 soaking up the spare slots each round.  q104 got its first
-# VALUE-level driver verification in round 11 (the SQL oracle re-derives
-# the library's MinHashLSH hash family); earlier r4/r9 rows were
-# rows-only.
-def _verified_rounds() -> dict[str, int]:
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+
+
+def _verified_rounds(root: Path = _REPO_ROOT) -> dict[str, int]:
+    """Queries the driver's capped 50-entry correctness gate has
+    hash-verified, keyed by the MOST RECENT round that verified them: the
+    highest N of any ``CORRECTNESS_rNN.json`` under `root` whose entry
+    for the name has ``"hash_match": true`` (a later failed or rows-only
+    check does not erase an earlier verification).  The round number
+    drives the backlog rotation in all_queries(): least-recently-verified
+    queries re-enter the gate first, so every query is periodically
+    re-confirmed.  An install without the CORRECTNESS files sees every
+    query as unverified and keeps registry order."""
     rounds: dict[str, int] = {}
-    for rnd, entries in _VERIFIED_BY_ROUND:
-        for i, name in entries:
-            rounds[f"q{i:02d}_{name}"] = rnd
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for name, entry in json.loads(path.read_text()).items():
+            if isinstance(entry, dict) and entry.get("hash_match") is True:
+                rounds[name] = max(rounds.get(name, 0), rnd)
     return rounds
 
-
-_VERIFIED_BY_ROUND: tuple[tuple[int, tuple[tuple[int, str], ...]], ...] = (
-    (2, (
-        # --- rounds 1-2 (CORRECTNESS_r01/r02) ---
-        (1, "pricing_summary"), (2, "filter_project"), (3, "join_broadcast"),
-        (4, "star_join_revenue"), (5, "semi_join"), (6, "anti_join"),
-        (7, "global_topk"), (8, "window_rank"), (9, "window_running_sum"),
-        (10, "rollup"), (11, "cube"), (12, "grouping_sets"),
-        (13, "distinct_agg"), (14, "set_ops"), (15, "scalar_functions"),
-        (16, "case_buckets"), (17, "agg_stats"), (18, "exists_subquery"),
-        (19, "having_scalar_subquery"), (20, "segment_order_value"),
-        (21, "percentiles"), (22, "analytics_battery"),
-        (25, "array_functions"), (26, "salted_agg"), (27, "stratified_sample"),
-        (28, "full_outer_join"), (29, "unpivot"), (30, "wordcount"),
-        (31, "top_words"), (32, "token_stats"), (33, "quality_score"),
-        (34, "lang_id"), (35, "fingerprint"), (36, "bigram_freq"),
-        (37, "bpe_token_count"), (38, "tfidf"), (39, "prep_pipeline"),
-        (40, "dedup_exact"), (41, "dedup_jaccard"), (42, "dedup_minhash"),
-        (43, "dedup_simhash"), (44, "dedup_embedding"),
-        (45, "dedup_minhash_banded"), (85, "sql_interface"),
-        (86, "sentence_stats"), (87, "repetition_signals"),
-        (88, "decontaminate"), (89, "monthly_gapfill"),
-    )),
-    (3, (
-        # --- round 3 (CORRECTNESS_r03) ---
-        (23, "window_range_frame"),
-        (46, "dedup_groups"), (47, "dedup_simhash_banded"),
-        (48, "dedup_cdc_chunks"), (49, "corpus_pipeline"),
-        (50, "ann_bruteforce"), (51, "ann_bucketed"),
-        (52, "label_centroids"), (53, "lsh_buckets"), (54, "ann_ivf"),
-        (55, "embedding_lsh_dedup"), (56, "normalize_quantize"),
-        (57, "kmeans_iteration"), (58, "ann_pq_adc"),
-        (59, "product_quantization"), (60, "multimodal_manifest"),
-        (61, "multimodal_decode"), (62, "multimodal_frames"),
-        (63, "pandas_udf_scalar"), (64, "apply_in_pandas"),
-        (65, "multimodal_resize"), (66, "payload_features"),
-        (67, "audio_frame_energy"), (68, "phash_dedup"), (69, "scene_cuts"),
-        (70, "tumbling_window"), (71, "sliding_window"), (72, "sessionize"),
-        (73, "pivot"), (74, "json_extract"), (75, "asof_join"),
-        (76, "interval_join"), (77, "funnel"), (78, "retention"),
-        (79, "variant_props"), (80, "mr_wordcount"),
-        (81, "mr_distinct_sources"), (82, "mr_chain_relational"),
-        (83, "mr_secondary_sort"), (84, "mr_overloaded_combine"),
-        (90, "stream_tumbling"), (91, "stream_sliding"),
-        (92, "stream_stateful"), (93, "stream_session"),
-        (94, "stream_static_join"), (95, "stream_dedup"),
-        (96, "stream_sink_parquet"), (97, "stream_incremental"),
-        (98, "stream_stream_join"), (99, "stream_dedup_bounded"),
-    )),
-    (4, (
-        # --- round 4 (CORRECTNESS_r04) ---
-        (24, "approx_distinct"), (100, "pandas_udaf"),
-        (101, "sequence_packing"), (102, "domain_mixture"),
-        (103, "vocab_encode"), (104, "ml_minhash_lsh"),
-        (105, "compact_small_files"), (106, "substring_dedup"),
-        (107, "minhash_merge"), (108, "scd2_history"),
-        (109, "unigram_logprob"), (110, "salted_skew_join"),
-        (111, "embedding_dim_stats"), (112, "hll_sketch_merge"),
-        (113, "bucketed_join"), (114, "partition_pruned_scan"),
-        (115, "global_range_join"), (116, "train_val_split"),
-        (117, "table_fingerprint"), (118, "group_representatives"),
-        (119, "cogroup_asof"), (120, "python_udtf"),
-        (121, "python_datasource"), (122, "stream_upsert_sink"),
-    )),
-    (5, (
-        # --- round 5 (CORRECTNESS_r05) ---
-        (123, "incremental_dedup"), (124, "stream_delta_compact"),
-        (125, "bm25_topk"), (126, "shard_manifest"),
-        (127, "contamination_matrix"), (128, "observe_metrics"),
-        (129, "map_in_arrow"), (130, "zorder_layout"),
-        (131, "histogram_quantiles"), (132, "countmin_sketch"),
-        (133, "snapshot_diff"), (134, "bloom_semi_join"),
-        (135, "orc_source"), (136, "python_stream_source"),
-        (137, "xml_source"), (138, "statestore_reader"),
-        (139, "sql_udf"), (140, "incremental_embedding_dedup"),
-    )),
-    (6, (
-        # --- round 6 (CORRECTNESS_r06): 16 new + 34 backlog re-confirms ---
-        (141, "avro_source"), (142, "aqe_skew_join"),
-        (143, "python_stream_sink"), (144, "pushdown_datasource"),
-        (145, "incremental_bm25"), (146, "pagerank"),
-        (147, "hybrid_rrf"), (148, "quality_constraints"),
-        (149, "stream_index_probe"), (150, "skew_profile"),
-        (151, "schema_evolution"), (152, "outlier_quarantine"),
-        (153, "psi_drift"), (154, "ohlc_resample"),
-        (155, "corrupt_ingest"), (156, "federated_join"),
-        (1, "pricing_summary"), (2, "filter_project"),
-        (3, "join_broadcast"), (4, "star_join_revenue"),
-        (5, "semi_join"), (6, "anti_join"), (7, "global_topk"),
-        (8, "window_rank"), (9, "window_running_sum"), (10, "rollup"),
-        (11, "cube"), (12, "grouping_sets"), (13, "distinct_agg"),
-        (14, "set_ops"), (15, "scalar_functions"), (16, "case_buckets"),
-        (17, "agg_stats"), (18, "exists_subquery"),
-        (19, "having_scalar_subquery"), (20, "segment_order_value"),
-        (21, "percentiles"), (22, "analytics_battery"),
-        (23, "window_range_frame"), (24, "approx_distinct"),
-        (25, "array_functions"), (26, "salted_agg"),
-        (27, "stratified_sample"), (28, "full_outer_join"),
-        (29, "unpivot"), (30, "wordcount"), (31, "top_words"),
-        (85, "sql_interface"), (89, "monthly_gapfill"), (139, "sql_udf"),
-    )),
-    (7, (
-        # --- round 7 (CORRECTNESS_r07): 21 new + 29 stalest re-confirms ---
-        (32, "token_stats"), (33, "quality_score"),
-        (34, "lang_id"), (35, "fingerprint"),
-        (36, "bigram_freq"), (37, "bpe_token_count"),
-        (38, "tfidf"), (39, "prep_pipeline"),
-        (40, "dedup_exact"), (41, "dedup_jaccard"),
-        (42, "dedup_minhash"), (43, "dedup_simhash"),
-        (44, "dedup_embedding"), (45, "dedup_minhash_banded"),
-        (46, "dedup_groups"), (47, "dedup_simhash_banded"),
-        (48, "dedup_cdc_chunks"), (49, "corpus_pipeline"),
-        (50, "ann_bruteforce"), (51, "ann_bucketed"),
-        (52, "label_centroids"), (53, "lsh_buckets"),
-        (54, "ann_ivf"), (55, "embedding_lsh_dedup"),
-        (56, "normalize_quantize"), (57, "kmeans_iteration"),
-        (86, "sentence_stats"), (87, "repetition_signals"),
-        (88, "decontaminate"), (157, "semdedup"),
-        (158, "bpe_merges"), (159, "stream_semantic_dedup"),
-        (160, "weighted_sample"), (161, "embedding_covariance"),
-        (162, "time_travel"), (163, "stream_lakehouse_ingest"),
-        (164, "change_feed"), (165, "incremental_mv"),
-        (166, "merge_upsert"), (167, "data_skipping"),
-        (168, "triangle_count"), (169, "bpe_encode"),
-        (170, "bloom_skipping"), (171, "stream_table_source"),
-        (172, "kcore_peel"), (173, "optimize_binpack"),
-        (174, "optimize_zorder"), (175, "linear_regression"),
-        (176, "grouped_regression"), (177, "delete_where"),
-    )),
-    (8, (
-        # --- round 8 (CORRECTNESS_r08): 10 new + 40 stalest re-confirms ---
-        (58, "ann_pq_adc"), (59, "product_quantization"),
-        (60, "multimodal_manifest"), (61, "multimodal_decode"),
-        (62, "multimodal_frames"), (63, "pandas_udf_scalar"),
-        (64, "apply_in_pandas"), (65, "multimodal_resize"),
-        (66, "payload_features"), (67, "audio_frame_energy"),
-        (68, "phash_dedup"), (69, "scene_cuts"),
-        (70, "tumbling_window"), (71, "sliding_window"),
-        (72, "sessionize"), (73, "pivot"),
-        (74, "json_extract"), (75, "asof_join"),
-        (76, "interval_join"), (77, "funnel"),
-        (78, "retention"), (79, "variant_props"),
-        (80, "mr_wordcount"), (81, "mr_distinct_sources"),
-        (82, "mr_chain_relational"), (83, "mr_secondary_sort"),
-        (84, "mr_overloaded_combine"), (90, "stream_tumbling"),
-        (91, "stream_sliding"), (92, "stream_stateful"),
-        (93, "stream_session"), (94, "stream_static_join"),
-        (95, "stream_dedup"), (96, "stream_sink_parquet"),
-        (97, "stream_incremental"), (98, "stream_stream_join"),
-        (99, "stream_dedup_bounded"), (101, "sequence_packing"),
-        (102, "domain_mixture"), (103, "vocab_encode"),
-        (178, "delete_null_safety"), (179, "log_checkpoint"),
-        (180, "table_evolution"), (181, "change_feed_dml"),
-        (182, "incremental_mv_dml"), (183, "restore_version"),
-        (184, "deletion_vectors"), (185, "check_constraints"),
-        (186, "shallow_clone"), (187, "rag_chunking"),
-    )),
-    (9, (
-        # --- round 9 (CORRECTNESS_r09): 9 new + 41 stalest re-confirms ---
-        (195, "stream_partitioned_ingest"), (196, "stream_expectations"),
-        (188, "update_where"), (189, "partition_retention"),
-        (190, "column_mapping"), (191, "null_scrub_delete"),
-        (192, "merge_accumulate"), (193, "table_history"),
-        (194, "convert_in_place"), (109, "unigram_logprob"),
-        (116, "train_val_split"),
-        (106, "substring_dedup"), (107, "minhash_merge"),
-        (118, "group_representatives"), (111, "embedding_dim_stats"),
-        (108, "scd2_history"), (115, "global_range_join"),
-        (122, "stream_upsert_sink"), (100, "pandas_udaf"),
-        (119, "cogroup_asof"), (120, "python_udtf"),
-        (105, "compact_small_files"), (110, "salted_skew_join"),
-        (112, "hll_sketch_merge"), (113, "bucketed_join"),
-        (114, "partition_pruned_scan"), (117, "table_fingerprint"),
-        (121, "python_datasource"), (125, "bm25_topk"),
-        (126, "shard_manifest"), (123, "incremental_dedup"),
-        (127, "contamination_matrix"), (140, "incremental_embedding_dedup"),
-        (124, "stream_delta_compact"), (136, "python_stream_source"),
-        (138, "statestore_reader"), (129, "map_in_arrow"),
-        (128, "observe_metrics"), (130, "zorder_layout"),
-        (131, "histogram_quantiles"), (132, "countmin_sketch"),
-        (133, "snapshot_diff"), (134, "bloom_semi_join"),
-        (135, "orc_source"), (137, "xml_source"),
-        (1, "pricing_summary"), (2, "filter_project"),
-        (3, "join_broadcast"), (4, "star_join_revenue"),
-    )),
-    (10, (
-        # --- round 10 (CORRECTNESS_r10): 8 new + 42 stalest re-confirms ---
-        (197, "lakehouse_pipeline"), (198, "generated_columns"),
-        (199, "identity_columns"), (200, "zorder_verb"),
-        (201, "replace_where"), (202, "merge_schema_evolution"),
-        (203, "clustered_compaction"), (204, "stream_change_feed"),
-        (5, "semi_join"), (6, "anti_join"), (7, "global_topk"),
-        (8, "window_rank"), (9, "window_running_sum"), (10, "rollup"),
-        (11, "cube"), (12, "grouping_sets"), (13, "distinct_agg"),
-        (14, "set_ops"), (15, "scalar_functions"), (16, "case_buckets"),
-        (17, "agg_stats"), (18, "exists_subquery"),
-        (19, "having_scalar_subquery"), (20, "segment_order_value"),
-        (21, "percentiles"), (22, "analytics_battery"),
-        (23, "window_range_frame"), (24, "approx_distinct"),
-        (25, "array_functions"), (26, "salted_agg"),
-        (27, "stratified_sample"), (28, "full_outer_join"),
-        (29, "unpivot"), (85, "sql_interface"), (89, "monthly_gapfill"),
-        (139, "sql_udf"), (30, "wordcount"), (31, "top_words"),
-        (145, "incremental_bm25"), (147, "hybrid_rrf"),
-        (154, "ohlc_resample"), (143, "python_stream_sink"),
-        (149, "stream_index_probe"), (141, "avro_source"),
-        (142, "aqe_skew_join"), (144, "pushdown_datasource"),
-        (148, "quality_constraints"), (150, "skew_profile"),
-        (151, "schema_evolution"), (152, "outlier_quarantine"),
-    )),
-    (11, (
-        # --- round 11 (CORRECTNESS_r11): 3 new + q104 value-oracle + 46 re-confirms ---
-        (205, "stream_cdc_full_dml"), (206, "row_tracking"),
-        (207, "stream_admission"), (104, "ml_minhash_lsh"),
-        (153, "psi_drift"), (155, "corrupt_ingest"), (156, "federated_join"),
-        (146, "pagerank"), (32, "token_stats"), (33, "quality_score"),
-        (34, "lang_id"), (35, "fingerprint"), (36, "bigram_freq"),
-        (37, "bpe_token_count"), (38, "tfidf"), (39, "prep_pipeline"),
-        (86, "sentence_stats"), (87, "repetition_signals"),
-        (88, "decontaminate"), (158, "bpe_merges"), (169, "bpe_encode"),
-        (40, "dedup_exact"), (41, "dedup_jaccard"), (44, "dedup_embedding"),
-        (45, "dedup_minhash_banded"), (46, "dedup_groups"),
-        (49, "corpus_pipeline"), (47, "dedup_simhash_banded"),
-        (48, "dedup_cdc_chunks"), (157, "semdedup"), (50, "ann_bruteforce"),
-        (52, "label_centroids"), (54, "ann_ivf"), (55, "embedding_lsh_dedup"),
-        (57, "kmeans_iteration"), (161, "embedding_covariance"),
-        (159, "stream_semantic_dedup"), (163, "stream_lakehouse_ingest"),
-        (171, "stream_table_source"), (160, "weighted_sample"),
-        (162, "time_travel"), (166, "merge_upsert"), (167, "data_skipping"),
-        (170, "bloom_skipping"), (173, "optimize_binpack"),
-        (175, "linear_regression"), (176, "grouped_regression"),
-        (177, "delete_where"), (168, "triangle_count"), (172, "kcore_peel"),
-    )),
-    (12, (
-        # --- round 12 (CORRECTNESS_r12): q208 new + 49 stalest re-confirms ---
-        (208, "merge_conditional"), (101, "sequence_packing"),
-        (102, "domain_mixture"), (103, "vocab_encode"),
-        (187, "rag_chunking"), (58, "ann_pq_adc"),
-        (59, "product_quantization"), (60, "multimodal_manifest"),
-        (61, "multimodal_decode"), (62, "multimodal_frames"),
-        (65, "multimodal_resize"), (66, "payload_features"),
-        (67, "audio_frame_energy"), (68, "phash_dedup"),
-        (69, "scene_cuts"), (70, "tumbling_window"),
-        (71, "sliding_window"), (72, "sessionize"),
-        (73, "pivot"), (74, "json_extract"), (75, "asof_join"),
-        (76, "interval_join"), (77, "funnel"), (78, "retention"),
-        (79, "variant_props"), (80, "mr_wordcount"),
-        (81, "mr_distinct_sources"), (82, "mr_chain_relational"),
-        (83, "mr_secondary_sort"), (84, "mr_overloaded_combine"),
-        (90, "stream_tumbling"), (91, "stream_sliding"),
-        (92, "stream_stateful"), (93, "stream_session"),
-        (94, "stream_static_join"), (95, "stream_dedup"),
-        (96, "stream_sink_parquet"), (97, "stream_incremental"),
-        (98, "stream_stream_join"), (99, "stream_dedup_bounded"),
-        (63, "pandas_udf_scalar"), (64, "apply_in_pandas"),
-        (178, "delete_null_safety"), (179, "log_checkpoint"),
-        (180, "table_evolution"), (181, "change_feed_dml"),
-        (182, "incremental_mv_dml"), (183, "restore_version"),
-        (184, "deletion_vectors"), (185, "check_constraints"),
-    )),
-    (13, (
-        # --- round 13 (CORRECTNESS_r13): q209 new + q186 + 48 stalest re-confirms ---
-        (209, "column_defaults"), (186, "shallow_clone"),
-        (1, "pricing_summary"), (2, "filter_project"),
-        (3, "join_broadcast"), (4, "star_join_revenue"),
-        (109, "unigram_logprob"), (116, "train_val_split"),
-        (125, "bm25_topk"), (126, "shard_manifest"),
-        (106, "substring_dedup"), (107, "minhash_merge"),
-        (118, "group_representatives"), (123, "incremental_dedup"),
-        (127, "contamination_matrix"), (111, "embedding_dim_stats"),
-        (140, "incremental_embedding_dedup"), (108, "scd2_history"),
-        (115, "global_range_join"), (122, "stream_upsert_sink"),
-        (124, "stream_delta_compact"), (136, "python_stream_source"),
-        (195, "stream_partitioned_ingest"), (196, "stream_expectations"),
-        (138, "statestore_reader"), (100, "pandas_udaf"),
-        (119, "cogroup_asof"), (120, "python_udtf"),
-        (129, "map_in_arrow"), (110, "salted_skew_join"),
-        (112, "hll_sketch_merge"), (113, "bucketed_join"),
-        (114, "partition_pruned_scan"), (117, "table_fingerprint"),
-        (121, "python_datasource"), (128, "observe_metrics"),
-        (131, "histogram_quantiles"), (132, "countmin_sketch"),
-        (133, "snapshot_diff"), (134, "bloom_semi_join"),
-        (135, "orc_source"), (137, "xml_source"),
-        (188, "update_where"), (189, "partition_retention"),
-        (190, "column_mapping"), (192, "merge_accumulate"),
-        (193, "table_history"), (194, "convert_in_place"),
-        (5, "semi_join"), (6, "anti_join"),
-    )),
-    (14, (
-        # --- round 14 (CORRECTNESS_r14): 3 semantics-reworked (q41 hot-shingle
-        # cap, q61/q65 real BMP decode) + the 47 stalest re-confirms ---
-        (41, "dedup_jaccard"), (61, "multimodal_decode"),
-        (65, "multimodal_resize"), (7, "global_topk"),
-        (8, "window_rank"), (9, "window_running_sum"),
-        (10, "rollup"), (11, "cube"),
-        (12, "grouping_sets"), (13, "distinct_agg"),
-        (14, "set_ops"), (15, "scalar_functions"),
-        (16, "case_buckets"), (17, "agg_stats"),
-        (18, "exists_subquery"), (19, "having_scalar_subquery"),
-        (20, "segment_order_value"), (21, "percentiles"),
-        (22, "analytics_battery"), (23, "window_range_frame"),
-        (24, "approx_distinct"), (25, "array_functions"),
-        (26, "salted_agg"), (27, "stratified_sample"),
-        (28, "full_outer_join"), (29, "unpivot"),
-        (85, "sql_interface"), (89, "monthly_gapfill"),
-        (139, "sql_udf"), (30, "wordcount"),
-        (31, "top_words"), (145, "incremental_bm25"),
-        (147, "hybrid_rrf"), (154, "ohlc_resample"),
-        (143, "python_stream_sink"), (149, "stream_index_probe"),
-        (197, "lakehouse_pipeline"), (141, "avro_source"),
-        (142, "aqe_skew_join"), (144, "pushdown_datasource"),
-        (148, "quality_constraints"), (150, "skew_profile"),
-        (151, "schema_evolution"), (152, "outlier_quarantine"),
-        (198, "generated_columns"), (199, "identity_columns"),
-        (200, "zorder_verb"), (201, "replace_where"),
-        (202, "merge_schema_evolution"), (203, "clustered_compaction"),
-    )),
-    (15, (
-        # --- round 15 (CORRECTNESS_r15): q68/q69 reworked-confirmed + the
-        # 48 stalest re-confirms ---
-        (68, "phash_dedup"), (69, "scene_cuts"),
-        (32, "token_stats"), (33, "quality_score"),
-        (34, "lang_id"), (35, "fingerprint"),
-        (36, "bigram_freq"), (37, "bpe_token_count"),
-        (38, "tfidf"), (39, "prep_pipeline"),
-        (86, "sentence_stats"), (87, "repetition_signals"),
-        (88, "decontaminate"), (158, "bpe_merges"),
-        (169, "bpe_encode"), (40, "dedup_exact"),
-        (44, "dedup_embedding"), (45, "dedup_minhash_banded"),
-        (46, "dedup_groups"), (49, "corpus_pipeline"),
-        (47, "dedup_simhash_banded"), (48, "dedup_cdc_chunks"),
-        (104, "ml_minhash_lsh"), (157, "semdedup"),
-        (50, "ann_bruteforce"), (52, "label_centroids"),
-        (54, "ann_ivf"), (55, "embedding_lsh_dedup"),
-        (57, "kmeans_iteration"), (161, "embedding_covariance"),
-        (159, "stream_semantic_dedup"), (163, "stream_lakehouse_ingest"),
-        (171, "stream_table_source"), (153, "psi_drift"),
-        (155, "corrupt_ingest"), (156, "federated_join"),
-        (160, "weighted_sample"), (162, "time_travel"),
-        (167, "data_skipping"), (170, "bloom_skipping"),
-        (173, "optimize_binpack"), (175, "linear_regression"),
-        (176, "grouped_regression"), (177, "delete_where"),
-        (205, "stream_cdc_full_dml"), (206, "row_tracking"),
-        (207, "stream_admission"), (146, "pagerank"),
-        (168, "triangle_count"), (172, "kcore_peel"),
-    )),
-)
-
-_VERIFIED_ROUND = _verified_rounds()
 
 # Queries whose SEMANTICS changed this round: prior driver verification
 # no longer covers the current behavior, so they re-enter the gate ahead
 # of the staleness backlog (same slot as brand-new queries).  Clear this
 # set after the round's CORRECTNESS file confirms them.
-# r16: empty — r15's reworked q68/q69 were confirmed by CORRECTNESS_r15
-# (now folded into _VERIFIED_BY_ROUND above), and optimization rounds
-# change no query semantics.
 _REWORKED_THIS_ROUND: frozenset[str] = frozenset()
 
 
@@ -419,13 +78,14 @@ def all_queries() -> dict[str, QueryFn]:
     # (tests/test_oracle_parity.py).
     order = list(merged)
     idx = {n: i for i, n in enumerate(order)}
+    verified = _verified_rounds()
 
     def _unverified(n: str) -> bool:
-        return n not in _VERIFIED_ROUND or n in _REWORKED_THIS_ROUND
+        return n not in verified or n in _REWORKED_THIS_ROUND
 
     backlog = sorted(
         (n for n in order if not _unverified(n)),
-        key=lambda n: (_VERIFIED_ROUND[n], idx[n]),
+        key=lambda n: (verified[n], idx[n]),
     )
     front = {n: merged[n] for n in order if _unverified(n)}
     for n in backlog:

@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 from tinymr_spark.operators.text import ngrams, with_tokens
 from tinymr_spark.sources import load_table, spread_scan
 
-N_MINHASH = 8  # minhash signature length (b=8 bands of r=1)
-
 HASH_P = 2147483647  # 2^31-1 — modulus of the universal hash family
 
 # Fixed (a, b) pairs for the per-seed universal hashes (a*h + b) % HASH_P.
@@ -38,14 +36,6 @@ MINHASH_SEEDS = [
     (747796405, 1185372425),
     (1103527639, 54321),
 ]
-
-
-def _shingles(spark, sf_dir, n=3):
-    """Distinct (doc_id, shingle) pairs — the inverted-index input."""
-    docs = with_tokens(load_table(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id", F.explode(F.array_distinct(ngrams(F.col("toks"), n))).alias("sh")
-    )
 
 
 def _hashed_shingles(spark, sf_dir, n=3, docs=None):
@@ -191,24 +181,20 @@ def q41_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate size-lookup join is needed.
 
     Hot shingles (df > HOT_SHINGLE_DF_CAP) are removed first via a
-    df-aggregate and a broadcast ANTI join.  Plan shape (pinned by
-    tests/test_scale_patterns.py::test_q41_plan_shares_one_index_exchange):
-    the (doc_id, n_sh, hm) index is tokenized, exchanged by hm, and
-    localCheckpoint-materialized ONCE; the df branch, the anti join, and
-    both self-join sides all read that one materialized table.  The
-    checkpoint preserves the exchange's hashpartitioning(hm) (LogicalRDD
-    carries outputPartitioning), so the self-join and the df groupBy need
-    NO further exchange.  Until r16 the df branch was its own text-only
-    corpus scan — a full second tokenize+md5 pass whose output AQE then
-    discarded at sf0.1 (empty hot set folds the anti join away AFTER the
-    branch's stages ran); deriving it from the index exchange without the
-    checkpoint does not work, because column pruning rewrites the df
-    copy's exchange child to hm-only and de-canonicalizes the reuse (the
-    q38/q106 failure mode).  Net: ONE linear scan, one index exchange
-    (materialized), one pair-agg exchange, the hot survivors broadcast
-    (boilerplate only — tiny by construction), and the worst join bucket
-    hard-capped — sub-quadratic on a skewed 100 TB corpus by
-    construction.
+    df-aggregate and a broadcast ANTI join.  Plan shape as built (pinned
+    by tests/test_scale_patterns.py::test_q41_plan_shares_one_index_exchange;
+    plans/r16/q41_executed.txt):
+    the (doc_id, n_sh, hm) index is tokenized and localCheckpoint-ed
+    UNPARTITIONED — the checkpoint job is map-side only (scan, tokenize,
+    explode, hash; zero shuffles), so the result plan holds no FileScan
+    and the corpus is tokenized once.  Three exchanges follow, all over
+    the materialized index: the df-agg exchange (partial (hm, count)
+    rows; the hot survivors broadcast into the anti join — tiny by
+    construction), the self-join's hm exchange, which the b side REUSES
+    (ReusedExchange — the index is shuffled once, not twice), and the
+    pair-agg exchange on (doc_a, doc_b).  The worst join bucket is
+    hard-capped by HOT_SHINGLE_DF_CAP, so the join stays sub-quadratic on
+    a skewed 100 TB corpus by construction.
 
     The ``shuffle_hash`` hint matters: left alone, Catalyst broadcasts one
     side (the subtree is under the 10 MB threshold), which COMPUTES THE
@@ -216,7 +202,7 @@ def q41_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     As a shuffled hash join, both sides are identical exchanges, AQE's
     ReuseExchange runs the pipeline once, and the pair aggregation reuses
     the join's output partitioning (measured 3.7s -> 1.9s at sf0.1; same
-    hint applied to every self-join in this family: q42/q45/q47/q55).  At
+    hint applied to every self-join in this family: q45/q47/q55).  At
     cluster scale the per-partition build side is bounded by
     n_shingle_rows / shuffle_partitions — size partitions accordingly;
     SHJ beats SMJ here because inverted-index buckets are tiny and
@@ -287,52 +273,6 @@ SELECT doc_a, doc_b, n_common,
 FROM common
 JOIN sizes sa ON doc_a = sa.doc_id
 JOIN sizes sb ON doc_b = sb.doc_id
-"""
-)
-
-
-# ---------------------------------------------------------------------------
-# MinHash + LSH: per-seed signature mh_i = min over shingles of
-# (a_i*hm + b_i) % (2^31-1); banding with r=1, b=8 (a pair is a candidate
-# if ANY signature position matches).  The per-seed mins are computed as 8
-# parallel aggregates in ONE groupBy, so the map-side partial aggregation
-# collapses the shuffle to one 72-byte row per doc — no n_shingles*n_seeds
-# explosion, and md5 runs once per shingle (inside _hashed_shingles).
-# ---------------------------------------------------------------------------
-def q42_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _minhash_signature(spark, sf_dir)
-    sigs = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)])).alias(
-            "seed", "mh"
-        ),
-    )
-    a = sigs.alias("a")
-    b = sigs.hint("shuffle_hash").alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.seed") == F.col("b.seed"))
-            & (F.col("a.mh") == F.col("b.mh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count("*").alias("n_bands"),
-            F.round(F.count("*") / N_MINHASH, 4).alias("est_jaccard"),
-        )
-    )
-
-
-ORACLE_Q42 = (
-    _SQL_HASHED
-    + f"""
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       COUNT(*) AS n_bands,
-       ROUND(CAST(COUNT(*) AS DOUBLE) / {N_MINHASH}, 4) AS est_jaccard
-FROM sigs a JOIN sigs b
-  ON a.seed = b.seed AND a.mh = b.mh AND a.doc_id < b.doc_id
-GROUP BY 1, 2
 """
 )
 
@@ -514,12 +454,13 @@ WHERE ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS 
 
 # ---------------------------------------------------------------------------
 # Banded MinHash (the canonical shingle -> minhash -> band -> bucket-join
-# pipeline): r=2 rows per band, b=4 bands over the same 8-seed signature
-# as q42.  A pair is a candidate iff ALL rows of some band match — tunable
-# precision/recall vs q42's r=1.  Band keys are md5 of the concatenated
-# row values, so the bucket join key is a fixed 32-byte string regardless
-# of r, and banding is pure per-row array math on the one-row-per-doc
-# signature (no extra shuffle beyond the signature groupBy).
+# pipeline): r=2 rows per band, b=4 bands over the 8-seed signature of
+# _minhash_signature.  A pair is a candidate iff ALL rows of some band
+# match — r tunes precision against recall.  Band keys are md5 of the
+# concatenated row values, so the bucket join key is a fixed 32-byte
+# string regardless of r, and banding is pure per-row array math on the
+# one-row-per-doc signature (no extra shuffle beyond the signature
+# groupBy).
 # ---------------------------------------------------------------------------
 BAND_R = 2
 BAND_B = 4
@@ -1133,7 +1074,7 @@ HAVING COUNT(DISTINCT doc_id) >= 2
 
 # ---------------------------------------------------------------------------
 # q104 — MinHash LSH via pyspark.ml (the library-native counterpart of the
-# hand-rolled q42/q45): shingles -> binary HashingTF vectors ->
+# hand-rolled q45): shingles -> binary HashingTF vectors ->
 # MinHashLSH.approxSimilarityJoin.  Deterministic under the fixed seed,
 # but the minhash functions are the library's own, so there is no SQL
 # oracle — the driver records the rows-only check and

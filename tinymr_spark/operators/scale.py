@@ -2246,212 +2246,6 @@ GROUP BY version
 
 
 # ---------------------------------------------------------------------------
-# q164 — CHANGE DATA FEED between versions of the q162 table: what a
-# downstream incremental consumer (index maintainer, replica, CDC
-# pipeline) reads instead of re-scanning the table.  For append commits
-# the log's added files ARE the delta, so the feed for (v2, v3] is a
-# parquet scan of exactly v3's files — O(delta), never O(table) — and
-# an intervening overwrite raises loudly instead of yielding a wrong
-# feed (minitable.changes; guard unit-tested).  The gate proves the
-# feed equals the committed slice exactly (v3 appended the
-# o_orderkey%3==2 partition of orders).
-# ---------------------------------------------------------------------------
-def q164_change_feed(spark, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import minitable, table_path, versioned_staging_dir
-
-    q162_time_travel(spark, sf_dir)  # ensure the versioned table exists
-    table = versioned_staging_dir(
-        "tinymr_spark_minitable", table_path(sf_dir, "orders")
-    )
-    feed = minitable.changes(spark, table, 2, 3)
-    return feed.agg(
-        F.count("*").alias("n_changed"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_price"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-        F.count_distinct("o_custkey").alias("n_customers"),
-    )
-
-
-ORACLE_Q164 = """
-SELECT COUNT(*) AS n_changed,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-       MIN(o_orderkey) AS min_key,
-       MAX(o_orderkey) AS max_key,
-       COUNT(DISTINCT o_custkey) AS n_customers
-FROM orders
-WHERE o_orderkey % 3 = 2
-"""
-
-
-# ---------------------------------------------------------------------------
-# q165 — INCREMENTAL MATERIALIZED-VIEW maintenance over the change feed:
-# the consumer q164 exists for.  A per-priority aggregate MV over the
-# versioned orders table is advanced from v2 to v3 by applying ONLY the
-# delta — MV(v3) = MV(v2) ⊕ agg(changes(2,3]) with the additive merge
-# (counts add, decimal sums add, mins/maxes combine) — never re-reading
-# the base table.  The oracle recomputes the v3 aggregate from scratch,
-# so the hash gate IS the "incremental == rebuild" proof (q145's
-# merge-algebra argument applied to view maintenance; valid because the
-# (2,3] range is append-only — the q164 overwrite guard is exactly what
-# protects this consumer).  At scale: the base MV is a tiny standing
-# aggregate and each advance costs O(delta), the whole point of CDF.
-# ---------------------------------------------------------------------------
-def q165_incremental_mv(spark, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import minitable, table_path, versioned_staging_dir
-
-    q162_time_travel(spark, sf_dir)  # ensure the versioned table exists
-    table = versioned_staging_dir(
-        "tinymr_spark_minitable", table_path(sf_dir, "orders")
-    )
-
-    def mv(df: DataFrame) -> DataFrame:
-        return df.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("sum_price_d"),
-            F.min("o_orderkey").alias("min_key"),
-            F.max("o_orderkey").alias("max_key"),
-        )
-
-    base = mv(minitable.read(spark, table, 2)).alias("b")
-    delta = mv(minitable.changes(spark, table, 2, 3)).alias("d")
-    merged = base.join(delta, "o_orderpriority", "full_outer").select(
-        "o_orderpriority",
-        (F.coalesce("b.n_orders", F.lit(0)) + F.coalesce("d.n_orders", F.lit(0))).alias(
-            "n_orders"
-        ),
-        (
-            F.coalesce(F.col("b.sum_price_d"), F.lit(0).cast("decimal(18,2)"))
-            + F.coalesce(F.col("d.sum_price_d"), F.lit(0).cast("decimal(18,2)"))
-        )
-        .cast("double")
-        .alias("sum_price"),
-        F.least(
-            F.coalesce("b.min_key", "d.min_key"), F.coalesce("d.min_key", "b.min_key")
-        ).alias("min_key"),
-        F.greatest(
-            F.coalesce("b.max_key", "d.max_key"), F.coalesce("d.max_key", "b.max_key")
-        ).alias("max_key"),
-    )
-    return merged
-
-
-ORACLE_Q165 = """
-SELECT o_orderpriority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-       MIN(o_orderkey) AS min_key,
-       MAX(o_orderkey) AS max_key
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-
-# ---------------------------------------------------------------------------
-# q166 — MERGE INTO (declarative upsert) on the versioned minitable: the
-# lakehouse write primitive q162/q164 were building toward.  One merge
-# applies all three clauses at once against a key-clustered orders
-# table: WHEN MATCHED AND source priority is 1-URGENT THEN DELETE, WHEN
-# MATCHED THEN UPDATE (price + 100), WHEN NOT MATCHED THEN INSERT
-# (key-shifted copies beyond the table's key range).
-#
-# What the hash gate proves: the three-clause row algebra is exact —
-# the post-merge per-priority aggregate equals the oracle's from-scratch
-# reconstruction (survivors with CASE'd prices UNION ALL the inserts).
-# Scale shape (sources/minitable.py merge): two-phase file pruning —
-# commit-log key stats bound the candidate files for free, then a
-# find-touched-files probe (key column only, parquet-pruned) joins
-# against source keys so ONLY files holding matched rows are rewritten;
-# the out-of-range inserts match nothing and force no rewrite.  Here the
-# update predicate (%7) touches every file by design — the narrow-merge
-# pruning path is pinned by tests/test_sources_sinks.py instead.
-# ---------------------------------------------------------------------------
-def q166_merge_upsert(spark, sf_dir: str) -> DataFrame:
-    import os
-
-    from tinymr_spark.sources import (
-        load_table,
-        minitable,
-        table_path,
-        versioned_staging_dir,
-    )
-
-    src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_merge", src_path)
-    done = table + "._done"
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(table, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        minitable.write(
-            spark,
-            orders.repartitionByRange(8, "o_orderkey"),
-            table,
-            "overwrite",
-            stats_cols=["o_orderkey"],
-        )
-        maxk = orders.agg(F.max("o_orderkey")).collect()[0][0]
-        updates = orders.where(F.col("o_orderkey") % 7 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") + F.lit(100.0)
-        )
-        inserts = orders.where(F.col("o_orderkey") % 11 == 3).withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(int(maxk))
-        )
-        minitable.merge(
-            spark,
-            updates.unionByName(inserts),
-            table,
-            "o_orderkey",
-            delete_where="o_orderpriority = '1-URGENT'",
-        )
-        open(done, "w").close()
-    return (
-        minitable.read(spark, table)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-            F.min("o_orderkey").alias("min_key"),
-            F.max("o_orderkey").alias("max_key"),
-        )
-    )
-
-
-ORACLE_Q166 = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-survivors AS (
-    SELECT o_orderkey AS key, o_orderpriority,
-           CASE WHEN o_orderkey % 7 = 0
-                THEN CAST(o_totalprice AS DECIMAL(18,2)) + CAST(100 AS DECIMAL(18,2))
-                ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-    FROM orders
-    WHERE NOT (o_orderkey % 7 = 0 AND o_orderpriority = '1-URGENT')
-),
-inserted AS (
-    SELECT o.o_orderkey + mx.m AS key, o.o_orderpriority,
-           CAST(o.o_totalprice AS DECIMAL(18,2)) AS price
-    FROM orders o, mx
-    WHERE o.o_orderkey % 11 = 3
-),
-merged AS (
-    SELECT * FROM survivors UNION ALL SELECT * FROM inserted
-)
-SELECT o_orderpriority,
-       COUNT(*) AS n_rows,
-       CAST(SUM(price) AS DOUBLE) AS sum_price,
-       MIN(key) AS min_key,
-       MAX(key) AS max_key
-FROM merged
-GROUP BY o_orderpriority
-"""
-
-
-# ---------------------------------------------------------------------------
 # q167 — DATA-SKIPPING scan over commit-log file stats: the planning-time
 # half of the lakehouse story (Delta/Iceberg min-max skipping).  The
 # orders table is written key-clustered (repartitionByRange on
@@ -2695,110 +2489,6 @@ GROUP BY version
 
 
 # ---------------------------------------------------------------------------
-# q174 — OPTIMIZE ZORDER on the versioned minitable: q130's Morton curve
-# doing its actual production job.  q130 proves the curve yields bounded
-# rectangles; here the table is REWRITTEN clustered by the curve and the
-# commit log's per-file min/max stats (q167) turn those rectangles into
-# file skipping on BOTH key columns — Delta/Iceberg's OPTIMIZE ZORDER BY.
-# v0 is the classic linear layout (range-clustered by l_partkey, 16
-# files): a second-dimension predicate prunes NOTHING (every file's
-# l_suppkey range spans the domain).  v1 is the Z-order rewrite
-# (range-partitioned on the interleaved code, helper columns dropped
-# before the write): the SAME commit-log stats machinery now prunes
-# most files for a range predicate on EITHER column — asserted
-# in-function at build time (linear keeps 16/16 on suppkey; Z keeps
-# <=half on each dimension).  Unlike q173's incremental bin-pack this
-# is a deliberate O(table) rewrite — the once-per-corpus layout
-# investment that buys every later scan its skipping.
-#
-# The hash gate proves skipping never changes results: both pruned
-# scans (one per dimension) aggregate identically to the oracle's raw
-# filters over lineitem.
-# ---------------------------------------------------------------------------
-def q174_optimize_zorder(spark, sf_dir: str) -> DataFrame:
-    import os
-
-    from tinymr_spark.sources import (
-        load_table,
-        minitable,
-        table_path,
-        versioned_staging_dir,
-    )
-
-    src_path = table_path(sf_dir, "lineitem")
-    table = versioned_staging_dir("tinymr_spark_minitable_zorder", src_path)
-    done = table + "._done"
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
-    )
-    mp, ms = (r := li.agg(F.max("l_partkey"), F.max("l_suppkey")).collect()[0])[0], r[1]
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(table, ignore_errors=True)
-        minitable.write(  # v0: linear layout, clustered on l_partkey only
-            spark,
-            li.repartitionByRange(16, "l_partkey"),
-            table,
-            "overwrite",
-            stats_cols=["l_partkey", "l_suppkey"],
-        )
-        dom = (1 << Z_BITS) - 1
-        zed = (
-            li.withColumn("an", F.expr(f"l_partkey * {dom} div ({int(mp)} + 1)"))
-            .withColumn("bn", F.expr(f"l_suppkey * {dom} div ({int(ms)} + 1)"))
-            .withColumn("zval", morton_code(F.col("an"), F.col("bn")))
-        )
-        minitable.write(  # v1: OPTIMIZE ZORDER — full rewrite along the curve
-            spark,
-            zed.repartitionByRange(16, "zval").drop("an", "bn", "zval"),
-            table,
-            "overwrite",
-            stats_cols=["l_partkey", "l_suppkey"],
-        )
-        sk = [("l_suppkey", "<=", int(ms) // 5)]
-        pk = [("l_partkey", "<=", int(mp) // 5)]
-        kept_lin, tot = minitable.prune(table, sk, version=0)
-        kept_z_sk, _ = minitable.prune(table, sk, version=1)
-        kept_z_pk, _ = minitable.prune(table, pk, version=1)
-        assert len(kept_lin) == tot, "linear layout should not prune dim 2"
-        assert len(kept_z_sk) <= tot // 2, (len(kept_z_sk), tot)
-        assert len(kept_z_pk) <= tot // 2, (len(kept_z_pk), tot)
-        open(done, "w").close()
-
-    def pruned_agg(where: list[tuple], dim: str, other: str) -> DataFrame:
-        return minitable.scan(spark, table, where).agg(
-            F.lit(dim).alias("dim"),
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.min(other).alias("min_other"),
-            F.max(other).alias("max_other"),
-        )
-
-    return pruned_agg(
-        [("l_partkey", "<=", int(mp) // 5)], "partkey", "l_suppkey"
-    ).unionByName(
-        pruned_agg([("l_suppkey", "<=", int(ms) // 5)], "suppkey", "l_partkey")
-    )
-
-
-ORACLE_Q174 = """
-WITH m AS (SELECT MAX(l_partkey) AS mp, MAX(l_suppkey) AS ms FROM lineitem)
-SELECT 'partkey' AS dim, COUNT(*) AS n_rows,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       MIN(l_suppkey) AS min_other, MAX(l_suppkey) AS max_other
-FROM lineitem, m WHERE l_partkey <= mp // 5
-UNION ALL
-SELECT 'suppkey', COUNT(*),
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE),
-       MIN(l_partkey), MAX(l_partkey)
-FROM lineitem, m WHERE l_suppkey <= ms // 5
-"""
-
-
-# ---------------------------------------------------------------------------
 # q175 — distributed ORDINARY LEAST SQUARES by the normal equations: the
 # classic "ML training as one aggregation" shape.  Fit document length
 # structure over the corpus — n_chars ~ b0 + b1*n_words + b2*n_e (word
@@ -2975,7 +2665,7 @@ FROM s
 
 # ---------------------------------------------------------------------------
 # q177 — predicate DELETE on the versioned minitable, completing the DML
-# triad (q162 append/overwrite, q166 keyed MERGE, q177 DELETE WHERE):
+# triad (q162 append/overwrite, q208 keyed MERGE, q177 DELETE WHERE):
 # the retention / right-to-erasure verb.  DELETE WHERE o_orderkey <= cut
 # against the key-clustered table exercises all three of Delta's file
 # cost tiers in one commit — files provably all-matching drop WHOLE
@@ -3509,7 +3199,7 @@ GROUP BY commit_version, change_type
 
 
 # ---------------------------------------------------------------------------
-# q182 — INCREMENTAL MATERIALIZED VIEW over the FULL DML feed: q165's
+# q182 — INCREMENTAL MATERIALIZED VIEW over the FULL DML feed: an
 # append-only delta-merge generalized to updates and deletes.  The MV
 # (per-bucket count + price sum) advances from its v0 base by one pass
 # over change_feed(0, 3): insert/update_postimage rows add, delete/
@@ -4270,109 +3960,6 @@ GROUP BY phase
 
 
 # ---------------------------------------------------------------------------
-# q191 — NULL-SCRUB and IN-LIST DELETE through the skipping algebra:
-# `is_null` / `is_not_null` decide against the commit log's per-file
-# null counts (with `rows` making `nulls == rows` an all-null proof)
-# and `in` decides per member like `=` (range + bloom) — so the two
-# everyday cleanup deletes get the full three-tier cost model:
-# provably-null-free files are UNTOUCHED by the scrub, an all-null file
-# DROPS WHOLE as a pure log remove, and only straddlers rewrite
-# (tiers asserted at build).  This is the data-cleaning idiom of every
-# training pipeline — `DELETE WHERE label IS NULL` /
-# `DELETE WHERE source IN (banned...)` — at O(affected files) cost.
-# The hash gate proves the three-version timeline against the oracle's
-# CASE/NOT-IN reconstruction.
-# ---------------------------------------------------------------------------
-def q191_null_scrub_delete(spark, sf_dir: str) -> DataFrame:
-    import os
-
-    from tinymr_spark.sources import (
-        load_table,
-        minitable,
-        table_path,
-        versioned_staging_dir,
-    )
-
-    src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_scrub", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
-
-        shutil.rmtree(table, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
-        cut = maxk // 3
-        k = F.col("o_orderkey")
-        minitable.write(  # v0: price NULLed on the low-key third
-            spark,
-            orders.select(
-                "o_orderkey",
-                F.when(k <= cut, F.lit(None).cast("double"))
-                .otherwise(F.col("o_totalprice"))
-                .alias("p"),
-                "o_orderpriority",
-            ).repartitionByRange(6, "o_orderkey"),
-            table,
-            "overwrite",
-            stats_cols=["o_orderkey", "p"],
-        )
-        res = minitable.delete(  # v1: the NULL scrub — all three tiers
-            spark, table, [("p", "is_null", None)], stats_cols=["o_orderkey", "p"]
-        )
-        assert res is not None
-        _v, summary = res
-        assert summary["dropped_whole"] >= 1, summary  # all-null files: log-only
-        assert summary["untouched"] >= 1, summary      # proven null-free: free
-        res = minitable.delete(  # v2: IN-list retention
-            spark, table, [("o_orderpriority", "in", ["1-URGENT", "5-LOW"])]
-        )
-        assert res is not None
-        open(done, "w").close()
-    per_version = [
-        minitable.read(spark, table, v)
-        .agg(
-            F.lit(v).cast("int").alias("version"),
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("p").cast("decimal(18,2)")).cast("double").alias("sum_price"),
-            F.count(F.when(F.col("p").isNull(), 1)).alias("n_null"),
-        )
-        for v in (0, 1, 2)
-    ]
-    out = per_version[0]
-    for df in per_version[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-ORACLE_Q191 = """
-WITH mk AS (SELECT MAX(o_orderkey) // 3 AS cut FROM orders),
-base AS (
-    SELECT o_orderkey,
-           CASE WHEN o_orderkey <= (SELECT cut FROM mk) THEN NULL
-                ELSE o_totalprice END AS p,
-           o_orderpriority
-    FROM orders
-),
-v AS (SELECT * FROM (VALUES (0), (1), (2)) AS t(version)),
-member AS (
-    SELECT v.version, b.p
-    FROM v JOIN base b
-      ON v.version = 0
-      OR (v.version = 1 AND b.p IS NOT NULL)
-      OR (v.version = 2 AND b.p IS NOT NULL
-          AND b.o_orderpriority NOT IN ('1-URGENT', '5-LOW'))
-)
-SELECT CAST(version AS INT) AS version,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(p AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-       COUNT(CASE WHEN p IS NULL THEN 1 END) AS n_null
-FROM member
-GROUP BY version
-"""
-
-
-# ---------------------------------------------------------------------------
 # q192 — ACCUMULATE-MERGE via column-level UPDATE SET (Delta's `WHEN
 # MATCHED THEN UPDATE SET col = expr`): a per-customer rollup table is
 # maintained incrementally — the day's delta rollup merges in with
@@ -4886,7 +4473,7 @@ FROM c
 # ---------------------------------------------------------------------------
 # q200 — the Z-ORDER DML VERB (minitable.zorder — Delta's `OPTIMIZE ...
 # ZORDER BY` as an engine verb) on a LIVE table mid-history, which is
-# what separates it from q174's writer-side overwrite pattern: q174's
+# what separates it from a writer-side overwrite pattern: such a
 # layout is something a writer builds once with domain knowledge (a
 # hand-normalized Morton code, a fresh overwrite, no concurrent-writer
 # story); zorder() is something the TABLE does to itself — boundaries
@@ -5876,9 +5463,8 @@ GROUP BY change_type, commit_version
 # predicate names) — and unmatched source rows INSERT.  The result
 # hashes BOTH the final table state and the merge's change feed, so a
 # pass-through row leaking into the CDF, a ghost insert, or a
-# mis-gated SET all break the oracle.  Replaces q166 (plain
-# unconditional upsert — strictly subsumed; its assertions live on in
-# tests/test_retired_parity.py).
+# mis-gated SET all break the oracle.  Plain unconditional upsert is
+# its degenerate no-condition case.
 #
 # Scale: the same two-phase touched-file shape as every merge
 # (minitable.py merge docstring) — the clause condition only SHRINKS
@@ -6010,9 +5596,7 @@ FROM cdf GROUP BY grp
 # rows must match through the default.  Hashed: the AS-OF aggregate at
 # every era (v0 serves the OLD schema; the defaults never bleed
 # backwards) plus the delete's change-feed reconstruction (version 99),
-# whose rows also serve the defaults.  Replaces q191 (delete NULL-scrub
-# tiering — subsumed by q178's NULL-safety tiers; its assertions live on
-# in tests/test_retired_parity.py).
+# whose rows also serve the defaults.
 #
 # Scale: the ADD is O(1) metadata; the default fill is JVM-side in the
 # parquet reader (no coalesce projection, no per-file driver work), and

@@ -82,65 +82,6 @@ FROM ranked WHERE rank <= {TOP_K}
 
 
 # ---------------------------------------------------------------------------
-# Label-bucketed ANN (the IVF pattern): restrict candidates to the query's
-# bucket, then exact rank inside it.  Same output shape as q50.
-# ---------------------------------------------------------------------------
-def q51_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    )
-    queries = emb.where(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    sim = F.round(
-        _dot(F.col("qv"), F.col("embedding")) / (F.col("qnorm") * F.col("norm")), 6
-    )
-    scored = (
-        emb.join(
-            F.broadcast(queries),
-            (F.col("label") == F.col("qlabel")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 4).alias("cos_sim"))
-    )
-
-
-ORACLE_Q51 = f"""
-WITH scored AS (
-    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-           ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
-                 / (SQRT(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                    * SQRT(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))),
-                 6) AS cos_sim
-    FROM embeddings q JOIN embeddings e
-      ON e.label = q.label AND e.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERY}
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cos_sim,
-           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, rank, ROUND(cos_sim, 4) AS cos_sim
-FROM ranked WHERE rank <= {TOP_K}
-"""
-
-
-# ---------------------------------------------------------------------------
 # Centroids per label: positional average of the vectors — the k-means /
 # IVF building block.  posexplode + groupBy(label, pos).
 # ---------------------------------------------------------------------------
@@ -278,16 +219,10 @@ GROUP BY vec_id
 # then joins on the cell id — candidates never leave their bucket, the
 # classic IVF contract.
 # ---------------------------------------------------------------------------
-def _ivf_assigned(
-    spark: SparkSession, sf_dir: str, _checkpoint: bool = True
-) -> DataFrame:
+def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every vector assigned to its nearest seed-codebook cell — the
     shared IVF building block (see q54's header comment for the plan
-    rationale: one-row folded broadcast codebook, no corpus shuffle).
-
-    `_checkpoint` exists only for tools/ab_ivf_checkpoint.py, which
-    rebinds this function to time the duplicate-codebook variant; every
-    production call leaves it True (the r15 measured decision)."""
+    rationale: one-row folded broadcast codebook, no corpus shuffle)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding",
         _dot(F.col("embedding"), F.col("embedding")).alias("norm2"),
@@ -322,8 +257,7 @@ def _ivf_assigned(
     # q58's PQ codebook the cell domain here is data-dependent
     # (groupBy(label)), so the K-positional-columns rewrite that fixed
     # q58 cannot apply without assuming a label-domain contract.
-    if _checkpoint:
-        cb = cb.localCheckpoint()
+    cb = cb.localCheckpoint()
 
     def _d2_struct(c):
         dot = F.aggregate(
@@ -893,20 +827,16 @@ LEFT JOIN best b USING (vec_id)
 
 
 # ---------------------------------------------------------------------------
-# q56 — embedding normalization + int8 quantization: the standard
-# vector-store prep step (unit-normalize so cosine == dot, then symmetric
-# int8 quantization at scale 127).  Pure per-row array math — transform()
-# lambdas evaluate JVM-side, the scan reads only (vec_id, embedding), and
-# the operator composes with any of the ANN queries.  clamp(round(x/norm
-# * 127)) matches DuckDB exactly away from .5 boundaries, which the
+# Embedding int8 quantization: unit-normalize (so cosine == dot), then
+# symmetric int8 quantization at scale 127.  Pure per-row array math —
+# transform() lambdas evaluate JVM-side.  clamp(round(x/norm * 127))
+# matches DuckDB exactly away from .5 boundaries, which the
 # near-orthogonal double values never hit.
 # ---------------------------------------------------------------------------
 def _int8_quantize(vec_col, norm_col):
     """Symmetric int8 quantization of a unit-normalized vector —
-    clamp(round(x/norm * 127)).  SHARED by q56 (the quantization
-    operator) and q147 (the quantized ranker): the RRF fusion's claim
-    'the quantized ranker matches q56's quantization' is only true
-    while both use this one expression."""
+    clamp(round(x/norm * 127)) — q147's quantized ranker.  The DuckDB
+    twin below must stay the same expression."""
     return F.transform(
         vec_col,
         lambda x: F.greatest(
@@ -919,52 +849,11 @@ def _int8_quantize(vec_col, norm_col):
     )
 
 
-# DuckDB twin of _int8_quantize — shared by ORACLE_Q56 and ORACLE_Q147
-# for the same single-source-of-truth reason.
+# DuckDB twin of _int8_quantize, used by ORACLE_Q147.
 _SQL_INT8_QUANTIZE = (
     "list_transform(v, x -> CAST(GREATEST(-127, LEAST(127, "
     "ROUND(x / norm * 127))) AS INT))"
 )
-
-
-def q56_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    )
-    quant = _int8_quantize(F.col("embedding"), F.col("norm"))
-    return emb.select(
-        "vec_id",
-        F.round("norm", 6).alias("norm"),
-        # JSON-canonical projection: an array<int> cell round-trips through
-        # pandas as a numpy array on Spark but a list on DuckDB, so the
-        # driver's value-hash would diverge on representation alone; the
-        # JSON string is identical from both engines.
-        F.to_json(quant).alias("q_embedding"),
-        F.aggregate(
-            quant, F.lit(0).cast("bigint"), lambda acc, v: acc + F.abs(v)
-        ).alias("q_l1"),
-    )
-
-
-ORACLE_Q56 = """
-WITH base AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-           SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS norm
-    FROM embeddings
-),
-quant AS (
-    SELECT vec_id, norm,
-           {Q} AS q_embedding
-    FROM base
-)
-SELECT vec_id, ROUND(norm, 6) AS norm,
-       CAST(to_json(q_embedding) AS VARCHAR) AS q_embedding,
-       CAST(list_sum(list_transform(q_embedding, x -> ABS(x))) AS BIGINT) AS q_l1
-FROM quant
-""".replace("{Q}", _SQL_INT8_QUANTIZE)
-
-
 
 
 # ---------------------------------------------------------------------------

@@ -786,7 +786,8 @@ GROUP BY t.source
 # entries, broadcast-sized).  The encode join broadcasts the vocab and
 # the corpus pass stays shuffle-free; positions are re-assembled
 # order-preservingly with array_sort over (pos, id) structs.  ids_prefix
-# is JSON-canonical (same reason as q56).
+# is JSON-canonical: an array cell reaches pandas as a numpy array from
+# Spark but a list from DuckDB, so only the JSON string hashes alike.
 # ---------------------------------------------------------------------------
 VOCAB_SIZE = 16
 

@@ -33,6 +33,53 @@ def _ensure_worker_pythonpath() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (pkg_parent, current) if p)
 
 
+def package_zip(pkg_dir: str | None = None) -> str:
+    """Path of a zip of the package's ``.py`` files, built if missing.
+
+    The file name carries a SHA-256 of every ``.py`` path and its bytes,
+    so edited code always ships under a new name and an unchanged tree
+    reuses the existing zip — a name keyed by anything else (a PID, a
+    session id) can serve stale code to a later process.  The zip is
+    written to a temporary file and renamed into place, so a process
+    racing this one never ships a half-written archive.
+    """
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg_dir = pkg_dir or os.path.dirname(os.path.abspath(__file__))
+    files = sorted(
+        os.path.relpath(os.path.join(root, fname), pkg_dir)
+        for root, _dirs, names in os.walk(pkg_dir)
+        for fname in names
+        if fname.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in files:
+        with open(os.path.join(pkg_dir, rel), "rb") as f:
+            data = f.read()
+        digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+    tmp_dir = tempfile.gettempdir()
+    zip_path = os.path.join(
+        tmp_dir, f"tinymr_spark_pkg_{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        fd, part = tempfile.mkstemp(
+            prefix=".tinymr_spark_pkg_", suffix=".part", dir=tmp_dir
+        )
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+                for rel in files:
+                    zf.write(
+                        os.path.join(pkg_dir, rel), os.path.join("tinymr_spark", rel)
+                    )
+            os.replace(part, zip_path)
+        except BaseException:
+            os.unlink(part)
+            raise
+    return zip_path
+
+
 def ensure_shipped(spark) -> None:
     """Make `tinymr_spark` importable on executor Python workers for a
     session THIS package did not create.
@@ -43,31 +90,26 @@ def ensure_shipped(spark) -> None:
     with ModuleNotFoundError.  `addPyFile` ships a zip of the package with
     every task and prepends it to the worker's sys.path — works after JVM
     start, on any session, local or cluster (the --py-files mechanism).
-    Idempotent per SparkContext; rebuilt zip per driver process.
-    Accepts a SparkSession or a bare SparkContext.
+    Idempotent per SparkContext; the zip is keyed by the package's
+    content (`package_zip`).  Accepts a SparkSession or a bare
+    SparkContext.
     """
     sc = getattr(spark, "sparkContext", spark)
     if getattr(sc, "_tinymr_spark_shipped", False):
         return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"tinymr_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        rel = os.path.join(
-                            "tinymr_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(package_zip())
     sc._tinymr_spark_shipped = True
+
+
+def _default_driver_memory() -> str:
+    """48g, capped at ~60% of physical RAM so the one local-mode JVM
+    never plans a heap the host cannot back."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    mb = int(ram * 0.6) >> 20
+    return "48g" if mb >= 48 << 10 else f"{mb}m"
 
 
 def get_session(app_name: str = "tinymr-spark", cpus: str | None = None) -> SparkSession:
@@ -120,6 +162,10 @@ def get_session(app_name: str = "tinymr-spark", cpus: str | None = None) -> Spar
         # local mode = ONE JVM for driver + all 32 executor threads; an
         # undersized heap turns the shuffle-heavy queries into GC storms
         # (measured: multi-second per-query variance at 16g, stable at 48g).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # The default is capped by the host's RAM (_default_driver_memory).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     return builder.getOrCreate()

@@ -58,7 +58,7 @@ BUILD_ONCE = {
     "q182_incremental_mv_dml", "q183_restore_version",
     "q184_deletion_vectors", "q185_check_constraints", "q186_shallow_clone",
     "q188_update_where", "q189_partition_retention", "q190_column_mapping",
-    "q191_null_scrub_delete", "q192_merge_accumulate",
+    "q192_merge_accumulate",
     "q193_table_history", "q194_convert_in_place",
     "q195_stream_partitioned_ingest", "q196_stream_expectations",
     "q197_lakehouse_pipeline", "q198_generated_columns",

@@ -22,8 +22,8 @@ their replay-to-completion cost is the per-batch machinery floor
 (plans/r16/measure_stream_startstop.json).
 
 Usage:
-  SPARK_GRAFT_CPUS=32 python tools/core_scaling_probe.py
-  SPARK_GRAFT_CPUS=8  python tools/core_scaling_probe.py
+  SPARK_GRAFT_PROBE_COPIES=125 SPARK_GRAFT_CPUS=32 python tools/core_scaling_probe.py
+  SPARK_GRAFT_PROBE_COPIES=125 SPARK_GRAFT_CPUS=8  python tools/core_scaling_probe.py
 Writes plans/r16/core_scaling_<cpus>cpu.json; combine with
 tools/core_scaling_report.py.
 """
