@@ -29,8 +29,8 @@ queries()     — every implemented operator from SURVEY.md §2 (+ §2.5
                 q141-q142+q144+q148+q150-q153+q155-q156+q160-q161.
                 Retired near-duplicates are out of the registry; q43,
                 q53, q105 and q130 stay in the package as machinery for
-                their survivors (assertions in
-                tests/test_retired_parity.py), the rest were deleted.
+                their survivors (checked in the registry sweep,
+                tools/check_oracle.py), the rest were deleted.
 oracle_sql()  — DuckDB twins for ALL of the above, including q104 since
                 round 11 (the library MinHashLSH hash family re-derived
                 from its seed via java.util.Random's LCG + straight-line

@@ -5,17 +5,9 @@ loader is value-preserving only under UTC) and still match the oracle."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import pytest
 
-_spec = importlib.util.spec_from_file_location(
-    "check_oracle",
-    os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
-)
-check_oracle = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check_oracle)
+from tools.check_oracle import table_hash
 
 
 @pytest.mark.parametrize("name", ["q70_tumbling_window", "q90_stream_tumbling"])
@@ -31,9 +23,7 @@ def test_wrapper_pins_utc_on_foreign_session(spark, duck, sf_dir, name):
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
     rel = duck.sql(entrymod.oracle_sql()[name])
-    assert check_oracle.table_hash(srows, scols) == check_oracle.table_hash(
-        rel.fetchall(), rel.columns
-    )
+    assert table_hash(srows, scols) == table_hash(rel.fetchall(), rel.columns)
 
 
 def test_module_execution_surface_prints_version():

@@ -1,46 +1,27 @@
-"""Every declared query vs its DuckDB oracle at sf0.001 — the in-repo
-mirror of the driver's t2 gate (rowcount + column set + order-insensitive
-normalized values)."""
+"""The registry sweep at sf0.001: every declared query, plus the retired
+machinery queries, built and collected ONCE and checked on that one
+execution — no scale red flag in its plan, exactly the pinned duplicated
+final-plan signatures, and rows equal to its DuckDB oracle (the in-repo
+mirror of the driver's gate: rowcount + column set + order-insensitive
+normalized values).  tools/check_oracle.py runs the same check_query."""
 
 from __future__ import annotations
 
-import importlib.util
-import math
-import os
-from datetime import date, datetime
-
 import pytest
 
-_spec = importlib.util.spec_from_file_location(
-    "check_oracle",
-    os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
-)
-check_oracle = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check_oracle)
+from tools.check_oracle import EXPECTED_DUPS, check_query, sweep_queries
+
+SWEEP = sweep_queries()
 
 
-def _queries():
-    import __spark_entry__ as entrymod
-
-    return entrymod.queries(), entrymod.oracle_sql()
-
-
-QUERIES, ORACLES = _queries()
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", sorted(SWEEP))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
-    sdf = QUERIES[name](spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in ORACLES:
-        assert srows is not None  # rows-only contract
-        return
-    rel = duck.sql(ORACLES[name])
-    dcols = rel.columns
-    drows = rel.fetchall()
-    assert len(srows) == len(drows), f"rowcount {len(srows)} vs {len(drows)}"
-    assert sorted(scols) == sorted(dcols)
-    assert check_oracle.table_hash(srows, scols) == check_oracle.table_hash(
-        drows, dcols
+    fn, oracle = SWEEP[name]
+    c = check_query(spark, duck, sf_dir, name, fn, oracle)
+    assert c.reds == [], "scale red flags in the plan"
+    assert c.dups == EXPECTED_DUPS.get(name, {}), (
+        "duplicated Generate/FileScan/Python-eval signatures in the final "
+        "plan differ from the pinned set (fix the plan, or pin it in "
+        "EXPECTED_DUPS with a reason)"
     )
+    assert c.mismatch is None

@@ -1,11 +1,14 @@
 """Physical-plan inspection: the tooling used to keep operators honest at
 scale.  The reference has no optimizer (SURVEY.md §4); our optimizer is
 Catalyst, and these helpers assert we actually GET its optimizations —
-pushdown reached the scan, dimensions broadcast, aggregates are partial —
+pushdown reached the scan, dimensions broadcast, no pipeline runs twice —
 instead of assuming them.
 """
 
 from __future__ import annotations
+
+import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -43,12 +46,6 @@ def has_shuffle_join(df: DataFrame) -> bool:
     return "SortMergeJoin" in s or "ShuffledHashJoin" in s
 
 
-def has_partial_aggregate(df: DataFrame) -> bool:
-    """Map-side (partial) aggregation before the exchange — the built-in
-    version of the reference's manual combine idiom (docs.rst:199-283)."""
-    return "partial_" in explain_str(df) or "HashAggregate" in explain_str(df)
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan (lower is better; broadcast
     exchanges are excluded)."""
@@ -66,33 +63,41 @@ def uses_python_eval(df: DataFrame) -> bool:
     return "BatchEvalPython" in explain_str(df)
 
 
-def executed_dup_signatures(df: DataFrame) -> dict[str, int]:
-    """Duplicated-pipeline smell detector over the FINAL (post-AQE)
-    plan: execute the DataFrame through its OWN QueryExecution (collect —
-    a separate noop-write command would build a fresh QE and leave
-    isFinalPlan=false), then count Generate/FileScan/Python-eval lines
-    whose normalized signature (expr/plan ids stripped) appears 2+ times.
-    explain() cannot do this job: AQE ReuseExchange only shows in the
-    executed plan, and the r15 audit found both error directions in
-    initial-plan reasoning — self-joins that DO reuse at runtime, and
-    shared code that column pruning silently re-expands into duplicate
-    full pipelines (q38/q145/q106)."""
-    import re
+def dup_signatures(plan: str) -> dict[str, int]:
+    """Duplicated-pipeline smell detector over a FINAL (post-AQE) plan
+    string: Generate/FileScan/Python-eval lines that appear 2+ times,
+    at any depth or branch of the tree, once their ids are normalized — expr ids (`#12`, `#12L`), exchange plan
+    ids (`plan_id=7`), whole-stage-codegen ids (`*(3)`) and the
+    process-wide counter in lambda variable names (`lambda x_21`).
+    Literals, bracketed ones like `tok#3[0]` included, stay as they are.
 
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    final = executed.split("== Initial Plan ==")[0]
-    sig_counts: dict[str, int] = {}
-    for line in final.splitlines():
-        if (
-            "Generate explode" in line
-            or "FileScan" in line
-            or "ArrowEvalPython" in line
-            or "BatchEvalPython" in line
-        ):
-            s = line.strip()
-            s = re.sub(r"#\d+L?", "#x", s)
-            s = re.sub(r"plan_id=\d+", "plan_id=x", s)
-            s = re.sub(r"\[\d+\]", "[x]", s)
-            sig_counts[s] = sig_counts.get(s, 0) + 1
-    return {k: c for k, c in sig_counts.items() if c > 1}
+    Pass the executedPlan of a QueryExecution that has run (collect() on
+    the DataFrame itself — a separate noop-write command builds a fresh
+    QE and leaves isFinalPlan=false).  explain() cannot do this job: AQE
+    ReuseExchange only shows in the executed plan, and the r15 audit
+    found both error directions in initial-plan reasoning — self-joins
+    that DO reuse at runtime, and shared code that column pruning
+    silently re-expands into duplicate full pipelines (q38/q145/q106).
+
+    Spark cuts a scan's file list at `spark.sql.maxMetadataStringLength`
+    (100 chars by default), which can make reads of two versions of one
+    table print alike; raise it before planning for an exact answer.  A
+    returned key drops the scan's table identifier and file list (temp
+    staging roots, data dirs, version hashes), so a pinned result holds
+    on any host; lines are matched with both."""
+    final = plan.split("== Initial Plan ==")[0]
+    sigs = Counter(
+        re.sub(r"(#|plan_id=|\*\(|lambda \w+_)\d+L?", r"\1x", line.lstrip(" :+-"))
+        for line in final.splitlines()
+        if "Generate explode" in line
+        or "FileScan" in line
+        or "ArrowEvalPython" in line
+        or "BatchEvalPython" in line
+    )
+    dups: Counter[str] = Counter()
+    for sig, n in sigs.items():
+        if n > 1:
+            key = re.sub(r"^(FileScan \w+ )[^\[ ]+\[", r"\1[", sig)
+            key = re.sub(r"Location: (\w+)\(.*?(?=, PartitionFilters: )", r"Location: \1", key)
+            dups[key] += n
+    return dict(dups)
