@@ -3,9 +3,9 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is timed end-to-end (plan + execute + collect-to-count); a
-warm-up pass on sf0.001 primes the JVM/codegen so timings measure the
-queries, not JIT warmup.
+Each query is timed end-to-end (plan + execute + collect-to-count) by
+tools/runner.time_query; a warm-up pass on sf0.001 primes the JVM/codegen
+so timings measure the queries, not JIT warmup.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,6 +35,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
     from tinymr_spark.session import get_session
+    from tools.runner import time_query
 
     spark = get_session(app_name="tinymr-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -61,7 +61,7 @@ def main():
     # variance at a fixed code state.
     for warm_q, warm_fn in qs.items():
         try:
-            warm_fn(spark, warm_sf).count()
+            time_query(spark, warm_q, warm_fn, warm_sf)
         except Exception as e:
             # A query that fails warm-up gets zero codegen/worker-pool
             # priming and its timed row then measures cold-start — say so
@@ -76,13 +76,15 @@ def main():
     # is the query's actual cost, not the neighbor's.
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+
+    def timed_pass(name: str) -> None:
+        ((build_s, action_s),) = time_query(spark, name, qs[name], sf_dir)
+        record_pass(timings, samples, name, round(build_s + action_s, 4))
+
     for _pass in range(2):
-        for name, fn in qs.items():
-            t0 = time.perf_counter()
+        for name in qs:
             try:
-                df = fn(spark, sf_dir)
-                df.count()
-                record_pass(timings, samples, name, round(time.perf_counter() - t0, 4))
+                timed_pass(name)
             except Exception as e:  # a failed query must not hide the rest
                 timings.setdefault(name, -1.0)
                 print(f"# bench error {name}: {type(e).__name__}: {e}", file=sys.stderr)
@@ -109,14 +111,12 @@ def main():
         key=lambda n: min(samples[n]) - max(samples[n]),
     )[:24]
     for name in noisy:
-        t0 = time.perf_counter()
         try:
-            qs[name](spark, sf_dir).count()
             # The retry pass belongs in the committed samples too —
             # otherwise BENCH_DETAIL contradicts itself for exactly the
             # rows the retry exists for (reported min absent from its
             # own sample list).
-            record_pass(timings, samples, name, round(time.perf_counter() - t0, 4))
+            timed_pass(name)
         except Exception as e:
             print(f"# bench retry error {name}: {type(e).__name__}: {e}", file=sys.stderr)
 
@@ -133,19 +133,7 @@ def main():
         load = tuple(round(x, 2) for x in os.getloadavg())
     except OSError:
         load = None
-    with open(detail_path, "w") as f:
-        json.dump(
-            {
-                "metric": "total_query_wall_sec",
-                "value": round(sum(t for t in timings.values() if t >= 0), 4),
-                "unit": "sec",
-                "queries": {n: round(t, 4) for n, t in timings.items()},
-                "samples": samples,
-                "loadavg_at_end": load,
-                "sf": sf_dir,
-            },
-            f,
-        )
+    write_detail(detail_path, timings, sf_dir, samples=samples, loadavg_at_end=load)
     line = format_bench_line(timings, sf_dir, detail_path=detail_path)
     if len(line) > 1900:  # stay inside the driver's 2000-char stdout tail
         print(
@@ -155,6 +143,23 @@ def main():
             file=sys.stderr,
         )
     print(line)
+
+
+def write_detail(path: str, timings: dict[str, float], sf_dir: str, **extra) -> None:
+    """BENCH_DETAIL.json: the full 4-decimal per-query map, plus `extra`
+    (main() adds the per-pass samples and the load averages)."""
+    with open(path, "w") as f:
+        json.dump(
+            {
+                "metric": "total_query_wall_sec",
+                "value": round(sum(t for t in timings.values() if t >= 0), 4),
+                "unit": "sec",
+                "queries": {n: round(t, 4) for n, t in timings.items()},
+                **extra,
+                "sf": sf_dir,
+            },
+            f,
+        )
 
 
 def format_bench_line(
@@ -236,17 +241,10 @@ def format_bench_line(
 
     # DIGEST stage: the line carries failures + the slowest hot rows
     # that fit + a cold rollup; full fidelity (including per-pass
-    # samples) is in the detail file, which main() now writes on EVERY
-    # run.  Callers without one (tests) still get a valid line.
+    # samples) is in the detail file, which main() writes on EVERY run
+    # before formatting; a caller that has none gets the plain map.
     if detail_path and not os.path.exists(detail_path):
-        with open(detail_path, "w") as f:
-            json.dump(
-                {"metric": "total_query_wall_sec", "value": total,
-                 "unit": "sec",
-                 "queries": {n: _fmt(t, 4) for n, t in timings.items()},
-                 "sf": sf_val},
-                f,
-            )
+        write_detail(detail_path, timings, sf_dir)
     failed = [(n, t) for n, t in timings.items() if t < 0]
     hot = sorted(
         ((n, t) for n, t in timings.items() if t >= HOT),

@@ -131,6 +131,52 @@ def test_standing_index_gcs_dead_source_dirs(spark, tmp_path):
     assert len(os.listdir(tag_root)) == 1, "dead-source index dir not reclaimed"
 
 
+def test_standing_index_rebuilds_when_builder_module_changes(spark, tmp_path):
+    """The index is keyed by the code that builds it: editing the module
+    that defines `build` (a new process sees the new file hash) rebuilds
+    the index instead of serving the old code's table, and prunes the
+    old version dir."""
+    import importlib.util
+    import uuid
+
+    from tinymr_spark import sources
+
+    tag = f"t_code_{uuid.uuid4().hex[:8]}"
+    src = str(tmp_path / "src.parquet")
+    spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(src)
+    mod_path = tmp_path / f"builder_{tag}.py"
+
+    def builder(version: int):
+        mod_path.write_text(
+            "def make(spark, src):\n"
+            f"    return lambda: spark.read.parquet(src).selectExpr('k', '{version} AS v')\n"
+        )
+        spec = importlib.util.spec_from_file_location(f"builder_{tag}_{version}", mod_path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.make(spark, src)
+
+    def versions():
+        idx = standing_index(spark, tag, [src], builder_fn, ["k"])
+        return {r.v for r in idx.select("v").distinct().collect()}
+
+    builder_fn = builder(1)
+    assert versions() == {1}
+    cache = session_cache(spark, "_tinymr_index_cache")
+    old_name = next(v for k, v in cache.items() if k[0] == tag)
+
+    builder_fn = builder(2)
+    sources._file_hash.cache_clear()  # the hash is read once per process
+    assert versions() == {2}, "edited builder served the old code's index"
+    assert not spark.catalog.tableExists(old_name)
+    tag_root = os.path.join(staging_root("tinymr_spark_index"), tag)
+    (src_dir,) = os.listdir(tag_root)
+    ver_dirs = [
+        d for d in os.listdir(os.path.join(tag_root, src_dir)) if d != "_sources.json"
+    ]
+    assert len(ver_dirs) == 1, f"superseded version dirs retained: {ver_dirs}"
+
+
 def test_versioned_staging_dir_prunes_superseded_versions(tmp_path):
     """Staged format copies / stream checkpoints keyed by source version
     must not leak one directory per corpus regeneration: resolving the

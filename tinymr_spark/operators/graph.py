@@ -55,10 +55,10 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 # jobs' launch overhead; interleaved min-of-4: 1.8s uncut vs 2.2s cut)
 # — the price of bounding plan growth, which at real iteration depth
 # inverts hard in the cut's favor (optimizer time grows superlinearly
-# uncut).  0/None disables for A/B-ing plans.  The checkpointed RDD is
-# executor-local (non-reliable) — acceptable: losing an executor mid-loop
-# recomputes from the persisted edge table, and the ContextCleaner
-# reclaims it once the result DataFrame is dropped.
+# uncut).  The checkpointed RDD is executor-local (non-reliable) —
+# acceptable: losing an executor mid-loop recomputes from the persisted
+# edge table, and the ContextCleaner reclaims it once the result
+# DataFrame is dropped.
 #
 # K=3, not 2: interleaved warm-cache min-of-4 at sf0.1 measured K=2
 # 2.68s / K=3 2.30s / uncut 1.91s — each cut costs ~0.4s of eager-job
@@ -66,7 +66,7 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 # (<=3 uncut rounds) at half the cuts.  The same sweep adjudicated the
 # r12 bench's 3.01s row as environmental (K=2 reproduces well under it
 # on an idle box).
-PR_CHECKPOINT_EVERY: int | None = 3
+PR_CHECKPOINT_EVERY = 3
 
 
 def _edge_cache(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -155,7 +155,7 @@ def q146_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank_u"),
             )
         )
-        if PR_CHECKPOINT_EVERY and it % PR_CHECKPOINT_EVERY == 0 and it < N_PAGERANK_ITERS:
+        if it % PR_CHECKPOINT_EVERY == 0 and it < N_PAGERANK_ITERS:
             ranks = ranks.localCheckpoint(eager=True)
     is_part = F.pmod(F.col("node"), F.lit(2)) == 0
     return ranks.select(

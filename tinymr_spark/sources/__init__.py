@@ -9,6 +9,8 @@ deployment these would be partitioned directories — the API is identical.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +66,20 @@ def staging_root(name: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"{name}_{uid}")
 
 
+@functools.lru_cache(maxsize=None)
+def _file_hash(path: str) -> str:
+    """Content hash of a source file, read once per process."""
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()[:16]
+
+
+def _builder_hash(build) -> str:
+    """Hash of the source file that defines `build` ("" when it was not
+    defined in a file, e.g. at an interactive prompt)."""
+    path = getattr(getattr(build, "__code__", None), "co_filename", "")
+    return _file_hash(path) if os.path.isfile(path) else ""
+
+
 def standing_index(
     spark: SparkSession,
     tag: str,
@@ -85,26 +101,27 @@ def standing_index(
     outlives any one session.
 
     `build` is a zero-arg callable returning the index DataFrame —
-    called only when this (tag, source version) has no written table
-    yet.  Freshness follows the session-cache policy (the q46/BM25
+    called only when this (tag, source version, builder code) has no
+    written table yet; the builder code is the content of the source
+    file that defines `build`, so editing it rebuilds the index.
+    Freshness follows the session-cache policy (the q46/BM25
     lifecycle): a regenerated source file yields a new version hash; the
     superseded catalog table is dropped and its staged directory
     removed, so corpus regenerations never leak index copies for the
     machine's lifetime (on-disk analog of pop+unpersist; see
     tests/test_cache_staleness.py)."""
-    import hashlib
     import shutil
 
     cache = session_cache(spark, "_tinymr_index_cache")
     srcs = tuple(source_paths)
     ver = tuple(file_version(p) for p in source_paths)
-    # The BUCKET SPEC is part of the version identity: a code change to
-    # n_buckets/key_cols/sort_cols must never re-register a previous
-    # session's files written under the old spec (CLUSTERED BY INTO N
-    # over M-bucket files would silently mis-prune).  Builder-LOGIC
-    # changes are not hashable — bump the tag when a build fn's meaning
-    # changes.
-    spec = (n_buckets, tuple(key_cols), tuple(sort_cols or key_cols))
+    # The BUCKET SPEC and the BUILDER CODE are part of the version
+    # identity: a code change to n_buckets/key_cols/sort_cols must never
+    # re-register a previous session's files written under the old spec
+    # (CLUSTERED BY INTO N over M-bucket files would silently
+    # mis-prune), and an edited build fn must never be served the index
+    # its old code wrote.
+    spec = (n_buckets, tuple(key_cols), tuple(sort_cols or key_cols), _builder_hash(build))
     key = (tag, srcs, (ver, spec))
     if key in cache:
         return spark.table(cache[key])

@@ -24,8 +24,8 @@ their replay-to-completion cost is the per-batch machinery floor
 Usage:
   SPARK_GRAFT_PROBE_COPIES=125 SPARK_GRAFT_CPUS=32 python tools/core_scaling_probe.py
   SPARK_GRAFT_PROBE_COPIES=125 SPARK_GRAFT_CPUS=8  python tools/core_scaling_probe.py
-Writes plans/r16/core_scaling_<cpus>cpu.json; combine with
-tools/core_scaling_report.py.
+Writes plans/$PLANS_ROUND/core_scaling_<cpus>cpu.json (default r16);
+combine with tools/core_scaling_report.py.
 """
 
 from __future__ import annotations
@@ -33,94 +33,49 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
-import scaling_probe as SP  # noqa: E402  (reuses its staging + battery)
-
-GRAPH_STAGE = f"/tmp/tinymr_spark_scalegraph{SP.N_COPIES}x"
+from tools import scaling_probe as SP  # noqa: E402  (its staging + battery)
+from tools.runner import stage_copies  # noqa: E402
 
 GRAPH_BATTERY = ["q146_pagerank", "q168_triangle_count", "q172_kcore_peel"]
 
 
-def stage_graph(spark) -> None:
-    from pyspark.sql import functions as F
-
-    from tinymr_spark.sources import load_table
-
-    done = os.path.join(GRAPH_STAGE, "_STAGED")
-    if os.path.exists(done):
-        return
-    os.makedirs(GRAPH_STAGE, exist_ok=True)
-    li = load_table(spark, SP.BASE, "lineitem")
-    copies = []
-    for i in range(SP.N_COPIES):
-        off = F.lit(i * SP.KEY_OFFSET)
-        copies.append(
-            li.withColumn("l_partkey", F.col("l_partkey") + off)
-            .withColumn("l_suppkey", F.col("l_suppkey") + off)
-            .withColumn("l_orderkey", F.col("l_orderkey") + off)
-        )
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionByName(c)
-    out.write.mode("overwrite").parquet(os.path.join(GRAPH_STAGE, "lineitem.parquet"))
-    open(done, "w").close()
-
-
 def main() -> None:
-    import __spark_entry__ as entrymod
     from tinymr_spark.session import get_session
 
     spark = get_session(app_name="core-scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.defaultParallelism
-    qs = entrymod.queries()
-    from tinymr_spark.operators import scale as _scale_mod
 
-    qs.setdefault("q130_zorder_layout", _scale_mod.q130_zorder_layout)
+    stage = stage_copies(spark, "tinymr_spark_scale", SP.BASE, SP.N_COPIES, SP.TABLES)
+    graph_stage = stage_copies(
+        spark, "tinymr_spark_scalegraph", SP.BASE, SP.N_COPIES,
+        {"lineitem": SP.offset_keys("l_partkey", "l_suppkey", "l_orderkey")},
+    )
 
-    SP.stage(spark)
-    stage_graph(spark)
-
-    def timed_min2(fn, sf):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf).count()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    rows: dict[str, dict] = {}
-    for name in SP.BATTERY:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"core-scaling {name}")
-        fn(spark, SP.BASE).count()  # warm plan/codegen
-        t1 = timed_min2(fn, SP.BASE)
-        fn(spark, SP.STAGE).count()
-        tn = timed_min2(fn, SP.STAGE)
-        rows[name] = {"t_1x": t1, f"t_{SP.N_COPIES}x": tn}
-        print(f"{name:30s} 1x={t1:7.2f} {SP.N_COPIES}x={tn:7.2f}")
-    for name in GRAPH_BATTERY:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"core-scaling {name}")
-        fn(spark, SP.BASE).count()
-        t1 = timed_min2(fn, SP.BASE)
-        fn(spark, GRAPH_STAGE).count()  # builds the 125x edge cache (cold)
-        tn = timed_min2(fn, GRAPH_STAGE)  # warm-cache passes, like the bench
-        rows[name] = {"t_1x": t1, f"t_{SP.N_COPIES}x": tn, "staging": "disjoint-graph"}
-        print(f"{name:30s} 1x={t1:7.2f} {SP.N_COPIES}x={tn:7.2f} (disjoint graph)")
-    spark.sparkContext.setJobDescription(None)
+    key = f"t_{SP.N_COPIES}x"
+    rows = {
+        name: {"t_1x": round(t1, 3), key: round(tn, 3)}
+        for name, (t1, tn) in SP.battery_ratios(spark, SP.BATTERY, stage).items()
+    }
+    # The first staged pass of a graph query builds the Nx edge cache
+    # (cold); the timed passes hit it warm, like the bench.
+    print("graph battery on the disjoint-graph staging:")
+    for name, (t1, tn) in SP.battery_ratios(spark, GRAPH_BATTERY, graph_stage).items():
+        rows[name] = {"t_1x": round(t1, 3), key: round(tn, 3), "staging": "disjoint-graph"}
 
     out = {
         "cpus": cpus,
         "n_copies": SP.N_COPIES,
         "rows": rows,
     }
-    rnd = os.environ.get("PLANS_ROUND", "r16")
-    path = f"/root/repo/plans/{rnd}/core_scaling_{cpus}cpu.json"
+    plans_dir = ROOT / "plans" / os.environ.get("PLANS_ROUND", "r16")
+    plans_dir.mkdir(exist_ok=True)
+    path = plans_dir / f"core_scaling_{cpus}cpu.json"
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(f"# wrote {path}")

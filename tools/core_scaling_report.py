@@ -11,10 +11,9 @@ from __future__ import annotations
 
 import json
 import os
-import sys
+from pathlib import Path
 
-rnd = os.environ.get("PLANS_ROUND", "r16")
-base = f"/root/repo/plans/{rnd}"
+base = Path(__file__).resolve().parents[1] / "plans" / os.environ.get("PLANS_ROUND", "r16")
 
 
 def main() -> None:

@@ -11,18 +11,21 @@ For each named query (default: the top-cost rows from BENCH_DETAIL):
 Usage:
   python tools/opt_measure.py [--tag before|after] [--reps N] [q41 q47 ...]
 
-Timings are min-of-N (default 2) on a warm session; jobs are labelled
-with setJobDescription so the UI/eventlog attributes work correctly.
+Timings are min-of-N (default 2) on a warm session, taken by
+tools/runner.time_query, which labels every job with its query name.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 DEFAULT_TARGETS = [
     "q41_dedup_jaccard",
@@ -57,57 +60,48 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
     from tinymr_spark.session import get_session
+    from tools.runner import time_query
 
     spark = get_session(app_name="tinymr-opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLANS_ROUND", "r16"),
-    )
+    plans_dir = ROOT / "plans" / os.environ.get("PLANS_ROUND", "r16")
     os.makedirs(plans_dir, exist_ok=True)
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
 
     out = {}
     for name in targets:
         fn = qs[name]
-        sc = spark.sparkContext
         # Warm pass at tiny SF primes codegen for this plan shape.
         try:
-            fn(spark, "/root/testdata/sf0.001").count()
+            time_query(spark, name, fn, "/root/testdata/sf0.001")
         except Exception as e:
             print(f"# warm fail {name}: {e}", file=sys.stderr)
 
-        sc.setJobDescription(f"{name}: construct")
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t_construct = time.perf_counter() - t0
-
-        # Plan capture (cheap, no execution).
-        short = name.split("_", 1)[0]
-        import contextlib
-        import io
-
+        # Construction time, and the plan capture (cheap, no execution).
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(plans_dir, f"{short}_{tag}.txt"), "w") as f:
+            ((t_construct, _),) = time_query(
+                spark, f"{name}: construct", fn, sf_dir,
+                action=lambda df: df.explain("formatted"),
+            )
+        short = name.split("_", 1)[0]
+        with open(plans_dir / f"{short}_{tag}.txt", "w") as f:
             f.write(f"# {name} @ {sf_dir} ({tag})\n")
             f.write(buf.getvalue())
 
         noop_times, count_times = [], []
         for rep in range(reps):
-            sc.setJobDescription(f"{name}: noop rep{rep}")
-            t0 = time.perf_counter()
-            df2 = fn(spark, sf_dir)
-            df2.write.format("noop").mode("overwrite").save()
-            noop_times.append(round(time.perf_counter() - t0, 4))
-            sc.setJobDescription(f"{name}: count rep{rep}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            count_times.append(round(time.perf_counter() - t0, 4))
-        sc.setJobDescription(None)
+            for times, label, action in (
+                (noop_times, "noop", noop), (count_times, "count", None)
+            ):
+                ((b, a),) = time_query(
+                    spark, f"{name}: {label} rep{rep}", fn, sf_dir, action=action
+                )
+                times.append(round(b + a, 4))
         out[name] = {
             "construct": round(t_construct, 4),
             "noop": noop_times,
@@ -118,7 +112,7 @@ def main() -> None:
         print(f"{name:32s} noop={min(noop_times):6.2f} count={min(count_times):6.2f} "
               f"(all noop={noop_times} count={count_times})")
 
-    path = os.path.join(plans_dir, f"measure_{tag}.json")
+    path = plans_dir / f"measure_{tag}.json"
     with open(path, "w") as f:
         json.dump({"sf": sf_dir, "rows": out}, f, indent=1)
     print(f"# wrote {path}")

@@ -22,61 +22,27 @@ Usage: python tools/probe_embeddings_scale.py   (idle box; ~2-3 min)
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-BASE = "/root/testdata/sf0.1"
-STAGE_ROOT = "/tmp/tinymr_spark_emb_scale"
+from tools import scaling_probe as SP  # noqa: E402  (its 1x-vs-Nx loop)
+from tools.runner import stage_copies  # noqa: E402
+
+BASE = SP.BASE
 N_COPIES = int(os.environ.get("SPARK_GRAFT_PROBE_COPIES", "125"))
 
 
-def stage(spark) -> str:
-    from pyspark.sql import functions as F
-
-    out = f"{STAGE_ROOT}_{N_COPIES}x"
-    done = os.path.join(out, "_done")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    emb = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    parts = [
-        emb.select(
-            (F.col("vec_id") + c * 1_000_000_000).alias("vec_id"),
-            "embedding",
-            "label",
-        )
-        for c in range(N_COPIES)
-    ]
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.repartition(32).write.parquet(os.path.join(out, "embeddings.parquet"))
-    # the battery functions load documents too via load_table siblings?
-    # they don't — embeddings only.  Nothing else to stage.
-    open(done, "w").close()
-    return out
-
-
-def timed_min2(fn, spark, sf_dir) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def _vec_copy(emb, c):
+    return emb.select(
+        (emb.vec_id + c * SP.KEY_OFFSET).alias("vec_id"), "embedding", "label"
+    )
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from tinymr_spark.operators.similarity import (
         _gram_partials,
-        q50_ann_bruteforce,
-        q54_ann_ivf,
         q161_embedding_covariance,
     )
     from tinymr_spark.session import get_session
@@ -84,20 +50,13 @@ def main() -> None:
 
     spark = get_session(app_name="probe-embeddings-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    staged = stage(spark)
-
-    battery = [
-        ("q161_embedding_covariance", q161_embedding_covariance),
-        ("q50_ann_bruteforce", q50_ann_bruteforce),
-        ("q54_ann_ivf", q54_ann_ivf),
-    ]
-    print(f"{'query':28s} {'sf0.1':>8s} {N_COPIES:>7d}x {'ratio':>6s}")
-    for name, fn in battery:
-        fn(spark, BASE).count()  # warm codegen/workers
-        t1 = timed_min2(fn, spark, BASE)
-        fn(spark, staged).count()
-        tn = timed_min2(fn, spark, staged)
-        print(f"{name:28s} {t1:8.2f} {tn:8.2f} {tn / t1:6.2f}")
+    staged = stage_copies(
+        spark, "tinymr_spark_emb_scale", BASE, N_COPIES,
+        {"embeddings": _vec_copy}, repartition=32,
+    )
+    SP.battery_ratios(
+        spark, ["q161_embedding_covariance", "q50_ann_bruteforce", "q54_ann_ivf"], staged
+    )
 
     # the bounded-shuffle count: Gram-partial rows entering q161's
     # groupBy must track the PARTITION count (x2080 each), not the row

@@ -18,48 +18,31 @@ growth <= copy growth) is the pass signal.  Run on an idle box.
 
 from __future__ import annotations
 
-import os
-import shutil
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from tools.runner import stage_copies, time_query  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-STAGE_ROOT = "/tmp/tinymr_spark_q41_hotshingle"
 BOILER = " all rights reserved worldwide respectively"
 COPIES = (1, 5, 25)
 
 
-def stage(spark, n_copies: int) -> str:
+def _hot_copy(docs, c):
     from pyspark.sql import functions as F
 
-    out = f"{STAGE_ROOT}_{n_copies}x"
-    done = os.path.join(out, "_done")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    docs = spark.read.parquet(os.path.join(BASE, "documents.parquet"))
-    parts = []
-    for c in range(n_copies):
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + c * 1_000_000_000).alias("doc_id"),
-                F.concat(
-                    F.regexp_replace(F.col("text"), r"(\S+)", f"$1x{c}"),
-                    F.lit(BOILER),
-                ).alias("text"),
-                "lang",
-                "source",
-                (F.col("n_chars") + len(BOILER)).alias("n_chars"),
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    union.repartition(32).write.parquet(os.path.join(out, "documents.parquet"))
-    open(done, "w").close()
-    return out
+    return docs.select(
+        (F.col("doc_id") + c * 1_000_000_000).alias("doc_id"),
+        F.concat(
+            F.regexp_replace(F.col("text"), r"(\S+)", f"$1x{c}"),
+            F.lit(BOILER),
+        ).alias("text"),
+        "lang",
+        "source",
+        (F.col("n_chars") + len(BOILER)).alias("n_chars"),
+    )
 
 
 def main() -> None:
@@ -70,17 +53,21 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for n in COPIES:
-        sf_dir = stage(spark, n)
-        q41_dedup_jaccard(spark, sf_dir).count()  # warm codegen/workers
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            cnt = q41_dedup_jaccard(spark, sf_dir).count()
-            ts.append(time.perf_counter() - t0)
-        rows.append((n, min(ts), cnt))
-        print(f"{n:3d}x  min {min(ts):7.2f} s   pairs={cnt}")
+        sf_dir = stage_copies(
+            spark, "tinymr_spark_q41_hotshingle", BASE, n,
+            {"documents": _hot_copy}, repartition=32,
+        )
+        counts = []
+        # the first pass warms codegen/workers; min of the other two
+        passes = time_query(
+            spark, "q41_dedup_jaccard", q41_dedup_jaccard, sf_dir, reps=3,
+            action=lambda df: counts.append(df.count()),
+        )
+        t = min(b + a for b, a in passes[1:])
+        rows.append((n, t))
+        print(f"{n:3d}x  min {t:7.2f} s   pairs={counts[-1]}")
     t1 = rows[0][1]
-    for n, t, _ in rows[1:]:
+    for n, t in rows[1:]:
         print(f"ratio {n}x/1x: {t / t1:.2f} (copies grew {n}x)")
     spark.stop()
 

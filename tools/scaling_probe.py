@@ -1,9 +1,10 @@
 """Empirical scaling probe: do the heavy operators scale linearly?
 
 Stages a 5x copy of the big tables (lineitem / orders / customer /
-events) in /tmp by unioning key-offset copies — offsets keep join keys
-consistent within a copy and disjoint across copies, so query semantics
-(join fan-out, group counts) scale linearly by construction.  Then times
+events) under the staging root (tools/runner.stage_copies) by unioning
+key-offset copies — offsets keep join keys consistent within a copy and
+disjoint across copies, so query semantics (join fan-out, group counts)
+scale linearly by construction.  Then times
 a battery of shuffle-heavy queries at sf0.1 and at 5x and reports the
 wall-time ratio.  A ratio near 5 (or below, when fixed overhead
 amortizes) is evidence the plan is data-linear; a super-linear ratio
@@ -26,24 +27,38 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from tools.runner import stage_copies, time_query  # noqa: E402
 
 # default 5x; the round-11 cliff check runs the same probe at 25x
 # (SPARK_GRAFT_PROBE_COPIES=25, ~2.5M events / 15M lineitem) to catch
 # constant-factor cliffs the 5x ratios hide
 N_COPIES = int(os.environ.get("SPARK_GRAFT_PROBE_COPIES", "5"))
 BASE = "/root/testdata/sf0.1"
-STAGE = f"/tmp/tinymr_spark_scale{N_COPIES}x"
-
-SCALED = {
-    "lineitem": ["l_orderkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "customer": ["c_custkey"],
-    "events": ["event_id", "user_id"],
-}
 KEY_OFFSET = 1_000_000_000
+
+
+def offset_keys(*keys):
+    """Copy transform: add `i * KEY_OFFSET` to each key column of copy i,
+    so join keys stay consistent within a copy and disjoint across
+    copies."""
+    return lambda df, i: df.withColumns({k: df[k] + i * KEY_OFFSET for k in keys})
+
+
+# documents scale too (doc_id offset keeps ids disjoint): the probe's
+# corpus queries are per-doc linear, and no battery query does cross-doc
+# pairing on documents.  The small tables are copied unscaled.
+TABLES = {
+    "lineitem": offset_keys("l_orderkey"),
+    "orders": offset_keys("o_orderkey", "o_custkey"),
+    "customer": offset_keys("c_custkey"),
+    "events": offset_keys("event_id", "user_id"),
+    "documents": offset_keys("doc_id"),
+    **dict.fromkeys(("region", "nation", "supplier", "part", "embeddings")),
+}
 
 BATTERY = [
     "q01_pricing_summary",
@@ -95,48 +110,6 @@ BATTERY = [
 ]
 
 
-def stage(spark):
-    from pyspark.sql import functions as F
-
-    from tinymr_spark.sources import load_table
-
-    done = os.path.join(STAGE, "_STAGED")
-    if os.path.exists(done):
-        return
-    os.makedirs(STAGE, exist_ok=True)
-    for name, keys in SCALED.items():
-        df = load_table(spark, BASE, name)
-        copies = []
-        for i in range(N_COPIES):
-            c = df
-            for k in keys:
-                c = c.withColumn(k, F.col(k) + F.lit(i * KEY_OFFSET))
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        out.write.mode("overwrite").parquet(os.path.join(STAGE, f"{name}.parquet"))
-    # documents scale too (doc_id offset keeps ids disjoint): the probe's
-    # corpus queries (q101/q103) are per-doc linear, and no battery query
-    # does cross-doc pairing on documents.
-    docs = load_table(spark, BASE, "documents")
-    dcopies = []
-    for i in range(N_COPIES):
-        dcopies.append(docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * KEY_OFFSET)))
-    dout = dcopies[0]
-    for c in dcopies[1:]:
-        dout = dout.unionByName(c)
-    dout.write.mode("overwrite").parquet(os.path.join(STAGE, "documents.parquet"))
-    for name in (
-        "region nation supplier part embeddings".split()
-    ):
-        src = os.path.join(BASE, f"{name}.parquet")
-        dst = os.path.join(STAGE, f"{name}.parquet")
-        if not os.path.exists(dst):
-            shutil.copyfile(src, dst)
-    open(done, "w").close()
-
-
 def _build_minitable(spark, src_dir: str, path: str, n_files: int) -> None:
     """A partitioned, event_id-clustered minitable over `src_dir`'s
     events: partition dirs by event_type, files range-clustered on
@@ -165,7 +138,7 @@ def _build_minitable(spark, src_dir: str, path: str, n_files: int) -> None:
     )
 
 
-def minitable_probe(spark) -> list[tuple[str, float, float, str]]:
+def minitable_probe(spark, stage: str) -> list[tuple[str, float, float, str]]:
     """Scaling rows for the lakehouse DML verbs (VERDICT r9 task 2).
 
     The claims under test, each asserted by COUNT (file-open proxies
@@ -187,10 +160,10 @@ def minitable_probe(spark) -> list[tuple[str, float, float, str]]:
 
     from tinymr_spark.sources import minitable
 
-    t1 = os.path.join(STAGE, "minitable_1x")
-    t5 = os.path.join(STAGE, "minitable_5x")
+    t1 = os.path.join(stage, "minitable_1x")
+    t5 = os.path.join(stage, "minitable_5x")
     _build_minitable(spark, BASE, t1, 8)
-    _build_minitable(spark, STAGE, t5, 8 * N_COPIES)
+    _build_minitable(spark, stage, t5, 8 * N_COPIES)
 
     ids = list(range(1000, 1500))  # present in both (5x copy-0 keeps base ids)
     rows = []
@@ -240,8 +213,8 @@ def minitable_probe(spark) -> list[tuple[str, float, float, str]]:
         minitable.write(spark, ev, path, "overwrite", identity={"rid": (1, 1)})
         return minitable.table_identity_hwm(path)["rid"]
 
-    (h1, w1) = timed(lambda: _id_write(BASE, os.path.join(STAGE, "minitable_id_1x")))
-    (h5, w5) = timed(lambda: _id_write(STAGE, os.path.join(STAGE, "minitable_id_5x")))
+    (h1, w1) = timed(lambda: _id_write(BASE, os.path.join(stage, "minitable_id_1x")))
+    (h5, w5) = timed(lambda: _id_write(stage, os.path.join(stage, "minitable_id_5x")))
     rows.append(("identity write (linear ok)", w1, w5,
                  f"dense 1..{h1} -> 1..{h5}, no shuffle"))
 
@@ -317,10 +290,10 @@ def minitable_probe(spark) -> list[tuple[str, float, float, str]]:
             minitable.write(spark, part, path, "append", stats_cols=["event_id"])
         return min(z_sizes)
 
-    pc1 = os.path.join(STAGE, "minitable_liq_1x")
-    pc5 = os.path.join(STAGE, "minitable_liq_5x")
+    pc1 = os.path.join(stage, "minitable_liq_1x")
+    pc5 = os.path.join(stage, "minitable_liq_5x")
     thr1 = _cluster_table(BASE, pc1)
-    thr5 = _cluster_table(STAGE, pc5)
+    thr5 = _cluster_table(stage, pc5)
     (c1, w1) = timed(lambda: minitable.optimize(
         spark, pc1, small_bytes=thr1, target_bytes=1 << 26))
     (c5, w5) = timed(lambda: minitable.optimize(
@@ -398,50 +371,46 @@ def minitable_probe(spark) -> list[tuple[str, float, float, str]]:
     return rows
 
 
+def battery_ratios(spark, names, stage: str) -> dict[str, tuple[float, float]]:
+    """name -> (t_1x, t_nx): per query and per input (BASE, then
+    `stage`), one warm pass for plan/codegen/caches, then the min of two
+    timed passes.  Min-of-2: a single contended pass once reported a 15x
+    ratio on a query whose input the probe doesn't even scale (q132,
+    r13) — the probe shares cores with other work, so one sample per
+    cell is not trustworthy evidence of super-linearity."""
+    from tools.check_oracle import sweep_queries
+
+    qs = sweep_queries()
+    print(f"{'query':30s} {'1x':>8s} {os.path.basename(stage):>8s} {'ratio':>6s}")
+    rows = {}
+    for name in names:
+        fn = qs[name][0]
+        t1, tn = (
+            min(b + a for b, a in time_query(spark, name, fn, d, reps=3)[1:])
+            for d in (BASE, stage)
+        )
+        rows[name] = (t1, tn)
+        ratio = tn / t1 if t1 > 0 else float("inf")
+        print(f"{name:30s} {t1:8.2f} {tn:8.2f} {ratio:6.2f}")
+    return rows
+
+
 def main():
-    import __spark_entry__ as entrymod
     from tinymr_spark.session import get_session
 
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
-    stage(spark)
+    stage = stage_copies(spark, "tinymr_spark_scale", BASE, N_COPIES, TABLES)
 
     print(f"minitable DML verbs (1x vs {N_COPIES}x):")
     print(f"{'op':34s} {'1x':>8s} {N_COPIES:>7d}x {'ratio':>6s}  note")
-    for name, w1, w5, note in minitable_probe(spark):
+    for name, w1, w5, note in minitable_probe(spark, stage):
         r = w5 / w1 if w1 > 0 else float("inf")
         print(f"{name:34s} {w1:8.2f} {w5:8.2f} {r:6.2f}  {note}")
     print()
 
-    qs = entrymod.queries()
-    # r11 retired q130 from the registry; its function (and this probe
-    # row — per-row bit math, a good linear-class specimen) live on
-    from tinymr_spark.operators import scale as _scale_mod
-
-    qs.setdefault("q130_zorder_layout", _scale_mod.q130_zorder_layout)
-    print(f"{'query':28s} {'sf0.1':>8s} {N_COPIES:>7d}x {'ratio':>6s}")
-    worst = 0.0
-    def timed_min2(fn, sf):
-        # min-of-2: a single contended pass once reported a 15x ratio on
-        # a query whose input the probe doesn't even scale (q132, r13) —
-        # the probe shares cores with the harness, so one sample per
-        # cell is not trustworthy evidence of super-linearity
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf).count()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    for name in BATTERY:
-        fn = qs[name]
-        fn(spark, BASE).count()  # warm plan
-        t_base = timed_min2(fn, BASE)
-        fn(spark, STAGE).count()  # warm 5x plan/stats
-        t_5x = timed_min2(fn, STAGE)
-        ratio = t_5x / t_base if t_base > 0 else float("inf")
-        worst = max(worst, ratio)
-        print(f"{name:28s} {t_base:8.2f} {t_5x:8.2f} {ratio:6.2f}")
+    rows = battery_ratios(spark, BATTERY, stage)
+    worst = max(tn / t1 if t1 > 0 else float("inf") for t1, tn in rows.values())
     print(f"\nworst ratio: {worst:.2f} (linear scaling target: <= {N_COPIES}"
           f" + fixed-overhead amortization typically pushes it below)")
     return 0 if worst <= N_COPIES * 1.5 else 1
