@@ -12,7 +12,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from tinymr_spark.plans import explain_str
-from tinymr_spark.sources import session_cache, staging_root, standing_index
+from tinymr_spark.sources import session_cache, staged, staging_root, standing_index
 
 
 def _clone_sf(sf_dir: str, tmp_path) -> str:
@@ -177,28 +177,147 @@ def test_standing_index_rebuilds_when_builder_module_changes(spark, tmp_path):
     assert len(ver_dirs) == 1, f"superseded version dirs retained: {ver_dirs}"
 
 
-def test_versioned_staging_dir_prunes_superseded_versions(tmp_path):
+def _counting_build(builds: list):
+    def build(path):
+        builds.append(path)
+        os.makedirs(path)
+
+    return build
+
+
+def test_staged_prunes_superseded_versions(tmp_path):
     """Staged format copies / stream checkpoints keyed by source version
     must not leak one directory per corpus regeneration: resolving the
     current version prunes superseded sibling version dirs AND their
     dot-suffixed marker files."""
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = str(tmp_path / "src.bin")
     open(src, "w").write("v1")
-    d1 = versioned_staging_dir("tinymr_test_stage", src)
-    os.makedirs(d1)
-    open(d1 + "._done", "w").close()
+    build = _counting_build([])
+    d1 = staged("tinymr_test_stage", src, build)
+    assert os.path.isdir(d1) and os.path.exists(d1 + "._done")
 
     _bump(src)
-    d2 = versioned_staging_dir("tinymr_test_stage", src)
+    d2 = staged("tinymr_test_stage", src, build)
     assert d2 != d1
     assert not os.path.exists(d1), "superseded staged dir retained"
     assert not os.path.exists(d1 + "._done"), "superseded marker retained"
     # same version again: current dir untouched
-    os.makedirs(d2)
-    assert versioned_staging_dir("tinymr_test_stage", src) == d2
-    assert os.path.isdir(d2)
+    open(os.path.join(d2, "kept"), "w").close()
+    assert staged("tinymr_test_stage", src, build) == d2
+    assert os.path.isfile(os.path.join(d2, "kept"))
+
+
+def test_staged_builds_once_per_source_version(tmp_path):
+    src = str(tmp_path / "src.bin")
+    open(src, "w").write("v1")
+    builds = []
+    build = _counting_build(builds)
+    path = staged("tinymr_test_stage", src, build)
+    assert builds == [path]
+    assert staged("tinymr_test_stage", src, build) == path
+    assert builds == [path], "built twice for one source version"
+    _bump(src)
+    assert len({staged("tinymr_test_stage", src, build), path}) == 2
+    assert len(builds) == 2
+
+
+def test_staged_rebuilds_when_builder_module_changes(tmp_path):
+    """The staged dir is keyed by the code that builds it: editing the
+    module that defines `build` (a new process sees the new file hash)
+    rebuilds into a new version dir and prunes the old one."""
+    import importlib.util
+    import uuid
+
+    from tinymr_spark import sources
+
+    src = str(tmp_path / "src.bin")
+    open(src, "w").write("v1")
+    mod_path = tmp_path / f"stage_builder_{uuid.uuid4().hex[:8]}.py"
+
+    def builder(version: int):
+        mod_path.write_text(
+            "import os\n"
+            "def build(path):\n"
+            "    os.makedirs(path)\n"
+            f"    open(os.path.join(path, 'v'), 'w').write('{version}')\n"
+        )
+        spec = importlib.util.spec_from_file_location(f"{mod_path.stem}_{version}", mod_path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.build
+
+    old = staged("tinymr_test_stage", src, builder(1))
+    new_build = builder(2)
+    sources._file_hash.cache_clear()  # the hash is read once per process
+    new = staged("tinymr_test_stage", src, new_build)
+    assert new != old
+    assert open(os.path.join(new, "v")).read() == "2", "edited builder served the old build"
+    assert sorted(os.listdir(os.path.dirname(new))) == sorted(
+        os.path.basename(p) for p in (new, new + "._done")
+    ), "superseded version dir retained"
+
+
+def test_staged_failed_build_leaves_no_marker(tmp_path):
+    """A build that raises is never served: no marker is written, and the
+    next call wipes the partial dir and its `path.*` siblings before
+    building again."""
+    import pytest
+
+    src = str(tmp_path / "src.bin")
+    open(src, "w").write("v1")
+    calls = []
+
+    def build(path):
+        # the wipe: no leftovers of the crashed attempt are visible
+        assert not os.path.exists(path) and not os.path.exists(path + ".ckpt")
+        calls.append(path)
+        os.makedirs(path)
+        os.makedirs(path + ".ckpt")
+        if len(calls) == 1:
+            raise RuntimeError("crashed mid-build")
+
+    with pytest.raises(RuntimeError):
+        staged("tinymr_test_stage", src, build)
+    (path,) = calls
+    assert os.path.isdir(path) and os.path.isdir(path + ".ckpt")
+    assert not os.path.exists(path + "._done"), "a crashed build left a marker"
+    assert staged("tinymr_test_stage", src, build) == path
+    assert len(calls) == 2 and os.path.exists(path + "._done")
+
+
+def test_staged_failed_ready_check_forces_rebuild(tmp_path):
+    src = str(tmp_path / "src.bin")
+    open(src, "w").write("v1")
+    builds = []
+    build = _counting_build(builds)
+    path = staged("tinymr_test_stage", src, build, ready=lambda p: True)
+    assert os.path.exists(path + "._done") and len(builds) == 1
+    staged("tinymr_test_stage", src, build, ready=lambda p: True)
+    assert len(builds) == 1
+    # the marker is present, but the completeness check fails: rebuild
+    assert staged("tinymr_test_stage", src, build, ready=lambda p: False) == path
+    assert len(builds) == 2
+    assert os.path.exists(path + "._done")
+
+
+def test_staged_is_the_only_marker_protocol():
+    """Operators and streaming queries stage artifacts only through
+    `sources.staged`: no private done-marker protocol may come back."""
+    import glob
+    import re
+
+    pkg = os.path.join(os.path.dirname(__file__), os.pardir, "tinymr_spark")
+    files = glob.glob(os.path.join(pkg, "operators", "*.py")) + [
+        os.path.join(pkg, "streaming", "__init__.py")
+    ]
+    pattern = re.compile(r'versioned_staging_dir\(|"\._done|"_STAGED"|open\(done')
+    hits = [
+        f"{os.path.relpath(f, pkg)}:{n}: {line.strip()}"
+        for f in files
+        for n, line in enumerate(open(f), 1)
+        if pattern.search(line)
+    ]
+    assert len(files) > 5 and hits == [], hits
 
 
 def _assert_index_scans_exchange_free(plan: str) -> int:

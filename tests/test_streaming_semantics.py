@@ -246,16 +246,21 @@ def test_q138_recovers_from_crashed_staging(spark, sf_dir):
     """A first run killed after query start leaves commits/ existing but
     empty; the staging guard must key on the post-success marker, not
     the directory, or the checkpoint is permanently broken."""
+    import glob
+    import hashlib
     import os
     import shutil
 
-    from tinymr_spark.sources import table_path, versioned_staging_dir
+    from tinymr_spark.sources import staging_root, table_path
     from tinymr_spark.streaming import q138_statestore_reader
 
     n = q138_statestore_reader(spark, sf_dir).count()
     src = table_path(sf_dir, "events")
-    ckpt = versioned_staging_dir("tinymr_spark_ss_ckpt", src)
-    done = ckpt + "._done"
+    root = os.path.join(
+        staging_root("tinymr_spark_ss_ckpt"), hashlib.md5(src.encode()).hexdigest()[:12]
+    )
+    (done,) = glob.glob(os.path.join(root, "*._done"))
+    ckpt = done[: -len("._done")]
     assert os.path.exists(done)
     # simulate the crash: marker gone, commits/ present but empty
     os.remove(done)

@@ -60,6 +60,20 @@ def write_bucketed(
     )
 
 
+def _min_versions(n: int, *siblings: str):
+    """A `sources.staged` ready check for a minitable history: at least
+    `n` commits and every `path + sibling` dir present.  A crashed or
+    raced build that left a short log must never be served: the queries
+    address those versions."""
+    import os
+
+    from tinymr_spark.sources import minitable
+
+    return lambda path: len(minitable.versions(path)) >= n and all(
+        os.path.isdir(path + s) for s in siblings
+    )
+
+
 def hash_repartition(df: DataFrame, cols: list[str], n: int) -> DataFrame:
     """Explicit hash partitioning — pre-shuffle once, reuse across several
     downstream keyed operations on the same key."""
@@ -394,14 +408,13 @@ def q155_corrupt_ingest(spark, sf_dir: str) -> DataFrame:
 
     from tinymr_spark.sources import (
         load_table,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src = table_path(sf_dir, "orders")
-    stage = versioned_staging_dir("tinymr_spark_corrupt", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         orders = load_table(spark, sf_dir, "orders")
         # good rows as JSON lines; every 7th line truncated mid-object
         line = F.concat(
@@ -415,7 +428,8 @@ def q155_corrupt_ingest(spark, sf_dir: str) -> DataFrame:
             F.when(broken, F.substring(line, 1, 20)).otherwise(line).alias("value")
         )
         out.write.mode("overwrite").text(os.path.join(stage, "data"))
-        open(done, "w").close()
+
+    stage = staged("tinymr_spark_corrupt", src, build)
     # Spark refuses to answer queries that reference ONLY the rescue
     # column of an uncached semi-structured parse (the parser prunes the
     # data columns and the rescue column would be trivially non-null);
@@ -687,14 +701,13 @@ def q151_schema_evolution(spark, sf_dir: str) -> DataFrame:
 
     from tinymr_spark.sources import (
         load_table,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src = table_path(sf_dir, "orders")
-    stage = versioned_staging_dir("tinymr_spark_evolve", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         orders = load_table(spark, sf_dir, "orders")
         v1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -704,7 +717,8 @@ def q151_schema_evolution(spark, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(os.path.join(stage, "gen=1"))
         v2.write.mode("overwrite").parquet(os.path.join(stage, "gen=2"))
-        open(done, "w").close()
+
+    stage = staged("tinymr_spark_evolve", src, build)
     evolved = (
         spark.read.option("mergeSchema", "true")
         .option("basePath", stage)
@@ -881,47 +895,23 @@ WHERE tok <> ''
 # the join plan (tests/test_scale_patterns.py asserts it on these same
 # staged tables).  At 100 TB this converts every nightly fact-fact join
 # from two full shuffles into a co-located merge; the price is paid once
-# at write time.  Staging is cached per (sf_dir, source file version) —
-# same freshness contract as the stream staging cache.
+# at write time.  Both tables are standing indexes (sources.
+# standing_index): written once per source version and builder code,
+# reused across sessions.
 # ---------------------------------------------------------------------------
 N_BUCKETS = 8
 
 
-def _bucketed_pair(spark, sf_dir: str) -> tuple[str, str]:
-    """Stage lineitem+orders as bucketed tables; returns their names."""
-    import hashlib
-    import os
-
-    from tinymr_spark.sources import file_version, load_table, session_cache
-
-    cache = session_cache(spark, "_tinymr_bucketed_cache")
-    ver = (
-        sf_dir,
-        file_version(os.path.join(sf_dir, "lineitem.parquet")),
-        file_version(os.path.join(sf_dir, "orders.parquet")),
-    )
-    if ver in cache:
-        return cache[ver]
-    tag = hashlib.md5(repr(ver).encode()).hexdigest()[:10]
-    li_name, o_name = f"li_bkt_{tag}", f"o_bkt_{tag}"
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "tinymr_spark_bucketed", tag)
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"), li_name, "l_orderkey",
-        N_BUCKETS, os.path.join(base, "lineitem"),
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"), o_name, "o_orderkey",
-        N_BUCKETS, os.path.join(base, "orders"),
-    )
-    cache[ver] = (li_name, o_name)
-    return cache[ver]
-
-
 def q113_bucketed_join(spark, sf_dir: str) -> DataFrame:
-    li_name, o_name = _bucketed_pair(spark, sf_dir)
-    li, orders = spark.table(li_name), spark.table(o_name)
+    from tinymr_spark.sources import load_table, standing_index, table_path
+
+    def bucketed(name: str, key: str) -> DataFrame:
+        return standing_index(
+            spark, f"q113{name}", [table_path(sf_dir, name)],
+            lambda: load_table(spark, sf_dir, name), [key], n_buckets=N_BUCKETS,
+        )
+
+    li, orders = bucketed("lineitem", "l_orderkey"), bucketed("orders", "o_orderkey")
     return (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .groupBy("o_orderstatus")
@@ -951,23 +941,12 @@ GROUP BY o_orderstatus
 # changed nothing but the I/O.
 # ---------------------------------------------------------------------------
 def _partitioned_events(spark, sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
+    from tinymr_spark.sources import load_table, staged, table_path
 
-    from tinymr_spark.sources import file_version, load_table, session_cache
+    def build(path):
+        write_partitioned(load_table(spark, sf_dir, "events"), path, ["event_type"])
 
-    cache = session_cache(spark, "_tinymr_part_events_cache")
-    ver = (sf_dir, file_version(os.path.join(sf_dir, "events.parquet")))
-    if ver in cache:
-        return cache[ver]
-    tag = hashlib.md5(repr(ver).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), "tinymr_spark_part_events", tag)
-    write_partitioned(
-        load_table(spark, sf_dir, "events"), path, ["event_type"]
-    )
-    cache[ver] = path
-    return path
+    return staged("tinymr_spark_part_events", table_path(sf_dir, "events"), build)
 
 
 def q114_partition_pruned_scan(spark, sf_dir: str) -> DataFrame:
@@ -1798,22 +1777,19 @@ def _staged_format_copy(spark, sf_dir: str, table: str, fmt: str, write) -> str:
     """Stage `table` in a foreign format once per SOURCE VERSION (the
     freshness key every staged artifact uses) and return the directory;
     `write(df, dir)` does the format-specific write.  Superseded source
-    versions' staged copies are pruned by versioned_staging_dir."""
-    import os
-
+    versions' staged copies are pruned by `staged`."""
     from tinymr_spark.sources import (
         load_table,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src = table_path(sf_dir, table)
-    stage = versioned_staging_dir(f"tinymr_spark_{fmt}", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         write(load_table(spark, sf_dir, table), stage)
-        open(done, "w").close()
-    return stage
+
+    return staged(f"tinymr_spark_{fmt}", src, build)
 
 
 def q135_orc_source(spark, sf_dir: str) -> DataFrame:
@@ -2175,28 +2151,22 @@ WHERE (cum_hi - "offset" + step) // step
 # rule); (b) compaction is INVISIBLE to readers (the v2 row equals the
 # v1 row despite every underlying file changing); (c) appends never
 # perturb history (v0/v1 rows are computed from the SAME log after v3
-# exists).  Builds once per corpus version (versioned staging + done
-# marker); the per-version reads are ordinary parquet scans over the
+# exists).  Builds once per corpus version (`sources.staged`); the
+# per-version reads are ordinary parquet scans over the
 # resolved file lists, so pushdown/pruning are intact at any scale and
 # the log itself stays O(commits) driver-side JSON.
 # ---------------------------------------------------------------------------
 def q162_time_travel(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable", src)
-    done = table + "._done"  # sibling marker, version-prefixed (prune-safe)
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         k = F.col("o_orderkey") % 3
         minitable.write(spark, orders.where(k == 0), table, "overwrite")  # v0
@@ -2204,7 +2174,8 @@ def q162_time_travel(spark, sf_dir: str) -> DataFrame:
         # v2: compaction — same rows as v1, rewritten into fresh files
         minitable.write(spark, minitable.read(spark, table, 1), table, "overwrite")
         minitable.write(spark, orders.where(k == 2), table, "append")  # v3
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable", src, build)
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -2262,22 +2233,16 @@ GROUP BY version
 # tests/test_sources_sinks.py::test_minitable_scan_prunes_files.
 # ---------------------------------------------------------------------------
 def q167_data_skipping(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_skip", src_path)
-    done = table + "._done"
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         minitable.write(
             spark,
@@ -2286,7 +2251,8 @@ def q167_data_skipping(spark, sf_dir: str) -> DataFrame:
             "overwrite",
             stats_cols=["o_orderkey"],
         )
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_skip", src_path, build)
     maxk = load_table(spark, sf_dir, "orders").agg(F.max("o_orderkey")).collect()[0][0]
     cut = int(maxk) // 4  # both engines: floor div of non-negative ints
     return minitable.scan(spark, table, [("o_orderkey", "<=", cut)]).agg(
@@ -2329,22 +2295,16 @@ WHERE o_orderkey <= (SELECT MAX(o_orderkey) // 4 FROM orders)
 # construction) never changes results.
 # ---------------------------------------------------------------------------
 def q170_bloom_skipping(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_bloom", src_path)
-    done = table + "._done"
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         minitable.write(
             spark,
@@ -2354,7 +2314,8 @@ def q170_bloom_skipping(spark, sf_dir: str) -> DataFrame:
             stats_cols=["o_orderkey"],
             bloom_cols=["o_custkey"],
         )
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_bloom", src_path, build)
     maxc = load_table(spark, sf_dir, "orders").agg(F.max("o_custkey")).collect()[0][0]
     probe = int(maxc) // 3  # deterministic mid-domain customer, both engines
     return minitable.scan(spark, table, [("o_custkey", "=", probe)]).agg(
@@ -2404,17 +2365,13 @@ def q173_optimize_binpack(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_opt", src_path)
-    done = table + "._done"
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         m = F.col("o_orderkey") % 16
         minitable.write(  # v0: healthy initial load, 2 range files
@@ -2449,7 +2406,8 @@ def q173_optimize_binpack(spark, sf_dir: str) -> DataFrame:
         assert initial <= set(post), "optimize rewrote healthy files"
         assert not (set(pre) - initial) & set(post), "a small file survived"
         assert len(post) < len(pre), (len(post), len(pre))
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_opt", src_path, build)
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -2679,25 +2637,19 @@ FROM s
 # equals the oracle's surviving-rows aggregate (exactness).
 # ---------------------------------------------------------------------------
 def q177_delete_where(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_del", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders")
     maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
     cut = maxk // 3
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         minitable.write(  # v0: 8 key-range files
             spark,
             orders.repartitionByRange(8, "o_orderkey"),
@@ -2714,7 +2666,8 @@ def q177_delete_where(spark, sf_dir: str) -> DataFrame:
         assert s["dropped_whole"] >= 1 and s["rewritten"] <= 2 and s["untouched"] >= 1, s
         assert len(minitable.snapshot(table)) == s["untouched"] + s["rewritten"]
         assert set(minitable.snapshot(table, 0)) == set(pre)  # history intact
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_del", src_path, build)
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -2767,23 +2720,17 @@ GROUP BY version
 # and at least one whole-drop still fired on a null-free file.
 # ---------------------------------------------------------------------------
 def q178_delete_null_safety(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_delnull", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders")
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         # build-only driver aggregates: inside the marker so steady-state
         # (benchmarked) invocations pay zero extra scans
         maxck = int(orders.agg(F.max("o_custkey")).collect()[0][0])
@@ -2810,7 +2757,8 @@ def q178_delete_null_safety(spark, sf_dir: str) -> DataFrame:
         assert s["rewritten"] >= 1, s
         survivors = minitable.read(spark, table)
         assert survivors.where(F.col("ck").isNull()).count() == n_null_expected
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_delnull", src_path, build)
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -2870,22 +2818,16 @@ GROUP BY version
 # equals the oracle's first-12-slices membership rule.
 # ---------------------------------------------------------------------------
 def q179_log_checkpoint(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_ckpt", src_path)
-    done = table + "._done"
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         for i in range(24):  # v0..v23; auto-checkpoints at v10, v20
             minitable.write(
@@ -2905,7 +2847,8 @@ def q179_log_checkpoint(spark, sf_dir: str) -> DataFrame:
         finally:
             minitable.checkpoint_versions = hidden
         assert minitable._live_entries(table) == scratch
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_ckpt", src_path, build)
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -2954,24 +2897,18 @@ GROUP BY version
 # intact through the rewrite.
 # ---------------------------------------------------------------------------
 def q180_table_evolution(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_evo", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_totalprice")
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         cut = int(orders.agg(F.max("o_orderkey")).collect()[0][0]) // 4
         minitable.write(  # v0: base schema
             spark,
@@ -2998,7 +2935,8 @@ def q180_table_evolution(spark, sf_dir: str) -> DataFrame:
             spark, table, [("o_orderkey", "<=", cut)], stats_cols=["o_orderkey"]
         )
         assert res is not None
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_evo", src_path, build)
 
     def agg(v: int) -> DataFrame:
         df = minitable.read(spark, table, v)
@@ -3049,7 +2987,7 @@ GROUP BY version
 """
 
 
-def _cdf_demo_table(spark, sf_dir: str) -> tuple[str, int, int]:
+def _cdf_demo_table(spark, sf_dir: str) -> str:
     """The shared q181/q182 table: a full-DML history with row-level
     change tracking.  v0 overwrites the %4 in (0,1,2) slice of orders
     (key, price); v1 appends the %4==3 slice; v2 is a MERGE with
@@ -3058,26 +2996,18 @@ def _cdf_demo_table(spark, sf_dir: str) -> tuple[str, int, int]:
     for %10==1 rows at price+1; v3 is a predicate DELETE of
     o_orderkey <= maxk//4 (its commit records the predicate, so the
     feed reconstructs deletes from the removed files — no change data
-    written).  Returns (table_path, maxk, cut)."""
-    import os
-
+    written).  Returns the table path."""
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_dml", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders")
-    # rebuild on a missing marker OR a short log (a crashed/raced build
-    # must never be trusted: the feed below addresses version 3)
-    if not os.path.exists(done) or len(minitable.versions(table)) < 4:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         cut = maxk // 4
         base = orders.select("o_orderkey", "o_totalprice")
@@ -3120,7 +3050,10 @@ def _cdf_demo_table(spark, sf_dir: str) -> tuple[str, int, int]:
             spark, table, [("o_orderkey", "<=", cut)], stats_cols=["o_orderkey"]
         )
         assert res is not None
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_dml", src_path, build, ready=_min_versions(4)
+    )
     return table
 
 
@@ -3247,7 +3180,8 @@ def q182_incremental_mv_dml(spark, sf_dir: str) -> DataFrame:
         )
         .where(F.col("n_orders") > 0)
     )
-    check = table + "._mv_checked"  # version-prefixed marker: prune-safe
+    # a sibling of the staged table: wiped whenever that table is rebuilt
+    check = table + "._mv_checked"
     import os
 
     if not os.path.exists(check):
@@ -3303,17 +3237,13 @@ def q183_restore_version(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_restore", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 4:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select("o_orderkey", "o_totalprice")
         k = F.col("o_orderkey")
@@ -3337,7 +3267,10 @@ def q183_restore_version(spark, sf_dir: str) -> DataFrame:
             if f.endswith(".parquet")
         }
         assert post_files == pre_files  # zero data bytes moved
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_restore", src_path, build, ready=_min_versions(4)
+    )
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -3390,22 +3323,16 @@ GROUP BY version
 # serving exactly the anti-joined survivors.
 # ---------------------------------------------------------------------------
 def q184_deletion_vectors(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_dv", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         cut1, cut2 = maxk // 3, maxk // 2
@@ -3434,7 +3361,10 @@ def q184_deletion_vectors(spark, sf_dir: str) -> DataFrame:
         le2 = int(orders.where(F.col("o_orderkey") <= cut2).count())
         assert n1 == le1 and n2 == le2 - le1, (n1, n2, le1, le2)
         assert minitable.read(spark, table).count() == total - le2
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_dv", src_path, build, ready=_min_versions(3)
+    )
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -3490,22 +3420,16 @@ GROUP BY version
 # rejected batch.
 # ---------------------------------------------------------------------------
 def q185_check_constraints(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_check", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select("o_orderkey", "o_totalprice")
         k = F.col("o_orderkey")
@@ -3521,7 +3445,10 @@ def q185_check_constraints(spark, sf_dir: str) -> DataFrame:
             assert "price_positive" in str(e)
         assert len(minitable.versions(table)) == 2  # nothing committed
         minitable.write(spark, base.where(k % 2 == 1), table, "append")  # v2
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_check", src_path, build, ready=_min_versions(3)
+    )
     return (
         minitable.read(spark, table)
         .groupBy((F.col("o_orderkey") % 4).alias("bucket"))
@@ -3566,19 +3493,18 @@ def q186_shallow_clone(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        retire_artifact_roots,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_clonesrc", src_path)
-    fork = versioned_staging_dir("tinymr_spark_minitable_clonedst", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or not minitable.versions(fork):
-        import shutil
+    # the clone is the source table's ".fork" sibling; sweep the kind
+    # it was once staged under
+    retire_artifact_roots(spark, staging_kinds=("tinymr_spark_minitable_clonedst",))
 
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(fork, ignore_errors=True)
+    def build(table):
+        fork = table + ".fork"
         orders = load_table(spark, sf_dir, "orders")
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         cut = maxk // 3
@@ -3601,7 +3527,12 @@ def q186_shallow_clone(spark, sf_dir: str) -> DataFrame:
         )
         assert res is not None
         assert minitable.read(spark, table).count() == n_src  # source untouched
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_clonesrc", src_path, build,
+        ready=lambda t: bool(minitable.versions(t + ".fork")),
+    )
+    fork = table + ".fork"
 
     def agg(path: str, tag: str) -> DataFrame:
         return minitable.read(spark, path).agg(
@@ -3651,22 +3582,16 @@ GROUP BY side
 # the SQL expression evaluated over OLD values.
 # ---------------------------------------------------------------------------
 def q188_update_where(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_upd", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         cut1, cut2 = maxk // 5, maxk // 2
@@ -3701,7 +3626,10 @@ def q188_update_where(spark, sf_dir: str) -> DataFrame:
         # the feed serves one pre + one post image per updated row
         feed = minitable.change_feed(spark, table, 1, v2)
         assert feed.count() == 2 * n_scope
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_upd", src_path, build, ready=_min_versions(3)
+    )
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -3763,22 +3691,16 @@ GROUP BY version
 # plus a partition-pruned scan of one month.
 # ---------------------------------------------------------------------------
 def q189_partition_retention(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_part", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 2:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         minitable.write(  # v0: hive-partitioned by order month
             spark,
@@ -3801,7 +3723,10 @@ def q189_partition_retention(spark, sf_dir: str) -> DataFrame:
         _v, summary = res
         # whole-partition drops, ZERO rewrites — pure metadata I/O
         assert summary["rewritten"] == 0 and summary["dropped_whole"] >= 1, summary
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_part", src_path, build, ready=_min_versions(2)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
@@ -3866,17 +3791,13 @@ def q190_column_mapping(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_colmap", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 4:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         k = F.col("o_orderkey")
         minitable.write(  # v0: even keys, original names
@@ -3916,7 +3837,10 @@ def q190_column_mapping(spark, sf_dir: str) -> DataFrame:
         minitable.drop_column(table, "o_orderpriority")               # v3
         assert parquets() == before  # drop moved ZERO data bytes
         assert minitable.read(spark, table).columns == ["o_orderkey", "price"]
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_colmap", src_path, build, ready=_min_versions(4)
+    )
 
     def agg(df: DataFrame, tag: str, price_col: str, has_prio: bool) -> DataFrame:
         return df.agg(
@@ -3972,18 +3896,14 @@ GROUP BY phase
 # per-bucket state against the oracle's whole-table rollup.
 # ---------------------------------------------------------------------------
 def q192_merge_accumulate(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_accum", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders")
 
     def rollup(df: DataFrame) -> DataFrame:
@@ -3994,10 +3914,8 @@ def q192_merge_accumulate(spark, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
         )
 
-    if not os.path.exists(done) or len(minitable.versions(table)) < 2:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         half = maxk // 2
         k = F.col("o_orderkey")
@@ -4021,7 +3939,10 @@ def q192_merge_accumulate(spark, sf_dir: str) -> DataFrame:
         assert inc.exceptAll(full).count() == 0 and full.exceptAll(inc).count() == 0, (
             "accumulate-merge diverged from the from-scratch rollup"
         )
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_accum", src_path, build, ready=_min_versions(2)
+    )
     return (
         minitable.read(spark, table)
         .groupBy((F.col("o_custkey") % 10).alias("bucket"))
@@ -4122,21 +4043,20 @@ def q194_convert_in_place(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        retire_artifact_roots,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    plain = versioned_staging_dir("tinymr_spark_plainlake", src_path)
-    table = versioned_staging_dir("tinymr_spark_minitable_convert", src_path)
-    done = table + "._done"
+    # the plain lake dir is the table's ".plain" sibling; sweep the kind
+    # it was once staged under
+    retire_artifact_roots(spark, staging_kinds=("tinymr_spark_plainlake",))
     orders = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(plain, ignore_errors=True)
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
+        plain = table + ".plain"
         maxk = int(orders.agg(F.max("o_orderkey")).collect()[0][0])
         cut = maxk // 3
         (
@@ -4172,7 +4092,10 @@ def q194_convert_in_place(spark, sf_dir: str) -> DataFrame:
         )
         assert res is not None
         assert listing(plain) == before  # originals never touched
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_convert", src_path, build, ready=_min_versions(3)
+    )
     per_version = [
         minitable.read(spark, table, v)
         .agg(
@@ -4233,22 +4156,16 @@ GROUP BY version
 # because writers can't drift from the declared partition derivation.
 # ---------------------------------------------------------------------------
 def q198_generated_columns(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "events")
-    table = versioned_staging_dir("tinymr_spark_minitable_gencol", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", F.col("value").cast("double")
         )
@@ -4288,7 +4205,10 @@ def q198_generated_columns(spark, sf_dir: str) -> DataFrame:
         res2 = minitable.delete(spark, table, [("ed", "<=", 5)])
         assert res2 is not None
         assert res2[1]["rewritten"] == 0 and res2[1]["dropped_whole"] >= 1, res2[1]
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_gencol", src_path, build, ready=_min_versions(3)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
@@ -4358,22 +4278,16 @@ GROUP BY phase
 # per identity write — no global window, no driver row loop.
 # ---------------------------------------------------------------------------
 def q199_identity_columns(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "events")
-    table = versioned_staging_dir("tinymr_spark_minitable_identity", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", F.col("value").cast("double")
         )
@@ -4422,7 +4336,10 @@ def q199_identity_columns(spark, sf_dir: str) -> DataFrame:
             F.count("*"), F.max("rid"), F.count_distinct("rid")
         ).collect()[0]
         assert v2[1] == v2[0] == v2[2], v2  # still dense after the merge
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_identity", src_path, build, ready=_min_versions(3)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
@@ -4496,18 +4413,14 @@ FROM c
 # O(table).
 # ---------------------------------------------------------------------------
 def q200_zorder_verb(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "lineitem")
-    table = versioned_staging_dir("tinymr_spark_minitable_zverb", src_path)
-    done = table + "._done"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
@@ -4515,10 +4428,8 @@ def q200_zorder_verb(spark, sf_dir: str) -> DataFrame:
         F.max("l_orderkey"), F.max("l_partkey"), F.max("l_suppkey")
     ).collect()[0]
     k, mp, ms = int(r[0]) // 10, int(r[1]), int(r[2])
-    if not os.path.exists(done) or len(minitable.versions(table)) < 4:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         minitable.write(  # v0: random 16-file layout — nothing prunes
             spark, li.repartition(16), table, "overwrite",
             stats_cols=["l_orderkey", "l_partkey", "l_suppkey"],
@@ -4553,7 +4464,10 @@ def q200_zorder_verb(spark, sf_dir: str) -> DataFrame:
             spark, li.where(F.col("l_orderkey") < k), table, "append",
             stats_cols=["l_orderkey", "l_partkey", "l_suppkey"],
         )
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_zverb", src_path, build, ready=_min_versions(4)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
@@ -4628,25 +4542,19 @@ GROUP BY phase
 # bytes read, zero old bytes rewritten.
 # ---------------------------------------------------------------------------
 def q201_replace_where(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_rw", src_path)
-    done = table + "._done"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.col("o_totalprice").cast("double")
     )
-    if not os.path.exists(done) or len(minitable.versions(table)) < 2:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         minitable.write(  # v0: priority-partitioned ingest
             spark, orders, table, "overwrite",
             partition_by=["o_orderpriority"], stats_cols=["o_orderkey"],
@@ -4663,7 +4571,10 @@ def q201_replace_where(spark, sf_dir: str) -> DataFrame:
         # partition-aligned scope = metadata-only delete tier
         assert s["rewritten"] == 0 and s["dropped_whole"] >= 1, s
         assert s["untouched"] >= 4, s
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_rw", src_path, build, ready=_min_versions(2)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.groupBy(
@@ -4737,24 +4648,18 @@ GROUP BY phase, pri
 # and distinct-brand count vs the oracle's reconstruction.
 # ---------------------------------------------------------------------------
 def q202_merge_schema_evolution(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "part")
-    table = versioned_staging_dir("tinymr_spark_minitable_msc", src_path)
-    done = table + "._done"
     part = load_table(spark, sf_dir, "part")
     mp = int(part.agg(F.max("p_partkey")).collect()[0][0])
-    if not os.path.exists(done) or len(minitable.versions(table)) < 2:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         minitable.write(  # v0: the narrow two-column era
             spark,
             part.select("p_partkey", F.col("p_retailprice").cast("double")),
@@ -4776,7 +4681,10 @@ def q202_merge_schema_evolution(spark, sf_dir: str) -> DataFrame:
             "p_partkey", "p_retailprice",
         ], "AS-OF v0 must serve the pre-evolution schema"
         assert minitable.table_schema(table, v)["fields"][-1]["name"] == "p_brand"
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_msc", src_path, build, ready=_min_versions(2)
+    )
 
     def agg(df: DataFrame, tag: str, branded) -> DataFrame:
         return df.agg(
@@ -4853,22 +4761,18 @@ def q203_clustered_compaction(spark, sf_dir: str) -> DataFrame:
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "lineitem")
-    table = versioned_staging_dir("tinymr_spark_minitable_liquid", src_path)
-    done = table + "._done"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
     r = li.agg(F.max("l_partkey"), F.max("l_suppkey")).collect()[0]
     mp, ms = int(r[0]), int(r[1])
-    if not os.path.exists(done) or len(minitable.versions(table)) < 6:
-        import shutil
 
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         minitable.write(  # v0: random layout
             spark, li.repartition(16), table, "overwrite",
             stats_cols=["l_partkey", "l_suppkey"],
@@ -4898,7 +4802,10 @@ def q203_clustered_compaction(spark, sf_dir: str) -> DataFrame:
         ):
             kept, total = minitable.prune(table, w)
             assert len(kept) * 5 <= total * 3, (w, len(kept), total)
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_liquid", src_path, build, ready=_min_versions(6)
+    )
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
@@ -4969,45 +4876,23 @@ WHERE l_partkey <= pk AND l_suppkey <= sk
 # oracle's SQL replay.
 # ---------------------------------------------------------------------------
 def q205_stream_cdc_full_dml(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
         minitable_stream,
         retire_artifact_roots,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     # q205 superseded q204 in r11; sweep the retired query's orphaned
     # staging trees (review r11) — no-op once clean
     retire_artifact_roots(spark, staging_kinds=("tinymr_spark_minitable_cdc",))
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_cdc_dml", src_path)
-    landed = table + ".landed"  # `<ver>.`-prefixed: survives staging GC
-    ckpt = table + ".ckpt"
-    # done-marker carries a BUILD-LOGIC tag: the staging dir is keyed by
-    # source version only, so a history change (r11c bounds the DV
-    # in-list to 200 keys ABOVE the backfill scope) must invalidate
-    # prior builds itself
-    done = table + "._done_r11c"
-    if (
-        not os.path.exists(done)
-        or not os.path.isdir(landed)
-        or len(minitable.versions(table)) < 5
-    ):
-        import contextlib
-        import glob
-        import shutil
 
-        for stale in glob.glob(table + "._done*"):
-            with contextlib.suppress(OSError):
-                os.remove(stale)  # incl. earlier build tags' markers —
-                # `ver.*`-prefixed names survive the staging GC by design
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(landed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    def build(table):
+        landed = table + ".landed"
+        ckpt = table + ".ckpt"
         minitable_stream.register(spark)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", F.col("o_totalprice").cast("double")
@@ -5081,10 +4966,13 @@ def q205_stream_cdc_full_dml(spark, sf_dir: str) -> DataFrame:
         assert sorted(tuple(r) for r in got.collect()) == sorted(
             tuple(r) for r in feed.collect()
         ), "stream/batch feed divergence"
-        open(done, "w").close()
 
+    table = staged(
+        "tinymr_spark_minitable_cdc_dml", src_path, build,
+        ready=_min_versions(5, ".landed"),
+    )
     return (
-        spark.read.parquet(landed)
+        spark.read.parquet(table + ".landed")
         .groupBy(
             F.col("_change_type").alias("change_type"),
             F.col("_commit_version").cast("int").alias("commit_version"),
@@ -5163,29 +5051,16 @@ GROUP BY change_type, commit_version
 # free (rewrites already carry columns verbatim).
 # ---------------------------------------------------------------------------
 def q206_row_tracking(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_rowtrack", src_path)
-    done = table + "._done"
-    # >= 3 versions = overwrite + update + merge; the optimize commit is
-    # NOT counted — optimize() legitimately returns None (no commit) when
-    # fewer than two sub-threshold files exist (review r11: requiring it
-    # would tear down and rebuild forever at SFs with big files)
-    if not os.path.exists(done) or len(minitable.versions(table)) < 3:
-        import contextlib
-        import shutil
 
-        with contextlib.suppress(OSError):
-            os.remove(done)
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", F.col("o_totalprice").cast("double")
         )
@@ -5219,7 +5094,14 @@ def q206_row_tracking(spark, sf_dir: str) -> DataFrame:
         )
         movers = v0.join(head, "o_orderkey").where("id0 <> id1").count()
         assert movers == 0, f"{movers} rows changed _row_id across DML"
-        open(done, "w").close()
+
+    # >= 3 versions = overwrite + update + merge; the optimize commit is
+    # NOT counted — optimize() legitimately returns None (no commit) when
+    # fewer than two sub-threshold files exist (review r11: requiring it
+    # would tear down and rebuild forever at SFs with big files)
+    table = staged(
+        "tinymr_spark_minitable_rowtrack", src_path, build, ready=_min_versions(3)
+    )
 
     from tinymr_spark.sources import load_table as _lt
 
@@ -5303,28 +5185,15 @@ def q207_stream_admission(spark, sf_dir: str) -> DataFrame:
         load_table,
         minitable,
         minitable_stream,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_admission2", src_path)
-    landed = table + ".landed"
-    ckpt = table + ".ckpt"
-    done = table + "._done"
-    if (
-        not os.path.exists(done)
-        or not os.path.isdir(landed)
-        or len(minitable.versions(table)) < 4
-    ):
-        import contextlib
-        import shutil
 
-        with contextlib.suppress(OSError):
-            os.remove(done)
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(landed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    def build(table):
+        landed = table + ".landed"
+        ckpt = table + ".ckpt"
         minitable_stream.register(spark)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", F.col("o_totalprice").cast("double")
@@ -5416,10 +5285,13 @@ def q207_stream_admission(spark, sf_dir: str) -> DataFrame:
         fresh = MinitableStreamReader(hopts)
         nxt = fresh.latestOffset()  # FIRST call on a fresh runner
         assert nxt == {"v": 1}, (first, nxt)  # bounded: one more file
-        open(done, "w").close()
 
+    table = staged(
+        "tinymr_spark_minitable_admission2", src_path, build,
+        ready=_min_versions(4, ".landed"),
+    )
     return (
-        spark.read.parquet(landed)
+        spark.read.parquet(table + ".landed")
         .groupBy(
             F.col("_change_type").alias("change_type"),
             F.col("_commit_version").cast("int").alias("commit_version"),
@@ -5471,25 +5343,16 @@ GROUP BY change_type, commit_version
 # the rewrite set, never widens a scan.
 # ---------------------------------------------------------------------------
 def q208_merge_conditional(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_merge_cond", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 2:
-        import contextlib
-        import shutil
 
-        with contextlib.suppress(OSError):
-            os.remove(done)
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         minitable.write(
             spark,
@@ -5522,7 +5385,10 @@ def q208_merge_conditional(spark, sf_dir: str) -> DataFrame:
             collect_cdf=True,
             stats_cols=["o_orderkey"],
         )
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_merge_cond", src_path, build, ready=_min_versions(2)
+    )
     price = F.sum(
         F.col("o_totalprice").cast("decimal(18,2)")
     ).cast("double").alias("sum_price")
@@ -5605,25 +5471,16 @@ FROM cdf GROUP BY grp
 # binary quarters so double sums are order-independent bit-for-bit.
 # ---------------------------------------------------------------------------
 def q209_column_defaults(spark, sf_dir: str) -> DataFrame:
-    import os
-
     from tinymr_spark.sources import (
         load_table,
         minitable,
+        staged,
         table_path,
-        versioned_staging_dir,
     )
 
     src_path = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_defaults", src_path)
-    done = table + "._done"
-    if not os.path.exists(done) or len(minitable.versions(table)) < 6:
-        import contextlib
-        import shutil
 
-        with contextlib.suppress(OSError):
-            os.remove(done)
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select("o_orderkey", "o_totalprice")
         k = F.col("o_orderkey")
@@ -5654,7 +5511,10 @@ def q209_column_defaults(spark, sf_dir: str) -> DataFrame:
             stats_cols=["o_orderkey", "seg"],
         )
         assert res is not None
-        open(done, "w").close()
+
+    table = staged(
+        "tinymr_spark_minitable_defaults", src_path, build, ready=_min_versions(6)
+    )
 
     def agg(df: DataFrame, version: int) -> DataFrame:
         has = "seg" in df.columns

@@ -5,6 +5,16 @@ owns predicate pushdown / column pruning / partition pruning.
 
 The driver testdata is one parquet file per table (TESTDATA.md); on a real
 deployment these would be partitioned directories — the API is identical.
+
+Derived artifacts persist across sessions under a per-user staging root
+(`staging_root`) and are keyed by what produced them: the source file's
+`file_version` and the content of the file that defines the builder
+(`_builder_hash`).  `standing_index` writes bucketed catalog tables;
+`staged` is the one build-once protocol for every other staged artifact
+(split copies, minitable histories, stream checkpoints): a `._done`
+marker written after the build, an optional completeness check, and a
+from-scratch rebuild otherwise.  Superseded versions are pruned on
+resolve.
 """
 
 from __future__ import annotations
@@ -181,9 +191,9 @@ def standing_index(
 
 def retire_artifact_roots(spark: SparkSession, index_tags=(), staging_kinds=()):
     """One-shot cleanup for RENAMED artifact names (review r11): both
-    standing_index and versioned_staging_dir GC only within their own
-    tag/kind, so a tag bump (builder-logic change) or a staging-kind
-    rename orphans the OLD name's on-disk trees and catalog tables
+    standing_index and staged GC only within their own tag/kind, so a
+    tag or staging-kind rename (or a kind folded into another artifact's
+    siblings) orphans the OLD name's on-disk trees and catalog tables
     forever.  Renaming callers invoke this with the legacy names; a
     no-op once clean, so it is safe to call on every resolve."""
     import shutil
@@ -208,22 +218,23 @@ def retire_artifact_roots(spark: SparkSession, index_tags=(), staging_kinds=()):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def versioned_staging_dir(kind: str, src: str) -> str:
-    """A staged-artifact directory keyed by source path THEN source
-    version (`<tmp>/<kind>_<uid>/<md5(src)>/<md5(version)>`); resolving
-    the current version PRUNES sibling version dirs and their
-    `<ver>.*`-suffixed marker files — superseded corpus generations must
-    not leak staged ORC/XML/checkpoint copies for the machine's
-    lifetime (the on-disk analog of the session caches' pop+unpersist).
-    The caller owns creating/filling the returned dir and its own
-    done-marker protocol."""
-    import hashlib
+def versioned_staging_dir(kind: str, src: str, build) -> str:
+    """The directory `staged` builds into:
+    `<tmp>/<kind>_<uid>/<md5(src)>/<ver>`, where `<ver>` hashes the
+    source's `file_version` and the code of `build` (`_builder_hash`).
+    Resolving the current version PRUNES sibling version dirs and their
+    `<ver>.*` files: superseded corpus generations and superseded
+    builders must not leak staged ORC/XML/checkpoint copies for the
+    machine's lifetime (the on-disk analog of the session caches'
+    pop+unpersist).  perfbench/worker.py traces this step by name."""
     import shutil
 
     root = os.path.join(
         staging_root(kind), hashlib.md5(src.encode()).hexdigest()[:12]
     )
-    ver = hashlib.md5(repr(file_version(src)).encode()).hexdigest()[:12]
+    ver = hashlib.md5(
+        repr((file_version(src), _builder_hash(build))).encode()
+    ).hexdigest()[:12]
     if os.path.isdir(root):
         for s in os.listdir(root):
             if s == ver or s.startswith(ver + "."):
@@ -238,6 +249,39 @@ def versioned_staging_dir(kind: str, src: str) -> str:
                     pass
     os.makedirs(root, exist_ok=True)
     return os.path.join(root, ver)
+
+
+def staged(kind: str, src: str, build, ready=None) -> str:
+    """A staged artifact derived from the file `src`, built once per
+    (source version, builder code); returns its path.
+
+    `build(path)` fills `path` and may also write `path + ".<name>"`
+    siblings (checkpoints, landing dirs, secondary tables).  The
+    `path + "._done"` marker is written only after `build` returns, so a
+    crashed build is never served.  A present marker is trusted only
+    while `ready(path)` holds (when given: the caller's completeness
+    check, e.g. the expected commit count of a minitable history).
+    Otherwise the marker, `path` and every `path.*` sibling are removed
+    and `build` runs again from scratch."""
+    import contextlib
+    import glob
+    import shutil
+
+    path = versioned_staging_dir(kind, src, build)
+    done = path + "._done"
+    if os.path.exists(done) and (ready is None or ready(path)):
+        return path
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(done)
+    shutil.rmtree(path, ignore_errors=True)
+    for p in glob.glob(glob.escape(path) + ".*"):
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            os.remove(p)
+    build(path)
+    open(done, "w").close()
+    return path
 
 
 def _write_index_marker(tag_root: str, src_h: str, srcs: tuple) -> None:

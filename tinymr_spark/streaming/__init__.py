@@ -19,7 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tinymr_spark.sources import load_table, staging_root, table_path
+from tinymr_spark.sources import load_table, staged, staging_root, table_path
 
 
 _schema_cache: dict = {}
@@ -491,17 +491,14 @@ def _staged_event_files(spark: SparkSession, sf_dir: str) -> str:
     dir outlives the process, and a regenerated events.parquet at the
     same path (the harness refreshes testdata between rounds) must not
     silently serve last round's rows."""
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = table_path(sf_dir, "events")
-    stage = versioned_staging_dir("tinymr_spark_stage_multi", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         load_table(spark, sf_dir, "events").repartition(N_STAGE_FILES).write.mode(
             "overwrite"
         ).parquet(stage)
-        open(done, "w").close()
-    return stage
+
+    return staged("tinymr_spark_stage_multi", src, build)
 
 
 def q97_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,21 +849,14 @@ GROUP BY kind
 # query ran.
 # ---------------------------------------------------------------------------
 def q138_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = table_path(sf_dir, "events")
-    # versioned dir: a regenerated events file gets a fresh checkpoint
-    # and the superseded version's checkpoint (and its ._done marker)
-    # are pruned rather than leaking per regeneration.
-    ckpt = versioned_staging_dir("tinymr_spark_ss_ckpt", src)
-    # Completion marker OUTSIDE the checkpoint (Spark owns that dir),
-    # written only after the staging query terminated cleanly: Spark
-    # creates commits/ at query START, so testing the directory would
-    # leave a crashed first run permanently "staged" with an empty
-    # checkpoint that every later read fails on.
-    done = ckpt + "._done"
-    if not os.path.exists(done):
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    # `staged` keeps its completion marker OUTSIDE the checkpoint (Spark
+    # owns that dir) and writes it only after the staging query
+    # terminated cleanly: Spark creates commits/ at query START, so
+    # testing the directory would leave a crashed first run permanently
+    # "staged" with an empty checkpoint that every later read fails on.
+    def build(ckpt):
         _pre_stream_cleanup(spark)
         stream = stream_events(spark, sf_dir)
         agg = stream.groupBy("user_id").agg(
@@ -887,7 +877,8 @@ def q138_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             _unload_state_stores(spark)
-        open(done, "w").close()
+
+    ckpt = staged("tinymr_spark_ss_ckpt", src, build)
     # The statestore source reports its read-only providers to the
     # StateStoreCoordinator, whose RPC endpoint only exists once some
     # streaming machinery has initialized it in THIS session — a session
@@ -938,17 +929,14 @@ GROUP BY user_id
 # writes, manifest commits, and codec fidelity.
 # ---------------------------------------------------------------------------
 def q143_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import tinyavro, versioned_staging_dir
+    from tinymr_spark.sources import tinyavro
 
     tinyavro.register(spark)
     src = table_path(sf_dir, "events")
     stage = _staged_event_files(spark, sf_dir)
-    out = versioned_staging_dir("tinymr_spark_avsink", src)
-    done = out + "._done"  # sibling marker, version-prefixed (prune-safe)
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+
+    def build(out):
         ckpt = out + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
         schema = spark.read.parquet(stage).schema
         stream = (
@@ -971,7 +959,8 @@ def q143_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        open(done, "w").close()
+
+    out = staged("tinymr_spark_avsink", src, build)
     back = spark.read.format("tinyavro").load(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -1012,12 +1001,9 @@ def _staged_shard_docs(spark: SparkSession, sf_dir: str) -> str:
     """The day's shard (doc_id % 5 == 0) staged as multiple parquet
     files once per corpus version — the landing directory a streaming
     ingest watches."""
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = table_path(sf_dir, "documents")
-    stage = versioned_staging_dir("tinymr_spark_stage_shard", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         from tinymr_spark.operators.dedup import INC_SHARD_MOD
 
         docs = load_table(spark, sf_dir, "documents")
@@ -1027,8 +1013,8 @@ def _staged_shard_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(stage)
         )
-        open(done, "w").close()
-    return stage
+
+    return staged("tinymr_spark_stage_shard", src, build)
 
 
 def q149_stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,12 +1085,9 @@ def _staged_shard_vecs(spark: SparkSession, sf_dir: str) -> str:
     """The day's vector shard (vec_id % 5 == 0) staged as multiple
     parquet files once per corpus version — the landing directory a
     streaming embedding ingest watches."""
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = table_path(sf_dir, "embeddings")
-    stage = versioned_staging_dir("tinymr_spark_stage_shardvec", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         emb = load_table(spark, sf_dir, "embeddings")
         (
             emb.where(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
@@ -1112,8 +1095,8 @@ def _staged_shard_vecs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(stage)
         )
-        open(done, "w").close()
-    return stage
+
+    return staged("tinymr_spark_stage_shardvec", src, build)
 
 
 def _row_local_bucket(dim: int):
@@ -1147,17 +1130,12 @@ def q159_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dot,
         _lake_vec_index,
     )
-    from tinymr_spark.sources import versioned_staging_dir
-
     lake = _lake_vec_index(spark, sf_dir).alias("l")
     stage = _staged_shard_vecs(spark, sf_dir)
     src = table_path(sf_dir, "embeddings")
-    out = versioned_staging_dir("tinymr_spark_semstream", src)
-    done = out + "._done"  # sibling marker, version-prefixed (prune-safe)
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+
+    def build(out):
         ckpt = out + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
         schema = spark.read.parquet(stage).schema
         # embedding dim isn't in the schema (array<float> is unsized);
@@ -1233,7 +1211,8 @@ def q159_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        open(done, "w").close()
+
+    out = staged("tinymr_spark_semstream", src, build)
     back = spark.read.option("basePath", out).parquet(out)
     return back.drop("batch")
 
@@ -1433,16 +1412,13 @@ Q163_TXN_APP = "q163_stream_ingest"
 
 
 def q163_stream_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import minitable, versioned_staging_dir
+    from tinymr_spark.sources import minitable
 
     stage = _staged_event_files(spark, sf_dir)
     src = table_path(sf_dir, "events")
-    table = versioned_staging_dir("tinymr_spark_lakehouse", src)
-    done = table + "._done"  # sibling marker, version-prefixed (prune-safe)
-    if not os.path.exists(done):
-        shutil.rmtree(table, ignore_errors=True)
+
+    def build(table):
         ckpt = table + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
         schema = spark.read.parquet(stage).schema
         stream = (
@@ -1467,7 +1443,8 @@ def q163_stream_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_lakehouse", src, build)
     back = minitable.read(spark, table)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -1505,16 +1482,13 @@ Q195_TXN_APP = "q195_part_ingest"
 
 
 def q195_stream_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import minitable, versioned_staging_dir
+    from tinymr_spark.sources import minitable
 
     stage = _staged_event_files(spark, sf_dir)
     src = table_path(sf_dir, "events")
-    table = versioned_staging_dir("tinymr_spark_minitable_partingest", src)
-    done = table + "._done"
-    if not os.path.exists(done):
-        shutil.rmtree(table, ignore_errors=True)
+
+    def build(table):
         ckpt = table + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
         schema = spark.read.parquet(stage).schema
         stream = (
@@ -1564,7 +1538,8 @@ def q195_stream_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             # packed outputs keep the exact per-day stats: pruning intact
             kept, total = minitable.prune(table, [("ed", "=", 15)])
             assert 1 <= len(kept) < total, (len(kept), total)
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_partingest", src, build)
     return (
         minitable.read(spark, table)
         .groupBy("ed")
@@ -1611,18 +1586,17 @@ Q196_RULES = {
 
 
 def q196_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import minitable, versioned_staging_dir
+    from tinymr_spark.sources import minitable, retire_artifact_roots
 
     stage = _staged_event_files(spark, sf_dir)
     src = table_path(sf_dir, "events")
-    clean = versioned_staging_dir("tinymr_spark_minitable_expect_clean", src)
-    quar = versioned_staging_dir("tinymr_spark_minitable_expect_quar", src)
-    done = clean + "._done"
-    if not os.path.exists(done):
-        shutil.rmtree(clean, ignore_errors=True)
-        shutil.rmtree(quar, ignore_errors=True)
+    # the quarantine table is the clean table's ".quar" sibling; sweep
+    # the kind it was once staged under
+    retire_artifact_roots(spark, staging_kinds=("tinymr_spark_minitable_expect_quar",))
+
+    def build(clean):
+        quar = clean + ".quar"
         ckpt = clean + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
         schema = spark.read.parquet(stage).schema
         stream = (
@@ -1671,8 +1645,9 @@ def q196_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_clean = minitable.read(spark, clean).count()
         n_quar = minitable.read(spark, quar).count()
         assert n_clean + n_quar == n_src, (n_clean, n_quar, n_src)
-        open(done, "w").close()
 
+    clean = staged("tinymr_spark_minitable_expect_clean", src, build)
+    quar = clean + ".quar"
     clean_side = (
         minitable.read(spark, clean)
         .groupBy(F.concat(F.lit("clean:"), F.col("event_type")).alias("bucket"))
@@ -1760,17 +1735,14 @@ def _staged_doc_files(spark: SparkSession, sf_dir: str) -> str:
     """The documents table split into 8 parquet files once per source
     VERSION (mtime+size keyed) — the landing directory the pipeline's
     file stream watches; same contract as _staged_event_files."""
-    from tinymr_spark.sources import versioned_staging_dir
-
     src = table_path(sf_dir, "documents")
-    stage = versioned_staging_dir("tinymr_spark_pipe_docs_stage", src)
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def build(stage):
         load_table(spark, sf_dir, "documents").repartition(8).write.mode(
             "overwrite"
         ).parquet(stage)
-        open(done, "w").close()
-    return stage
+
+    return staged("tinymr_spark_pipe_docs_stage", src, build)
 
 
 def q197_lakehouse_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1781,19 +1753,20 @@ def q197_lakehouse_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_int60,
         with_tokens,
     )
-    from tinymr_spark.sources import minitable, versioned_staging_dir
+    from tinymr_spark.sources import minitable, retire_artifact_roots
 
     stage = _staged_doc_files(spark, sf_dir)
     src = table_path(sf_dir, "documents")
-    clean = versioned_staging_dir("tinymr_spark_pipe_clean", src)
-    quar = versioned_staging_dir("tinymr_spark_pipe_quar", src)
-    lake = versioned_staging_dir("tinymr_spark_pipe_lake", src)
-    done = lake + "._done"
-    if not os.path.exists(done):
-        for d in (clean, quar, lake):
-            shutil.rmtree(d, ignore_errors=True)
+    # the quarantine and lake tables are the clean table's ".quar" and
+    # ".lake" siblings; sweep the kinds they were once staged under
+    retire_artifact_roots(
+        spark, staging_kinds=("tinymr_spark_pipe_quar", "tinymr_spark_pipe_lake")
+    )
+
+    def build(clean):
+        quar = clean + ".quar"
+        lake = clean + ".lake"
         ckpt = clean + "._ckpt"
-        shutil.rmtree(ckpt, ignore_errors=True)
         _pre_stream_cleanup(spark)
 
         # -- stage 1: streaming expectations ingest (q196's contract:
@@ -1891,7 +1864,8 @@ def q197_lakehouse_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pruning still resolves from the log alone
         kept, total = minitable.prune(lake, [("lang", "=", "en")])
         assert 0 < len(kept) < total, (len(kept), total)
-        open(done, "w").close()
+
+    lake = staged("tinymr_spark_pipe_clean", src, build) + ".lake"
 
     # -- stage 4: split assignment over the survivors ------------------
     surv = minitable.read(spark, lake)
@@ -1977,23 +1951,18 @@ GROUP BY 1, 2
 # tests/test_sources_sinks.py (the checkpoint replay contract).
 # ---------------------------------------------------------------------------
 def q171_stream_table_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import (
-        minitable,
-        minitable_stream,
-        versioned_staging_dir,
-    )
+    from tinymr_spark.sources import minitable, minitable_stream
 
     src = table_path(sf_dir, "orders")
-    table = versioned_staging_dir("tinymr_spark_minitable_cdf", src)
-    done = table + "._done"
-    if not os.path.exists(done):
-        shutil.rmtree(table, ignore_errors=True)
+
+    def build(table):
         orders = load_table(spark, sf_dir, "orders")
         for r in range(3):  # three append commits: a growing live table
             minitable.write(
                 spark, orders.where(F.col("o_orderkey") % 3 == r), table, "append"
             )
-        open(done, "w").close()
+
+    table = staged("tinymr_spark_minitable_cdf", src, build)
     minitable_stream.register(spark)
     stream = (
         spark.readStream.format("tinymr_minitable_stream")
