@@ -1075,16 +1075,53 @@ def test_minitable_log_checkpoint_bounds_replay(spark, tmp_path):
     assert opens == 4, opens  # ckpt at 20 + tail v21..v24
     assert len(live) == 25
 
-    # from-scratch replay (checkpoints hidden) must agree exactly,
-    # for the head AND for historical versions on both sides of a ckpt
-    real = minitable.checkpoint_versions
-    try:
-        minitable.checkpoint_versions = lambda _p: []
-        scratch = {v: minitable._live_entries(path, v) for v in (5, 10, 17, 24)}
-    finally:
-        minitable.checkpoint_versions = real
-    for v, want in scratch.items():
-        assert minitable._live_entries(path, v) == want, v
+    # from-scratch replay (checkpoints hidden) must agree exactly — the
+    # WHOLE state, every field — for the head AND for historical
+    # versions on both sides of a ckpt
+    def assert_forward_equals_scratch(p, vs):
+        real = minitable.checkpoint_versions
+        try:
+            minitable.checkpoint_versions = lambda _p: []
+            scratch = {v: minitable._replay(p, v) for v in vs}
+        finally:
+            minitable.checkpoint_versions = real
+        for v, want in scratch.items():
+            assert minitable._replay(p, v) == want, v
+
+    assert_forward_equals_scratch(path, (5, 10, 17, 24))
+
+    # the log-state fields too: a table recording partition_by,
+    # identity_hwm and cluster_by, then an overwrite that resets them,
+    # with checkpoints before and after the reset
+    lay = str(tmp_path / "lay")
+
+    def batch(lo):
+        return spark.range(lo, lo + 6).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 2).cast("string").alias("p"),
+            (F.col("id") * 1.5).alias("v"),
+        )
+
+    minitable.write(spark, batch(0), lay, "overwrite", partition_by=["p"],
+                    identity={"rid": (1, 1)})  # v0
+    minitable.write(spark, batch(6), lay, "append")  # v1 inherits the layout
+    minitable.zorder(spark, lay, by=["k", "v"], n_files=2)  # v2 records keys
+    minitable.checkpoint(lay)  # ckpt at v2 carries all three
+    minitable.write(spark, batch(12), lay, "append")  # v3
+    minitable.write(spark, batch(0).drop("p"), lay, "overwrite")  # v4 resets
+    minitable.checkpoint(lay)  # ckpt at v4: authoritative defaults
+    minitable.write(spark, batch(6).drop("p"), lay, "append")  # v5
+    at = {v: minitable._replay(lay, v) for v in range(6)}
+    assert at[3].partition_by == ["p"] and at[3].cluster_by == ["k", "v"]
+    assert at[3].identity_hwm == {"rid": 18}
+    for v in (4, 5):
+        assert (at[v].partition_by, at[v].cluster_by, at[v].identity_hwm) == (
+            None, None, {}
+        ), v
+    assert minitable.table_partition_by(lay, 1) == ["p"]
+    assert minitable.table_cluster_by(lay, 1) is None
+    assert minitable.table_identity_hwm(lay, 1) == {"rid": 12}
+    assert_forward_equals_scratch(lay, range(6))
 
     # AS-OF before the first checkpoint replays v0..v5 (6 opens), exact
     before = minitable._replay_opens
@@ -2714,12 +2751,10 @@ def test_minitable_dv_size_gate_and_materialization(spark, tmp_path, monkeypatch
     assert {r["_change_type"] for r in feed.collect()} == {"delete"}
 
 
-def test_minitable_parquet_checkpoint_dataframe_readable_and_legacy(spark, tmp_path):
-    """Checkpoints are now PARQUET (one row per live file, table state in
+def test_minitable_parquet_checkpoint_dataframe_readable(spark, tmp_path):
+    """Checkpoints are PARQUET (one row per live file, table state in
     the footer metadata): readable as an ordinary DataFrame — the
-    metadata-scale property Delta's parquet checkpoints exist for — and
-    legacy single-JSON-document checkpoints are still honored on read."""
-    import json
+    metadata-scale property Delta's parquet checkpoints exist for."""
     import os
 
     from tinymr_spark.sources import minitable
@@ -2742,25 +2777,6 @@ def test_minitable_parquet_checkpoint_dataframe_readable_and_legacy(spark, tmp_p
     assert set(df.columns) == {"f", "stats", "dv"}
     # replay plans from it (O(1) + O(tail))
     assert {r["k"] for r in minitable.read(spark, path).collect()} == {0, 1, 2}
-
-    # legacy JSON checkpoint (the pre-r9 format) still honored: translate
-    # the parquet one back to the old shape at a LATER version and make
-    # sure replay prefers/parses it correctly
-    minitable.write(
-        spark,
-        spark.createDataFrame([(9, 9.0)], "k bigint, v double").coalesce(1),
-        path,
-        "append",
-    )
-    entries, schema, dvs, constraints, colmap = minitable._replay(path)
-    body = {"version": 3, "entries": [[f, st] for f, st in entries]}
-    if schema is not None:
-        body["schema"] = schema
-    with open(minitable._checkpoint_file(path, 3), "w") as f:
-        f.write(json.dumps(body))
-    os.remove(ck)  # only the legacy document remains
-    assert minitable.checkpoint_versions(path) == [3]
-    assert {r["k"] for r in minitable.read(spark, path).collect()} == {0, 1, 2, 9}
 
 
 def test_minitable_two_process_commit_race(tmp_path):
@@ -3886,6 +3902,69 @@ def test_minitable_table_partition_by_stops_at_checkpoint(spark, tmp_path, monke
     # fold-point record itself); never anywhere near the 25-record log
     assert len(opened) <= 6, opened
     assert min(opened) >= 20, opened
+
+
+def test_minitable_verbs_open_each_tail_record_once(spark, tmp_path, monkeypatch):
+    """One log fold per verb: on a table whose newest checkpoint has a
+    tail of T records, every DML verb opens exactly those T records
+    plus the one it writes, and change_feed over k records opens at
+    most T_from + k.  Counted the way the benchmark's log_opens counts
+    — by patching the module-global `open` — so a fold that bypasses it
+    fails the exact pins too."""
+    import os
+
+    from tinymr_spark.sources import minitable
+
+    path = str(tmp_path / "t")
+    for i in range(14):  # v0..v13, auto-checkpoint at v10
+        minitable.write(
+            spark,
+            spark.range(i * 10, i * 10 + 10)
+            .select(F.col("id").alias("k"), (F.col("id") * 0.5).alias("v"))
+            .coalesce(1),
+            path,
+            "append" if i else "overwrite",
+            stats_cols=["k"],
+        )
+    assert minitable.checkpoint_versions(path) == [10]
+    opened = []
+    real_open = open
+
+    def counting_open(file, *a, **kw):
+        if f"{os.sep}_log{os.sep}" in os.fspath(file):
+            opened.append(file)
+        return real_open(file, *a, **kw)
+
+    monkeypatch.setattr(minitable, "open", counting_open, raising=False)
+
+    def src():
+        return spark.createDataFrame([(25, 9.0), (999, 1.0)], "k bigint, v double")
+
+    verbs = [
+        ("append", lambda: minitable.write(spark, src(), path, "append")),
+        ("merge", lambda: minitable.merge(spark, src(), path, "k")),
+        ("update", lambda: minitable.update(spark, path, {"v": "v + 1"}, [("k", "<", 5)])),
+        ("delete", lambda: minitable.delete(spark, path, [("k", "=", 47)])),
+        ("delete_dv", lambda: minitable.delete_dv(spark, path, [("k", "=", 33)])),
+        ("optimize", lambda: minitable.optimize(spark, path, 1 << 30, 1 << 30)),
+    ]
+    for name, run in verbs:
+        head = minitable.versions(path)[-1]
+        tail = head - max(minitable.checkpoint_versions(path))
+        del opened[:]
+        assert run() is not None, name
+        assert minitable.versions(path)[-1] == head + 1, name
+        # no measured commit may land on an auto-checkpoint version
+        assert (head + 1) % minitable.AUTO_CHECKPOINT_INTERVAL, name
+        assert len(opened) == tail + 1, (name, tail, opened)
+
+    # (16, 19] = the delete, the deletion-vector delete and the optimize
+    head = minitable.versions(path)[-1]
+    assert head == 19
+    del opened[:]
+    feed = minitable.change_feed(spark, path, 16, 19)
+    assert sorted(r["k"] for r in feed.collect()) == [33, 47]
+    assert len(opened) <= (16 - 10) + 3, opened
 
 
 def test_minitable_merge_pure_insert_recomputes_generated(spark, tmp_path):

@@ -35,9 +35,10 @@ commit, because:
 Scale: the log is O(commits) driver-side JSON (Delta's exact shape —
 table data never flows through it), reads plan the resolved file list
 as an ordinary parquet scan (pushdown/pruning intact), and writes are
-executor-parallel parquet jobs.  Every 10th commit folds the live file
-list into a `ckpt-v{N}.json` LOG CHECKPOINT (Delta's `_last_checkpoint`
-pattern), so reader planning opens O(1) checkpoint + O(tail) records —
+executor-parallel parquet jobs.  Every 10th commit folds the table
+state into a `ckpt-v{N}.parquet` LOG CHECKPOINT (Delta's
+`_last_checkpoint` pattern), so reader planning opens O(1) checkpoint +
+O(tail) records —
 not O(commits) — however many micro-batches a streaming ingest has
 committed; version records are never removed, so AS-OF reads before any
 checkpoint stay exact.  The reference has no I/O at all
@@ -52,6 +53,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -69,25 +71,20 @@ def _version_file(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"v{version}.json")
 
 
-def _checkpoint_file(path: str, version: int) -> str:
-    """Legacy JSON checkpoint name — still read, no longer written."""
-    return os.path.join(_log_dir(path), f"ckpt-v{version}.json")
-
-
 def _checkpoint_parquet(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"ckpt-v{version}.parquet")
 
 
-# Every AUTO_CHECKPOINT_INTERVAL-th commit folds the live file list into a
-# checkpoint (Delta's every-10-commits parquet checkpoint): without one,
-# _live_entries replays EVERY version record on EVERY read — O(commits)
-# driver file-opens, unbounded for a long-running streaming ingest that
-# commits once per micro-batch (q163).  With it, a read opens one
-# checkpoint + the tail since (<= interval records), O(1) amortized.
+# Every AUTO_CHECKPOINT_INTERVAL-th commit folds the _replay state into a
+# parquet checkpoint (Delta's every-10-commits checkpoint): without one,
+# _replay folds EVERY version record on EVERY read — O(commits) driver
+# file-opens, unbounded for a long-running streaming ingest that commits
+# once per micro-batch (q163).  With it, a read opens one checkpoint +
+# the tail since (<= interval records), O(1) amortized.
 AUTO_CHECKPOINT_INTERVAL = 10
 
 # Replay-cost instrumentation: version-record opens performed by
-# _live_entries since process start.  Tests assert a post-checkpoint read
+# _replay since process start.  Tests assert a post-checkpoint read
 # opens O(tail), not O(commits); not part of the public API.
 _replay_opens = 0
 
@@ -104,40 +101,30 @@ DV_BROADCAST_MAX_BYTES = 8 << 20
 
 
 def checkpoint_versions(path: str) -> list[int]:
-    """Versions with a published log checkpoint, ascending (parquet
-    checkpoints plus legacy JSON ones)."""
+    """Versions with a published parquet log checkpoint, ascending."""
     d = _log_dir(path)
     if not os.path.isdir(d):
         return []
-    out = set()
+    out = []
     for f in os.listdir(d):
-        if not f.startswith("ckpt-v"):
-            continue
-        stem = None
-        if f.endswith(".json"):
-            stem = f[6:-5]
-        elif f.endswith(".parquet"):
-            stem = f[6:-8]
-        if stem is not None:
+        if f.startswith("ckpt-v") and f.endswith(".parquet"):
             try:
-                out.add(int(stem))
+                out.append(int(f[6:-8]))
             except ValueError:
                 continue
     return sorted(out)
 
 
 def checkpoint(path: str, version: int | None = None) -> int:
-    """Fold the live `(relpath, stats)` list AS OF `version` (latest when
-    None) into `_log/ckpt-v{N}.parquet`, the replay shortcut
-    `_live_entries` starts from.  One ROW PER LIVE FILE (columns: `f`,
-    `stats` as a JSON string, `dv`) with the table-level state (schema /
-    constraints / colmap) in the parquet schema metadata — Delta's
-    parquet-checkpoint shape: at metadata scale (millions of live files)
-    the checkpoint is READABLE AS A DATAFRAME and streams in batches,
-    where the old single-JSON-document form forced an O(live-files)
-    driver `json.load` per read.  Legacy JSON checkpoints are still
-    honored on read.  Content is a pure function of the immutable log,
-    so concurrent checkpointers racing on the same version write
+    """Fold the `_replay` state AS OF `version` (latest when None) into
+    `_log/ckpt-v{N}.parquet`, the replay shortcut `_replay` starts from.
+    One ROW PER LIVE FILE (columns: `f`, `stats` as a JSON string, `dv`)
+    with the table-level state (schema / constraints / colmap /
+    partition_by / identity_hwm / cluster_by) in the parquet schema
+    metadata — Delta's parquet-checkpoint shape: at metadata scale
+    (millions of live files) the checkpoint is READABLE AS A DATAFRAME
+    and streams in batches.  Content is a pure function of the immutable
+    log, so concurrent checkpointers racing on the same version write
     identical bodies — `os.replace` publishes whichever lands last,
     atomically.  History stays exact: version records are never removed,
     so AS-OF reads BEFORE any checkpoint still replay from v0 (or from
@@ -150,22 +137,21 @@ def checkpoint(path: str, version: int | None = None) -> int:
         raise ValueError(f"minitable {path} has no commits to checkpoint")
     if version is None:
         version = vs[-1]
-    if version not in vs:
-        raise ValueError(f"minitable {path} has no version {version} (log: {vs})")
-    entries, schema, dvs, constraints, colmap = _replay(path, version)
+    state = _replay(path, version)  # raises on an unknown version
+    entries, dvs = state.entries, state.dvs
     meta = {"version": version}
-    if schema is not None:
-        meta["schema"] = schema
-    if constraints:
-        meta["constraints"] = constraints
-    if colmap:
-        meta["colmap"] = colmap
-    # fold the partition layout in (key ALWAYS present — None means
-    # "authoritatively unpartitioned"), so table_partition_by stops its
-    # newest-first walk here instead of replaying to v0
-    meta["partition_by"] = table_partition_by(path, version)
-    meta["identity_hwm"] = table_identity_hwm(path, version)  # same fold
-    meta["cluster_by"] = table_cluster_by(path, version)  # same fold
+    if state.schema is not None:
+        meta["schema"] = state.schema
+    if state.constraints:
+        meta["constraints"] = state.constraints
+    if state.colmap:
+        meta["colmap"] = state.colmap
+    # the three log-state keys are ALWAYS present (None / {} mean
+    # "authoritatively unset"): _replay only starts from a checkpoint
+    # that carries all of them
+    meta["partition_by"] = state.partition_by
+    meta["identity_hwm"] = state.identity_hwm
+    meta["cluster_by"] = state.cluster_by
     table = pa.table(
         {
             "f": pa.array([f for f, _st in entries], pa.string()),
@@ -304,35 +290,35 @@ def detail(spark: SparkSession, path: str, version: int | None = None) -> DataFr
     count, constraint count, and which column contracts are active
     (generated / identity / defaults / column mapping).  Metadata-only —
     O(live files) getsize calls, no data scan."""
-    entries, schema, dvs, constraints, colmap = _replay(path, version)
+    state = _replay(path, version)
     vs = versions(path)
     v = version if version is not None else (vs[-1] if vs else None)
     if v is None:
         raise ValueError(f"minitable {path} has no commits")
     nbytes = 0
-    for f, _st in entries:
+    for f, _st in state.entries:
         try:
             nbytes += os.path.getsize(os.path.join(path, f))
         except OSError:
             pass  # vacuumed historical target: detail stays answerable
+    schema = state.schema
     fields = (schema or {}).get("fields", [])
-    pby = table_partition_by(path, v)
-    cby = table_cluster_by(path, v)
+    pby, cby = state.partition_by, state.cluster_by
     row = (
         "minitable",
         os.path.abspath(path),
         int(v),
-        len(entries),
+        len(state.entries),
         int(nbytes),
         len(fields) or None,
         ",".join(pby) if pby else None,
         ",".join(cby) if cby else None,
-        len(set(dvs.values())),
-        len(constraints),
+        len(set(state.dvs.values())),
+        len(state.constraints),
         len(_generated_map(schema)),
         len(_identity_map(schema)),
         len(_default_map(schema)),
-        bool(colmap),
+        bool(state.colmap),
         float(_effective_commit_ts(path, v)),
     )
     return spark.createDataFrame(
@@ -427,141 +413,164 @@ def vacuum_dry_run(path: str, retain_from_version: int,
     )
 
 
-def _replay(
-    path: str, version: int | None = None
-) -> tuple[
-    list[tuple[str, dict | None]],
-    dict | None,
-    dict[str, str],
-    dict[str, str],
-    dict[str, str],
-]:
-    """Replay the log to `version`: `(live_entries, schema, dvs,
-    constraints, colmap)` where live_entries is the `(relpath, stats)`
-    pairs in commit-then-manifest order (`stats` is the per-file column
-    min/max map recorded by the commit that added the file; None when
-    the writer skipped stats — readers must treat that conservatively),
-    schema is the LATEST table-schema record at <= version (Spark
-    StructType jsonValue; None on legacy logs whose commits never
-    recorded one), dvs maps a live relpath to its current
-    DELETION-VECTOR file (delete_dv's sidecar of logically-deleted
-    (file, row_index) rows; a newer DV for the same file REPLACES the
-    older — it carries the cumulative union — and a rewrite/removal of
-    the base file drops its DV), and colmap is the COLUMN-MAPPING table
-    {logical_name: physical_name} (Delta's column-mapping mode: RENAME
-    and DROP COLUMN are pure metadata because data files always carry
-    the stable PHYSICAL names; an empty map means mapping was never
-    activated and physical == logical).  The schema record always holds
-    LOGICAL names; stats/footers hold physical.
+class _State(NamedTuple):
+    """One table snapshot: everything a reader or DML verb needs from
+    the log AS OF one version — see _replay for the meaning of each
+    field.  The first five keep their positional order so index
+    readers (`_replay(p)[2]`) stay valid."""
 
-    Starts from the NEWEST checkpoint <= `version` and replays only the
+    entries: list[tuple[str, dict | None]]
+    schema: dict | None
+    dvs: dict[str, str]
+    constraints: dict[str, str]
+    colmap: dict[str, str]
+    partition_by: list[str] | None
+    cluster_by: list[str] | None
+    identity_hwm: dict[str, int]
+
+    @classmethod
+    def empty(cls) -> _State:
+        """The state before v0 (fresh containers on every call)."""
+        return cls([], None, {}, {}, {}, None, None, {})
+
+
+def _apply(state: _State, rec: dict) -> _State:
+    """Fold ONE version record into `state` — the single log step
+    `_replay`, change_feed and vacuum share.  Pure: `state` is never
+    mutated, so a caller may keep the previous state (change_feed reads
+    its DVs) while advancing.  Live files: `append` unions its files
+    in, `overwrite` replaces the set (and its DV map — a restore
+    carries the target's vectors through its record), `merge` and `dv`
+    swap `removed` out for `added` and retire the removed files'
+    vectors; a newer vector for a file REPLACES the older (it carries
+    the cumulative union).  `schema` / `constraints` / `colmap`: a
+    record carrying the key sets it (an explicit null / {} resets).
+    `partition_by` / `cluster_by` / `identity_hwm`: a record carrying
+    the key sets `rec[key] or default`, and an `overwrite` WITHOUT it
+    resets to the default (the overwrite re-laid the table out)."""
+    action = rec["action"]
+    stats = rec.get("stats", {})
+    fresh = [(f, stats.get(f)) for f in rec["added"]]
+    live, dvs = state.entries, state.dvs
+    pby, cby, hwm = state.partition_by, state.cluster_by, state.identity_hwm
+    if action == "overwrite":
+        live, dvs = fresh, dict(rec.get("dv", {}))
+        pby, cby, hwm = None, None, {}
+    elif action in ("merge", "dv"):
+        dropped = set(rec.get("removed", ()))
+        live = [e for e in live if e[0] not in dropped] + fresh
+        # the rewrite / removal materialized the dropped files' deletes
+        dvs = {r: d for r, d in dvs.items() if r not in dropped}
+        if action == "dv":
+            dvs.update(rec.get("dv") or {})
+    elif action != "meta":  # meta: table metadata only
+        live = live + fresh
+    if dvs is not state.dvs and dvs:
+        # a record that rebuilt the DV map keeps live files' vectors only
+        alive = {f for f, _st in live}
+        dvs = {r: d for r, d in dvs.items() if r in alive}
+    if "partition_by" in rec:
+        pby = rec["partition_by"] or None
+    if "cluster_by" in rec:
+        cby = rec["cluster_by"] or None
+    if "identity_hwm" in rec:
+        hwm = rec["identity_hwm"] or {}
+    return _State(
+        live,
+        rec["schema"] if "schema" in rec else state.schema,
+        dvs,
+        dict(rec["constraints"]) if "constraints" in rec else state.constraints,
+        dict(rec["colmap"]) if "colmap" in rec else state.colmap,
+        pby,
+        cby,
+        hwm,
+    )
+
+
+def _replay(path: str, version: int | None = None) -> _State:
+    """THE log fold: the table state AS OF `version` (latest when None),
+    folded forward one record at a time by `_apply`.  Fields:
+
+    * `entries` — the live `(relpath, stats)` pairs in
+      commit-then-manifest order (`stats` is the per-file column
+      min/max map recorded by the commit that added the file; None when
+      the writer skipped stats — readers must treat that
+      conservatively);
+    * `schema` — the LATEST table-schema record at <= version (Spark
+      StructType jsonValue; None on legacy logs whose commits never
+      recorded one).  It always holds LOGICAL names; stats/footers hold
+      physical;
+    * `dvs` — live relpath -> its current DELETION-VECTOR file
+      (delete_dv's sidecar of logically-deleted (file, row_index) rows);
+    * `constraints` — the CHECK-constraint map {name: sql_expr};
+    * `colmap` — the COLUMN-MAPPING table {logical: physical} (Delta's
+      column-mapping mode: RENAME / DROP COLUMN are pure metadata
+      because data files always carry the stable PHYSICAL names; empty
+      means mapping was never activated and physical == logical);
+    * `partition_by` — the recorded partition layout (logical names),
+      None when unpartitioned;
+    * `cluster_by` — the recorded clustering keys, None when unset;
+    * `identity_hwm` — the identity high-water marks {col: last id}.
+
+    Starts from the NEWEST checkpoint <= `version` and folds only the
     tail records after it — O(1) + O(tail) file opens instead of
     O(commits), the metadata bottleneck Delta's `_last_checkpoint`
-    solves for long-lived tables (a per-micro-batch streaming ingest
-    otherwise makes every later read's planning cost grow without
-    bound)."""
+    solves for long-lived tables.  A checkpoint whose metadata lacks
+    any of the three log-state keys is not a start point (the fold then
+    walks from v0, exact).  Records are opened through the module-level
+    `open`, the one name replay-cost instrumentation patches."""
     global _replay_opens
+    state = _State.empty()
     vs = versions(path)
     if not vs:
-        return [], None, {}, {}, {}
+        return state
     if version is None:
         version = vs[-1]
     if version not in vs:
         raise ValueError(f"minitable {path} has no version {version} (log: {vs})")
-    live: list[tuple[str, dict | None]] = []
-    schema: dict | None = None
-    dvs: dict[str, str] = {}
-    constraints: dict[str, str] = {}
-    colmap: dict[str, str] = {}
     start = 0
     cks = [c for c in checkpoint_versions(path) if c <= version]
     if cks:
-        pq_ckpt = _checkpoint_parquet(path, max(cks))
-        if os.path.exists(pq_ckpt):
-            import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-            table = pq.read_table(pq_ckpt)
-            live = [
-                (f, None if st is None else json.loads(st))
-                for f, st in zip(
-                    table.column("f").to_pylist(), table.column("stats").to_pylist()
-                )
-            ]
-            dvs = {
-                f: d
-                for f, d in zip(
-                    table.column("f").to_pylist(), table.column("dv").to_pylist()
-                )
-                if d is not None
-            }
-            meta = json.loads(
-                (table.schema.metadata or {}).get(b"minitable_meta", b"{}")
+        table = pq.read_table(_checkpoint_parquet(path, max(cks)))
+        meta = json.loads(
+            (table.schema.metadata or {}).get(b"minitable_meta", b"{}")
+        )
+        if {"partition_by", "cluster_by", "identity_hwm"} <= meta.keys():
+            files = table.column("f").to_pylist()
+            dv_col = table.column("dv").to_pylist()
+            state = _State(
+                [
+                    (f, None if st is None else json.loads(st))
+                    for f, st in zip(files, table.column("stats").to_pylist())
+                ],
+                meta.get("schema"),
+                {f: d for f, d in zip(files, dv_col) if d is not None},
+                dict(meta.get("constraints", {})),
+                dict(meta.get("colmap", {})),
+                meta["partition_by"] or None,
+                meta["cluster_by"] or None,
+                meta["identity_hwm"] or {},
             )
-            schema = meta.get("schema")
-            constraints = dict(meta.get("constraints", {}))
-            colmap = dict(meta.get("colmap", {}))
-        else:  # legacy single-JSON-document checkpoint
-            with open(_checkpoint_file(path, max(cks))) as f:
-                body = json.load(f)
-            live = [(e[0], e[1]) for e in body["entries"]]
-            schema = body.get("schema")
-            dvs = dict(body.get("dvs", {}))
-            constraints = dict(body.get("constraints", {}))
-            colmap = dict(body.get("colmap", {}))
-        start = max(cks) + 1
+            start = max(cks) + 1
     for v in vs:
-        if v < start:
-            continue
-        if v > version:
-            break
-        _replay_opens += 1
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
-        stats = rec.get("stats", {})
-        fresh = [(f, stats.get(f)) for f in rec["added"]]
-        if rec["action"] == "overwrite":
-            live = fresh
-            # an overwrite resets DV state; a restore carries the target
-            # version's DV map through its record
-            dvs = dict(rec.get("dv", {}))
-        elif rec["action"] == "merge":
-            dropped = set(rec["removed"])
-            live = [e for e in live if e[0] not in dropped]
-            live.extend(fresh)
-            for r in dropped:
-                dvs.pop(r, None)  # the rewrite materialized the deletes
-        elif rec["action"] == "dv":
-            dropped = set(rec.get("removed", ()))
-            live = [e for e in live if e[0] not in dropped]
-            live.extend(fresh)  # materialization rewrites land here
-            for r in dropped:
-                dvs.pop(r, None)
-            dvs.update(rec.get("dv") or {})  # newer DV replaces (cumulative)
-        elif rec["action"] == "meta":
-            pass  # table metadata only; constraints handled below
-        else:
-            live.extend(fresh)
-        if "schema" in rec:  # explicit null resets (restore to pre-schema era)
-            schema = rec["schema"]
-        if "constraints" in rec:  # full map, last record wins
-            constraints = dict(rec["constraints"])
-        if "colmap" in rec:  # full map, last record wins ({} = explicit reset)
-            colmap = dict(rec["colmap"])
-    if dvs:
-        alive = {f for f, _st in live}
-        dvs = {r: d for r, d in dvs.items() if r in alive}
-    return live, schema, dvs, constraints, colmap
+        if start <= v <= version:
+            _replay_opens += 1
+            with open(_version_file(path, v)) as f:
+                state = _apply(state, json.load(f))
+    return state
 
 
 def _live_entries(path: str, version: int | None = None) -> list[tuple[str, dict | None]]:
     """The live `(relpath, stats)` pairs AS OF `version` — see _replay."""
-    return _replay(path, version)[0]
+    return _replay(path, version).entries
 
 
 def table_constraints(path: str, version: int | None = None) -> dict[str, str]:
     """The CHECK-constraint map {name: sql_boolean_expr} AS OF `version`
     — write()/merge() enforce these on every new-row batch."""
-    return _replay(path, version)[3]
+    return _replay(path, version).constraints
 
 
 def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
@@ -585,11 +594,12 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
 
     vs0 = versions(path)
     head = vs0[-1] if vs0 else None
-    cur = table_constraints(path, head)
+    state = _replay(path, head)
+    cur = state.constraints
     if name in cur:
         raise ValueError(f"constraint {name!r} already exists on {path}")
     bad = 0
-    if head is not None and _live_entries(path, head):
+    if head is not None and state.entries:
         # zero live files: vacuously satisfied
         bad = (
             read(spark, path, head)
@@ -659,13 +669,13 @@ def table_schema(path: str, version: int | None = None) -> dict | None:
     schema-evolution timeline: an AS-OF read before an ADD COLUMN commit
     serves the OLD schema, reads at/after it serve the new one with
     nulls for files written before the change."""
-    return _replay(path, version)[1]
+    return _replay(path, version).schema
 
 
 def table_colmap(path: str, version: int | None = None) -> dict[str, str]:
     """The column-mapping table {logical: physical} AS OF `version`;
     empty when mapping was never activated (physical == logical)."""
-    return _replay(path, version)[4]
+    return _replay(path, version).colmap
 
 
 def _generated_map(schema: dict | None) -> dict[str, str]:
@@ -725,53 +735,14 @@ def table_identity(path: str, version: int | None = None) -> dict[str, tuple[int
     return _identity_map(table_schema(path, version))
 
 
-def _fold_log_state(path: str, version: int | None, key: str, default):
-    """Shared newest-first fold for per-commit table-state records
-    (`partition_by`, `identity_hwm`): the newest record carrying `key`
-    wins, an `overwrite` WITHOUT it resets to `default`, and the walk
-    stops at the newest checkpoint <= `version` — checkpoints fold both
-    keys into their metadata (key ALWAYS present in new checkpoints, so
-    its value — even the default — is authoritative; legacy checkpoints
-    without it fall through to the full walk).  O(tail) per call, the
-    property every DML verb's layout/allocation read depends on."""
-    vs = versions(path)
-    if version is not None:
-        vs = [v for v in vs if v <= version]
-    cks = [c for c in checkpoint_versions(path) if vs and c <= vs[-1]]
-    ck = max(cks) if cks else None
-    for v in reversed(vs):
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
-        if key in rec and rec[key]:
-            return rec[key]
-        if key in rec or rec.get("action") == "overwrite":
-            # an explicit empty record, or an overwrite without one,
-            # resets the state
-            return default
-        if ck is not None and v <= ck:
-            pq_ckpt = _checkpoint_parquet(path, ck)
-            if os.path.exists(pq_ckpt):
-                import pyarrow.parquet as _pq
-
-                meta = json.loads(
-                    (_pq.read_schema(pq_ckpt).metadata or {}).get(
-                        b"minitable_meta", b"{}"
-                    )
-                )
-                if key in meta:  # authoritative, may be the default
-                    return meta[key] if meta[key] else default
-            ck = None  # legacy checkpoint: continue the full walk
-    return default
-
-
 def table_identity_hwm(path: str, version: int | None = None) -> dict[str, int]:
     """The identity HIGH-WATER MARKS {col: last_assigned_id} as of
     `version` — the allocation state every id-assigning commit records
     as a full map (newest record wins; an overwrite without one resets,
-    restore/clone re-record their era's marks).  O(tail) via the same
-    checkpoint fold as table_partition_by."""
-    got = _fold_log_state(path, version, "identity_hwm", {})
-    return {c: int(h) for c, h in got.items()}
+    restore/clone re-record their era's marks).  A field of the one
+    `_replay` fold: O(tail) from the newest checkpoint, which carries
+    the marks; an unknown version raises."""
+    return _replay(path, version).identity_hwm
 
 
 class _LayoutFromTable:
@@ -879,24 +850,21 @@ def _assign_identity(
 def table_partition_by(path: str, version: int | None = None) -> list[str] | None:
     """The most recently recorded partition layout (LOGICAL column
     names) as of `version` (latest when None), or None for an
-    unpartitioned table.  Newest-first scan over the immutable version
-    records (they are never removed — checkpoints only shortcut file
-    replay), first `partition_by` record wins; an `overwrite` record
-    WITHOUT one resets the layout (the overwrite re-laid the whole
-    table out unpartitioned).  DML rewrites (update / delete /
-    delete_dv materialization) re-stage their output under this layout
-    so hive dirs and the exact `[v, v]` partition stats survive
-    row-level DML — without it, later retention deletes on rewritten
-    files would silently degrade from metadata-only whole-drops to
-    data rewrites (ADVICE r9).
+    unpartitioned table: the newest `partition_by` record wins, and an
+    `overwrite` record WITHOUT one resets the layout (the overwrite
+    re-laid the whole table out unpartitioned).  DML rewrites (update /
+    delete / delete_dv materialization) re-stage their output under
+    this layout so hive dirs and the exact `[v, v]` partition stats
+    survive row-level DML — without it, later retention deletes on
+    rewritten files would silently degrade from metadata-only
+    whole-drops to data rewrites (ADVICE r9).
 
-    O(tail): the scan stops at the newest checkpoint <= `version` —
-    checkpoints fold the layout into their metadata — so a long-lived
-    streaming-ingest table doesn't pay an O(commits) log walk on every
-    DML call (review r10).  Legacy checkpoints without the key fall
-    through to the full walk (conservative migration)."""
-    got = _fold_log_state(path, version, "partition_by", None)
-    return list(got) if got else None
+    A field of the one `_replay` fold: O(tail) from the newest
+    checkpoint, which carries the layout (None = authoritatively
+    unpartitioned), so a long-lived streaming-ingest table doesn't pay
+    an O(commits) log walk on every DML call (review r10).  An unknown
+    version raises, like table_schema."""
+    return _replay(path, version).partition_by
 
 
 def table_cluster_by(path: str, version: int | None = None) -> list[str] | None:
@@ -904,9 +872,9 @@ def table_cluster_by(path: str, version: int | None = None) -> list[str] | None:
     liquid-style clusteringColumns): zorder() records its `by` list,
     OPTIMIZE consults it to keep compaction clustering-aware, rename
     re-points it, restore/clone carry their era's keys, and an
-    overwrite without a record resets to None.  O(tail) via the same
-    checkpoint fold as table_partition_by."""
-    return _fold_log_state(path, version, "cluster_by", None)
+    overwrite without a record resets to None.  A field of the one
+    `_replay` fold, O(tail) like table_partition_by."""
+    return _replay(path, version).cluster_by
 
 
 def _physical_schema(schema: dict, colmap: dict[str, str]) -> dict:
@@ -960,6 +928,21 @@ def _constraint_mentions(constraints: dict[str, str], col: str) -> list[str]:
     return sorted(n for n, e in constraints.items() if pat.search(e))
 
 
+def _ddl_head(path: str, what: str) -> tuple[int, _State]:
+    """The head version and its one `_replay` state for a column-DDL
+    meta commit (which claims head+1 and needs the schema timeline)."""
+    vs = versions(path)
+    if not vs:
+        raise ValueError(f"minitable {path} has no commits")
+    state = _replay(path, vs[-1])
+    if state.schema is None:
+        raise ValueError(
+            f"minitable {path} has no recorded schema — {what} needs "
+            "the schema timeline (write with this library first)"
+        )
+    return vs[-1], state
+
+
 def rename_column(path: str, old: str, new: str) -> int:
     """ALTER TABLE RENAME COLUMN — pure metadata via COLUMN MAPPING
     (Delta's column-mapping mode): the meta commit records the renamed
@@ -971,22 +954,14 @@ def rename_column(path: str, old: str, new: str) -> int:
     a CHECK constraint (the recorded expression would silently break).
     Claims head+1: racing a schema-evolving append must conflict, not
     silently drop its column from the recorded map."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, constraints, colmap = _replay(path, head)
-    if schema is None:
-        raise ValueError(
-            f"minitable {path} has no recorded schema — column mapping "
-            "needs the schema timeline (write with this library first)"
-        )
+    head, state = _ddl_head(path, "column mapping")
+    schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
         raise ValueError(f"no column {old!r} in {names}")
     if new in names:
         raise ValueError(f"column {new!r} already exists in {names}")
-    blocked = _constraint_mentions(constraints, old)
+    blocked = _constraint_mentions(state.constraints, old)
     if blocked:
         raise ValueError(
             f"cannot rename {old!r}: referenced by CHECK constraint(s) "
@@ -1003,7 +978,7 @@ def rename_column(path: str, old: str, new: str) -> int:
             f"cannot rename {old!r}: it is an input of generated "
             f"column(s) {gen_blocked}"
         )
-    if old in (table_partition_by(path, head) or ()):
+    if old in (state.partition_by or ()):
         raise ValueError(
             f"cannot rename {old!r}: it is a recorded partition column "
             "— rewrite the table under a new layout first"
@@ -1017,9 +992,9 @@ def rename_column(path: str, old: str, new: str) -> int:
             f"cannot rename {old!r}: it is an identity column (its "
             "allocation state is keyed by name)"
         )
-    full = _full_colmap(schema, colmap)
+    full = _full_colmap(schema, state.colmap)
     full[new] = full.pop(old)  # the new logical keeps the old physical
-    ckeys = table_cluster_by(path, head)
+    ckeys = state.cluster_by
     new_schema = dict(schema)
     new_schema["fields"] = [
         ({**f, "name": new} if f["name"] == old else f) for f in schema["fields"]
@@ -1051,22 +1026,14 @@ def drop_column(path: str, name: str) -> int:
     (write() assigns one when mapping is active), so the dropped data
     never resurrects.  Refused for the last column or a constrained
     column."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, constraints, colmap = _replay(path, head)
-    if schema is None:
-        raise ValueError(
-            f"minitable {path} has no recorded schema — column mapping "
-            "needs the schema timeline (write with this library first)"
-        )
+    head, state = _ddl_head(path, "column mapping")
+    schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if name not in names:
         raise ValueError(f"no column {name!r} in {names}")
     if len(names) == 1:
         raise ValueError("cannot drop the last column of a table")
-    blocked = _constraint_mentions(constraints, name)
+    blocked = _constraint_mentions(state.constraints, name)
     if blocked:
         raise ValueError(
             f"cannot drop {name!r}: referenced by CHECK constraint(s) "
@@ -1083,17 +1050,17 @@ def drop_column(path: str, name: str) -> int:
             f"cannot drop {name!r}: it is an input of generated "
             f"column(s) {gen_blocked}"
         )
-    if name in (table_partition_by(path, head) or ()):
+    if name in (state.partition_by or ()):
         raise ValueError(
             f"cannot drop {name!r}: it is a recorded partition column "
             "— rewrite the table under a new layout first"
         )
-    if name in (table_cluster_by(path, head) or ()):
+    if name in (state.cluster_by or ()):
         raise ValueError(
             f"cannot drop {name!r}: it is a recorded clustering key — "
             "zorder() by the remaining keys (re-recording them) first"
         )
-    full = _full_colmap(schema, colmap)
+    full = _full_colmap(schema, state.colmap)
     full.pop(name)
     new_schema = dict(schema)
     new_schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
@@ -1136,16 +1103,8 @@ def widen_column(path: str, col: str, new_type: str) -> int:
     its contract), and identity columns (always long by construction).
     Claims head+1 so a racing schema-evolving commit conflicts instead
     of being silently overwritten."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, _constraints, _cm = _replay(path, head)
-    if schema is None:
-        raise ValueError(
-            f"minitable {path} has no recorded schema — type widening "
-            "needs the schema timeline (write with this library first)"
-        )
+    head, state = _ddl_head(path, "type widening")
+    schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if col not in names:
         raise ValueError(f"no column {col!r} in {names}")
@@ -1328,16 +1287,8 @@ def set_default(path: str, col: str, default) -> int:
     ones added without a default (their pre-ADD files keep serving
     NULL).  Refused for generated/identity columns (their values are
     never writer-omittable).  Pure metadata, claims head+1."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, _constraints, _cm = _replay(path, head)
-    if schema is None:
-        raise ValueError(
-            f"minitable {path} has no recorded schema — SET DEFAULT "
-            "needs the schema timeline (write with this library first)"
-        )
+    head, state = _ddl_head(path, "SET DEFAULT")
+    schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if col not in names:
         raise ValueError(f"no column {col!r} in {names}")
@@ -1375,13 +1326,8 @@ def drop_default(path: str, col: str) -> int:
     pre-ADD files were written under that contract and dropping it
     would retroactively change committed history (Spark keeps
     EXISTS_DEFAULT for the column's life too).  Pure metadata."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, _constraints, _cm = _replay(path, head)
-    if schema is None:
-        raise ValueError(f"minitable {path} has no recorded schema")
+    head, state = _ddl_head(path, "DROP DEFAULT")
+    schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if col not in names:
         raise ValueError(f"no column {col!r} in {names}")
@@ -1455,16 +1401,8 @@ def add_column(path: str, name: str, type_: str, default=None) -> int:
     physical name (a dropped column's data must never resurrect).
     Claims head+1 so a racing schema-evolving commit conflicts instead
     of being silently overwritten."""
-    vs = versions(path)
-    if not vs:
-        raise ValueError(f"minitable {path} has no commits")
-    head = vs[-1]
-    _e, schema, _d, _constraints, colmap = _replay(path, head)
-    if schema is None:
-        raise ValueError(
-            f"minitable {path} has no recorded schema — ADD COLUMN "
-            "needs the schema timeline (write with this library first)"
-        )
+    head, state = _ddl_head(path, "ADD COLUMN")
+    schema, colmap = state.schema, state.colmap
     names = [f["name"] for f in schema["fields"]]
     if name in names:
         kind = (
@@ -2101,10 +2039,8 @@ def write(
 
     vs0 = versions(path)
     read_version = vs0[-1] if vs0 else None
-    if vs0:
-        _e0, prev_schema, _d0, constraints, colmap = _replay(path, read_version)
-    else:
-        prev_schema, constraints, colmap = None, {}, {}
+    base = _replay(path, read_version)
+    prev_schema, constraints, colmap = base.schema, base.constraints, base.colmap
 
     inherited_layout = False
     if isinstance(partition_by, _LayoutFromTable):
@@ -2112,11 +2048,7 @@ def write(
         # layout so its files stay hive-laid and partition-stats'd like
         # every DML rewrite's (ADVICE r10); an overwrite or a new table
         # starts unpartitioned unless the caller names a layout.
-        partition_by = (
-            table_partition_by(path, read_version)
-            if (vs0 and action == "append")
-            else None
-        )
+        partition_by = base.partition_by if action == "append" else None
         inherited_layout = partition_by is not None
 
     # GENERATED COLUMNS (Delta's `GENERATED ALWAYS AS (expr)`): the
@@ -2226,11 +2158,7 @@ def write(
         raise ValueError(f"column(s) {both} cannot be both generated and identity")
     # an overwrite is a NEW table: allocation restarts at `start` (the
     # spec reset and the mark reset travel together)
-    hwm_base = (
-        table_identity_hwm(path, read_version)
-        if (vs0 and action == "append")
-        else {}
-    )
+    hwm_base = base.identity_hwm if action == "append" else {}
     ident_hwm_out: dict[str, int] | None = None
     id_pins: list[DataFrame] = []
     new_hwm = dict(hwm_base)
@@ -2425,7 +2353,8 @@ def write(
             )
         except CommitConflict:
             head = versions(path)[-1]
-            head_schema = table_schema(path, head)
+            at_head = _replay(path, head)
+            head_schema = at_head.schema
             if action == "append":
                 # UNCONDITIONAL identity checks (review r10: a writer
                 # unaware of identity columns must not rebase across a
@@ -2438,9 +2367,7 @@ def write(
                         "concurrently — replan this write against the "
                         "new head"
                     )
-                if ident_hwm_out is not None and table_identity_hwm(
-                    path, head
-                ) != hwm_base:
+                if ident_hwm_out is not None and at_head.identity_hwm != hwm_base:
                     # only an ALLOCATING write races the marks — an empty
                     # batch recorded nothing and commutes (review r10)
                     raise CommitConflict(
@@ -2486,10 +2413,9 @@ def write(
             # concurrent rename (physical names never change); re-derive
             # the recorded map against the head, keeping our already-
             # staged physical assignments for evolved columns
-            _sm, colmap_out = _evolve_colmap(table_colmap(path, head), stage_map)
-            new_constraints = table_constraints(path, head)
-            if new_constraints != constraints:
-                constraints = new_constraints
+            _sm, colmap_out = _evolve_colmap(at_head.colmap, stage_map)
+            if at_head.constraints != constraints:
+                constraints = at_head.constraints
                 if constraints or gen_checks:
                     _enforce_constraints(
                         _read_files(
@@ -2524,7 +2450,8 @@ def read(
     files and stable across update/merge/optimize rewrites.  The
     projection drop is Catalyst column pruning — a default read never
     scans the id column."""
-    entries, schema, dvs, _c, colmap = _replay(path, version)
+    state = _replay(path, version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     if not entries:
         raise ValueError(f"minitable {path} is empty at version {version}")
     df = _read_files_dv(spark, path, [f for f, _ in entries], schema, dvs, colmap=colmap)
@@ -2791,12 +2718,12 @@ def prune(
     lever: a predicate on a clustered column plans O(matching files)
     instead of O(table), before Spark ever sees a path."""
     _check_where(where, "data-skipping")
-    entries, _sch, _dv, _c, colmap = _replay(path, version)
-    pw = _phys_where(where, colmap)  # stats are keyed by physical names
+    state = _replay(path, version)
+    pw = _phys_where(where, state.colmap)  # stats are keyed by physical names
     kept = [
-        os.path.join(path, f) for f, st in entries if _file_survives(st, pw)
+        os.path.join(path, f) for f, st in state.entries if _file_survives(st, pw)
     ]
-    return kept, len(entries)
+    return kept, len(state.entries)
 
 
 def scan(
@@ -2812,17 +2739,17 @@ def scan(
     kept file."""
     from pyspark.sql import functions as F
 
-    kept, total = prune(path, where, version)
+    _check_where(where, "data-skipping")
+    state = _replay(path, version)
+    pw = _phys_where(where, state.colmap)  # stats are keyed by physical names
+    # entry identifiers, not abs paths: a shallow clone's borrowed
+    # entries are absolute and key the DV map as they stand
+    kept = [f for f, st in state.entries if _file_survives(st, pw)]
     if not kept:
         # Provably-empty scan: type it like the table without reading data.
         return read(spark, path, version).limit(0).filter(F.lit(False))
-    entries, schema, dvs, _c, colmap = _replay(path, version)
-    # map pruned ABS paths back to their entry identifiers — a shallow
-    # clone's borrowed entries are already absolute, and a relpath
-    # round-trip would miss their DV-map keys
-    by_abs = {os.path.join(path, f): f for f, _st in entries}
     df = _read_files_dv(
-        spark, path, [by_abs[f] for f in kept], schema, dvs, colmap=colmap
+        spark, path, kept, state.schema, state.dvs, colmap=state.colmap
     )
     return df.filter(_where_cond(where))
 
@@ -3149,7 +3076,9 @@ def _merge_impl(
     if not all_versions:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     read_version = all_versions[-1]
-    entries, schema, dvs, constraints, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
+    constraints = state.constraints
     if not entries:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     key_range = [(key, ">=", smin), (key, "<=", smax)]
@@ -3491,7 +3420,7 @@ def _merge_impl(
     if idmap:
         # fresh ids for the INSERT rows only (NULL slots), continuing
         # from the recorded mark; matched/carried rows kept theirs
-        id_hwm_base = table_identity_hwm(path, read_version)
+        id_hwm_base = state.identity_hwm
         new_hwm = dict(id_hwm_base)
         for c, (i_start, i_step) in sorted(idmap.items()):
             nxt = id_hwm_base.get(c, i_start - i_step) + i_step
@@ -3510,7 +3439,7 @@ def _merge_impl(
     # preserve the recorded partition layout on the rewrite (ADVICE r9
     # — see update()); partition columns join the collected stats so
     # metadata-only retention keeps working on merged files
-    part_by = table_partition_by(path, read_version)
+    part_by = state.partition_by
     if part_by:
         stats_cols = sorted(set(stats_cols or []) | set(part_by))
     added = _stage(
@@ -3653,7 +3582,9 @@ def update(
     if not all_versions:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     read_version = all_versions[-1]
-    entries, schema, dvs, constraints, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
+    constraints = state.constraints
     if not entries:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     cols = (
@@ -3698,7 +3629,7 @@ def update(
     # otherwise the hive dirs and exact [v, v] partition stats are lost
     # on the touched files and later retention deletes degrade from
     # metadata-only whole-drops to rewrites (ADVICE r9)
-    part_by = table_partition_by(path, read_version)
+    part_by = state.partition_by
     if part_by:
         stats_cols = sorted(set(stats_cols or []) | set(part_by))
     base = _read_files_dv(spark, path, touched, schema, dvs, colmap=colmap)
@@ -3985,7 +3916,8 @@ def delete(
     _check_where(where, "delete")
     all_versions = versions(path)
     read_version = all_versions[-1] if all_versions else None
-    entries, schema, dvs, _c, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
     whole, touched = _plan_predicate_removal(
         spark, path, entries, schema, dvs, colmap, where, pw
@@ -3996,7 +3928,7 @@ def delete(
     if touched:
         # preserve the recorded partition layout on rewrites (ADVICE r9
         # — see update())
-        part_by = table_partition_by(path, read_version)
+        part_by = state.partition_by
         if part_by:
             stats_cols = sorted(set(stats_cols or []) | set(part_by))
         added = _stage_survivors(
@@ -4079,7 +4011,8 @@ def delete_dv(
     _check_where(where, "delete")
     all_versions = versions(path)
     read_version = all_versions[-1] if all_versions else None
-    entries, schema, dvs, _c, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
     candidates = [(f, st) for f, st in entries if _file_survives(st, pw)]
     whole = [f for f, st in candidates if _file_fully_matches(st, pw)]
@@ -4163,7 +4096,7 @@ def delete_dv(
             # rewrites (ADVICE r9 — see update()); partition columns are
             # force-included in the re-collected stats so metadata-only
             # retention drops keep working on the rewritten files
-            part_by = table_partition_by(path, read_version)
+            part_by = state.partition_by
             if part_by:
                 stats_cols = sorted(set(stats_cols or []) | set(part_by))
             dv_file = next(iter(new_dv_map.values()))
@@ -4286,14 +4219,16 @@ def replace_where(
             "create the table with write() first"
         )
     read_version = all_versions[-1]
-    entries, schema, dvs, constraints, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
+    constraints = state.constraints
     if schema is None:
         raise ValueError(
             f"minitable {path} has no recorded schema — replace_where "
             "cannot validate the batch against the table contract"
         )
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
-    part_by = table_partition_by(path, read_version)
+    part_by = state.partition_by
     phys_parts = [colmap.get(c, c) for c in part_by] if part_by else None
     if part_by:
         stats_cols = sorted(set(stats_cols or []) | set(part_by))
@@ -4319,7 +4254,7 @@ def replace_where(
             f"table schema {sorted(table_cols)} — this verb restates "
             "rows, it does not evolve schema"
         )
-    hwm_base = table_identity_hwm(path, read_version)
+    hwm_base = state.identity_hwm
     ident_hwm_out: dict[str, int] | None = None
     id_pins: list[DataFrame] = []
     new_hwm = dict(hwm_base)
@@ -4589,7 +4524,8 @@ def optimize(
     rows, and over-compacting is harmless)."""
     all_versions = versions(path)
     read_version = all_versions[-1] if all_versions else None
-    entries, schema, dvs, _c, colmap = _replay(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     if where:
         _check_where(where, "optimize")
         pw = _phys_where(where, colmap)
@@ -4599,7 +4535,7 @@ def optimize(
         # (review r10): an operator calling bare optimize() on a
         # partitioned table must not pack bins across partitions or
         # stage stats-less mixed-value files
-        partition_by = table_partition_by(path, read_version)
+        partition_by = state.partition_by
     if partition_by:
         stats_cols = sorted(set(stats_cols or []) | set(partition_by))
     phys_parts = (
@@ -4621,7 +4557,7 @@ def optimize(
     groups = {k: g for k, g in groups.items() if len(g) >= 2}
     if not groups:
         return None
-    cluster_by = table_cluster_by(path, read_version)
+    cluster_by = state.cluster_by
     if (
         cluster_by
         and schema is not None
@@ -4792,8 +4728,9 @@ def zorder(
         )
     all_versions = versions(path)
     read_version = all_versions[-1] if all_versions else None
-    entries, schema, dvs, _c, colmap = _replay(path, read_version)
-    partition_by = table_partition_by(path, read_version)
+    state = _replay(path, read_version)
+    entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
+    partition_by = state.partition_by
     overlap = set(by) & set(partition_by or ())
     if overlap:
         # a partition column is constant per file already — Z-ordering
@@ -4928,7 +4865,19 @@ def change_feed(
         to_version = version_at_timestamp(path, to_timestamp)
     if to_version <= from_version:
         raise ValueError("change_feed() needs from_version < to_version")
-    _e, schema, _d, _c, colmap = _replay(path, to_version)
+    # ONE forward fold over (from, to]: each record is opened once, its
+    # predecessor state's DVs kept for the delete reconstruction below,
+    # and the walk ends at the to_version state whose schema / colmap
+    # type every piece
+    state = _replay(path, from_version) if from_version >= 0 else _State.empty()
+    steps: list[tuple[int, dict, dict[str, str]]] = []
+    for v in vs:
+        if from_version < v <= to_version:
+            with open(_version_file(path, v)) as f:
+                rec = json.load(f)
+            steps.append((v, rec, state.dvs))
+            state = _apply(state, rec)
+    schema, colmap = state.schema, state.colmap
     # logical view helpers: data/cdf files carry PHYSICAL names; delete
     # predicates are recorded physical (rename-proof), so reconstruction
     # filters the physical view and aliases to logical afterwards
@@ -4948,11 +4897,7 @@ def change_feed(
         )
 
     pieces: list[DataFrame] = []
-    for v in vs:
-        if v <= from_version or v > to_version:
-            continue
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
+    for v, rec, prev_dvs in steps:
         if rec.get("data_change") is False:
             continue  # compaction/clustering: rows unchanged
         if rec["action"] == "append":
@@ -4973,7 +4918,6 @@ def change_feed(
             # an earlier vector already deleted) applied to base files —
             # O(touched files + marked rows), nothing was ever written
             # beyond the sidecar
-            prev_dvs = _replay(path, v - 1)[2] if v > 0 else {}
             dv_map = rec.get("dv") or {}
             # a file both removed AND mapped was MATERIALIZED (rewritten
             # minus its vector): its deletes are the DV diff below, not
@@ -5058,7 +5002,6 @@ def change_feed(
                     # not deleted again by this commit — apply v-1's DVs.
                     # The predicate is recorded PHYSICAL (stable across
                     # renames): filter the physical view, then alias.
-                    prev_dvs = _replay(path, v - 1)[2] if v > 0 else {}
                     df = _read_files_dv(spark, path, removed, phys_schema, prev_dvs)
                     pieces.append(
                         _to_logical(
@@ -5137,7 +5080,8 @@ def changes(
                 "use a snapshot diff instead"
             )
         added.extend(rec["added"])
-    entries, schema, _dv, _c, colmap = _replay(path, to_version)
+    state = _replay(path, to_version)
+    entries, schema, colmap = state.entries, state.schema, state.colmap
     if not added:
         # A quiet period (empty append commits) is a legitimate EMPTY
         # delta, not an error — a polling CDF consumer must get an empty
@@ -5167,7 +5111,8 @@ def restore(path: str, to_version: int) -> int:
     the old version's schema, so a rollback across an ADD COLUMN also
     rolls the schema timeline back.  Returns the new version number."""
     head = versions(path)[-1]
-    entries, schema, dvs, constraints, colmap = _replay(path, to_version)  # raises on unknown version
+    state = _replay(path, to_version)  # raises on unknown version
+    entries, dvs = state.entries, state.dvs
     if not entries:
         raise ValueError(f"minitable {path} is empty at version {to_version}")
     missing = [
@@ -5192,21 +5137,21 @@ def restore(path: str, to_version: int) -> int:
         "overwrite",
         [f for f, _st in entries],
         stats=stats or None,
-        schema=schema,
-        record_null_schema=schema is None,
+        schema=state.schema,
+        record_null_schema=state.schema is None,
         expected_version=head + 1,
         dv=dvs or None,
-        constraints=constraints,  # {} is an explicit reset, like schema
-        colmap=colmap,  # {} is an explicit reset too (pre-mapping era)
+        constraints=state.constraints,  # {} is an explicit reset, like schema
+        colmap=state.colmap,  # {} is an explicit reset too (pre-mapping era)
         # the rollback overwrite must re-record the TARGET era's layout:
         # a bare overwrite record would reset table_partition_by to None
         # and every later DML rewrite would silently drop the hive
         # layout (review r10)
-        partition_by=table_partition_by(path, to_version),
-        cluster_by=table_cluster_by(path, to_version) or [],
+        partition_by=state.partition_by,
+        cluster_by=state.cluster_by or [],
         # identity allocation rolls back with the data: post-rollback
         # writes continue from the era's marks ({} = explicit reset)
-        identity_hwm=table_identity_hwm(path, to_version),
+        identity_hwm=state.identity_hwm,
     )
 
 
@@ -5233,7 +5178,8 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
     delete files the clone still references (the clone's own vacuum
     walks only its own directory and can never touch borrowed files) —
     retention policy on a cloned-from table must outlive its clones."""
-    entries, schema, dvs, constraints, colmap = _replay(src, version)
+    state = _replay(src, version)
+    entries = state.entries
     if not entries:
         raise ValueError(f"minitable {src} is empty at version {version}")
     if versions(dst):
@@ -5244,27 +5190,27 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
 
     added = [_abs(f) for f, _st in entries]
     stats = {_abs(f): st for f, st in entries if st is not None}
-    dv = {_abs(f): _abs(d) for f, d in dvs.items()}
+    dv = {_abs(f): _abs(d) for f, d in state.dvs.items()}
     return commit(
         dst,
         "overwrite",
         added,
         stats=stats or None,
-        schema=schema,
-        record_null_schema=schema is None,
+        schema=state.schema,
+        record_null_schema=state.schema is None,
         dv=dv or None,
-        constraints=constraints,
-        colmap=colmap,  # the clone starts at the source's mapping state
+        constraints=state.constraints,
+        colmap=state.colmap,  # the clone starts at the source's mapping state
         # carry the source's AS-OF partition layout: without it the
         # clone's v0 overwrite record resets table_partition_by and the
         # clone's copy-on-write DML would destroy its layout (review r10)
-        partition_by=table_partition_by(src, version),
-        cluster_by=table_cluster_by(src, version) or [],
+        partition_by=state.partition_by,
+        cluster_by=state.cluster_by or [],
         # the clone's id allocation continues from the source's AS-OF
         # marks — diverging tables can hand out the same ids to their
         # own rows (they are independent tables), but the clone's first
         # append must not collide with rows it borrowed
-        identity_hwm=table_identity_hwm(src, version),
+        identity_hwm=state.identity_hwm,
     )
 
 
@@ -5324,15 +5270,17 @@ def vacuum(
         )
     keep: set[str] = set()
     ever_referenced: set[str] = set()
+    state = _replay(path, retain_from_version)
     for v in vs:
-        if v >= retain_from_version:
-            # one replay per retained version: live files AND the live
-            # DELETION VECTORS (part of the snapshot's read path)
-            entries, _sch, dvs, _c, _cm = _replay(path, v)
-            keep.update(f for f, _st in entries)
-            keep.update(dvs.values())
         with open(_version_file(path, v)) as f:
             rec = json.load(f)
+        if v > retain_from_version:
+            state = _apply(state, rec)  # one forward fold over the window
+        if v >= retain_from_version:
+            # every retained snapshot's live files AND live DELETION
+            # VECTORS (part of the snapshot's read path)
+            keep.update(f for f, _st in state.entries)
+            keep.update(state.dvs.values())
         ever_referenced.update(rec["added"])
         ever_referenced.update(rec.get("cdf", ()))
         ever_referenced.update((rec.get("dv") or {}).values())

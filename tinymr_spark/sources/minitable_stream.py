@@ -545,12 +545,11 @@ class MinitableStreamReader(DataSourceStreamReader):
         added after the delete must not rewrite history)."""
         from tinymr_spark.sources import minitable
 
-        schema = minitable.table_schema(self.path, v)
-        dfl = minitable._default_map(schema)
+        state = minitable._replay(self.path, v)
+        dfl = minitable._default_map(state.schema)
         if not dfl:
             return None
-        colmap = minitable.table_colmap(self.path, v)
-        return {colmap.get(c, c): val for c, val in dfl.items()}
+        return {state.colmap.get(c, c): val for c, val in dfl.items()}
 
     def _resolve_starting_ts(self, vs: list[int]) -> int | str:
         """startingTimestamp -> the startingVersion it means: the FIRST
@@ -939,8 +938,9 @@ class MinitableStreamReader(DataSourceStreamReader):
         parts: list[_FilePartition] = []
         if snap is not None and snap[0] >= 0:
             h, kf, kt = snap
-            entries, _schema, dvs, _c, colmap = minitable._replay(self.path, h)
-            phys = [colmap.get(c, c) for c in self.cols]
+            state = minitable._replay(self.path, h)
+            entries, dvs = state.entries, state.dvs
+            phys = [state.colmap.get(c, c) for c in self.cols]
             for rel, _st in entries[kf : kt if kt is not None else len(entries)]:
                 parts.append(
                     _FilePartition(
