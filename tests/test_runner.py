@@ -5,6 +5,7 @@ test runs the probes themselves)."""
 from __future__ import annotations
 
 import importlib
+import importlib.util
 import os
 import uuid
 from pathlib import Path
@@ -102,7 +103,7 @@ def test_stage_copies_stages_once_per_source_version(spark, tmp_path):
     tables = {"facts": offset, "dim": None}
     try:
         out = stage_copies(spark, kind, str(src), 2, tables)
-        assert out == os.path.join(staging_root(kind), "2x")
+        assert os.path.dirname(os.path.dirname(out)) == staging_root(f"{kind}_2x")
         staged = sorted(r.k for r in load_table(spark, out, "facts").collect())
         assert staged == [1, 2, 3, 101, 102, 103]
         assert (Path(out) / "dim.parquet").read_bytes() == (src / "dim.parquet").read_bytes()
@@ -114,8 +115,58 @@ def test_stage_copies_stages_once_per_source_version(spark, tmp_path):
 
         # a rewritten source restages from scratch
         pq.write_table(pa.table({"k": [1, 2, 3, 4]}), src / "facts.parquet")
-        stage_copies(spark, kind, str(src), 2, tables)
+        out = stage_copies(spark, kind, str(src), 2, tables)
         assert calls == [0, 1, 0, 1]
         assert load_table(spark, out, "facts").count() == 8
     finally:
-        shutil.rmtree(staging_root(kind), ignore_errors=True)
+        shutil.rmtree(staging_root(f"{kind}_2x"), ignore_errors=True)
+
+
+def test_stage_copies_restages_on_transform_code_or_repartition(spark, tmp_path):
+    """The staged copies are keyed by the code of each transform and by
+    `repartition`, not only by the source versions: an edited transform
+    module (a new process sees the new file hash) or a new file count
+    restages instead of serving the old copies."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tinymr_spark import sources
+    from tinymr_spark.sources import load_table, staging_root
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3]}), src / "facts.parquet")
+    mod_path = tmp_path / f"copy_transform_{uuid.uuid4().hex[:8]}.py"
+
+    def transform(offset: int):
+        mod_path.write_text(
+            "def offset(df, i):\n"
+            f"    return df.withColumn('k', df.k + {offset} * i)\n"
+        )
+        spec = importlib.util.spec_from_file_location(f"{mod_path.stem}_{offset}", mod_path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.offset
+
+    def staged_keys(out):
+        return sorted(r.k for r in load_table(spark, out, "facts").collect())
+
+    kind = f"tinymr_test_copies_{uuid.uuid4().hex[:8]}"
+    try:
+        out = stage_copies(spark, kind, str(src), 2, {"facts": transform(100)})
+        assert staged_keys(out) == [1, 2, 3, 101, 102, 103]
+
+        edited = transform(1000)
+        sources._file_hash.cache_clear()  # the hash is read once per process
+        out2 = stage_copies(spark, kind, str(src), 2, {"facts": edited})
+        assert out2 != out, "edited transform served the old copies"
+        assert staged_keys(out2) == [1, 2, 3, 1001, 1002, 1003]
+
+        out3 = stage_copies(spark, kind, str(src), 2, {"facts": edited}, repartition=2)
+        assert out3 != out2, "a new repartition served the old copies"
+        assert len(list((Path(out3) / "facts.parquet").glob("*.parquet"))) == 2
+        assert staged_keys(out3) == [1, 2, 3, 1001, 1002, 1003]
+    finally:
+        shutil.rmtree(staging_root(f"{kind}_2x"), ignore_errors=True)

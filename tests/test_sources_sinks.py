@@ -5589,12 +5589,15 @@ def test_retire_artifact_roots_sweeps_legacy_names(spark, tmp_path):
         staging_root,
     )
 
-    idx_root = staging_root("tinymr_spark_index")
-    legacy_idx = os.path.join(idx_root, "zzz_legacy_tag")
+    legacy_idx = staging_root("tinymr_spark_index_zzz_legacy_tag")
     os.makedirs(os.path.join(legacy_idx, "abc"), exist_ok=True)
-    keep_idx = os.path.join(idx_root, "zzz_legacy_tag2")
+    keep_idx = staging_root("tinymr_spark_index_zzz_legacy_tag2")
     os.makedirs(keep_idx, exist_ok=True)
     spark.createDataFrame([(1,)], "a int").createOrReplaceTempView("tv_keep")
+    spark.sql(
+        "CREATE TABLE idx_zzz_legacy_tag_abc (a int) USING parquet "
+        f"LOCATION '{tmp_path / 'legacy_idx_table'}'"
+    )
     legacy_kind_root = staging_root("zzz_legacy_kind")
     os.makedirs(legacy_kind_root, exist_ok=True)
 
@@ -5605,6 +5608,7 @@ def test_retire_artifact_roots_sweeps_legacy_names(spark, tmp_path):
     assert os.path.isdir(keep_idx)  # the bumped name is untouched
     assert not os.path.exists(legacy_kind_root)
     assert spark.catalog.tableExists("tv_keep")
+    assert not spark.catalog.tableExists("idx_zzz_legacy_tag_abc")
     os.rmdir(keep_idx)
 
 

@@ -29,6 +29,11 @@ def _bump(path: str) -> None:
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
 
 
+def _dirs(root: str) -> list[str]:
+    """The subdirectories of a staging dir (not its records or markers)."""
+    return [d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))]
+
+
 def test_standing_index_builds_once_and_prunes_stale_versions(spark, sf_dir, tmp_path):
     import uuid
 
@@ -59,13 +64,10 @@ def test_standing_index_builds_once_and_prunes_stale_versions(spark, sf_dir, tmp
     assert not spark.catalog.tableExists(old_name)
     keys = [k for k in cache if k[0] == tag]
     assert len(keys) == 1
-    tag_root = os.path.join(staging_root("tinymr_spark_index"), tag)
-    src_dirs = [d for d in os.listdir(tag_root)]
+    tag_root = staging_root(f"tinymr_spark_index_{tag}")
+    src_dirs = _dirs(tag_root)
     assert len(src_dirs) == 1
-    ver_dirs = [
-        d for d in os.listdir(os.path.join(tag_root, src_dirs[0]))
-        if d != "_sources.json"
-    ]
+    ver_dirs = _dirs(os.path.join(tag_root, src_dirs[0]))
     assert len(ver_dirs) == 1, f"superseded version dirs retained: {ver_dirs}"
 
 
@@ -122,13 +124,13 @@ def test_standing_index_gcs_dead_source_dirs(spark, tmp_path):
 
     standing_index(spark, tag, [src_a], build(src_a), ["k"]).collect()
     standing_index(spark, tag, [src_b], build(src_b), ["k"]).collect()
-    tag_root = os.path.join(staging_root("tinymr_spark_index"), tag)
-    assert len(os.listdir(tag_root)) == 2  # both sources live -> both kept
+    tag_root = staging_root(f"tinymr_spark_index_{tag}")
+    assert len(_dirs(tag_root)) == 2  # both sources live -> both kept
 
     shutil.rmtree(src_a)
     _bump(src_b)  # new dir mtime -> new version -> prune pass runs
     standing_index(spark, tag, [src_b], build(src_b), ["k"]).collect()
-    assert len(os.listdir(tag_root)) == 1, "dead-source index dir not reclaimed"
+    assert len(_dirs(tag_root)) == 1, "dead-source index dir not reclaimed"
 
 
 def test_standing_index_rebuilds_when_builder_module_changes(spark, tmp_path):
@@ -169,11 +171,9 @@ def test_standing_index_rebuilds_when_builder_module_changes(spark, tmp_path):
     sources._file_hash.cache_clear()  # the hash is read once per process
     assert versions() == {2}, "edited builder served the old code's index"
     assert not spark.catalog.tableExists(old_name)
-    tag_root = os.path.join(staging_root("tinymr_spark_index"), tag)
-    (src_dir,) = os.listdir(tag_root)
-    ver_dirs = [
-        d for d in os.listdir(os.path.join(tag_root, src_dir)) if d != "_sources.json"
-    ]
+    tag_root = staging_root(f"tinymr_spark_index_{tag}")
+    (src_dir,) = _dirs(tag_root)
+    ver_dirs = _dirs(os.path.join(tag_root, src_dir))
     assert len(ver_dirs) == 1, f"superseded version dirs retained: {ver_dirs}"
 
 
@@ -257,6 +257,30 @@ def test_staged_rebuilds_when_builder_module_changes(tmp_path):
     ), "superseded version dir retained"
 
 
+def test_staged_gcs_dead_source_roots(tmp_path):
+    """Every staged kind reclaims the roots of sources that no longer
+    exist (deleted sf clones, removed corpora) when it next builds."""
+    import uuid
+
+    kind = f"tinymr_test_gc_{uuid.uuid4().hex[:8]}"
+    src_a, src_b = str(tmp_path / "a.bin"), str(tmp_path / "b.bin")
+    for p in (src_a, src_b):
+        open(p, "w").write("v1")
+    build = _counting_build([])
+    try:
+        root_a = os.path.dirname(staged(kind, src_a, build))
+        staged(kind, src_b, build)
+        assert len(_dirs(staging_root(kind))) == 2  # both sources live -> both kept
+
+        os.remove(src_a)
+        _bump(src_b)
+        staged(kind, src_b, build)
+        assert not os.path.exists(root_a), "dead-source staged root not reclaimed"
+        assert len(_dirs(staging_root(kind))) == 1
+    finally:
+        shutil.rmtree(staging_root(kind), ignore_errors=True)
+
+
 def test_staged_failed_build_leaves_no_marker(tmp_path):
     """A build that raises is never served: no marker is written, and the
     next call wipes the partial dir and its `path.*` siblings before
@@ -301,23 +325,32 @@ def test_staged_failed_ready_check_forces_rebuild(tmp_path):
 
 
 def test_staged_is_the_only_marker_protocol():
-    """Operators and streaming queries stage artifacts only through
-    `sources.staged`: no private done-marker protocol may come back."""
+    """Operators, streaming queries and the tools stage artifacts only
+    through `sources.staged`, and `sources` itself keeps no second
+    protocol: no private done-marker, `_STAGED`/`_SUCCESS` check or
+    index GC may come back."""
     import glob
     import re
 
-    pkg = os.path.join(os.path.dirname(__file__), os.pardir, "tinymr_spark")
-    files = glob.glob(os.path.join(pkg, "operators", "*.py")) + [
-        os.path.join(pkg, "streaming", "__init__.py")
-    ]
-    pattern = re.compile(r'versioned_staging_dir\(|"\._done|"_STAGED"|open\(done')
+    repo = os.path.join(os.path.dirname(__file__), os.pardir)
+    pkg = os.path.join(repo, "tinymr_spark")
+    legacy = r'"_STAGED"|"_SUCCESS"|_write_index_marker|_gc_dead_source_indexes'
+    callers = (
+        glob.glob(os.path.join(pkg, "operators", "*.py"))
+        + glob.glob(os.path.join(repo, "tools", "*.py"))
+        + [os.path.join(pkg, "streaming", "__init__.py")]
+    )
+    checks = [
+        (f, re.compile(legacy + r'|versioned_staging_dir\(|"\._done|open\(done'))
+        for f in callers
+    ] + [(os.path.join(pkg, "sources", "__init__.py"), re.compile(legacy))]
     hits = [
-        f"{os.path.relpath(f, pkg)}:{n}: {line.strip()}"
-        for f in files
+        f"{os.path.relpath(f, repo)}:{n}: {line.strip()}"
+        for f, pattern in checks
         for n, line in enumerate(open(f), 1)
         if pattern.search(line)
     ]
-    assert len(files) > 5 and hits == [], hits
+    assert len(callers) > 10 and hits == [], hits
 
 
 def _assert_index_scans_exchange_free(plan: str) -> int:

@@ -7,14 +7,14 @@ The driver testdata is one parquet file per table (TESTDATA.md); on a real
 deployment these would be partitioned directories — the API is identical.
 
 Derived artifacts persist across sessions under a per-user staging root
-(`staging_root`) and are keyed by what produced them: the source file's
+(`staging_root`) and are keyed by what produced them: the source files'
 `file_version` and the content of the file that defines the builder
-(`_builder_hash`).  `standing_index` writes bucketed catalog tables;
-`staged` is the one build-once protocol for every other staged artifact
-(split copies, minitable histories, stream checkpoints): a `._done`
+(`_builder_hash`).  `staged` is the one build-once protocol for every
+staged artifact (bucketed standing indexes, split copies, minitable
+histories, stream checkpoints, the tools' scaled copies): a `._done`
 marker written after the build, an optional completeness check, and a
 from-scratch rebuild otherwise.  Superseded versions are pruned on
-resolve.
+resolve; roots whose sources are gone are removed on build.
 """
 
 from __future__ import annotations
@@ -110,50 +110,49 @@ def standing_index(
     once per corpus snapshot, not once per probing query, and the table
     outlives any one session.
 
-    `build` is a zero-arg callable returning the index DataFrame —
-    called only when this (tag, source version, builder code) has no
-    written table yet; the builder code is the content of the source
-    file that defines `build`, so editing it rebuilds the index.
-    Freshness follows the session-cache policy (the q46/BM25
-    lifecycle): a regenerated source file yields a new version hash; the
-    superseded catalog table is dropped and its staged directory
-    removed, so corpus regenerations never leak index copies for the
-    machine's lifetime (on-disk analog of pop+unpersist; see
-    tests/test_cache_staleness.py)."""
-    import shutil
-
+    `build` is a zero-arg callable returning the index DataFrame.  The
+    files are a `staged` artifact of kind `tinymr_spark_index_<tag>`,
+    keyed by the sources, the bucket spec and the code of `build`: a
+    regenerated source, a changed `n_buckets`/`key_cols`/`sort_cols`
+    (CLUSTERED BY INTO N over M-bucket files would silently mis-prune)
+    or an edited builder writes a new version, and `staged` prunes the
+    superseded one and every index whose sources are gone.  The write
+    drops the table it saved, so one path registers every version: an
+    external CLUSTERED BY table over the files, created whenever the
+    session catalog lacks it (bucket ids live in the file names, so the
+    registered table scans with the same hash partitioning and bucket
+    pruning; asserted in tests/test_standing_index.py).  Superseded
+    versions leave the session cache and the catalog (the on-disk
+    analog of pop+unpersist; see tests/test_cache_staleness.py)."""
+    retire_artifact_roots(spark, staging_kinds=("tinymr_spark_index",))
     cache = session_cache(spark, "_tinymr_index_cache")
     srcs = tuple(source_paths)
-    ver = tuple(file_version(p) for p in source_paths)
-    # The BUCKET SPEC and the BUILDER CODE are part of the version
-    # identity: a code change to n_buckets/key_cols/sort_cols must never
-    # re-register a previous session's files written under the old spec
-    # (CLUSTERED BY INTO N over M-bucket files would silently
-    # mis-prune), and an edited build fn must never be served the index
-    # its old code wrote.
-    spec = (n_buckets, tuple(key_cols), tuple(sort_cols or key_cols), _builder_hash(build))
-    key = (tag, srcs, (ver, spec))
-    if key in cache:
-        return spark.table(cache[key])
-    # Two hash levels: same (tag, sources) at different SCALE FACTORS are
-    # independent live indexes (distinct src_h); only superseded VERSIONS
-    # of the same sources (distinct ver_h under one src_h) are pruned.
-    src_h = hashlib.md5(repr((tag, srcs)).encode()).hexdigest()[:10]
-    ver_h = hashlib.md5(repr((ver, spec)).encode()).hexdigest()[:10]
-    name = f"idx_{tag}_{src_h}_{ver_h}"
-    root = os.path.join(staging_root("tinymr_spark_index"), tag, src_h)
-    path = os.path.join(root, ver_h)
-    if not spark.catalog.tableExists(name):
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # A PREVIOUS SESSION already wrote this version: the default
-            # in-memory catalog died with it, but the bucketed files did
-            # not — re-register them as an external CLUSTERED BY table
-            # instead of re-running the build (bucket ids live in the
-            # file names, so the re-registered table scans with the same
-            # hash partitioning and bucket pruning; asserted in
-            # tests/test_standing_index.py).  This is what makes the
-            # index genuinely build-once PER CORPUS SNAPSHOT, not per
-            # session.
+    sort_cols = sort_cols or key_cols
+
+    def table_name(path):
+        return f"idx_{tag}_{os.path.basename(os.path.dirname(path))}_{os.path.basename(path)}"
+
+    def write(path):
+        (
+            build()
+            .write.mode("overwrite")
+            .option("path", path)
+            .bucketBy(n_buckets, *key_cols)
+            .sortBy(*sort_cols)
+            .saveAsTable(table_name(path))
+        )
+        spark.sql(f"DROP TABLE {table_name(path)}")  # external: the files stay
+
+    path = staged(
+        f"tinymr_spark_index_{tag}", srcs, write,
+        key=(n_buckets, tuple(key_cols), tuple(sort_cols), build),
+    )
+    name = table_name(path)
+    entry = (tag, srcs, name)
+    for stale in [k for k in cache if k[:2] == (tag, srcs) and k != entry]:
+        spark.sql(f"DROP TABLE IF EXISTS {cache.pop(stale)}")
+    if entry not in cache:
+        if not spark.catalog.tableExists(name):
             ddl = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}"
                 for f in spark.read.parquet(path).schema.fields
@@ -161,46 +160,25 @@ def standing_index(
             spark.sql(
                 f"CREATE TABLE {name} ({ddl}) USING parquet "
                 f"CLUSTERED BY ({', '.join(key_cols)}) "
-                f"SORTED BY ({', '.join(sort_cols or key_cols)}) "
+                f"SORTED BY ({', '.join(sort_cols)}) "
                 f"INTO {n_buckets} BUCKETS "
                 f"LOCATION '{path}'"
             )
-        else:
-            writer = (
-                build()
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(n_buckets, *key_cols)
-                .sortBy(*(sort_cols or key_cols))
-            )
-            writer.saveAsTable(name)
-        _write_index_marker(os.path.dirname(root), src_h, srcs)
-    # Prune superseded versions: session-cache entries + catalog tables
-    # (external: DROP leaves files) + any sibling staged version dirs,
-    # including ones left by earlier sessions.
-    for stale in [k for k in cache if k[:2] == (tag, srcs) and k != key]:
-        spark.sql(f"DROP TABLE IF EXISTS {cache.pop(stale)}")
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d not in (ver_h, "_sources.json"):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    _gc_dead_source_indexes(os.path.dirname(root), keep=src_h)
-    cache[key] = name
+        cache[entry] = name
     return spark.table(name)
 
 
 def retire_artifact_roots(spark: SparkSession, index_tags=(), staging_kinds=()):
-    """One-shot cleanup for RENAMED artifact names (review r11): both
-    standing_index and staged GC only within their own tag/kind, so a
-    tag or staging-kind rename (or a kind folded into another artifact's
-    siblings) orphans the OLD name's on-disk trees and catalog tables
-    forever.  Renaming callers invoke this with the legacy names; a
-    no-op once clean, so it is safe to call on every resolve."""
+    """One-shot cleanup for RENAMED artifact names (review r11): staged
+    artifacts GC only within their own kind, so a tag or staging-kind
+    rename (or a kind folded into another artifact's siblings) orphans
+    the OLD name's on-disk trees and catalog tables forever.  Renaming
+    callers invoke this with the legacy names; a no-op once clean, so it
+    is safe to call on every resolve."""
     import shutil
 
-    idx_root = staging_root("tinymr_spark_index")
     for tag in index_tags:
-        p = os.path.join(idx_root, tag)
+        p = staging_root(f"tinymr_spark_index_{tag}")
         if not os.path.isdir(p):
             continue  # already clean — the common case must cost one stat,
             # not a catalog enumeration per resolve (review r11 2nd pass)
@@ -218,23 +196,28 @@ def retire_artifact_roots(spark: SparkSession, index_tags=(), staging_kinds=()):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def versioned_staging_dir(kind: str, src: str, build) -> str:
+def versioned_staging_dir(kind: str, src, build, key=()) -> str:
     """The directory `staged` builds into:
     `<tmp>/<kind>_<uid>/<md5(src)>/<ver>`, where `<ver>` hashes the
-    source's `file_version` and the code of `build` (`_builder_hash`).
-    Resolving the current version PRUNES sibling version dirs and their
-    `<ver>.*` files: superseded corpus generations and superseded
-    builders must not leak staged ORC/XML/checkpoint copies for the
-    machine's lifetime (the on-disk analog of the session caches'
-    pop+unpersist).  perfbench/worker.py traces this step by name."""
+    `file_version` of every source, the code of `build` (`_builder_hash`)
+    and `key`.  Resolving the current version PRUNES sibling version dirs
+    and their `<ver>.*` files: superseded corpus generations and
+    superseded builders must not leak staged ORC/XML/checkpoint copies
+    for the machine's lifetime (the on-disk analog of the session
+    caches' pop+unpersist).  perfbench/worker.py traces this step by
+    name."""
     import shutil
 
+    srcs = [src] if isinstance(src, str) else list(src)
     root = os.path.join(
-        staging_root(kind), hashlib.md5(src.encode()).hexdigest()[:12]
+        staging_root(kind), hashlib.md5(os.pathsep.join(srcs).encode()).hexdigest()[:12]
     )
-    ver = hashlib.md5(
-        repr((file_version(src), _builder_hash(build))).encode()
-    ).hexdigest()[:12]
+    ident = (
+        file_version(src) if isinstance(src, str) else tuple(map(file_version, srcs)),
+        _builder_hash(build),
+        *(_builder_hash(k) if callable(k) else repr(k) for k in key),
+    )
+    ver = hashlib.md5(repr(ident).encode()).hexdigest()[:12]
     if os.path.isdir(root):
         for s in os.listdir(root):
             if s == ver or s.startswith(ver + "."):
@@ -251,9 +234,23 @@ def versioned_staging_dir(kind: str, src: str, build) -> str:
     return os.path.join(root, ver)
 
 
-def staged(kind: str, src: str, build, ready=None) -> str:
-    """A staged artifact derived from the file `src`, built once per
-    (source version, builder code); returns its path.
+def _sources_live(record: str) -> bool:
+    """True while every source listed in the `record` file exists; a
+    missing or unreadable record is an unidentifiable root, so False."""
+    import json
+
+    try:
+        with open(record) as f:
+            return all(os.path.exists(p) for p in json.load(f))
+    except (OSError, ValueError):
+        return False
+
+
+def staged(kind: str, src, build, ready=None, key=()) -> str:
+    """A staged artifact derived from the file `src` (or a sequence of
+    files), built once per (source versions, builder code, `key`);
+    returns its path.  `key` is extra identity: a callable in it counts
+    by its code (`_builder_hash`), any other value by its `repr`.
 
     `build(path)` fills `path` and may also write `path + ".<name>"`
     siblings (checkpoints, landing dirs, secondary tables).  The
@@ -262,12 +259,18 @@ def staged(kind: str, src: str, build, ready=None) -> str:
     while `ready(path)` holds (when given: the caller's completeness
     check, e.g. the expected commit count of a minitable history).
     Otherwise the marker, `path` and every `path.*` sibling are removed
-    and `build` runs again from scratch."""
+    and `build` runs again from scratch.
+
+    Each source root `<md5(src)>` has a `<md5(src)>.sources` record
+    beside it listing its source files.  Before a build, every other
+    source root of the kind whose sources are gone (or that has no
+    record) is removed: a staged artifact must not outlive its corpus."""
     import contextlib
     import glob
+    import json
     import shutil
 
-    path = versioned_staging_dir(kind, src, build)
+    path = versioned_staging_dir(kind, src, build, key)
     done = path + "._done"
     if os.path.exists(done) and (ready is None or ready(path)):
         return path
@@ -279,41 +282,17 @@ def staged(kind: str, src: str, build, ready=None) -> str:
             shutil.rmtree(p, ignore_errors=True)
         else:
             os.remove(p)
+    root = os.path.dirname(path)
+    for d in os.scandir(staging_root(kind)):
+        if d.is_dir() and d.path != root and not _sources_live(d.path + ".sources"):
+            shutil.rmtree(d.path, ignore_errors=True)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(d.path + ".sources")
+    with open(root + ".sources", "w") as f:
+        json.dump([src] if isinstance(src, str) else list(src), f)
     build(path)
     open(done, "w").close()
     return path
-
-
-def _write_index_marker(tag_root: str, src_h: str, srcs: tuple) -> None:
-    """Record which source files an index src-dir derives from, so later
-    sessions can garbage-collect indexes whose sources no longer exist
-    (pytest sf-clones under tmp, removed corpora)."""
-    import json
-
-    with open(os.path.join(tag_root, src_h, "_sources.json"), "w") as f:
-        json.dump(list(srcs), f)
-
-
-def _gc_dead_source_indexes(tag_root: str, keep: str) -> None:
-    """Remove sibling src-dirs whose recorded source files are gone —
-    the index outlives a session by design, but must not outlive its
-    corpus."""
-    import json
-    import shutil
-
-    if not os.path.isdir(tag_root):
-        return
-    for d in os.listdir(tag_root):
-        if d == keep:
-            continue
-        marker = os.path.join(tag_root, d, "_sources.json")
-        try:
-            with open(marker) as f:
-                dead = not all(os.path.exists(p) for p in json.load(f))
-        except (OSError, ValueError):
-            dead = True  # unreadable marker: unidentifiable, reclaim
-        if dead:
-            shutil.rmtree(os.path.join(tag_root, d), ignore_errors=True)
 
 
 def parquet_has_nanos(path: str) -> bool:

@@ -4,12 +4,11 @@ scale probes share.
 `time_query` is every timed query pass: build the DataFrame, run one
 action on it, under a job description naming the query.  `stage_copies`
 is every scaled input: N transformed copies of each source table,
-written once per source version under the per-user staging root.
+staged once per source version and transform code by `sources.staged`.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -44,40 +43,35 @@ def time_query(spark, name, fn, sf_dir, reps=1, action=None):
 
 def stage_copies(spark, kind, src_dir, n, tables, repartition=None) -> str:
     """Stage `n` copies of each table of `src_dir` and return the staged
-    sf dir, `<staging_root(kind)>/<n>x`.
+    sf dir, a `sources.staged` artifact of kind `<kind>_<n>x`.
 
     `tables` maps a table name to `transform(df, i) -> DataFrame` for
     copy `i` (the copies are written as one union), or to None for a
     table copied byte for byte, once.  `repartition` sets the written
-    file count of the unions.  The `_STAGED` marker records the
-    `file_version` of every source; when it is missing or differs, the
-    directory is staged again from scratch, so a regenerated source is
-    never served stale."""
-    from tinymr_spark.sources import file_version, load_table, staging_root, table_path
+    file count of the unions.  The staging is keyed by the
+    `file_version` of every source, this stager's code, the code of
+    every transform and `repartition`: a regenerated source or an edited
+    transform restages from scratch, never served stale.  `n` is in the
+    kind, not the key, so stagings at several N live side by side."""
+    from tinymr_spark.sources import load_table, retire_artifact_roots, staged, table_path
 
-    out = os.path.join(staging_root(kind), f"{n}x")
-    marker = os.path.join(out, "_STAGED")
-    versions = {
-        table_path(src_dir, t): list(file_version(table_path(src_dir, t)))
-        for t in tables
-    }
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if json.load(f) == versions:
-                return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    for t, transform in tables.items():
-        if transform is None:
-            shutil.copyfile(table_path(src_dir, t), table_path(out, t))
-            continue
-        df = load_table(spark, src_dir, t)
-        union = reduce(
-            lambda a, b: a.unionByName(b), (transform(df, i) for i in range(n))
-        )
-        if repartition:
-            union = union.repartition(repartition)
-        union.write.parquet(table_path(out, t))
-    with open(marker, "w") as f:
-        json.dump(versions, f)
-    return out
+    retire_artifact_roots(spark, staging_kinds=(kind,))  # the old `<kind>/<n>x` layout
+
+    def build(out):
+        os.makedirs(out)
+        for t, transform in tables.items():
+            if transform is None:
+                shutil.copyfile(table_path(src_dir, t), table_path(out, t))
+                continue
+            df = load_table(spark, src_dir, t)
+            union = reduce(
+                lambda a, b: a.unionByName(b), (transform(df, i) for i in range(n))
+            )
+            if repartition:
+                union = union.repartition(repartition)
+            union.write.parquet(table_path(out, t))
+
+    return staged(
+        f"{kind}_{n}x", [table_path(src_dir, t) for t in tables], build,
+        key=(repartition, *tables.values()),
+    )
