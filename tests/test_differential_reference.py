@@ -3,10 +3,10 @@
 The reference implementation (tinymr.py) is imported when it is
 importable (read-only, as a behavioral oracle — no code is copied) and
 every hypothesis-generated dataset x sort-configuration is run through
-both engines; outputs must be IDENTICAL, including within-key value
-order (the sort matrix of SURVEY.md §2.1), tie order (stability, also
-under reverse), and first-wins collision resolution for return-style
-reducers.
+both engines; outputs must be IDENTICAL, including result key order
+(first encounter), within-key value order (the sort matrix of SURVEY.md
+§2.1), tie order (stability, also under reverse), and first-wins
+collision resolution for return-style reducers.
 
 Without the reference, the same fuzz runs with our in-process local
 path (`LocalOracle`, pinned to `local_threshold = 10**9`) as the oracle
@@ -24,7 +24,7 @@ from __future__ import annotations
 import sys
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tinymr_spark import MapReduce as OurMR
@@ -93,7 +93,7 @@ def _passthrough_pair(flags):
 @given(data=TUPLES3, smwv=FLAG, smr=FLAG)
 def test_sort_matrix_3tuples(spark, data, smwv, smr):
     ref, ours = _passthrough_pair({"smwv": smwv, "smr": smr})
-    assert ours(data) == ref(data)
+    assert list(ours(data).items()) == list(ref(data).items())
 
 
 @settings(max_examples=10, deadline=None,
@@ -101,7 +101,7 @@ def test_sort_matrix_3tuples(spark, data, smwv, smr):
 @given(data=TUPLES2, smwv=FLAG, smr=FLAG)
 def test_sort_matrix_2tuples(spark, data, smwv, smr):
     ref, ours = _passthrough_pair({"smwv": smwv, "smr": smr})
-    assert ours(data) == ref(data)
+    assert list(ours(data).items()) == list(ref(data).items())
 
 
 def _collision_pair(flags):
@@ -134,7 +134,45 @@ def _collision_pair(flags):
 @given(data=TUPLES2, srwv=FLAG, srr=FLAG)
 def test_collision_first_wins(spark, data, srwv, srr):
     ref, ours = _collision_pair({"srwv": srwv, "srr": srr})
-    assert ours(data) == ref(data)
+    assert list(ours(data).items()) == list(ref(data).items())
+
+
+def _rekey_pair(flags, width):
+    """Return-style reducer that re-keys onto a few output keys: many
+    input keys collide on each output key, so the first-wins winner and
+    each output key's first encounter (losers included) both matter."""
+
+    def mk(base):
+        class T(base):
+            sort_reduce_with_value = flags["srwv"]
+            sort_reduce_reverse = flags["srr"]
+
+            def mapper(self, item):
+                yield item
+
+            def reducer(self, key, values):
+                m = min(values)
+                return (m % 3, m) if width == 2 else (m % 3, m % 2, key)
+
+            def output(self, mapping):
+                return dict(mapping)
+
+        return T
+
+    return mk(RefMR)(), mk(OurMR)()
+
+
+@pytest.mark.parametrize("width", [2, 3])
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(data=TUPLES2, srwv=FLAG, srr=FLAG)
+@example(data=[("a", 6), ("b", 1), ("c", 0)], srwv=False, srr=False)
+@example(data=[("a", 6), ("b", 1), ("c", 0)], srwv=True, srr=False)
+@example(data=[("a", 6), ("b", 1), ("c", 0)], srwv=False, srr=True)
+@example(data=[("a", 6), ("b", 1), ("c", 0)], srwv=True, srr=True)
+def test_multi_key_collisions(spark, width, data, srwv, srr):
+    ref, ours = _rekey_pair({"srwv": srwv, "srr": srr}, width)
+    assert list(ours(data).items()) == list(ref(data).items())
 
 
 @settings(max_examples=10, deadline=None,
@@ -162,7 +200,7 @@ def test_two_stage_regroup(spark, data, smr, srr):
         return T
 
     ref, ours = mk(RefMR)(), mk(OurMR)()
-    assert ours(data) == ref(data)
+    assert list(ours(data).items()) == list(ref(data).items())
 
 
 @settings(max_examples=8, deadline=None,
@@ -178,7 +216,7 @@ def test_against_pooled_reference(spark, data, smwv, smr):
     with Pool(4) as pool:
         expected = ref(data, mapper_map=pool.map, reducer_map=pool.map)
         got = ours(data, mapper_map=pool.map, reducer_map=pool.map)
-    assert got == expected
+    assert list(got.items()) == list(expected.items())
 
 
 @settings(max_examples=10, deadline=None,
@@ -204,5 +242,4 @@ def test_combine_matches_reference(spark, data):
 
     ref_out = mk(RefMR)()(list(data))
     our_out = mk(OurMR, combine=True)()(list(data))
-    assert our_out == ref_out
-    assert list(our_out.keys()) == list(ref_out.keys())
+    assert list(our_out.items()) == list(ref_out.items())

@@ -20,6 +20,8 @@ from tinymr_spark.mapreduce import (
     _index_partition,
     _kv_shape,
     _local_group_and_sort,
+    _merge_winners,
+    _partition_winners,
     _require_pairs,
     _run_reduce,
 )
@@ -108,6 +110,51 @@ def test_finish_combine_restores_encounter_order():
     assert _finish_combine([((0, 3), 30), ((0, 1), 10)]) == ((0, 1), [10, 30])
 
 
+def _first_wins(stream, sort_with_value, reverse):
+    grouped = _local_group_and_sort(stream, sort_with_value, reverse)
+    return [(k, v[0]) for k, v in grouped.items()]
+
+
+@pytest.mark.parametrize("srwv", [False, True])
+@pytest.mark.parametrize("srr", [False, True])
+def test_partition_winners_then_merge_match_local_round(srwv, srr):
+    # Key "K" first appears at (0, 1, 0) in partition A, as a loser under
+    # srwv=False; "J" first appears at (0, 3, 0), before K's winner.
+    part_a = [((0, 1, 0), ("K", 1, "x")), ((0, 10, 0), ("K", 0, "y")),
+              ((0, 7, 0), ("J", 2, "q"))]
+    part_b = [((0, 5, 0), ("K", 0, "z")), ((0, 3, 0), ("J", 2, "p"))]
+    rows = [w for part in (part_a, part_b)
+            for w in _partition_winners(iter(part), srwv, srr)]
+    assert len(rows) == 4  # one winner per key per partition
+    got = _first_wins(_merge_winners(rows), srwv, srr)
+    stream = [rec for _idx, rec in sorted(part_a + part_b)]
+    assert got == _first_wins(stream, srwv, srr)
+    assert [k for k, _v in got] == ["K", "J"]
+
+
+def test_partition_winners_cross_partition_tie():
+    # Partition A's winner is "y" (sort 0 at idx 10); partition B's "z"
+    # ties it on sort 0 but was encountered earlier (idx 5), so "z" wins.
+    part_a = [((0, 1, 0), ("K", 1, "x")), ((0, 10, 0), ("K", 0, "y"))]
+    part_b = [((0, 5, 0), ("K", 0, "z"))]
+    assert list(_partition_winners(iter(part_a), False, False)) == [
+        ((0, 1, 0), (0, 10, 0), ("K", 0, "y"))
+    ]
+    rows = [w for part in (part_a, part_b)
+            for w in _partition_winners(iter(part), False, False)]
+    assert _first_wins(_merge_winners(rows), False, False) == [("K", "z")]
+    stream = [rec for _idx, rec in sorted(part_a + part_b)]
+    assert _first_wins(stream, False, False) == [("K", "z")]
+
+
+def test_partition_winners_two_tuples_keep_first_encounter():
+    part = [((1, 4, 0), ("k", 9)), ((1, 2, 0), ("k", 3)), ((1, 3, 0), ("j", 1))]
+    assert list(_partition_winners(iter(part), False, False)) == [
+        ((1, 2, 0), (1, 2, 0), ("k", 3)),
+        ((1, 3, 0), (1, 3, 0), ("j", 1)),
+    ]
+
+
 def test_flatten_kv_list_and_scalar():
     assert _flatten_kv(("k", [1, 2])) == [("k", 1), ("k", 2)]
     assert _flatten_kv(("k", 7)) == [("k", 7)]
@@ -189,6 +236,17 @@ def test_to_rdd_empty_sequence_is_none():
 def test_to_rdd_runs_pipeline(spark):
     rdd = _WordCount().to_rdd(["a a b"], spark=spark)
     assert dict(rdd.collect()) == {"a": [2], "b": [1]}
+
+
+class _CollidingCount(_WordCount):
+    def reducer(self, key, values):
+        return ("n", sum(values))
+
+
+def test_to_rdd_return_style_first_value_wins(spark):
+    # to_rdd keeps the second shuffle; "a" (count 2) is encountered first
+    rdd = _CollidingCount().to_rdd(["a a b"], spark=spark)
+    assert rdd.collect() == [("n", 2)]
 
 
 def test_to_df_empty_sequence_yields_empty_frame(spark):

@@ -34,9 +34,11 @@ Spark RDDs.  The contract being preserved, with reference citations:
   Spark shuffles do not guarantee arrival order, so every record carries an
   encounter index assigned before the shuffle; within each key the list is
   first restored to encounter order, then stably sorted.
-* Second shuffle round: reducer output is re-partitioned (+ optionally
-  re-sorted) by its own output keys; colliding output keys merge
-  (/root/reference/tinymr.py:217-221).
+* Second round: reducer output is re-grouped (+ optionally re-sorted) by
+  its own output keys; colliding output keys merge (reference
+  tinymr.py:217-221).  ``__call__`` runs it on the driver over the
+  collected reduced stream (one shuffle per call); ``to_rdd``/``to_df``
+  run it as a second ``groupByKey``.
 * Scalar extraction: return-style reducer output collapses each key's list
   to its first element — on collision only the first value (by sort order,
   else encounter order) survives (/root/reference/tinymr.py:223-227).
@@ -61,10 +63,12 @@ Deliberate deviations (documented in SURVEY.md §2.1 I11 / §7):
   matching that quirk beats matching its docstring.
 
 Scale notes: the dict-returning ``__call__`` is the small-result parity
-adapter (it collects).  The 100 TB path is ``to_rdd()`` which returns the
-final distributed ``RDD[(key, values)]`` without driver materialization;
-each key's value list must fit in one executor — the same per-key contract
-the reference imposes process-wide (/root/reference/tinymr.py:332-334).
+adapter: it collects the reduced stream (return-style reducers: one winner
+per output key per partition) and groups it on the driver.  The 100 TB path
+is ``to_rdd()`` (two shuffles), the final distributed ``RDD[(key, values)]``
+without driver materialization; each key's value list must fit in one
+executor — the same per-key contract the reference imposes process-wide
+(tinymr.py:332-334).
 """
 
 from __future__ import annotations
@@ -219,10 +223,10 @@ def _kv_shape(t):
     return (rec[0], (t[0], rec[1]))
 
 
-def _finish_group(payloads, sort_with_value, reverse):
-    """Order one key's shuffled payloads: encounter order restored first
-    (Spark shuffle arrival order is nondeterministic), then one stable
-    sort by the matrix key."""
+def _order_payloads(payloads, sort_with_value, reverse):
+    """Order one key's payloads: encounter order restored first (Spark
+    shuffle arrival order is nondeterministic), then one stable sort by
+    the matrix key.  Returns ``(first_idx, ordered_payloads)``."""
     lst = sorted(payloads, key=lambda p: p[0])  # restore encounter order
     first_idx = lst[0][0]
     if len(lst[0]) == 3:
@@ -235,7 +239,38 @@ def _finish_group(payloads, sort_with_value, reverse):
     elif sort_with_value:
         # 2-tuples + sort_with_value: sort by value  [tinymr.py:320-323]
         lst.sort(key=lambda p: p[1], reverse=reverse)
+    return first_idx, lst
+
+
+def _finish_group(payloads, sort_with_value, reverse):
+    """One key's shuffled payloads as ``(first_idx, [value, ...])``."""
+    first_idx, lst = _order_payloads(payloads, sort_with_value, reverse)
     return (first_idx, [p[-1] for p in lst])
+
+
+def _partition_winners(it, sort_with_value, reverse):
+    """Keep, per output key of one partition of a return-style reduced
+    stream, the one record first-wins extraction keeps (reference
+    tinymr.py:223-227), as ``(key_first_idx, winner_idx, record)``: a key's
+    place is its first encounter among ALL its records, losers included;
+    ties across partitions break by the winner's own index."""
+    groups: dict = {}
+    for key, payload in map(_kv_shape, it):
+        groups.setdefault(key, []).append(payload)
+    for key, payloads in groups.items():
+        first_idx, lst = _order_payloads(payloads, sort_with_value, reverse)
+        yield (first_idx, lst[0][0], (key,) + lst[0][1:])
+
+
+def _merge_winners(rows):
+    """Driver half of ``_partition_winners``: the winners as one record
+    stream for ``_local_group_and_sort`` — keys in first-encounter order
+    over all partitions, each key's winners in encounter order."""
+    first: dict = {}
+    for key_idx, _idx, rec in rows:
+        first[rec[0]] = min(key_idx, first.get(rec[0], key_idx))
+    rows.sort(key=lambda r: (first[r[2][0]], r[1]))
+    return [rec for _key_idx, _idx, rec in rows]
 
 
 def _index_partition(pid, it):
@@ -442,22 +477,12 @@ class MapReduce(abc.ABC):
         n = self.input_partitions or min(len(items), sc.defaultParallelism)
         return sc.parallelize(items, n)
 
-    def _pipeline(self, rdd):
-        """Build the distributed pipeline LAZILY; returns
-        ``RDD[(key, (first_idx, values))]`` after the second grouping, with
-        scalar extraction applied.  Empty streams simply collect to [].
-
-        No driver-side peeks: arity is validated executor-side on each
-        partition's first map record and each reducer call's first
-        emission (re-raised as ``ElementCountError`` at the collecting
-        action).  The old ``take(1)`` peek re-evaluated partition 0 of
-        the map phase — for a single-split input that is the ENTIRE map
-        phase run twice — and forced a ``cache()`` of the reduced stream.
-        Now every stage feeds exactly one consumer, nothing is cached,
-        and the only jobs are the two ``groupByKey`` shuffles with
-        narrow/pipelined stages between (the reference's two eager
-        barriers, /root/reference/tinymr.py:196-230).
-        """
+    def _reduced(self, rdd):
+        """Build map -> group -> reduce LAZILY; returns the reduced stream
+        ``RDD[(composite_idx, record)]``.  No driver-side peeks: arity is
+        validated executor-side on each partition's first map record and
+        each reducer call's first emission (re-raised as
+        ``ElementCountError`` at the collecting action)."""
         mapper = self.mapper
         if isgeneratorfunction(self.mapper):
             mapped = rdd.flatMap(mapper)
@@ -486,24 +511,27 @@ class MapReduce(abc.ABC):
             grouped = self._grouped_with_combine(indexed, n_parts)
         else:
             grouped = _group_and_sort(
-                indexed,
-                self.sort_map_with_value,
-                self.sort_map_reverse,
-                n_parts,
+                indexed, self.sort_map_with_value, self.sort_map_reverse, n_parts
             )
 
-        reduced = grouped.flatMap(
+        return grouped.flatMap(
             partial(_run_reduce, reducer=reducer, reducer_is_gen=reducer_is_gen)
         )
 
+    def _pipeline(self, rdd):
+        """The scale path (``to_rdd``/``to_df``), built LAZILY: ``_reduced``
+        plus the second round as a second ``groupByKey`` — the reference's
+        two eager barriers (tinymr.py:196-230).  Returns
+        ``RDD[(key, (first_idx, values))]`` with scalar extraction applied;
+        empty streams simply collect to []."""
         grouped2 = _group_and_sort(
-            reduced,
+            self._reduced(rdd),
             self.sort_reduce_with_value,
             self.sort_reduce_reverse,
-            n_parts,
+            self.num_partitions or rdd.getNumPartitions(),
         )
 
-        if not reducer_is_gen:
+        if not isgeneratorfunction(self.reducer):
             # {k: next(iter(v))} — first value survives collisions
             # (/root/reference/tinymr.py:223-227).
             grouped2 = grouped2.mapValues(lambda fv: (fv[0], fv[1][0]))
@@ -599,11 +627,31 @@ class MapReduce(abc.ABC):
             # RDD inputs pass through _as_rdd unchanged, so no __call__
             # input reaches here — but _as_rdd's contract allows None.
             return self._finalize({})  # pragma: no cover
-        rows = _collect_reraising(self._pipeline(rdd))
-        # First-encounter ordering of the reduced stream
-        # (/root/reference/tinymr.py:332-334 insertion order).
-        rows.sort(key=lambda kv: kv[1][0])
-        return self._finalize({k: v for k, (_idx, v) in rows})
+        # One shuffle: the second round runs on the driver (module docstring).
+        reduced = self._reduced(rdd)
+        if isgeneratorfunction(self.reducer):
+            rows = sorted(_collect_reraising(reduced), key=lambda t: t[0])
+            stream = [rec for _idx, rec in rows]
+        else:
+            winners = reduced.mapPartitions(partial(
+                _partition_winners, sort_with_value=self.sort_reduce_with_value,
+                reverse=self.sort_reduce_reverse,
+            ))
+            stream = _merge_winners(_collect_reraising(winners))
+        return self._second_round(stream)
+
+    def _second_round(self, stream):
+        """The second round in-process over the reduced stream in encounter
+        order (reference tinymr.py:217-227), for both call paths."""
+        grouped = _local_group_and_sort(
+            stream, self.sort_reduce_with_value, self.sort_reduce_reverse
+        )
+        if grouped is None:
+            return self._finalize({})
+        if not isgeneratorfunction(self.reducer):
+            # first value survives collisions (reference tinymr.py:223-227)
+            grouped = {k: v[0] for k, v in grouped.items()}
+        return self._finalize(grouped)
 
     def _run_local(self, items, mapper_map=None, reducer_map=None):
         """In-process execution of the identical contract — the sort
@@ -666,12 +714,4 @@ class MapReduce(abc.ABC):
                 _checked_one(self.reducer(key, values))
                 for key, values in grouped.items()
             )
-        grouped2 = _local_group_and_sort(
-            reduced, self.sort_reduce_with_value, self.sort_reduce_reverse
-        )
-        if grouped2 is None:
-            return self._finalize({})
-        if not reducer_is_gen:
-            # first value survives collisions (/root/reference/tinymr.py:223-227)
-            grouped2 = {k: v[0] for k, v in grouped2.items()}
-        return self.output(grouped2)
+        return self._second_round(reduced)
