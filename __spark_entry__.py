@@ -27,10 +27,9 @@ queries()     — every implemented operator from SURVEY.md §2 (+ §2.5
                 ROW TRACKING, shallow clone), storage/scale
                 q110+q112-q114+q117+q121+q128+q131-q135+q137+
                 q141-q142+q144+q148+q150-q153+q155-q156+q160-q161.
-                Retired near-duplicates are out of the registry; q43,
-                q53, q105 and q130 stay in the package as machinery for
-                their survivors (checked in the registry sweep,
-                tools/check_oracle.py), the rest were deleted.
+                Retired near-duplicates were deleted; q47 and q55/q140/
+                q159 build on the former q43 simhash and q53 LSH buckets
+                as private helpers, checked through their own oracles.
 oracle_sql()  — DuckDB twins for ALL of the above, including q104 since
                 round 11 (the library MinHashLSH hash family re-derived
                 from its seed via java.util.Random's LCG + straight-line

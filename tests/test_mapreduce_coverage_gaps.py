@@ -14,7 +14,6 @@ from tinymr_spark import ElementCountError, MapReduce
 from tinymr_spark.mapreduce import (
     _collect_reraising,
     _combine_partition,
-    _finish_combine,
     _finish_group,
     _flatten_kv,
     _index_partition,
@@ -56,6 +55,10 @@ def test_finish_group_sort_matrix():
         [((0, 1), "z"), ((0, 0), "a")], sort_with_value=False, reverse=False
     )
     assert vals == ["a", "z"]
+    # the combine path's per-partition partials: encounter order only
+    assert _finish_group(
+        [((0, 3), 30), ((0, 1), 10)], sort_with_value=False, reverse=False
+    ) == ((0, 1), [10, 30])
     # reverse flips each sorted branch
     _, vals = _finish_group(
         [((0, 0), 1, "a"), ((0, 1), 2, "b")], sort_with_value=False, reverse=True
@@ -104,10 +107,6 @@ def test_combine_partition_accumulates_and_keeps_min_index():
 
     with pytest.raises(ElementCountError, match="combine=True"):
         list(_combine_partition(iter([((0, 0), ("k", "s", "v"))]), reducer))
-
-
-def test_finish_combine_restores_encounter_order():
-    assert _finish_combine([((0, 3), 30), ((0, 1), 10)]) == ((0, 1), [10, 30])
 
 
 def _first_wins(stream, sort_with_value, reverse):

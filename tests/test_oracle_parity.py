@@ -1,15 +1,22 @@
-"""The registry sweep at sf0.001: every declared query, plus the retired
-machinery queries, built and collected ONCE and checked on that one
-execution — no scale red flag in its plan, exactly the pinned duplicated
-final-plan signatures, and rows equal to its DuckDB oracle (the in-repo
-mirror of the driver's gate: rowcount + column set + order-insensitive
-normalized values).  tools/check_oracle.py runs the same check_query."""
+"""The registry sweep at sf0.001: every declared query built and
+collected ONCE and checked on that one execution — no scale red flag in
+its plan, exactly the pinned duplicated final-plan signatures, and rows
+equal to its DuckDB oracle (the in-repo mirror of the external
+correctness gate: rowcount + column set + order-insensitive normalized
+values).
+tools/check_oracle.py runs the same check_query."""
 
 from __future__ import annotations
 
 import pytest
 
-from tools.check_oracle import EXPECTED_DUPS, check_query, sweep_queries
+from tools.check_oracle import (
+    ALLOW_BNLJ,
+    DYNAMIC,
+    EXPECTED_DUPS,
+    check_query,
+    sweep_queries,
+)
 
 SWEEP = sweep_queries()
 
@@ -25,3 +32,11 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
         "EXPECTED_DUPS with a reason)"
     )
     assert c.mismatch is None
+
+
+def test_exemptions_name_sweep_entries():
+    """Every plan exemption names a query the sweep still runs: an entry
+    left behind by a deleted query would silently exempt a future query
+    that reuses the name."""
+    stale = (ALLOW_BNLJ | DYNAMIC | set(EXPECTED_DUPS)) - set(SWEEP)
+    assert stale == set()

@@ -131,84 +131,6 @@ def test_q114_scan_has_partition_filter(spark, sf_dir):
     assert "event_type" in first_line, plan
 
 
-def test_compaction_reduces_file_count_and_preserves_rows(spark, sf_dir):
-    import os
-
-    from tinymr_spark.operators.scale import q105_compact_small_files, _FRAGMENT_FILES
-    import hashlib
-    import tempfile
-
-    from tinymr_spark.sources import load_table
-
-    q105_compact_small_files(spark, sf_dir).count()  # stages + compacts
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "tinymr_spark_compact",
-        hashlib.md5(sf_dir.encode()).hexdigest(),
-    )
-
-    def parquet_files(d):
-        return [
-            os.path.join(r, f)
-            for r, _dirs, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    small = parquet_files(os.path.join(base, "small"))
-    compacted = parquet_files(os.path.join(base, "compact"))
-    assert len(small) == _FRAGMENT_FILES
-    assert len(compacted) < len(small)
-    n_orig = load_table(spark, sf_dir, "documents").count()
-    assert spark.read.parquet(os.path.join(base, "compact")).count() == n_orig
-
-
-def test_q130_zorder_pruning_beats_linear(spark, sf_dir):
-    """The point of the Morton layout: a point filter on the SECOND
-    dimension (suppkey) must prune most z-buckets — their min/max
-    suppkey statistics exclude it — while linear partkey-range bucketing
-    leaves suppkey at full range in every bucket, so nothing prunes.
-    (Average rectangle AREA is the wrong metric: a 4x4 z-grid and a
-    16-slice linear layout have the same total area; the difference is
-    fan-out per single-dimension filter.)"""
-    from pyspark.sql import functions as F
-
-    from tinymr_spark.operators.scale import Z_BUCKETS, q130_zorder_layout
-    from tinymr_spark.sources import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    probe = li.agg(F.min("l_suppkey")).collect()[0][0]  # any existing key
-
-    def hit_buckets(df):
-        return df.where(
-            (F.col("min_supp") <= probe) & (F.col("max_supp") >= probe)
-        ).count()
-
-    zres = q130_zorder_layout(spark, sf_dir)
-    n_z = zres.count()
-    z_hits = hit_buckets(zres)
-
-    mx = li.agg(F.max("l_partkey").alias("mp"))
-    linear = (
-        li.crossJoin(F.broadcast(mx))
-        .select(
-            "l_suppkey",
-            (F.col("l_partkey") * Z_BUCKETS / (F.col("mp") + 1))
-            .cast("int")
-            .alias("b"),
-        )
-        .groupBy("b")
-        .agg(
-            F.min("l_suppkey").alias("min_supp"),
-            F.max("l_suppkey").alias("max_supp"),
-        )
-    )
-    lin_hits = hit_buckets(linear)
-    # linear layout cannot prune on suppkey at all; z must prune >= half
-    assert lin_hits == linear.count()
-    assert z_hits <= n_z // 2, (z_hits, n_z, lin_hits)
-
-
 def test_q134_bloom_never_misses_members(spark, sf_dir):
     """The bloom contract: a member key can never be pruned ('missed'
     status must be structurally absent), and the filter must actually
@@ -474,9 +396,9 @@ def test_q43_simhash_single_aggregation_pass(spark, sf_dir):
     groupBy(doc_id), not an explode(sequence(0,15)) through an extra
     (doc_id, j) exchange — the plan must carry exactly one Generate (the
     token explode) per simhash branch and no 16-row sequence blowup."""
-    from tinymr_spark.operators.dedup import q43_dedup_simhash
+    from tinymr_spark.operators.dedup import _simhash_signatures
 
-    plan = explain_str(q43_dedup_simhash(spark, sf_dir), "formatted")
+    plan = explain_str(_simhash_signatures(spark, sf_dir), "formatted")
     assert "sequence(" not in plan, plan
     # ") Generate"/") Exchange" match the numbered detail headers, one
     # per physical node (the tree repeats each node a second time)

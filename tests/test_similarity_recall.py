@@ -65,17 +65,17 @@ def test_ml_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
 def test_row_local_bucket_matches_q53(spark, sf_dir):
     """Three-way pin of the sign-projection weight rule: the stream-side
     per-row fold (literal weights from similarity.lsh_plane_weights) must
-    reproduce q53's posexplode+groupBy bucket for EVERY corpus vector —
-    if the rule or the addition order ever drifts, this failure points at
+    reproduce _lsh_buckets' posexplode+groupBy bucket for EVERY corpus
+    vector — if the rule or the addition order ever drifts, this points at
     the cause instead of an opaque q159-vs-oracle hash mismatch."""
-    from tinymr_spark.operators.similarity import q53_lsh_buckets
+    from tinymr_spark.operators.similarity import _lsh_buckets
     from tinymr_spark.sources import load_table
     from tinymr_spark.streaming import _row_local_bucket
 
     emb = load_table(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()["embedding"])
     folded = emb.select("vec_id", _row_local_bucket(dim).alias("bucket_fold"))
-    ref = q53_lsh_buckets(spark, sf_dir)
+    ref = _lsh_buckets(spark, sf_dir)
     joined = folded.join(ref, "vec_id")
     n = joined.count()
     assert n == emb.count()

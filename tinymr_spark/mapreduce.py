@@ -77,6 +77,7 @@ import abc
 import re
 from functools import partial
 from inspect import isgeneratorfunction
+from operator import itemgetter
 
 from pyspark.rdd import RDD
 
@@ -128,18 +129,25 @@ def _collect_reraising(rdd):
         raise
 
 
+def _check_pair(rec):
+    """The combine path's arity guard: combine=True requires (key, value)
+    records — a sort element would trigger the map-round sort the
+    combine skips."""
+    if len(rec) != 2:
+        raise ElementCountError(
+            "combine=True requires (key, value) records; "
+            "got arity {}. Example: {}".format(len(rec), rec)
+        )
+
+
 def _require_pairs(stream):
-    """Local twin of the combine path's arity guard: combine=True demands
+    """Local twin of ``_combine_partition``'s guard: combine=True demands
     (key, value) records on every path, so input size never changes a
     task's outcome."""
     checked = False
     for rec in stream:
         if not checked:
-            if len(rec) != 2:
-                raise ElementCountError(
-                    "combine=True requires (key, value) records; "
-                    "got arity {}. Example: {}".format(len(rec), rec)
-                )
+            _check_pair(rec)
             checked = True
         yield rec
 
@@ -182,6 +190,20 @@ def _checked_tuple(records):
     return records
 
 
+def _sort_key(has_sort, sort_with_value):
+    """The sort-matrix key over one payload, or ``None`` for no sort.
+    Payloads end in ``(s, v)`` or ``v`` — local ``(s, v)``/``(None, v)``,
+    shuffled ``(idx, s, v)``/``(idx, v)`` — so ``p[-2]``/``p[-1]`` fit
+    every shape."""
+    if has_sort:
+        if sort_with_value:
+            return itemgetter(-2, -1)  # (sort, value)  [tinymr.py:327-328]
+        return itemgetter(-2)  # sort element only  [tinymr.py:329-330]
+    if sort_with_value:
+        return itemgetter(-1)  # 2-tuples: by value  [tinymr.py:320-323]
+    return None
+
+
 def _local_group_and_sort(stream, sort_with_value, reverse):
     """In-process twin of ``_group_and_sort`` for the local fast path:
     insertion-ordered dict gives first-encounter key order, ``list.sort``
@@ -199,16 +221,11 @@ def _local_group_and_sort(stream, sort_with_value, reverse):
             groups.setdefault(rec[0], []).append((None, rec[1]))
     if arity is None:
         return None
-    has_sort = arity == 3
+    sort_key = _sort_key(arity == 3, sort_with_value)
     out: dict = {}
     for key, payloads in groups.items():
-        if has_sort:
-            if sort_with_value:
-                payloads.sort(key=lambda p: (p[0], p[1]), reverse=reverse)
-            else:
-                payloads.sort(key=lambda p: p[0], reverse=reverse)
-        elif sort_with_value:
-            payloads.sort(key=lambda p: p[1], reverse=reverse)
+        if sort_key is not None:
+            payloads.sort(key=sort_key, reverse=reverse)
         out[key] = [p[1] for p in payloads]
     return out
 
@@ -229,16 +246,9 @@ def _order_payloads(payloads, sort_with_value, reverse):
     the matrix key.  Returns ``(first_idx, ordered_payloads)``."""
     lst = sorted(payloads, key=lambda p: p[0])  # restore encounter order
     first_idx = lst[0][0]
-    if len(lst[0]) == 3:
-        if sort_with_value:
-            # sort by (sort, value) tuple        [tinymr.py:327-328]
-            lst.sort(key=lambda p: (p[1], p[2]), reverse=reverse)
-        else:
-            # sort by the sort element only      [tinymr.py:329-330]
-            lst.sort(key=lambda p: p[1], reverse=reverse)
-    elif sort_with_value:
-        # 2-tuples + sort_with_value: sort by value  [tinymr.py:320-323]
-        lst.sort(key=lambda p: p[1], reverse=reverse)
+    sort_key = _sort_key(len(lst[0]) == 3, sort_with_value)
+    if sort_key is not None:
+        lst.sort(key=sort_key, reverse=reverse)
     return first_idx, lst
 
 
@@ -310,13 +320,7 @@ def _combine_partition(it, reducer):
     checked = False
     for idx, rec in it:
         if not checked:
-            # combine requires (key, value) records: a sort element
-            # would trigger the map-round sort the combine skips
-            if len(rec) != 2:
-                raise ElementCountError(
-                    "combine=True requires (key, value) records; "
-                    "got arity {}. Example: {}".format(len(rec), rec)
-                )
+            _check_pair(rec)
             checked = True
         k, v = rec
         slot = acc.get(k)
@@ -329,12 +333,6 @@ def _combine_partition(it, reducer):
     for k, (min_idx, values) in acc.items():
         out = reducer(k, values)
         yield (k, (min_idx, out[-1]))
-
-
-def _finish_combine(payloads):
-    """Restore encounter order over one key's per-partition partials."""
-    lst = sorted(payloads, key=lambda p: p[0])
-    return (lst[0][0], [p[1] for p in lst])
 
 
 def _flatten_kv(kv):
@@ -548,7 +546,9 @@ class MapReduce(abc.ABC):
             partial(_combine_partition, reducer=self.reducer)
         )
         grouped = partials.groupByKey(n_parts)
-        return grouped.mapValues(_finish_combine)
+        return grouped.mapValues(
+            partial(_finish_group, sort_with_value=False, reverse=False)
+        )
 
     def to_rdd(self, sequence, spark=None):
         """Scale path: run the task, return ``RDD[(key, values)]`` without

@@ -279,10 +279,10 @@ JOIN sizes sb ON doc_b = sb.doc_id
 
 # ---------------------------------------------------------------------------
 # SimHash: 16-bit signature from md5 nibbles of each token, weighted by
-# term frequency.  Bit math is done with div/mod so the identical
-# computation runs on both engines.
+# term frequency — the blocking key of q47.  Bit math is done with
+# div/mod so the identical computation runs on both engines.
 # ---------------------------------------------------------------------------
-def q43_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinymr_spark.operators.text import _tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -320,7 +320,9 @@ def q43_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select("doc_id", simhash.cast("long").alias("simhash"))
 
 
-ORACLE_Q43 = r"""
+# DuckDB twin of _simhash_signatures: a CTE chain ending in
+# `sig(doc_id, simhash)`, which ORACLE_Q47 pairs on.
+_SQL_SIMHASH_SIGS = r"""
 WITH tf AS (
     SELECT doc_id, tok, COUNT(*) AS w, md5(tok) AS h
     FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok
@@ -334,12 +336,13 @@ bits AS (
                  // CAST(POW(2, j % 4) AS INT)) % 2) * 2 - 1) AS c
     FROM tf, generate_series(0, 15) AS g(j)
 ),
-sums AS (SELECT doc_id, j, SUM(c) AS s FROM bits GROUP BY doc_id, j)
-SELECT doc_id,
-       CAST(SUM(CASE WHEN s > 0 THEN CAST(POW(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-FROM sums
-GROUP BY doc_id
-"""
+sums AS (SELECT doc_id, j, SUM(c) AS s FROM bits GROUP BY doc_id, j),
+sig AS (
+    SELECT doc_id,
+           CAST(SUM(CASE WHEN s > 0 THEN CAST(POW(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
+    FROM sums
+    GROUP BY doc_id
+)"""
 
 
 # ---------------------------------------------------------------------------
@@ -901,8 +904,8 @@ ORACLE_Q49 = _oracle_q49()
 
 
 # ---------------------------------------------------------------------------
-# SimHash-banded near-dup: the pairing step on top of q43's 16-bit
-# signatures.  Pigeonhole blocking — split the signature into two 8-bit
+# SimHash-banded near-dup: the pairing step on top of _simhash_signatures'
+# 16-bit signatures.  Pigeonhole blocking — split the signature into two 8-bit
 # halves; any pair within hamming distance <= 3 of BOTH-half corruption
 # still shares at least one intact half when <= floor(16/2/... ) — here
 # the standard guarantee: distance <= 1 per half, so candidates = pairs
@@ -914,7 +917,7 @@ HAMMING_MAX = 3
 
 
 def q47_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = q43_dedup_simhash(spark, sf_dir)  # (doc_id, simhash)
+    sig = _simhash_signatures(spark, sf_dir)  # (doc_id, simhash)
     halves = sig.select(
         "doc_id",
         "simhash",
@@ -933,8 +936,8 @@ def q47_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the join STREAMS the probe side (sf0.1 has 540k candidate pairs:
     # noop 3.06s -> 4.41s, count 3.29s -> 7.09s with multi-second GC
     # spreads).  The streamed join is the scale-safe shape; the
-    # double-computed upstream is now half as expensive (see q43's
-    # single-aggregation fold above).
+    # double-computed upstream is now half as expensive (see
+    # _simhash_signatures' single-aggregation fold).
     a = halves.alias("a")
     b = halves.hint("shuffle_hash").alias("b")
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
@@ -952,17 +955,8 @@ def q47_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_Q47 = (
-    ORACLE_Q43.replace(
-        """SELECT doc_id,
-       CAST(SUM(CASE WHEN s > 0 THEN CAST(POW(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-FROM sums
-GROUP BY doc_id""",
-        f""", sig AS (
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN s > 0 THEN CAST(POW(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-    FROM sums
-    GROUP BY doc_id
-),
+    _SQL_SIMHASH_SIGS
+    + f""",
 halves AS (
     SELECT doc_id, simhash, 0 AS band, simhash // 256 AS hv FROM sig
     UNION ALL
@@ -973,8 +967,8 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
 FROM halves a JOIN halves b
   ON a.band = b.band AND a.hv = b.hv AND a.doc_id < b.doc_id
 GROUP BY 1, 2
-HAVING MIN(bit_count(xor(a.simhash, b.simhash))) <= {HAMMING_MAX}""",
-    )
+HAVING MIN(bit_count(xor(a.simhash, b.simhash))) <= {HAMMING_MAX}
+"""
 )
 
 

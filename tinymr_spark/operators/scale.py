@@ -96,80 +96,6 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> No
 
 
 # ---------------------------------------------------------------------------
-# q105 — small-files compaction: the standing maintenance job of any
-# long-lived 100 TB lake.  Streaming sinks and fine partitioning leave
-# thousands of KB-scale files; each costs a listing entry, a footer
-# read, and a scheduler task.  The compactor rewrites a directory into
-# ceil(bytes / target) files.  The query stages a deliberately
-# fragmented copy of `documents` (64 files), compacts it, and returns
-# per-source content stats FROM THE COMPACTED OUTPUT — the oracle checks
-# the whole round trip preserved every row and byte of content, while
-# tests/test_scale_patterns.py asserts the file count actually dropped.
-# (No reference counterpart: the reference has no storage layer at all,
-# /root/reference/tinymr.py.)
-# ---------------------------------------------------------------------------
-COMPACT_TARGET_BYTES = 32 * 1024 * 1024
-_FRAGMENT_FILES = 64
-
-
-def compact_parquet(spark, src_dir: str, dst_dir: str,
-                    target_bytes: int = COMPACT_TARGET_BYTES) -> int:
-    """Rewrite ``src_dir`` into ``dst_dir`` with ceil(bytes/target)
-    files; returns the output file count.  One narrow read + one
-    round-robin repartition write — no keyed shuffle."""
-    import math
-    import os
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _dirs, files in os.walk(src_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_out = max(1, math.ceil(total / target_bytes))
-    spark.read.parquet(src_dir).repartition(n_out).write.mode(
-        "overwrite"
-    ).parquet(dst_dir)
-    return n_out
-
-
-def q105_compact_small_files(spark, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
-    from tinymr_spark.sources import load_table
-
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "tinymr_spark_compact",
-        hashlib.md5(sf_dir.encode()).hexdigest(),
-    )
-    small, compacted = os.path.join(base, "small"), os.path.join(base, "compact")
-    docs = load_table(spark, sf_dir, "documents")
-    docs.repartition(_FRAGMENT_FILES).write.mode("overwrite").parquet(small)
-    compact_parquet(spark, small, compacted)
-    return (
-        spark.read.parquet(compacted)
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-            F.sum(F.length("text")).cast("bigint").alias("sum_text_len"),
-        )
-    )
-
-
-ORACLE_Q105 = """
-SELECT source, COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(SUM(length(text)) AS BIGINT) AS sum_text_len
-FROM documents
-GROUP BY source
-"""
-
-
-# ---------------------------------------------------------------------------
 # q110 — salted (skew-safe) JOIN: the join-side counterpart of
 # salted_agg.  A hash join sends every fact row of a key to the one
 # partition owning that key, so a hot orderkey (a viral order, a null-ish
@@ -1026,107 +952,6 @@ SELECT source, COUNT(*) AS n_rows,
            COALESCE(CAST(n_chars AS VARCHAR), chr(0) || 'NULL')), 1, 15)) AS BIGINT)) AS xor_fp
 FROM documents
 GROUP BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# q130 — Z-order (Morton-curve) layout: multi-dimensional data skipping.
-# A lake sorted linearly on one column bounds min/max file statistics on
-# THAT column only; queries filtering the second dimension still scan
-# everything.  Interleaving the bits of both key columns (the Morton
-# code) and range-bucketing on it gives every file a bounded rectangle
-# in BOTH dimensions — the technique behind Delta/Iceberg OPTIMIZE
-# ZORDER.  The query computes 16-bit-per-dim Morton codes for lineitem
-# (l_partkey x l_suppkey), buckets the curve into Z_BUCKETS equal code
-# ranges, and returns each bucket's rectangle + row count — the min/max
-# file statistics a scan planner would prune on.  Pure integer bit math
-# (shift/and/or), bit-identical across engines; one aggregation, no
-# windows.  tests/test_scale_patterns.py asserts the rectangles are
-# actually TIGHT on both dimensions vs a linear sort's.
-# ---------------------------------------------------------------------------
-Z_BITS = 16
-Z_BUCKETS = 16
-# Buckets are the TOP log2(Z_BUCKETS) bits of the 2*Z_BITS-bit Morton
-# code — deriving the shift from the constant keeps the Spark
-# expression, the oracle SQL, and the tests in lock-step if Z_BUCKETS
-# changes.
-Z_BUCKET_SHIFT = 2 * Z_BITS - (Z_BUCKETS - 1).bit_length()
-assert 1 << (2 * Z_BITS - Z_BUCKET_SHIFT) == Z_BUCKETS, "Z_BUCKETS must be a power of two"
-
-
-def morton_code(a: Column, b: Column, bits: int = Z_BITS) -> Column:
-    """Interleave the low `bits` bits of a (even positions) and b (odd
-    positions) into a 2*bits-bit Morton code."""
-    terms = []
-    for i in range(bits):
-        terms.append(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i))
-        terms.append(
-            F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    z = terms[0]
-    for t in terms[1:]:
-        z = z.bitwiseOR(t)
-    return z
-
-
-def _morton_sql(a: str, b: str, bits: int = Z_BITS) -> str:
-    terms = [f"((({a} >> {i}) & 1) << {2 * i})" for i in range(bits)]
-    terms += [f"((({b} >> {i}) & 1) << {2 * i + 1})" for i in range(bits)]
-    return " | ".join(terms)
-
-
-def q130_zorder_layout(spark, sf_dir: str) -> DataFrame:
-    from tinymr_spark.sources import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # Normalize each dimension to the full 2^Z_BITS domain FIRST (the
-    # broadcast 1-row per-column maxes, q38's pattern): raw key domains
-    # are asymmetric and scale with the corpus, and interleaving
-    # un-normalized bits wastes the curve on the wider dimension's high
-    # bits.  Real OPTIMIZE ZORDER implementations do the same via
-    # range-partitioned rank; min-max scaling is the deterministic
-    # oracle-checkable equivalent.
-    dom = (1 << Z_BITS) - 1
-    mx = li.agg(F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms"))
-    # `div` (integer division), not `/`+cast: double division is only
-    # floor-exact while key * dom stays under 2^53 — at lake-scale key
-    # domains the truncated double quotient can differ by 1 from the
-    # oracle's exact `//`, flipping a coordinate bit and the bucket.
-    a_n = F.expr(f"l_partkey * {dom} div (mp + 1)")
-    b_n = F.expr(f"l_suppkey * {dom} div (ms + 1)")
-    bucket = F.shiftright(morton_code(a_n, b_n), Z_BUCKET_SHIFT).cast("int")
-    return (
-        li.crossJoin(F.broadcast(mx))
-        .select("l_partkey", "l_suppkey", bucket.alias("zbucket"))
-        .groupBy("zbucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("l_partkey").alias("min_part"),
-            F.max("l_partkey").alias("max_part"),
-            F.min("l_suppkey").alias("min_supp"),
-            F.max("l_suppkey").alias("max_supp"),
-        )
-    )
-
-
-ORACLE_Q130 = f"""
-WITH m AS (SELECT MAX(l_partkey) AS mp, MAX(l_suppkey) AS ms FROM lineitem),
-n AS (
-    SELECT l_partkey, l_suppkey,
-           CAST(l_partkey * {(1 << Z_BITS) - 1} // (mp + 1) AS BIGINT) AS an,
-           CAST(l_suppkey * {(1 << Z_BITS) - 1} // (ms + 1) AS BIGINT) AS bn
-    FROM lineitem, m
-),
-z AS (
-    SELECT l_partkey, l_suppkey, ({_morton_sql("an", "bn")}) AS zval
-    FROM n
-)
-SELECT CAST(zval >> {Z_BUCKET_SHIFT} AS INT) AS zbucket,
-       COUNT(*) AS n_rows,
-       MIN(l_partkey) AS min_part, MAX(l_partkey) AS max_part,
-       MIN(l_suppkey) AS min_supp, MAX(l_suppkey) AS max_supp
-FROM z
-GROUP BY 1
 """
 
 
@@ -2347,8 +2172,7 @@ WHERE o_custkey = (SELECT MAX(o_custkey) // 3 FROM orders)
 # bin-packed into ~target-size files and swapped in ONE atomic merge
 # commit; the healthy initial files are never read or rewritten
 # (O(small bytes), not O(table) — the difference from q162's
-# read-everything compaction, and from q105 which compacts an
-# UNVERSIONED directory with no history).  Thresholds derive from the
+# read-everything compaction).  Thresholds derive from the
 # live files' actual sizes (half the largest / half the small total),
 # so the same structure falls out at every SF.
 #

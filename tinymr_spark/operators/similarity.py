@@ -109,19 +109,20 @@ GROUP BY label, pos
 
 # ---------------------------------------------------------------------------
 # Sign-projection LSH buckets: 8 deterministic md5-derived hyperplanes of
-# +-1 weights; bucket = 8-bit sign signature.  Fully portable (no RNG), so
-# the oracle checks the bucketing itself.
+# +-1 weights; bucket = 8-bit sign signature.  Fully portable (no RNG):
+# q55's oracle checks the bucketing itself through its `bucket` column,
+# and q140/q159 probe the same buckets.
 # ---------------------------------------------------------------------------
 N_PLANES = 8
 
 
 def lsh_plane_weights(dim: int) -> list[list[float]]:
-    """The q53 hyperplane weights as plain Python floats — THE single
+    """The LSH hyperplane weights as plain Python floats — THE single
     home of the weight rule (+1 if the first md5 nibble of "plane-pos"
     is even, else -1; hashlib.md5 is bit-identical to Spark's and
-    DuckDB's md5).  q53's column expression, its oracle, and q159's
-    stream-side literal arrays all follow this rule; change it here and
-    in the two SQL renderings together.
+    DuckDB's md5).  _lsh_buckets' column expression, _SQL_BUCKET_VECS,
+    and q159's stream-side literal arrays all follow this rule; change
+    it here and in the two SQL renderings together.
     tests/test_similarity_recall.py::test_row_local_bucket_matches_q53
     pins the three-way agreement over the real corpus."""
     import hashlib
@@ -137,7 +138,7 @@ def lsh_plane_weights(dim: int) -> list[list[float]]:
     ]
 
 
-def q53_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     expanded = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
@@ -169,32 +170,6 @@ def q53_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.sum("bitval").alias("bucket"))
     )
-
-
-ORACLE_Q53 = f"""
-WITH flat AS (
-    SELECT vec_id,
-           CAST(unnest(embedding) AS DOUBLE) AS v,
-           CAST(unnest(range(0, len(embedding))) AS INT) AS pos
-    FROM embeddings
-),
-expanded AS (
-    SELECT vec_id, pos, v, plane
-    FROM flat, generate_series(0, {N_PLANES - 1}) AS g(plane)
-),
-dots AS (
-    SELECT vec_id, plane,
-           SUM(v * (CASE WHEN (strpos('0123456789abcdef',
-                       substr(md5(plane || '-' || pos), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END)) AS dot
-    FROM expanded
-    GROUP BY vec_id, plane
-)
-SELECT vec_id,
-       CAST(SUM(CASE WHEN dot > 0 THEN CAST(POW(2, plane) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-FROM dots
-GROUP BY vec_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -627,17 +602,17 @@ FROM ranked WHERE rank <= {TOP_K}
 
 
 # ---------------------------------------------------------------------------
-# LSH-bucketed embedding near-dup: candidate pairs share a q53 sign-
-# projection bucket (self-contained — no label attribute needed), exact
-# cosine only on candidates.  This is the embedding twin of the q45
-# banded-minhash pipeline: bucket key is an 8-bit signature, so the
+# LSH-bucketed embedding near-dup: candidate pairs share a sign-
+# projection bucket of _lsh_buckets (self-contained — no label attribute
+# needed), exact cosine only on candidates.  This is the embedding twin
+# of the q45 banded-minhash pipeline: bucket key is an 8-bit signature, so the
 # self-join shuffles on a tiny key and the cross product never appears.
 # ---------------------------------------------------------------------------
 SIM_THRESHOLD = 0.30  # synthetic embeddings are near-orthogonal; ~p95 of in-bucket pairs
 
 
 def q55_embedding_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buckets = q53_lsh_buckets(spark, sf_dir)
+    buckets = _lsh_buckets(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding",
         F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
@@ -664,7 +639,7 @@ def q55_embedding_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twin of the sign-bucketed vector table (q53 buckets joined to
+# DuckDB twin of the sign-bucketed vector table (_lsh_buckets joined to
 # the normed embeddings) — shared by every oracle probing the buckets.
 _SQL_BUCKET_VECS = f"""
 WITH flat AS (
@@ -712,7 +687,7 @@ WHERE ROUND(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) >= {SIM_THRESHOLD
 # ---------------------------------------------------------------------------
 # q140 — incremental shard-vs-lake EMBEDDING dedup: the vector twin of
 # q123.  A new shard of embeddings (vec_id % 5 == 0) is admitted against
-# the standing corpus: candidates are lake vectors sharing a q53
+# the standing corpus: candidates are lake vectors sharing a
 # sign-projection bucket (inverted-index probe, never shard x lake), the
 # exact cosine runs only on candidates, and each shard vector reports
 # its verdict with the best-matching lake vector (max cosine, min-id
@@ -731,7 +706,7 @@ def _lake_vec_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table_path(sf_dir, "embeddings")
 
     def build() -> DataFrame:
-        buckets = q53_lsh_buckets(spark, sf_dir)
+        buckets = _lsh_buckets(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding",
             F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
@@ -747,7 +722,7 @@ def _lake_vec_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q140_incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buckets = q53_lsh_buckets(spark, sf_dir)
+    buckets = _lsh_buckets(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding",
         F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),

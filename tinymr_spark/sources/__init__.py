@@ -38,9 +38,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always broadcast in joins.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

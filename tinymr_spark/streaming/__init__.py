@@ -1062,10 +1062,11 @@ FROM shard sh LEFT JOIN lake_fp lf USING (fp)
 # q159 — STREAMING semantic dedup: the vector-tier twin of q149, closing
 # the incremental-dedup matrix (q123 batch docs / q149 streamed docs /
 # q140 batch vectors / q159 streamed vectors).  New embeddings arrive as
-# a throttled multi-file stream; each row's q53 sign-projection bucket is
-# computed ROW-LOCALLY (the hyperplane weights are md5-deterministic, so
-# they fold into literal arrays at plan time — the stream side needs NO
-# groupBy, hence no streaming state), and foreachBatch probes the
+# a throttled multi-file stream; each row's sign-projection bucket
+# (similarity._lsh_buckets) is computed ROW-LOCALLY (the hyperplane
+# weights are md5-deterministic, so they fold into literal arrays at
+# plan time — the stream side needs NO groupBy, hence no streaming
+# state), and foreachBatch probes the
 # WRITTEN bucket-bucketed lake vector index (q140's standing index) with
 # the exact-cosine verdict aggregation.
 #
@@ -1100,12 +1101,12 @@ def _staged_shard_vecs(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _row_local_bucket(dim: int):
-    """q53's sign-projection bucket as a pure per-row expression: the
-    +-1 hyperplane weights come from the rule's single home
+    """_lsh_buckets' sign-projection bucket as a pure per-row expression:
+    the +-1 hyperplane weights come from the rule's single home
     (similarity.lsh_plane_weights) embedded as literal arrays; per plane
     one zip_with/aggregate fold whose strict pos-0..dim-1 addition order
-    reproduces the q53 groupBy sum exactly (three-way agreement pinned
-    over the real corpus by tests/test_similarity_recall.py::
+    reproduces the _lsh_buckets groupBy sum exactly (three-way agreement
+    pinned over the real corpus by tests/test_similarity_recall.py::
     test_row_local_bucket_matches_q53)."""
     from tinymr_spark.operators.similarity import N_PLANES, lsh_plane_weights
 

@@ -7,8 +7,8 @@ pipelines, and compares the rows with the query's DuckDB oracle — the
 driver's correctness gate: row count, column names, and an
 order-insensitive value hash (floats rounded to 9 significant digits,
 timestamps to ISO micros).  tests/test_oracle_parity.py runs it per query
-at sf0.001; this CLI runs it over the registry plus the retired machinery
-queries and prints one line per query.
+at sf0.001; this CLI runs it over the registry and prints one line per
+query.
 
 Red flags (fail):
   CartesianProduct           — all-pairs blowup
@@ -71,8 +71,6 @@ ALLOW_BNLJ = {"q38_tfidf", "q50_ann_bruteforce", "q54_ann_ivf",
               "q112_hll_sketch_merge",
               # crossJoin(broadcast(1-row (n_docs, avgdl) BM25 stats))
               "q125_bm25_topk",
-              # crossJoin(broadcast(1-row max-Morton-code aggregate))
-              "q130_zorder_layout",
               # crossJoin(broadcast(1-row bloom-size parameter aggregate))
               "q134_bloom_semi_join",
               # crossJoin(broadcast(1-row (n_docs, avgdl))) via the shared
@@ -138,14 +136,6 @@ EXPECTED_DUPS: dict[str, dict[str, int]] = {
         "isnotnull(md5(cast(text#x as binary)))], Format: Parquet, "
         "Location: InMemoryFileIndex, PartitionFilters: [], PushedFilters: "
         "[IsNotNull(doc_id)], ReadSchema: struct<doc_id:bigint,text:string>": 2,
-    },
-    # lineitem is cross-joined with its own broadcast 1-row
-    # max(l_partkey), max(l_suppkey)
-    "q130_zorder_layout": {
-        "FileScan parquet [l_partkey#x,l_suppkey#x] Batched: true, "
-        "DataFilters: [], Format: Parquet, Location: InMemoryFileIndex, "
-        "PartitionFilters: [], PushedFilters: [], ReadSchema: "
-        "struct<l_partkey:bigint,l_suppkey:bigint>": 2,
     },
     # the sketch and the exact counts are the two designed passes over
     # the token stream (see q132)
@@ -349,22 +339,12 @@ def check_query(spark, con, sf_dir: str, name: str, fn, oracle: str) -> Check:
 
 
 def sweep_queries() -> dict:
-    """name -> (query fn, oracle SQL): the driver registry plus the
-    retired queries that stay in the package as machinery for their
-    survivors (q43 -> q47's banded simhash, q53 -> q55/q159's LSH
-    buckets, q105 -> q173's OPTIMIZE binpack, q130 -> q200/q203's
-    z-order); they are out of the driver gate and the bench line, never
-    out of this sweep."""
+    """name -> (query fn, oracle SQL): every `__spark_entry__.queries()`
+    entry with its `oracle_sql()` twin, nothing else."""
     import __spark_entry__ as entrymod
-    from tinymr_spark.operators import dedup, scale, similarity
 
     osql = entrymod.oracle_sql()
-    out = {name: (fn, osql[name]) for name, fn in entrymod.queries().items()}
-    out["q43_dedup_simhash"] = (dedup.q43_dedup_simhash, dedup.ORACLE_Q43)
-    out["q53_lsh_buckets"] = (similarity.q53_lsh_buckets, similarity.ORACLE_Q53)
-    out["q105_compact_small_files"] = (scale.q105_compact_small_files, scale.ORACLE_Q105)
-    out["q130_zorder_layout"] = (scale.q130_zorder_layout, scale.ORACLE_Q130)
-    return out
+    return {name: (fn, osql[name]) for name, fn in entrymod.queries().items()}
 
 
 def main() -> int:

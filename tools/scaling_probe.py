@@ -89,7 +89,6 @@ BATTERY = [
     "q125_bm25_topk",          # warm probe against the cached index
     "q126_shard_manifest",     # row-pure keys + one agg
     "q129_map_in_arrow",       # Arrow batch transform, per-doc linear
-    "q130_zorder_layout",      # per-row bit math + one agg
     "q131_histogram_quantiles", # per-event counters
     "q132_countmin_sketch",    # per-token counters
     "q133_snapshot_diff",      # row-hash full-outer join, per-doc linear
