@@ -55,15 +55,19 @@ def test_finish_group_sort_matrix():
         [((0, 1), "z"), ((0, 0), "a")], sort_with_value=False, reverse=False
     )
     assert vals == ["a", "z"]
-    # the combine path's per-partition partials: encounter order only
-    assert _finish_group(
-        [((0, 3), 30), ((0, 1), 10)], sort_with_value=False, reverse=False
-    ) == ((0, 1), [10, 30])
     # reverse flips each sorted branch
     _, vals = _finish_group(
         [((0, 0), 1, "a"), ((0, 1), 2, "b")], sort_with_value=False, reverse=True
     )
     assert vals == ["b", "a"]
+
+
+def test_finish_combine_restores_encounter_order():
+    # the combine path's per-partition partials are finished as an
+    # unsorted group: encounter order only
+    assert _finish_group(
+        [((0, 3), 30), ((0, 1), 10)], sort_with_value=False, reverse=False
+    ) == ((0, 1), [10, 30])
 
 
 def test_index_partition_tags_and_checks_arity():
