@@ -2958,7 +2958,12 @@ def test_minitable_timestamp_time_travel(spark, tmp_path, monkeypatch):
     assert minitable.version_at_timestamp(path, 150.0) == 0
     assert minitable.version_at_timestamp(path, 200.0) == 1
     assert minitable.version_at_timestamp(path, 1e18) == 2
-    got = {r["k"] for r in minitable.read_at_timestamp(spark, path, 250.0).collect()}
+    got = {
+        r["k"]
+        for r in minitable.read(
+            spark, path, minitable.version_at_timestamp(path, 250.0)
+        ).collect()
+    }
     assert got == {0, 1}
     with pytest.raises(ValueError, match="no commit at or before"):
         minitable.version_at_timestamp(path, 99.0)
@@ -2977,7 +2982,7 @@ def test_minitable_timestamp_time_travel(spark, tmp_path, monkeypatch):
 
 
 def test_minitable_vacuum_dry_run_and_convert_guards(spark, tmp_path):
-    """vacuum_dry_run lists exactly what vacuum would delete without
+    """vacuum(dry_run=True) lists exactly what vacuum would delete without
     touching a byte; convert_parquet_dir adopts a plain directory
     in-place and refuses non-empty targets / empty sources."""
     import os
@@ -2993,7 +2998,7 @@ def test_minitable_vacuum_dry_run_and_convert_guards(spark, tmp_path):
 
     minitable.write(spark, df([(0,)]), path, "overwrite")
     minitable.write(spark, df([(1,)]), path, "overwrite")  # supersedes v0
-    plan = minitable.vacuum_dry_run(path, retain_from_version=1)
+    plan = minitable.vacuum(path, retain_from_version=1, dry_run=True)
     assert len(plan) == 1
     assert os.path.exists(os.path.join(path, plan[0]))  # nothing deleted
     deleted = minitable.vacuum(path, retain_from_version=1)
@@ -5833,19 +5838,12 @@ def test_minitable_stream_admission_cdf_reconstruction_budget(spark, tmp_path):
     # forward, and a multi-file commit takes as many non-empty batches
     # as its planned files carrying rows — v0's two-file append MUST
     # split in two
-    import json as _json
-
     from tinymr_spark.sources.minitable_stream import MinitableStreamReader
 
     probe = MinitableStreamReader(
         {"path": table, "columns": "k,v", "mode": "cdf"}
     )
-    planned = {
-        v: probe._batch_files(
-            _json.load(open(minitable._version_file(table, v)))
-        )
-        for v in range(4)
-    }
+    planned = {v: len(probe._plan(v)) for v in range(4)}
     per_batch_versions = [
         {r[3] for r in rows} for _bid, rows in batches
     ]
@@ -7047,7 +7045,7 @@ def test_minitable_merge_update_where_stream_skips_noop(spark, tmp_path):
             {"path": path, "mode": mode, "maxfilespertrigger": "1",
              "columns": "k,v"}
         )
-        assert reader._batch_files(rec) == 0
+        assert reader._plan(head) == []
         parts = reader.partitions({"v": head - 1}, {"v": head})
         assert [p for p in parts if p.path is not None] == []
 
@@ -7590,7 +7588,7 @@ def test_minitable_detail_restore_ts_vacuum_hours(spark, tmp_path):
     # RESTORE TO TIMESTAMP: between v0 and v1 resolves to v0
     ts = [json.load(open(minitable._version_file(t, v)))["ts"] for v in range(3)]
     if ts[0] < ts[1]:
-        minitable.restore_at_timestamp(t, (ts[0] + ts[1]) / 2)
+        minitable.restore(t, minitable.version_at_timestamp(t, (ts[0] + ts[1]) / 2))
         assert minitable.read(spark, t).columns == ["k", "b", "v"]
         assert minitable.table_defaults(t) == {}
     # VACUUM RETAIN HOURS: a huge window deletes nothing and the table
@@ -7904,3 +7902,167 @@ def test_minitable_merge_materializes_source_once(spark, tmp_path):
         assert src2.storageLevel == StorageLevel.MEMORY_ONLY
     finally:
         src2.unpersist()
+
+
+def _cdc_rows(table, cols, **opts):
+    """Every row a reader streams over `table`, drained to the end."""
+    from tinymr_spark.sources.minitable_stream import MinitableStreamReader
+
+    reader = MinitableStreamReader({"path": table, "columns": cols, **opts})
+    _offs, batches = _drive_reader(reader)
+    return sorted(t for _s, _e, _p, rows in batches for t in rows)
+
+
+def test_minitable_change_feed_equals_stream_over_every_commit_kind(spark, tmp_path):
+    """Batch change_feed and a mode=cdf stream decode commits with the
+    one decoder, so over a history holding every commit kind — append,
+    OPTIMIZE, a no-op conditional merge, a CDF merge, a deletion-vector
+    delete, a predicate delete over a file that already has a vector, a
+    column rename, a materializing DV delete — they serve the same change
+    rows, unbudgeted and split one file per batch.  Each refusal rule
+    raises the same text from both faces."""
+    import json
+
+    import pytest
+
+    from tinymr_spark.sources import minitable
+
+    path = str(tmp_path / "t")
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(k, float(k)) for k in range(lo, hi)], "k bigint, v double"
+        )
+
+    minitable.write(  # v0
+        spark, rows(0, 40).repartitionByRange(2, "k"), path, "overwrite",
+        stats_cols=["k"],
+    )
+    minitable.write(spark, rows(40, 50).coalesce(1), path, stats_cols=["k"])  # v1
+    minitable.write(spark, rows(50, 60).coalesce(1), path, stats_cols=["k"])  # v2
+    assert minitable.optimize(spark, path, 1 << 30, 1 << 30) is not None  # v3
+    noop = minitable.merge(  # v4: every match fails update_where
+        spark, spark.createDataFrame([(1, -1.0)], "k bigint, v double"),
+        path, "k", update_where="s.v > t.v", stats_cols=["k"],
+    )
+    rec = json.load(open(minitable._version_file(path, noop)))
+    assert rec["added"] == [] and rec["removed"] == []
+    minitable.merge(  # v5: an update and an insert with change data
+        spark, spark.createDataFrame([(2, 99.0), (100, 1.0)], "k bigint, v double"),
+        path, "k", stats_cols=["k"], collect_cdf=True,
+    )
+    minitable.delete_dv(spark, path, [("k", "in", [30, 31])])  # v6
+    minitable.delete(  # v7: the file with v6's vector is rewritten
+        spark, path, [("k", ">=", 28), ("k", "<", 33)], stats_cols=["k"],
+    )
+    minitable.rename_column(path, "v", "vv")  # v8
+    res = minitable.delete_dv(  # v9: marks and materializes
+        spark, path, [("k", "in", [45, 46])], materialize_fraction=0.0001
+    )
+    assert res is not None and res[1]["materialized"] >= 1, res
+    minitable.write(  # v10
+        spark,
+        spark.createDataFrame([(60, 6.0)], "k bigint, vv double").coalesce(1),
+        path, stats_cols=["k"],
+    )
+    head = minitable.versions(path)[-1]
+    assert head == 10
+    kinds = [json.load(open(minitable._version_file(path, v))) for v in range(head + 1)]
+    assert [r["action"] for r in kinds] == [
+        "overwrite", "append", "append", "merge", "merge", "merge", "dv",
+        "merge", "meta", "dv", "append",
+    ]
+    assert kinds[3].get("data_change") is False
+    assert kinds[7]["predicate"] and not kinds[7].get("cdf")
+    assert set(kinds[9]["removed"]) & set(kinds[9]["dv"])  # materialized
+
+    feed = sorted(
+        tuple(r)
+        for r in minitable.change_feed(spark, path, 0, head)
+        .select("k", "vv", "_change_type", "_commit_version").collect()
+    )
+    deletes = {r[0] for r in feed if r[2] == "delete"}
+    assert deletes == {28, 29, 30, 31, 32, 45, 46}, deletes
+    assert [r[3] for r in feed if r[0] in (30, 31)] == [6, 6]  # not again at v7
+    assert _cdc_rows(path, "k,vv", mode="cdf", startingversion="1") == feed
+    assert _cdc_rows(
+        path, "k,vv", mode="cdf", startingversion="1", maxfilespertrigger="1"
+    ) == feed
+
+    def same_refusal(batch, cols, table, lo, **opts):
+        with pytest.raises(ValueError) as b:
+            batch()
+        with pytest.raises(ValueError) as s:
+            _cdc_rows(table, cols, startingversion=str(lo + 1), **opts)
+        assert str(b.value) == str(s.value)
+        return str(b.value)
+
+    # rule 1: an overwrite has no row-level feed
+    minitable.write(spark, minitable.read(spark, path), path, "overwrite")  # v11
+    text = same_refusal(
+        lambda: minitable.change_feed(spark, path, head, head + 1),
+        "k,vv", path, head, mode="cdf",
+    )
+    assert "overwrite" in text and "fresh checkpoint" in text
+    # rule 3: the append-only contract refuses any rewrite
+    text = same_refusal(
+        lambda: minitable.changes(spark, path, head, head + 1), "k,vv", path, head,
+    )
+    for pin in ("overwrite", "rewritten", "stream over rewritten files"):
+        assert pin in text, (pin, text)
+    # rule 2: a merge with neither a predicate nor change data
+    path2 = str(tmp_path / "t2")
+    minitable.write(spark, rows(0, 10).coalesce(1), path2, "overwrite", stats_cols=["k"])
+    minitable.merge(
+        spark, spark.createDataFrame([(1, 5.0)], "k bigint, v double"), path2, "k",
+    )
+    text = same_refusal(
+        lambda: minitable.change_feed(spark, path2, 0, 1), "k,v", path2, 0, mode="cdf",
+    )
+    for pin in ("neither", "neither a recorded predicate", "collect_cdf"):
+        assert pin in text, (pin, text)
+    text = same_refusal(lambda: minitable.changes(spark, path2, 0, 1), "k,v", path2, 0)
+    for pin in ("merge", "rewritten", "stream over rewritten files"):
+        assert pin in text, (pin, text)
+
+
+def test_minitable_stream_opens_each_record_once(spark, tmp_path, monkeypatch):
+    """An unbudgeted mode=cdf batch over (a, b] holding predicate-delete
+    and deletion-vector commits opens at most (b - a) + T_a `_log/`
+    records, T_a the tail after the newest checkpoint <= a: one fold
+    start, then each record once — no per-delete replay, no replay for
+    the column mapping, types or defaults.  Counted the way the
+    benchmark's log_opens counts, by patching the module-global
+    `open`."""
+    import os
+
+    from tinymr_spark.sources import minitable
+
+    path = str(tmp_path / "t")
+    for i in range(12):  # v0..v11, auto-checkpoint at v10
+        minitable.write(
+            spark,
+            spark.range(i * 10, i * 10 + 10)
+            .select(F.col("id").alias("k"), (F.col("id") * 0.5).alias("v"))
+            .coalesce(1),
+            path, "append" if i else "overwrite", stats_cols=["k"],
+        )
+    assert minitable.checkpoint_versions(path) == [10]
+    minitable.delete(spark, path, [("k", ">=", 15), ("k", "<", 18)])  # v12
+    minitable.delete_dv(spark, path, [("k", "=", 33)])  # v13
+    minitable.delete(spark, path, [("k", "=", 34)])  # v14: over v13's vector
+    a, b = 11, 14
+    t_a = a - max(c for c in minitable.checkpoint_versions(path) if c <= a)
+    opened = []
+    real_open = open
+
+    def counting_open(file, *args, **kw):
+        if f"{os.sep}_log{os.sep}" in os.fspath(file):
+            opened.append(file)
+        return real_open(file, *args, **kw)
+
+    monkeypatch.setattr(minitable, "open", counting_open, raising=False)
+    got = _cdc_rows(path, "k,v", mode="cdf", startingversion=str(a + 1))
+    assert len(opened) <= (b - a) + t_a, opened
+    assert sorted(r[0] for r in got) == [15, 16, 17, 33, 34]
+    assert {r[2] for r in got} == {"delete"}

@@ -75,6 +75,14 @@ def _checkpoint_parquet(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"ckpt-v{version}.parquet")
 
 
+def _record(path: str, version: int) -> dict:
+    """One commit record, opened through the module-level `open` — the
+    one name log-open instrumentation patches, so every reader of the
+    log (replay, feeds, the stream source) is counted."""
+    with open(_version_file(path, version)) as f:
+        return json.load(f)
+
+
 # Every AUTO_CHECKPOINT_INTERVAL-th commit folds the _replay state into a
 # parquet checkpoint (Delta's every-10-commits checkpoint): without one,
 # _replay folds EVERY version record on EVERY read — O(commits) driver
@@ -193,10 +201,8 @@ def _effective_commit_ts(path: str, v: int) -> float:
     the record file's mtime (legacy records) — THE timestamp rule,
     shared by batch AS-OF resolution and the stream source's
     startingTimestamp so the two can never drift apart."""
-    f = _version_file(path, v)
-    with open(f) as fh:
-        eff = json.load(fh).get("ts")
-    return float(eff) if eff is not None else os.path.getmtime(f)
+    eff = _record(path, v).get("ts")
+    return float(eff) if eff is not None else os.path.getmtime(_version_file(path, v))
 
 
 def version_at_or_after_timestamp(
@@ -240,11 +246,6 @@ def version_at_timestamp(path: str, ts: float) -> int:
     return best
 
 
-def read_at_timestamp(spark: SparkSession, path: str, ts: float) -> DataFrame:
-    """AS-OF-TIMESTAMP read: `read` at `version_at_timestamp(ts)`."""
-    return read(spark, path, version_at_timestamp(path, ts))
-
-
 def history(spark: SparkSession, path: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per committed version — action, commit
     timestamp, data_change flag, added/removed file counts, whether the
@@ -256,8 +257,7 @@ def history(spark: SparkSession, path: str) -> DataFrame:
     DESCRIBE HISTORY surface."""
     rows = []
     for v in versions(path):
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
+        rec = _record(path, v)
         rows.append(
             (
                 v,
@@ -404,15 +404,6 @@ def convert_parquet_dir(
     return commit(path, "overwrite", files, stats=stats, schema=schema)
 
 
-def vacuum_dry_run(path: str, retain_from_version: int,
-                   orphan_grace_seconds: float = 3600.0) -> list[str]:
-    """What vacuum() WOULD delete, without deleting — the safety check
-    before the one destructive verb (Delta's VACUUM DRY RUN)."""
-    return vacuum(
-        path, retain_from_version, orphan_grace_seconds, dry_run=True
-    )
-
-
 class _State(NamedTuple):
     """One table snapshot: everything a reader or DML verb needs from
     the log AS OF one version — see _replay for the meaning of each
@@ -436,10 +427,10 @@ class _State(NamedTuple):
 
 def _apply(state: _State, rec: dict) -> _State:
     """Fold ONE version record into `state` — the single log step
-    `_replay`, change_feed and vacuum share.  Pure: `state` is never
-    mutated, so a caller may keep the previous state (change_feed reads
-    its DVs) while advancing.  Live files: `append` unions its files
-    in, `overwrite` replaces the set (and its DV map — a restore
+    `_replay`, the change readers and vacuum share.  Pure: `state` is
+    never mutated, so a caller may keep the previous state (the change
+    decoder reads its DVs) while advancing.  Live files: `append` unions
+    its files in, `overwrite` replaces the set (and its DV map — a restore
     carries the target's vectors through its record), `merge` and `dv`
     swap `removed` out for `added` and retire the removed files'
     vectors; a newer vector for a file REPLACES the older (it carries
@@ -557,8 +548,7 @@ def _replay(path: str, version: int | None = None) -> _State:
     for v in vs:
         if start <= v <= version:
             _replay_opens += 1
-            with open(_version_file(path, v)) as f:
-                state = _apply(state, json.load(f))
+            state = _apply(state, _record(path, v))
     return state
 
 
@@ -1610,9 +1600,7 @@ def last_txn_version(path: str, app_id: str) -> int | None:
     # which would otherwise make a long-lived stream O(batches^2) in
     # driver JSON reads.
     for v in reversed(versions(path)):
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
-        t = rec.get("txn")
+        t = _record(path, v).get("txn")
         if t and t.get("app") == app_id:
             return t["version"]
     return None
@@ -2840,8 +2828,7 @@ def _commit_serializable(
             # concurrent touch of any of them invalidates our plan
             ours = set(removed) | set(dv or {})
             for v in range(read_version + 1, head + 1):
-                with open(_version_file(path, v)) as f:
-                    rec = json.load(f)
+                rec = _record(path, v)
                 if rec["action"] == "overwrite":
                     raise CommitConflict(
                         f"version {v} of {path} is an overwrite — the snapshot "
@@ -4789,6 +4776,140 @@ def zorder(
     }
 
 
+class FileChange(NamedTuple):
+    """One file's share of one commit's row changes: the unit
+    `_commit_changes` decodes and every change reader translates
+    (change_feed into DataFrame reads, changes() into one insert scan,
+    the stream source into one executor partition each).
+
+    * `file` — the table-relative data or change-data file; None marks a
+      REFUSAL, whose `refusal` message the reader raises;
+    * `kind` — `insert` (every row of the file), `delete` (the rows the
+      commit removed from it, narrowed by the fields below) or `cdf` (a
+      staged change-data file whose rows carry their own
+      `_change_type`);
+    * `prev_dv` — the file's deletion vector BEFORE the commit: rows it
+      holds were deleted earlier and are never deleted again;
+    * `new_dv` — a DV delete's vector for the file: only the rows it
+      marks are deleted (the DV diff against `prev_dv`);
+    * `predicate` — a predicate delete's recorded conjunction (PHYSICAL
+      column names, rename-proof): only matching rows were deleted;
+    * `defaults` — a predicate delete's {physical column: existence
+      default} of its era, the constants its own filter served on files
+      that predate a column."""
+
+    file: str | None
+    kind: str
+    prev_dv: str | None = None
+    new_dv: str | None = None
+    predicate: list | None = None
+    defaults: dict | None = None
+    refusal: str | None = None
+
+
+def _commit_changes(
+    prev: _State, v: int, rec: dict, row_level: bool
+) -> list[FileChange]:
+    """THE change decoder: the files whose rows commit `v` (record
+    `rec`, folded onto `prev` — the state AS OF v-1) inserted or
+    deleted, in a deterministic order that a stream's partial offset
+    counts into.  Pure.  `row_level=False` is the APPEND-ONLY contract
+    (changes(), an append-mode stream), True the ROW-LEVEL one
+    (change_feed, a mode=cdf stream).
+
+    * reorganizations and metadata commits (`data_change: false`) and a
+      merge that swapped no files changed no rows: no changes;
+    * an `append`: its added files are inserts;
+    * row-level only — a `dv` delete: each whole-dropped file (in
+      `removed` order), then each file with a new vector (sorted; a
+      MATERIALIZED file sits in both lists and its deletes are the DV
+      diff); a merge with change data: its `cdf` files (they win over a
+      recorded predicate); a predicate delete: each removed file under
+      the predicate.
+
+    Everything else is REFUSED, never answered with a wrong feed — one
+    FileChange without a file that carries the rule's message:
+
+    1. an overwrite, under the row-level contract: no row-level feed
+       exists across it;
+    2. a merge with neither a recorded predicate nor change data, under
+       the row-level contract;
+    3. any rewrite under the append-only contract: its added files
+       carry pre-existing rows."""
+    action = rec["action"]
+    if rec.get("data_change") is False:
+        return []
+    if action == "append":
+        return [FileChange(f, "insert") for f in rec["added"]]
+    if action == "merge" and not (
+        rec.get("added") or rec.get("removed") or rec.get("cdf")
+    ):
+        return []  # e.g. every match failed update_where
+    if not row_level:
+        msg = (
+            f"minitable version {v} is a {action} commit — an append-only "
+            "feed (changes(), or an append-mode stream over rewritten "
+            "files) would replay pre-existing rows; read it with "
+            "change_feed() or a mode=cdf stream, or restart the stream "
+            "from a fresh checkpoint"
+        )
+    elif action == "overwrite":
+        msg = (
+            f"minitable version {v} is an overwrite — no row-level change "
+            "feed exists across it; use a snapshot diff, or restart the "
+            "CDC stream from a fresh checkpoint (the new subscription "
+            "snapshots the current table)"
+        )
+    elif action == "dv":
+        dv_map = rec.get("dv") or {}
+        whole = [f for f in rec.get("removed", ()) if f not in dv_map]
+        return [FileChange(f, "delete", prev.dvs.get(f)) for f in whole] + [
+            FileChange(f, "delete", prev.dvs.get(f), dv_map[f])
+            for f in sorted(dv_map)
+        ]
+    elif rec.get("cdf") is not None:
+        return [FileChange(f, "cdf") for f in rec["cdf"]]
+    elif rec.get("predicate") is not None:
+        defaults = {
+            prev.colmap.get(c, c): d for c, d in _default_map(prev.schema).items()
+        }
+        return [
+            FileChange(
+                f, "delete", prev.dvs.get(f),
+                predicate=rec["predicate"], defaults=defaults,
+            )
+            for f in rec.get("removed", ())
+        ]
+    else:
+        msg = (
+            f"minitable version {v} is a {action} with neither a recorded "
+            "predicate nor change data — no row-level change feed exists "
+            "for it; run the writer with collect_cdf=True "
+            "(merge/update/replace_where), or use a snapshot diff"
+        )
+    return [FileChange(None, "refused", refusal=msg)]
+
+
+def _feed_steps(
+    path: str, lo: int, hi: int, vs: list[int], row_level: bool
+) -> tuple[list[tuple[int, list[FileChange]]], _State]:
+    """Decode the commits in (lo, hi] in one forward fold from the
+    state AS OF lo (T_lo + (hi - lo) record opens): each commit's
+    changes plus the state AS OF hi.  Raises the first refusal."""
+    state = _replay(path, lo) if lo >= 0 else _State.empty()
+    steps = []
+    for v in vs:
+        if lo < v <= hi:
+            rec = _record(path, v)
+            found = _commit_changes(state, v, rec, row_level)
+            for c in found:
+                if c.file is None:
+                    raise ValueError(c.refusal)
+            steps.append((v, found))
+            state = _apply(state, rec)
+    return steps, state
+
+
 def change_feed(
     spark: SparkSession,
     path: str,
@@ -4798,27 +4919,19 @@ def change_feed(
     from_timestamp: float | None = None,
     to_timestamp: float | None = None,
 ) -> DataFrame:
-    """CHANGE DATA FEED with removes: the row-level changes committed in
-    versions (from_version, to_version], typed as the table's columns
-    plus `_change_type` (insert / delete / update_preimage /
-    update_postimage) and `_commit_version` — Delta's CDF contract,
-    extended past `changes()`'s append-only restriction:
+    """ROW-LEVEL CHANGE DATA FEED: the rows committed in versions
+    (from_version, to_version], typed as the table's columns plus
+    `_change_type` (insert / delete / update_preimage /
+    update_postimage) and `_commit_version` — Delta's CDF contract.
 
-    * `append` commits: the added files ARE the inserts — a plain scan
-      of exactly those files, O(delta);
-    * DELETE commits (merge records carrying the `predicate` the delete
-      ran with): deleted rows are RECONSTRUCTED by reading the commit's
-      REMOVED files filtered to the predicate — O(touched files), no
-      change data was ever written (rewritten survivors are not
-      changes);
-    * upsert MERGE commits that opted into `collect_cdf=True`: their
-      staged change-data files carry explicit `_change_type` rows
-      (update pre/post images, deletes, inserts);
-    * reorganizations (`data_change: false`, e.g. OPTIMIZE) changed
-      nothing and emit nothing;
-    * an `overwrite` in range, or a merge with neither predicate nor
-      change data, raises LOUDLY rather than returning a wrong feed
-      (use a snapshot diff instead).
+    Each commit is decoded by `_commit_changes` under the row-level
+    contract, and each (commit, kind) becomes one DataFrame read:
+    inserts scan the appended files (O(delta)); deletes re-read the
+    removed files minus rows an earlier deletion vector held, narrowed
+    to the recorded predicate or to the rows a new vector marks (no
+    change data was ever written for them); change-data files carry
+    their own `_change_type` rows.  The decoder's refusals (an overwrite
+    in range, a merge with neither predicate nor change data) raise.
 
     Reading a delete's removed files requires them un-vacuumed —
     vacuum's retention bound is also the feed's horizon (Delta's CDF
@@ -4865,88 +4978,89 @@ def change_feed(
         to_version = version_at_timestamp(path, to_timestamp)
     if to_version <= from_version:
         raise ValueError("change_feed() needs from_version < to_version")
-    # ONE forward fold over (from, to]: each record is opened once, its
-    # predecessor state's DVs kept for the delete reconstruction below,
-    # and the walk ends at the to_version state whose schema / colmap
-    # type every piece
-    state = _replay(path, from_version) if from_version >= 0 else _State.empty()
-    steps: list[tuple[int, dict, dict[str, str]]] = []
-    for v in vs:
-        if from_version < v <= to_version:
-            with open(_version_file(path, v)) as f:
-                rec = json.load(f)
-            steps.append((v, rec, state.dvs))
-            state = _apply(state, rec)
+    steps, state = _feed_steps(path, from_version, to_version, vs, row_level=True)
+    # every piece is typed by the to_version schema / colmap.  Data and
+    # change files carry PHYSICAL names and predicates are recorded
+    # physical, so deletes filter the physical view, then alias
     schema, colmap = state.schema, state.colmap
-    # logical view helpers: data/cdf files carry PHYSICAL names; delete
-    # predicates are recorded physical (rename-proof), so reconstruction
-    # filters the physical view and aliases to logical afterwards
     phys_schema = (
         _physical_schema(schema, colmap) if (schema and colmap) else schema
     )
 
-    def _to_logical(df: DataFrame, extra: list[str] = []) -> DataFrame:
+    def _to_logical(df: DataFrame) -> DataFrame:
         if not (schema and colmap):
             return df
         return df.select(
             *[
                 F.col(colmap.get(f["name"], f["name"])).alias(f["name"])
                 for f in schema["fields"]
-            ],
-            *extra,
+            ]
         )
 
+    def _tagged(df: DataFrame, v: int, change_type: str | None) -> DataFrame:
+        if change_type is not None:
+            df = df.withColumn("_change_type", F.lit(change_type))
+        return df.withColumn("_commit_version", F.lit(v).cast("int"))
+
+    def _abs(rels) -> list[str]:
+        return [os.path.join(path, r) for r in rels]
+
     pieces: list[DataFrame] = []
-    for v, rec, prev_dvs in steps:
-        if rec.get("data_change") is False:
-            continue  # compaction/clustering: rows unchanged
-        if rec["action"] == "append":
-            if rec["added"]:
-                pieces.append(
-                    _read_files(
-                        spark,
-                        [os.path.join(path, f) for f in rec["added"]],
-                        schema,
-                        colmap,
+    for v, found in steps:
+        inserts = [c.file for c in found if c.kind == "insert"]
+        cdf = [c.file for c in found if c.kind == "cdf"]
+        gone = [c for c in found if c.kind == "delete" and c.new_dv is None]
+        marked = [c for c in found if c.new_dv is not None]
+        if inserts:
+            pieces.append(
+                _tagged(_read_files(spark, _abs(inserts), schema, colmap), v, "insert")
+            )
+        if cdf:
+            # typed by the log schema + _change_type: an evolved column
+            # absent from an older commit's change files resolves as
+            # NULL (and mapped tables resolve their physical names)
+            # instead of failing analysis
+            if schema is not None:
+                change_field = {
+                    "name": "_change_type", "type": "string",
+                    "nullable": True, "metadata": {},
+                }
+                cdf_schema = {**schema, "fields": [*schema["fields"], change_field]}
+                cdf_df = _read_files(spark, _abs(cdf), cdf_schema, colmap)
+            else:
+                cdf_df = spark.read.parquet(*_abs(cdf))
+            pieces.append(_tagged(cdf_df, v, None))
+        if gone:
+            # whole-file and predicate deletes: the removed files' rows
+            # the previous vectors still served, under the predicate
+            df = _read_files_dv(
+                spark, path, [c.file for c in gone], phys_schema,
+                {c.file: c.prev_dv for c in gone if c.prev_dv},
+            )
+            if gone[0].predicate is not None:
+                df = df.where(
+                    F.coalesce(_where_cond(gone[0].predicate), F.lit(False))
+                )
+            pieces.append(_tagged(_to_logical(df), v, "delete"))
+        if marked:
+            # the DV DIFF: rows the new vectors mark beyond the previous
+            # ones, re-read from the base files by row position —
+            # O(touched files + marked rows)
+            basenames = [c.file.rsplit("/", 1)[-1] for c in marked]
+            new_rows = spark.read.parquet(
+                *_abs(sorted({c.new_dv for c in marked}))
+            ).where(F.col("fname").isin(basenames))
+            old_dvs = sorted({c.prev_dv for c in marked if c.prev_dv})
+            if old_dvs:
+                new_rows = new_rows.exceptAll(
+                    spark.read.parquet(*_abs(old_dvs)).where(
+                        F.col("fname").isin(basenames)
                     )
-                    .withColumn("_change_type", F.lit("insert"))
-                    .withColumn("_commit_version", F.lit(v).cast("int"))
                 )
-        elif rec["action"] == "dv":
-            # a deletion-vector DELETE: whole-dropped files' live rows
-            # plus the DV DIFF (rows this commit marked, excluding rows
-            # an earlier vector already deleted) applied to base files —
-            # O(touched files + marked rows), nothing was ever written
-            # beyond the sidecar
-            dv_map = rec.get("dv") or {}
-            # a file both removed AND mapped was MATERIALIZED (rewritten
-            # minus its vector): its deletes are the DV diff below, not
-            # an all-rows piece
-            whole = [r for r in rec.get("removed", ()) if r not in dv_map]
-            if whole:
-                pieces.append(
-                    _read_files_dv(spark, path, whole, schema, prev_dvs, colmap=colmap)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .withColumn("_commit_version", F.lit(v).cast("int"))
-                )
-            if dv_map:
-                rels = sorted(dv_map)
-                basenames = [r.rsplit("/", 1)[-1] for r in rels]
-                new_rows = spark.read.parquet(
-                    *[os.path.join(path, d) for d in sorted(set(dv_map.values()))]
-                ).where(F.col("fname").isin(basenames))
-                old_files = sorted({prev_dvs[r] for r in rels if r in prev_dvs})
-                if old_files:
-                    old_rows = spark.read.parquet(
-                        *[os.path.join(path, d) for d in old_files]
-                    ).where(F.col("fname").isin(basenames))
-                    new_rows = new_rows.exceptAll(old_rows)
-                base = _read_files(
-                    spark, [os.path.join(path, r) for r in rels], schema, colmap
-                )
-                fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-                out_cols = base.columns
-                pieces.append(
+            base = _read_files(spark, _abs(c.file for c in marked), schema, colmap)
+            fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+            pieces.append(
+                _tagged(
                     base.withColumn("__fname", fname)
                     .withColumn("__ri", F.col("_metadata.row_index"))
                     .join(
@@ -4959,75 +5073,10 @@ def change_feed(
                         ["__fname", "__ri"],
                         "left_semi",
                     )
-                    .select(*out_cols)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .withColumn("_commit_version", F.lit(v).cast("int"))
+                    .select(*base.columns),
+                    v,
+                    "delete",
                 )
-        elif rec["action"] == "merge":
-            if rec.get("cdf") is not None:
-                if rec["cdf"]:
-                    # typed by the log schema + _change_type: an evolved
-                    # column absent from an older commit's change files
-                    # resolves as NULL (and mapped tables resolve their
-                    # physical names) instead of failing analysis
-                    if schema is not None:
-                        cdf_schema = dict(schema)
-                        cdf_schema["fields"] = list(schema["fields"]) + [
-                            {
-                                "name": "_change_type",
-                                "type": "string",
-                                "nullable": True,
-                                "metadata": {},
-                            }
-                        ]
-                        cdf_df = _read_files(
-                            spark,
-                            [os.path.join(path, f) for f in rec["cdf"]],
-                            cdf_schema,
-                            colmap,
-                        )
-                    else:
-                        cdf_df = spark.read.parquet(
-                            *[os.path.join(path, f) for f in rec["cdf"]]
-                        )
-                    pieces.append(
-                        cdf_df.withColumn(
-                            "_commit_version", F.lit(v).cast("int")
-                        )
-                    )
-            elif rec.get("predicate") is not None:
-                removed = rec.get("removed", [])
-                if removed:
-                    # rows an EARLIER deletion vector already removed are
-                    # not deleted again by this commit — apply v-1's DVs.
-                    # The predicate is recorded PHYSICAL (stable across
-                    # renames): filter the physical view, then alias.
-                    df = _read_files_dv(spark, path, removed, phys_schema, prev_dvs)
-                    pieces.append(
-                        _to_logical(
-                            df.where(
-                                F.coalesce(
-                                    _where_cond(rec["predicate"]), F.lit(False)
-                                )
-                            )
-                        )
-                        .withColumn("_change_type", F.lit("delete"))
-                        .withColumn("_commit_version", F.lit(v).cast("int"))
-                    )
-            elif rec.get("added") or rec.get("removed"):
-                raise ValueError(
-                    f"version {v} is a merge with neither a recorded predicate "
-                    "nor change data — no row-level feed exists for it; "
-                    "use a snapshot diff instead"
-                )
-            # else: a NO-OP merge (e.g. every match failed update_where
-            # and nothing inserted) — zero files swapped is PROOF of
-            # zero row changes; contribute nothing instead of refusing
-        else:
-            raise ValueError(
-                f"version {v} is an overwrite — the ({from_version}, "
-                f"{to_version}] range has no row-level change feed; "
-                "use a snapshot diff instead"
             )
     if not pieces:
         return (
@@ -5045,42 +5094,21 @@ def change_feed(
 def changes(
     spark: SparkSession, path: str, from_version: int, to_version: int
 ) -> DataFrame:
-    """CHANGE DATA FEED: the rows added in versions (from_version,
-    to_version] — for append commits the added files ARE the delta, so
-    the feed is a plain parquet scan of exactly those files (no diffing
-    join, no full-table read; the q133 row-hash diff is the fallback
-    when history spans a rewrite).  An intervening `overwrite` or
-    `merge` breaks the append-only delta semantics (their added files
-    carry pre-existing rows) and raises LOUDLY rather than returning a
-    wrong feed — Delta's own CDF restriction for rewrites."""
+    """APPEND-ONLY CHANGE FEED: the rows inserted in versions
+    (from_version, to_version] — the inserts `_commit_changes` decodes
+    under the append-only contract, read as one plain parquet scan of
+    exactly the appended files (no diffing join, no full-table read).
+    A rewrite in range raises the decoder's append-only refusal;
+    change_feed() serves the row-level feed across deletes and
+    merges."""
     vs = versions(path)
     for bound in (from_version, to_version):
         if bound not in vs:
             raise ValueError(f"minitable {path} has no version {bound} (log: {vs})")
     if to_version <= from_version:
         raise ValueError("changes() needs from_version < to_version")
-    added: list[str] = []
-    for v in vs:
-        if v <= from_version or v > to_version:
-            continue
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
-        if rec.get("data_change") is False:
-            continue  # OPTIMIZE etc.: rows provably unchanged, no delta
-        if rec["action"] != "append":
-            if (
-                rec["action"] == "merge"
-                and not rec.get("added")
-                and not rec.get("removed")
-            ):
-                continue  # no-op merge: zero files swapped = zero rows changed
-            raise ValueError(
-                f"version {v} is a {rec['action']} — the ({from_version}, "
-                f"{to_version}] range has no append-only change feed; "
-                "use a snapshot diff instead"
-            )
-        added.extend(rec["added"])
-    state = _replay(path, to_version)
+    steps, state = _feed_steps(path, from_version, to_version, vs, row_level=False)
+    added = [c.file for _v, found in steps for c in found]
     entries, schema, colmap = state.entries, state.schema, state.colmap
     if not added:
         # A quiet period (empty append commits) is a legitimate EMPTY
@@ -5153,15 +5181,6 @@ def restore(path: str, to_version: int) -> int:
         # writes continue from the era's marks ({} = explicit reset)
         identity_hwm=state.identity_hwm,
     )
-
-
-def restore_at_timestamp(path: str, ts: float) -> int:
-    """RESTORE TABLE ... TO TIMESTAMP (Delta's timestamp twin of
-    restore): resolves to the newest commit at or before `ts` via the
-    shared effective-commit-time rule (version_at_timestamp — exactly
-    how TIMESTAMP AS OF reads resolve), then runs the version restore.
-    Returns the new version number."""
-    return restore(path, version_at_timestamp(path, ts))
 
 
 def clone(src: str, dst: str, version: int | None = None) -> int:
@@ -5272,8 +5291,7 @@ def vacuum(
     ever_referenced: set[str] = set()
     state = _replay(path, retain_from_version)
     for v in vs:
-        with open(_version_file(path, v)) as f:
-            rec = json.load(f)
+        rec = _record(path, v)
         if v > retain_from_version:
             state = _apply(state, rec)  # one forward fold over the window
         if v >= retain_from_version:

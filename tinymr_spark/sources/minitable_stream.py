@@ -1,73 +1,50 @@
-"""Streaming SOURCE over a minitable's append commits — the "table as a
+"""Streaming SOURCE over a minitable's commit log — the "table as a
 stream" face of the lakehouse primitive (Delta's streaming source
 semantics), the read-side complement of q163's streaming ingest sink.
 
-Offsets are FILE-GRANULAR LOG POSITIONS: `latestOffset` answers the
-log head (a driver-side directory listing, O(commits)), and a
-micro-batch (start, end] is DEFINED as the files added by the append
-commits in that position range — exactly the change-feed contract of
-`minitable.changes()`, so a batch never re-reads table history and an
-overwrite/merge in range raises loudly instead of streaming rewritten
-rows as if they were new.  `{"v": N}` means commit N is fully
-consumed; under admission control an offset may also be
-`{"v": N, "f": K}` — commits before N fully consumed plus the first K
-files of commit N's deterministic planned-file list (Delta's
-file-granular offsets), so a single oversized commit splits across
-micro-batches instead of forcing one unbounded batch.  The INITIAL
-batch is special-cased: start offset -1 plans the table's full
-SNAPSHOT at the batch's end version (Delta's startingVersion
-semantics) — so a table initialized by an overwrite, or one whose
-history holds pre-subscription rewrites, streams its current rows once
-and then goes purely incremental: each new append commit streams
-exactly once, by construction of the offset algebra.  A budgeted
-snapshot splits too, pinned at one version:
+WHAT A BATCH HOLDS.  A micro-batch (start, end] streams the changes
+`minitable._commit_changes` decodes for the commits in that range —
+the one decoder batch `change_feed()` and `changes()` read too, so a
+stream and a batch feed cannot disagree on which rows a commit inserted
+or deleted, nor on which commits they refuse.  The default APPEND mode
+streams the append-only contract: appended rows, plain.
+`option("mode", "cdf")` (Delta's streaming readChangeFeed) streams the
+row-level contract with `_change_type` and `_commit_version` columns:
+appends as inserts, staged change-data files verbatim, and predicate /
+DV deletes RECONSTRUCTED executor-side — the removed file re-read under
+the recorded predicate, or by row position under the new vector, minus
+rows an earlier vector held.  Reorganizations and no-op merges stream
+nothing.  A commit the decoder refuses fails its batch with the
+decoder's message (append mode: any rewrite; CDC mode: an overwrite,
+or a merge with neither a predicate nor change data), so a pipeline is
+never silently wrong.
+
+OFFSETS are file-granular log positions.  `{"v": N}` means commit N is
+fully consumed; under admission control `{"v": N, "f": K}` also
+consumes the first K planned changes of commit N (Delta's file-granular
+offsets; a refusal is one slot), so an oversized commit splits across
+micro-batches.  The INITIAL batch (start offset -1) is the table's
+SNAPSHOT at the batch's end version (Delta's startingVersion semantics;
+inserts in CDC mode): a table initialized by an overwrite, or holding
+pre-subscription rewrites, streams its current rows once and then goes
+incremental.  A budgeted snapshot splits too, pinned at one version:
 `{"v": -1, "snap": H, "f": K}` is the snapshot-at-H with its first K
 files consumed (completion normalizes to `{"v": H}`).  Every planned
 range is a pure function of the immutable log, so checkpoint replay
-purity holds across all shapes.  Only a rewrite LANDING MID-STREAM
-(inside an incremental range) raises.
+purity holds across all shapes.
 
-Scale split (the q136 rework's lesson, pydatasource.py:144): the driver
-does OFFSET BOOKKEEPING ONLY; `partitions()` maps the version range to
-one InputPartition per committed file, and executors read their file
-directly with pyarrow — no table byte ever passes through the driver.
-Restart recovery needs no reader state at all: partitions/read are pure
-functions of the committed (start, end] offsets and the immutable log,
-so any replayed range re-plans to the identical rows
-(tests/test_sources_sinks.py pins replay purity and
-restart-streams-only-the-delta).
+SCALE SPLIT (the q136 rework's lesson, pydatasource.py:144): the driver
+keeps offsets and one forward `_apply` fold over the log — started from
+one `_replay`, then each record opened once per reader — and maps a
+range to one InputPartition per planned file.  Executors read their file
+directly with pyarrow, row selection vectorized with pyarrow.compute:
+no joins and no table byte through the driver.  Restart recovery needs
+no reader state: partitions/read are pure functions of the committed
+offsets and the immutable log (tests/test_sources_sinks.py pins replay
+purity and restart-streams-only-the-delta).
 
-CDC MODE (`option("mode", "cdf")` — Delta's streaming readChangeFeed):
-rows gain `_change_type` and `_commit_version`.  The initial batch is
-the snapshot as inserts (startingVersion semantics); each later append
-streams as inserts, and a merge/replace_where commit that staged
-EXPLICIT change-data files streams those files directly — they are
-plain parquet carrying `_change_type`, so the executor-per-file scale
-split holds with no joins anywhere.
-
-Commits that wrote NO change data are RECONSTRUCTED executor-side, the
-streaming twin of batch `change_feed()`'s driver plan (minitable.py
-change_feed) — the full DML history streams, matching Delta's streaming
-readChangeFeed over arbitrary DML:
-
-* a PREDICATE DELETE (merge commit recording the conjunction it ran
-  with): each removed file becomes one partition; the executor re-scans
-  it filtered to the recorded predicate — vectorized pyarrow.compute
-  masks with SQL three-valued semantics, the exact rows the delete
-  removed — minus rows an earlier deletion vector had already deleted;
-* a DV DELETE (`dv` commit): whole-dropped files stream their live rows
-  as deletes, and per-file DV DIFFS (rows this commit marked, excluding
-  rows the previous vector already held) re-read the base file by row
-  position — O(marked rows), sidecars read executor-side.
-
-Reconstruction stays one-partition-per-file with no joins and no table
-byte through the driver; the only remaining refusals are an OVERWRITE
-in range (no row-level feed exists — same as batch) and a
-merge/update that wrote neither predicate nor change data (run the
-writer with collect_cdf=True) — a CDC pipeline is never silently wrong.
-
-The reference has no streams and no I/O (/root/reference/tinymr.py);
-this is SURVEY §2.3/§2.4 beyond-reference surface.
+The reference has no streams and no I/O; this is SURVEY §2.3/§2.4
+beyond-reference surface.
 """
 
 from __future__ import annotations
@@ -96,7 +73,7 @@ _ARROW_DDL = {
 }
 
 
-def _table_col_types(path: str, cols: list[str]) -> list[str]:
+def _table_col_types(path: str, cols: list[str], log_schema: dict | None) -> list[str]:
     """Planning-time column types (DDL strings, one per requested
     column): from the LOG's schema record when one exists (the
     authoritative evolution timeline — an evolved column is typed
@@ -107,7 +84,6 @@ def _table_col_types(path: str, cols: list[str]) -> list[str]:
     reader semantics."""
     from tinymr_spark.sources import minitable
 
-    log_schema = minitable.table_schema(path)
     if log_schema is not None:
         types = {f["name"]: f["type"] for f in log_schema["fields"]}
         out = []
@@ -143,9 +119,10 @@ def _table_col_types(path: str, cols: list[str]) -> list[str]:
 
 
 def _table_ddl(path: str, cols: list[str]) -> str:
-    return ", ".join(
-        f"{c} {t}" for c, t in zip(cols, _table_col_types(path, cols))
-    )
+    from tinymr_spark.sources import minitable
+
+    types = _table_col_types(path, cols, minitable.table_schema(path))
+    return ", ".join(f"{c} {t}" for c, t in zip(cols, types))
 
 
 def _pa_type(ddl: str):
@@ -256,46 +233,41 @@ def _off_key(off: dict) -> tuple[int, int, int]:
 
 
 class _FilePartition(InputPartition):
-    """One committed parquet file of the micro-batch's version range;
-    pickled to an executor, which reads it directly.  `dv_path` is the
-    file's live DELETION-VECTOR sidecar (initial snapshot batches only):
-    the executor anti-filters its rows by (file, row_index) so a table
-    that took `delete_dv` deletes before the stream started never
-    streams logically-deleted rows (ADVICE r8 — the snapshot path must
-    match `minitable.read`'s DV semantics, not silently emit raw
-    files)."""
+    """One planned file of a micro-batch, pickled to an executor that
+    reads it directly: a snapshot file, or one `minitable.FileChange`
+    (its fields mean what `_commit_changes` says).  `path` None is the
+    no-op partition of an empty range."""
 
     def __init__(
         self,
         path: str | None,
         cols: list[str],
         dv_path: str | None = None,
-        phys: list[str] | None = None,
+        new_dv: str | None = None,
+        predicate: list | None = None,
+        pred_defaults: dict | None = None,
         commit_version: int | None = None,
         change_type: str | None = None,
-        predicate: list | None = None,
-        dv_keep: tuple[str, str | None] | None = None,
     ):
         self.path = path
         self.cols = cols
-        # physical file-column name per requested (logical) column — the
-        # table's column mapping resolved at planning time, so a renamed
-        # column streams correctly (executors read by physical name)
-        self.phys = phys or cols
+        # row selection: rows the `dv_path` vector holds are skipped (a
+        # snapshot file's live vector, a delete's prev_dv); with
+        # `new_dv` only rows that vector marks stream; with `predicate`
+        # only matching rows, evaluated under `pred_defaults`
         self.dv_path = dv_path
-        # CDC mode: commit_version set -> rows gain (_change_type,
-        # _commit_version); change_type is the literal for whole-file
-        # kinds (insert/delete) or None for explicit change-data files,
-        # whose rows CARRY their own `_change_type` column
+        self.new_dv = new_dv
+        self.predicate = predicate
+        self.pred_defaults = pred_defaults
+        # CDC mode: rows gain (_change_type, _commit_version); a None
+        # change_type marks a change-data file whose rows carry their own
         self.commit_version = commit_version
         self.change_type = change_type
-        # CDC reconstruction (executor-side twins of batch change_feed):
-        # `predicate` re-filters a predicate-delete's removed file to the
-        # recorded conjunction (PHYSICAL column names — rename-proof);
-        # `dv_keep=(new_dv_dir, old_dv_dir|None)` keeps only the rows the
-        # commit's vector marked beyond the previous one (the DV diff)
-        self.predicate = predicate
-        self.dv_keep = dv_keep
+        # per requested column: physical name, type and default, set by
+        # the reader's _stamp (the no-op partition keeps the names)
+        self.phys = cols
+        self.out_types: list[str] | None = None
+        self.defaults: list | None = None
 
 
 class MinitableStreamReader(DataSourceStreamReader):
@@ -483,73 +455,60 @@ class MinitableStreamReader(DataSourceStreamReader):
                 "a CDC stream exists to see those changes"
             )
         self._last: dict | None = None  # newest offset handed to the engine
-        # admission caches, O(backlog): planned (file, bytes) per commit
-        # and the pinned snapshot file list — both pure functions of the
-        # immutable log, evicted as the stream consumes past them
-        self._plan_cache: dict[int, list[tuple[str | None, int]]] = {}
-        self._snap_cache: tuple[int, list[str]] | None = None
-        self._out_types_cache: list[str] | None = None
-        self._out_defaults_cache: list | None = None
+        # driver-side planning, every entry a pure function of the
+        # immutable log: the running fold and the pinned snapshot, each
+        # (version, state AS OF it), and per commit its planned
+        # (FileChange, bytes) list, evicted as the engine commits past it
+        self._fold: tuple[int, object] | None = None
+        self._snap: tuple[int, object] | None = None
+        self._plan_cache: dict[int, list] = {}
+        # the requested columns' (physical names, defaults, log schema)
+        # and DDL types, resolved once per runner by _stamp
+        self._era: tuple[list[str], list, dict | None] | None = None
+        self._out_types: list[str] | None = None
 
-    def _out_types(self) -> list[str] | None:
-        """The requested columns' DDL types, resolved once per runner
-        (driver-side) and shipped on every partition so the executor
-        read can emit typed Arrow batches without touching the log."""
-        if self._out_types_cache is None:
-            try:
-                self._out_types_cache = _table_col_types(self.path, self.cols)
-            except Exception:
-                return None  # transient (e.g. IO blip): retry next
-                # trigger rather than pinning the slow tuple path for
-                # the runner's whole life (review r12)
-        return self._out_types_cache
-
-    def _out_defaults(self) -> list | None:
-        """Per requested column, the table's stored COLUMN DEFAULT (or
-        None) — the stream's twin of the batch read's EXISTS_DEFAULT
-        fill: a file that physically predates the column serves the
-        constant, not NULL.  Resolved from the LATEST schema, the same
-        era _out_types types the whole stream from (a column added
-        later than a streamed file is typed and defaulted by the head
-        schema — read()'s semantics applied to the feed's fixed column
-        set).  Date/timestamp defaults are stored as ISO strings in the
-        log and converted to Python objects here so both the arrow and
-        tuple executor paths can emit them natively."""
-        if self._out_defaults_cache is None:
+    def _stamp(self, parts: list[_FilePartition]) -> None:
+        """Ship each requested column's physical name, DDL type and
+        stored COLUMN DEFAULT on every partition, resolved once per
+        runner from the table state at the head when first needed — the
+        era the source's declared schema was read at (free when the fold
+        or the snapshot stands there).  Executors then read by physical
+        name (a renamed column streams), emit typed Arrow batches without
+        touching the log, and serve a column's default on files that
+        physically predate it (the batch read's EXISTS_DEFAULT fill on
+        the feed's fixed column set).  Date/timestamp defaults are stored
+        as ISO strings and converted here so both executor paths emit
+        them natively."""
+        if self._era is None:
             import datetime
 
             from tinymr_spark.sources import minitable
 
-            schema = minitable.table_schema(self.path)
-            dfl = minitable._default_map(schema)
+            state = self._state_at(minitable.versions(self.path)[-1])
+            dfl = minitable._default_map(state.schema)
             types = {
-                f["name"]: f["type"] for f in (schema or {}).get("fields", ())
+                f["name"]: f["type"] for f in (state.schema or {}).get("fields", ())
             }
-            out = []
+            defaults = []
             for c in self.cols:
                 v = dfl.get(c)
-                if v is not None:
-                    if types.get(c) == "date":
-                        v = datetime.date.fromisoformat(v)
-                    elif types.get(c) == "timestamp":
-                        v = datetime.datetime.fromisoformat(v)
-                out.append(v)
-            self._out_defaults_cache = out
-        return self._out_defaults_cache
-
-    def _phys_defaults_at(self, v: int) -> dict | None:
-        """{physical column: default value} AS OF commit `v` — the era
-        a recorded delete predicate must replay under: the delete's own
-        filter read pre-ADD files with THAT era's defaults, so its
-        reconstruction must evaluate the same constants (a default
-        added after the delete must not rewrite history)."""
-        from tinymr_spark.sources import minitable
-
-        state = minitable._replay(self.path, v)
-        dfl = minitable._default_map(state.schema)
-        if not dfl:
-            return None
-        return {state.colmap.get(c, c): val for c, val in dfl.items()}
+                if v is not None and types.get(c) == "date":
+                    v = datetime.date.fromisoformat(v)
+                elif v is not None and types.get(c) == "timestamp":
+                    v = datetime.datetime.fromisoformat(v)
+                defaults.append(v)
+            phys = [state.colmap.get(c, c) for c in self.cols]
+            self._era = (phys, defaults, state.schema)
+        phys, defaults, schema = self._era
+        if self._out_types is None:
+            try:
+                self._out_types = _table_col_types(self.path, self.cols, schema)
+            except Exception:
+                pass  # transient (e.g. IO blip): the tuple path serves
+                # this batch and the next trigger retries, rather than
+                # pinning it for the runner's whole life
+        for p in parts:
+            p.phys, p.out_types, p.defaults = phys, self._out_types, defaults
 
     def _resolve_starting_ts(self, vs: list[int]) -> int | str:
         """startingTimestamp -> the startingVersion it means: the FIRST
@@ -629,52 +588,12 @@ class MinitableStreamReader(DataSourceStreamReader):
                 return True
         return False
 
-    def _planned_files(self, rec: dict) -> list[str | None]:
-        """One commit's planned files under the current mode, in the
-        DETERMINISTIC order partitions() builds them — the admission
-        unit and the meaning of a partial offset's `f` index.  Empty
-        for no-op commits; `[None]` for refusal branches so the batch
-        still forms and raises the loud error in partitions()."""
-        if rec.get("data_change") is False:
-            return []
-        if (
-            rec["action"] == "merge"
-            and not rec.get("cdf")
-            and not rec.get("added")
-            and not rec.get("removed")
-        ):
-            return []  # no-op merge: partitions() skips it in both modes
-        if rec["action"] == "append":
-            return list(rec["added"])
-        if self._append_mode_skip(rec):
-            return []  # ignoreDeletes / skipChangeCommits opt-out
-        if self.mode == "cdf":
-            if rec["action"] == "merge" and rec.get("cdf"):
-                return list(rec["cdf"])
-            if rec["action"] == "merge" and rec.get("predicate") is not None:
-                return list(rec.get("removed", ()))
-            if rec["action"] == "dv":
-                # a MATERIALIZED file sits in both `removed` and the dv
-                # map but plans as ONE partition (its deletes are the
-                # diff) — counting it twice starves admission (r11 4th
-                # pass; mirrors partitions()'s order: whole-drops in
-                # `removed` order, then the dv map sorted)
-                dv_map = rec.get("dv") or {}
-                return [
-                    f for f in rec.get("removed", ()) if f not in dv_map
-                ] + sorted(dv_map)
-        return [None]
-
-    def _batch_files(self, rec: dict) -> int:
-        """Planned file count of one commit (the admission cost)."""
-        return len(self._planned_files(rec))
-
     def _file_bytes(self, rel: str | None, sizes: dict | None) -> int:
         """Byte size of one planned file for the maxBytesPerTrigger
-        budget: the commit's recorded `sizes` map when present (Delta's
-        AddFile.size), else one stat — a HINT only, so a missing file
-        costs 0 here and surfaces loudly at read time instead."""
-        if rel is None:
+        budget (0 without one): the commit's recorded `sizes` map when
+        present (Delta's AddFile.size), else one stat — a HINT only, so
+        a missing file costs 0 here and surfaces loudly at read time."""
+        if rel is None or self.max_bytes is None:
             return 0
         if sizes and rel in sizes:
             return int(sizes[rel])
@@ -683,33 +602,50 @@ class MinitableStreamReader(DataSourceStreamReader):
         except OSError:
             return 0
 
-    def _plan(self, v: int) -> list[tuple[str | None, int]]:
-        """Cached (file, bytes) plan of commit v — parsed once per
-        reader per commit (records are immutable)."""
-        import json
+    def _state_at(self, v: int):
+        """The table state AS OF v: the running fold or the pinned
+        snapshot when either stands there, else one `_replay` (a fold
+        start: the first plan of a reader, or a replayed range whose
+        plans were evicted)."""
+        from tinymr_spark.sources import minitable
 
+        for at in (self._fold, self._snap):
+            if at is not None and at[0] == v:
+                return at[1]
+        if v < 0:
+            return minitable._State.empty()
+        return minitable._replay(self.path, v)
+
+    def _plan(self, v: int) -> list:
+        """Commit v's planned (FileChange, bytes) list — the admission
+        unit, the meaning of a partial offset's `f` index, and what
+        partitions() slices.  Decoded by `minitable._commit_changes`
+        once per reader per commit while the fold advances (records are
+        immutable); the append-mode opt-outs drop a record before it is
+        decoded."""
         from tinymr_spark.sources import minitable
 
         hit = self._plan_cache.get(v)
-        if hit is not None:
-            return hit
-        with open(minitable._version_file(self.path, v)) as f:
-            rec = json.load(f)
-        sizes = rec.get("sizes")
-        out = [(f, self._file_bytes(f, sizes)) for f in self._planned_files(rec)]
-        self._plan_cache[v] = out
-        return out
+        if hit is None:
+            prev = self._state_at(v - 1)
+            rec = minitable._record(self.path, v)
+            found = (
+                []
+                if self._append_mode_skip(rec)
+                else minitable._commit_changes(prev, v, rec, self.mode == "cdf")
+            )
+            sizes = rec.get("sizes")
+            hit = [(c, self._file_bytes(c.file, sizes)) for c in found]
+            self._plan_cache[v] = hit
+            self._fold = (v, minitable._apply(prev, rec))
+        return hit
 
-    def _snapshot_files(self, hi: int) -> list[str]:
-        """The snapshot-at-hi file list (relpaths, replay order) — the
-        deterministic index space of partial-snapshot offsets."""
-        from tinymr_spark.sources import minitable
-
-        if self._snap_cache is not None and self._snap_cache[0] == hi:
-            return self._snap_cache[1]
-        files = [rel for rel, _st in minitable._replay(self.path, hi)[0]]
-        self._snap_cache = (hi, files)
-        return files
+    def _snapshot(self, hi: int):
+        """The state AS OF hi, pinned for the initial snapshot: its
+        entries are the index space of partial-snapshot offsets."""
+        if self._snap is None or self._snap[0] != hi:
+            self._snap = (hi, self._state_at(hi))
+        return self._snap[1]
 
     # ---- persisted high-water mark (streamId) ----------------------
     def _hwm_file(self) -> str:
@@ -797,10 +733,6 @@ class MinitableStreamReader(DataSourceStreamReader):
         # covers the orderings it doesn't; partitions() keeps teaching
         # the true position as a further net.
         base = self._base()
-        consumed_v = int(base["snap"]) if "snap" in base else int(base["v"])
-        self._plan_cache = {
-            v: p for v, p in self._plan_cache.items() if v >= consumed_v
-        }
         out = self._admit(base, vs, head)
         if _off_key(out) > _off_key(self._last):
             self._last = dict(out)
@@ -821,16 +753,16 @@ class MinitableStreamReader(DataSourceStreamReader):
                 if head < 0:
                     return dict(base)  # nothing committed yet
                 hi, k = head, 0
-            files = self._snapshot_files(hi)
+            entries = self._snapshot(hi).entries
             k0 = k
-            while k < len(files):
-                sz = self._file_bytes(files[k], None)
+            while k < len(entries):
+                sz = self._file_bytes(entries[k][0], None)
                 if k > k0 and (bf < 1 or bb < sz):
                     break
                 bf -= 1
                 bb -= sz
                 k += 1
-            if k >= len(files):
+            if k >= len(entries):
                 return {"v": hi}  # snapshot complete; incremental next
             return {"v": -1, "snap": hi, "f": k}
         # ---- incremental phase --------------------------------------
@@ -869,10 +801,6 @@ class MinitableStreamReader(DataSourceStreamReader):
         return {"v": v} if k >= total else {"v": v, "f": k}
 
     def partitions(self, start: dict, end: dict):
-        import json
-
-        from tinymr_spark.sources import minitable
-
         # Admission bookkeeping: the engine's planned ranges are the
         # ground truth for the checkpointed position (latestOffset
         # cannot see it after a restart — it may answer BEHIND the
@@ -928,8 +856,8 @@ class MinitableStreamReader(DataSourceStreamReader):
         else:
             if start.get("inc") and int(start["v"]) < 0:
                 # startingVersion=0's sentinel: FULL HISTORY REPLAY from
-                # v0 as incremental commits; an overwrite v0 raises in
-                # the commit planner, exactly like batch change_feed
+                # v0 as incremental commits; an overwrite v0 is refused
+                # by the decoder, exactly like batch change_feed
                 inc_from = (0, 0)
             elif "f" in start:
                 inc_from = (int(start["v"]), int(start["f"]))
@@ -938,20 +866,12 @@ class MinitableStreamReader(DataSourceStreamReader):
         parts: list[_FilePartition] = []
         if snap is not None and snap[0] >= 0:
             h, kf, kt = snap
-            state = minitable._replay(self.path, h)
-            entries, dvs = state.entries, state.dvs
-            phys = [state.colmap.get(c, c) for c in self.cols]
-            for rel, _st in entries[kf : kt if kt is not None else len(entries)]:
+            state = self._snapshot(h)
+            for rel, _st in state.entries[kf:kt]:
                 parts.append(
                     _FilePartition(
-                        os.path.join(self.path, rel),
-                        self.cols,
-                        dv_path=(
-                            os.path.join(self.path, dvs[rel])
-                            if rel in dvs
-                            else None
-                        ),
-                        phys=phys,
+                        self._abs(rel), self.cols,
+                        dv_path=self._abs(state.dvs.get(rel)),
                         # snapshot rows are the initial inserts
                         # (Delta's startingVersion CDC semantics)
                         commit_version=h if cdc else None,
@@ -962,164 +882,34 @@ class MinitableStreamReader(DataSourceStreamReader):
             sv, sf = inc_from
             ev = int(end["v"])
             ef = int(end["f"]) if "f" in end else None
-            if ev >= sv:
-                colmap = minitable._replay(self.path, ev)[4]
-                phys = [colmap.get(c, c) for c in self.cols]
-                for v in minitable.versions(self.path):
-                    if v < sv or v > ev:
-                        continue
-                    with open(minitable._version_file(self.path, v)) as f:
-                        rec = json.load(f)
-                    plist = self._commit_partitions(v, rec, phys, cdc)
-                    lo_i = sf if v == sv else 0
-                    hi_i = ef if (v == ev and ef is not None) else len(plist)
-                    parts.extend(plist[lo_i:hi_i])
-        ot = self._out_types()
-        dfl = self._out_defaults()
-        for p in parts:
-            p.out_types = ot
-            p.defaults = dfl
-        # Spark requires >= 1 partition; an empty range plans a no-op.
-        return parts or [_FilePartition(None, self.cols)]
-
-    def _commit_partitions(
-        self, v: int, rec: dict, phys: list[str], cdc: bool
-    ) -> list[_FilePartition]:
-        """One commit's full partition list, in EXACTLY the order (and
-        length) of _planned_files(rec) — partial offsets slice this
-        list, so the two must stay in lockstep (asserted below)."""
-        from tinymr_spark.sources import minitable
-
-        parts: list[_FilePartition] = []
-        if rec.get("data_change") is False:
-            return parts  # OPTIMIZE/ZORDER etc.: rows provably
-            # unchanged — maintenance must not kill a live stream
-        if rec["action"] == "append":
-            parts.extend(
-                _FilePartition(
-                    os.path.join(self.path, f), self.cols, phys=phys,
-                    commit_version=v if cdc else None,
-                    change_type="insert" if cdc else None,
-                )
-                for f in rec["added"]
-            )
-        elif (
-            rec["action"] == "merge"
-            and not rec.get("cdf")
-            and not rec.get("added")
-            and not rec.get("removed")
-        ):
-            pass  # NO-OP merge (every match failed update_where,
-            # nothing inserted): zero files swapped is proof of zero
-            # row changes in BOTH modes — skip, don't refuse
-        elif self._append_mode_skip(rec):
-            pass  # ignoreDeletes / skipChangeCommits: the explicit
-            # append-mode opt-out of delete/rewrite commits
-        elif cdc and rec["action"] == "merge" and rec.get("cdf"):
-            # explicit change-data files: plain parquet carrying
-            # `_change_type` per row — stream them directly, one
-            # executor partition per file, no reconstruction
-            parts.extend(
-                _FilePartition(
-                    os.path.join(self.path, f), self.cols, phys=phys,
-                    commit_version=v, change_type=None,
-                )
-                for f in rec["cdf"]
-            )
-        elif cdc:
-            if rec["action"] == "overwrite":
-                # no row-level feed EXISTS for an overwrite (batch
-                # change_feed refuses it too) — the only recovery is
-                # a fresh subscription's snapshot
-                raise ValueError(
-                    f"minitable version {v} is an overwrite — no "
-                    "row-level change feed exists across it; restart "
-                    "the CDC stream from a fresh checkpoint (the new "
-                    "subscription snapshots the current table)"
-                )
-            if rec["action"] == "merge" and rec.get("predicate") is not None:
-                # PREDICATE DELETE: the deleted rows are the removed
-                # files' live rows matching the recorded conjunction
-                # (physical names — rename-proof), minus rows an
-                # EARLIER deletion vector had already removed.  One
-                # partition per removed file; the executor re-scans
-                # and filters — batch change_feed's plan, off-driver.
-                prev_dvs = minitable._replay(self.path, v - 1)[2] if v > 0 else {}
-                # era defaults for the replay: the delete's own filter
-                # saw THAT commit's column defaults on pre-ADD files
-                pdfl = self._phys_defaults_at(v)
-                for f in rec.get("removed", ()):
-                    p = _FilePartition(
-                        os.path.join(self.path, f), self.cols, phys=phys,
-                        dv_path=(
-                            os.path.join(self.path, prev_dvs[f])
-                            if f in prev_dvs else None
-                        ),
-                        commit_version=v, change_type="delete",
-                        predicate=rec["predicate"],
-                    )
-                    p.pred_defaults = pdfl
-                    parts.append(p)
-            elif rec["action"] == "dv":
-                # DV DELETE: whole-dropped files stream their live
-                # rows as deletes; files with a (new or materialized)
-                # vector stream the DV DIFF — rows marked by this
-                # commit beyond the previous vector — re-read from
-                # the base file by row position, sidecars executor-
-                # side (the batch branch's exceptAll as per-file set
-                # difference)
-                prev_dvs = minitable._replay(self.path, v - 1)[2] if v > 0 else {}
-                dv_map = rec.get("dv") or {}
-                for f in rec.get("removed", ()):
-                    if f in dv_map:
-                        continue  # materialized rewrite: deletes are
-                        # exactly the DV diff below, not all rows
+            for v in range(sv, ev + 1):
+                planned = self._plan(v)
+                lo = sf if v == sv else 0
+                hi = ef if (v == ev and ef is not None) else len(planned)
+                for c, _bytes in planned[lo:hi]:
+                    if c.file is None:
+                        raise ValueError(c.refusal)
                     parts.append(
                         _FilePartition(
-                            os.path.join(self.path, f), self.cols,
-                            phys=phys,
-                            dv_path=(
-                                os.path.join(self.path, prev_dvs[f])
-                                if f in prev_dvs else None
-                            ),
-                            commit_version=v, change_type="delete",
-                        )
-                    )
-                for f in sorted(dv_map):
-                    parts.append(
-                        _FilePartition(
-                            os.path.join(self.path, f), self.cols,
-                            phys=phys,
-                            commit_version=v, change_type="delete",
-                            dv_keep=(
-                                os.path.join(self.path, dv_map[f]),
-                                (
-                                    os.path.join(self.path, prev_dvs[f])
-                                    if f in prev_dvs else None
-                                ),
+                            self._abs(c.file), self.cols,
+                            dv_path=self._abs(c.prev_dv),
+                            new_dv=self._abs(c.new_dv),
+                            predicate=c.predicate,
+                            pred_defaults=c.defaults,
+                            commit_version=v if cdc else None,
+                            change_type=(
+                                None if not cdc or c.kind == "cdf" else c.kind
                             ),
                         )
                     )
-            else:
-                raise ValueError(
-                    f"minitable version {v} is a {rec['action']} without "
-                    "explicit change data, recorded predicate, or "
-                    "deletion vectors — no row-level feed exists for it "
-                    "(batch change_feed() refuses it too); run the "
-                    "writer with collect_cdf=True (merge/update)"
-                )
-        else:
-            raise ValueError(
-                f"minitable version {v} is a {rec['action']} — a stream "
-                "over rewritten files would replay pre-existing rows; "
-                "restart the stream from a fresh checkpoint instead"
-            )
-        # exactly-once depends on this: a partial offset's `f` index
-        # means the same files to admission and to planning
-        assert len(parts) == len(self._planned_files(rec)), (
-            v, len(parts), self._planned_files(rec),
-        )
+        if not parts:
+            # Spark requires >= 1 partition; an empty range plans a no-op
+            return [_FilePartition(None, self.cols)]
+        self._stamp(parts)
         return parts
+
+    def _abs(self, rel: str | None) -> str | None:
+        return None if rel is None else os.path.join(self.path, rel)
 
     def read(self, partition: _FilePartition):
         # EXECUTOR-side: scan exactly this committed file, projected to
@@ -1153,25 +943,21 @@ class MinitableStreamReader(DataSourceStreamReader):
                 if fn == base
             }
 
-        # live deletion vector for this file: the set of row positions
-        # to skip (row_index is file row order, exactly Spark's
-        # `_metadata.row_index` identity the batch reader joins on)
+        # the vector already applied to this file: the set of row
+        # positions to skip (row_index is file row order, exactly
+        # Spark's `_metadata.row_index` identity the batch reader joins on)
         dv_idx: set[int] = set()
         if partition.dv_path is not None:
             dv_idx = _dv_rows(partition.dv_path)
-        # DV DIFF reconstruction: keep ONLY rows this commit's vector
-        # marked beyond the previous one (batch change_feed's exceptAll,
-        # as a per-file positional set difference)
+        # DV DIFF: keep ONLY rows the new vector marks beyond the
+        # previous one (batch change_feed's exceptAll, as a per-file
+        # positional set difference)
         keep_idx: set[int] | None = None
-        dv_keep = getattr(partition, "dv_keep", None)
-        if dv_keep is not None:
-            new_dir, old_dir = dv_keep
-            keep_idx = _dv_rows(new_dir) - (
-                _dv_rows(old_dir) if old_dir else set()
-            )
+        if partition.new_dv is not None:
+            keep_idx = _dv_rows(partition.new_dv) - dv_idx
             if not keep_idx:
                 return
-        pred = getattr(partition, "predicate", None)
+        pred = partition.predicate
         try:
             pf = pq.ParquetFile(partition.path)
         except FileNotFoundError as e:
@@ -1187,12 +973,12 @@ class MinitableStreamReader(DataSourceStreamReader):
                 "as far back as vacuum's retain_from_version); restart "
                 "the stream from a fresh checkpoint"
             ) from e
-        phys = getattr(partition, "phys", None) or partition.cols
+        phys = partition.phys
         # COLUMN DEFAULTS, aligned to partition.cols: the fill for
         # output columns this file physically predates
-        dfl = getattr(partition, "defaults", None)
-        cv = getattr(partition, "commit_version", None)
-        ct = getattr(partition, "change_type", None)
+        dfl = partition.defaults
+        cv = partition.commit_version
+        ct = partition.change_type
         if cv is not None and ct is None:
             # explicit change-data file: the row's own `_change_type`
             # column reads LAST, already in output position
@@ -1216,14 +1002,12 @@ class MinitableStreamReader(DataSourceStreamReader):
         # and take the arrow path).
         import pyarrow as pa
 
-        out_ddl = getattr(partition, "out_types", None)
+        out_ddl = partition.out_types
         pa_types = None
         if out_ddl is not None and len(out_ddl) == len(partition.cols):
             cand = [_pa_type(t) for t in out_ddl]
             out_names = list(partition.cols)
-            src_cols: list[str | None] = list(
-                getattr(partition, "phys", None) or partition.cols
-            )
+            src_cols: list[str | None] = list(partition.phys)
             if cv is not None:
                 if ct is None:
                     cand.append(pa.string())  # file-carried _change_type
@@ -1256,7 +1040,7 @@ class MinitableStreamReader(DataSourceStreamReader):
                 if pred:
                     keep = _predicate_mask(
                         batch, pred, read_cols,
-                        getattr(partition, "pred_defaults", None),
+                        partition.pred_defaults,
                     ).to_numpy(zero_copy_only=False)
                 if dv_np is not None and len(dv_np):
                     hits = dv_np[(dv_np >= offset) & (dv_np < offset + n)]
@@ -1317,7 +1101,7 @@ class MinitableStreamReader(DataSourceStreamReader):
             sel = (
                 _predicate_mask(
                     batch, pred, read_cols,
-                    getattr(partition, "pred_defaults", None),
+                    partition.pred_defaults,
                 ).to_pylist()
                 if pred
                 else None
@@ -1355,13 +1139,15 @@ class MinitableStreamReader(DataSourceStreamReader):
             offset += n
 
     def commit(self, end: dict) -> None:
-        # the log is the source of truth — nothing to clean up; but the
-        # committed offset re-seeds admission control after a restart
-        # (latestOffset cannot see the checkpoint: Python DS API limit),
-        # and with a streamId it persists to disk so even a FRESH runner
-        # paces its first post-restart batch
+        # the log is the source of truth; the committed offset re-seeds
+        # admission control after a restart (latestOffset cannot see the
+        # checkpoint: Python DS API limit), with a streamId it persists
+        # to disk so even a FRESH runner paces its first post-restart
+        # batch, and the plans of fully consumed commits are dropped
         if self._last is None or _off_key(end) > _off_key(self._last):
             self._last = dict(end)
+        done = int(end["v"]) - (1 if "f" in end else 0)
+        self._plan_cache = {v: p for v, p in self._plan_cache.items() if v > done}
         self._save_hwm()
 
 
