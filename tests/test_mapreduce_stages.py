@@ -3,11 +3,16 @@
 ``MapReduce.__call__`` collects its result, so it runs the second
 grouping round on the driver: one job of two stages (map + shuffle +
 reduce).  ``to_rdd`` is the scale path and keeps the reference's second
-barrier as a second ``groupByKey``: three stages."""
+barrier as a second ``groupByKey``: three stages.  Worker tasks after a
+MapReduce call re-read no zip archive when PySpark's worker invalidates
+the import caches."""
 
 from __future__ import annotations
 
+import importlib
+import sys
 import uuid
+import zipimport
 from collections import Counter
 from functools import reduce
 from operator import add
@@ -88,3 +93,38 @@ def test_to_rdd_keeps_the_second_shuffle(spark):
     sc = spark.sparkContext
     rdd = sc.parallelize(LINES, 3)
     assert _stages_per_job(sc, lambda: WordCount().to_rdd(rdd).collect()) == [3]
+
+
+def _zip_reads_per_invalidate(_rows):
+    """In a worker task: the number of ``zipimport._read_directory`` calls
+    one ``importlib.invalidate_caches()`` makes, and the number of zip
+    importers it asks."""
+    importers = sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+    reads = 0
+    read_directory = zipimport._read_directory
+
+    def counting(archive):
+        nonlocal reads
+        reads += 1
+        return read_directory(archive)
+
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read_directory
+    return [(reads, importers)]
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="CPython 3.13+ invalidates zip caches lazily")
+def test_worker_tasks_reread_no_zip_archive(spark):
+    sc = spark.sparkContext
+    WordCount()(sc.parallelize(LINES, 4))
+    probe = sc.parallelize(range(4), 4).mapPartitions(_zip_reads_per_invalidate)
+    counts = probe.collect()
+    assert [reads for reads, _ in counts] == [0, 0, 0, 0]
+    assert all(importers > 0 for _, importers in counts)
+    # the driver keeps the stock method
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")

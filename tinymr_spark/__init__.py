@@ -17,17 +17,29 @@ Two faces share one SparkSession:
    These stay in Catalyst/Tungsten land for 100 TB-scale execution.
 """
 
-import importlib.metadata
-
 from tinymr_spark.mapreduce import ElementCountError, MapReduce
 from tinymr_spark.session import get_session
 
-# Resolve the installed version like the reference does
-# (/root/reference/tinymr.py:17-24); fall back to the in-tree version when
-# the package is just copied onto a path and has no metadata.
-try:
-    __version__ = importlib.metadata.version("tinymr-spark")
-except importlib.metadata.PackageNotFoundError:
-    __version__ = "0.1.0"
-
 __all__ = ["ElementCountError", "MapReduce", "get_session", "__version__"]
+
+
+def __getattr__(name: str):
+    """Resolve ``__version__`` on first use (PEP 562).
+
+    The installed version is resolved like the reference tinymr does;
+    the in-tree version is the fallback when the package is just copied
+    onto a path and has no metadata.
+    The lookup scans every ``sys.path`` entry, which in a Spark worker
+    means pyspark.zip, py4j and the spark-core jar, so it is not paid on
+    import.
+    """
+    if name != "__version__":
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib.metadata
+
+    try:
+        version = importlib.metadata.version("tinymr-spark")
+    except importlib.metadata.PackageNotFoundError:
+        version = "0.1.0"
+    globals()["__version__"] = version
+    return version

@@ -7,15 +7,70 @@ driver environment (local[32], 128 GiB) but express cluster-safe policy:
 AQE on (runtime re-planning, skew-join handling, partition coalescing),
 modest broadcast threshold, UTC session timezone so timestamp semantics
 match the DuckDB oracle.
+
+Importing this module inside a Spark Python worker also makes zip
+imports check their archive by stat before re-reading it.  PySpark's
+worker calls ``importlib.invalidate_caches()`` at the start of every
+task, and on CPython 3.11 and 3.12 that makes every
+``zipimport.zipimporter`` re-read its archive's whole directory: a
+worker holds about 18 of them (pyspark.zip, py4j, the spark-core jar,
+the shipped package zip, one importer per package inside each), so each
+task paid ~200 ms (4-core host) before any user code ran.  `_check_zips_by_stat` keys
+each importer's last read by the archive's ``(st_ino, st_size,
+st_mtime_ns)`` and re-reads only when that key changed; a changed or
+missing archive takes the stock path.  It is installed only when a task
+context is set, so the driver and user processes keep stock behaviour,
+and it does nothing on CPython 3.13+, whose ``invalidate_caches`` is
+already lazy.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+
+def _check_zips_by_stat() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its stat key changed since that importer's last read.
+
+    The stat is taken before the read, so an archive replaced during a
+    read is seen as changed on the next call instead of being served
+    stale.  Importers that exist at install time are read once here, so
+    the next ``importlib.invalidate_caches()`` in this process reads
+    nothing.  Installing twice wraps once; on CPython 3.13+ this does
+    nothing.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    stock = zipimport.zipimporter.invalidate_caches
+    if hasattr(stock, "__wrapped__"):
+        return
+
+    @functools.wraps(stock)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            key = None
+        else:
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        if key is None or key != getattr(self, "_tinymr_stat_key", None):
+            stock(self)
+            self._tinymr_stat_key = key
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches()
 
 
 def _ensure_worker_pythonpath() -> None:
@@ -169,3 +224,9 @@ def get_session(app_name: str = "tinymr-spark", cpus: str | None = None) -> Spar
         )
     )
     return builder.getOrCreate()
+
+
+# A Spark Python worker sets the task context before it unpickles the
+# task's command, which is what imports this package there.
+if TaskContext.get() is not None:
+    _check_zips_by_stat()
