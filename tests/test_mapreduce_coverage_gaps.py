@@ -12,16 +12,17 @@ import pytest
 
 from tinymr_spark import ElementCountError, MapReduce
 from tinymr_spark.mapreduce import (
+    _check_pair,
+    _chunk_partition,
     _collect_reraising,
     _combine_partition,
+    _finish_chunks,
     _finish_group,
     _flatten_kv,
-    _index_partition,
     _kv_shape,
     _local_group_and_sort,
     _merge_winners,
     _partition_winners,
-    _require_pairs,
     _run_reduce,
 )
 
@@ -70,11 +71,60 @@ def test_finish_combine_restores_encounter_order():
     ) == ((0, 1), [10, 30])
 
 
-def test_index_partition_tags_and_checks_arity():
-    out = list(_index_partition(3, iter([("k", 1), ("k2", 2)])))
-    assert out == [((3, 0), ("k", 1)), ((3, 1), ("k2", 2))]
+def test_chunk_partition_one_chunk_per_key_in_first_encounter_order():
+    # no flush: one chunk per distinct key, at its first-encounter slot
+    recs = [("b", 1), ("a", 2), ("b", 3), ("c", 4), ("a", 5)]
+    assert list(_chunk_partition(3, iter(recs), 100)) == [
+        ("b", ((3, 0), 2, [1, 3])),
+        ("a", ((3, 1), 2, [2, 5])),
+        ("c", ((3, 2), 2, [4])),
+    ]
+    # a triple's payload is its whole record
+    triples = [("k", 1, "x"), ("j", 0, "y"), ("k", 0, "z")]
+    assert list(_chunk_partition(0, iter(triples), 100)) == [
+        ("k", ((0, 0), 3, [("k", 1, "x"), ("k", 0, "z")])),
+        ("j", ((0, 1), 3, [("j", 0, "y")])),
+    ]
+    assert list(_chunk_partition(0, iter([]), 100)) == []
+
+
+def test_chunk_partition_positions_increase_after_flush():
+    recs = [("b", 1), ("a", 2), ("b", 3), ("c", 4), ("a", 5)]
+    out = list(_chunk_partition(1, iter(recs), 2))
+    assert out == [
+        ("b", ((1, 0), 2, [1])),
+        ("a", ((1, 1), 2, [2])),
+        ("b", ((1, 2), 2, [3])),
+        ("c", ((1, 3), 2, [4])),
+        ("a", ((1, 4), 2, [5])),
+    ]
+    positions = [chunk[0] for _k, chunk in out]
+    assert positions == sorted(positions) and len(set(positions)) == len(out)
+
+
+def test_chunk_partition_bad_first_record_raises():
     with pytest.raises(ElementCountError):
-        list(_index_partition(0, iter([("too", "many", "parts", "here")])))
+        list(_chunk_partition(0, iter([("too", "many", "parts", "here")]), 100))
+
+
+def test_finish_chunks_concatenates_out_of_order_chunks():
+    # chunks arrive out of position order, across partitions and flushes
+    chunks = [((1, 0), 2, ["d"]), ((0, 4), 2, ["c"]), ((0, 1), 2, ["a", "b"])]
+    assert _finish_chunks(chunks, False, False) == ((0, 1), ["a", "b", "c", "d"])
+    # ties keep encounter order, also under reverse=True
+    triples = [
+        ((1, 0), 3, [("k", 1, "late"), ("k", 2, "top")]),
+        ((0, 0), 3, [("k", 1, "early"), ("k", 0, "low")]),
+    ]
+    assert _finish_chunks(triples, False, True) == (
+        (0, 0), ["top", "early", "late", "low"]
+    )
+    assert _finish_chunks(triples, False, False) == (
+        (0, 0), ["low", "early", "late", "top"]
+    )
+    # pairs sorted by value, triples by (sort, value)
+    assert _finish_chunks([((0, 0), 2, [3, 1, 2])], True, True) == ((0, 0), [3, 2, 1])
+    assert _finish_chunks(triples, True, False)[1] == ["low", "early", "late", "top"]
 
 
 def test_run_reduce_generator_and_return_styles():
@@ -98,19 +148,42 @@ def test_run_reduce_generator_and_return_styles():
         list(_run_reduce(("k", ((0, 0), [1])), bad_reducer, False))
 
 
-def test_combine_partition_accumulates_and_keeps_min_index():
-    def reducer(key, values):
-        return (key, sum(values))
+def _sum_reducer(key, values):
+    return (key, sum(values))
 
-    # same key arriving with a LATER index first: min-idx update branch
-    records = [((0, 2), ("k", 1)), ((0, 0), ("k", 2)), ((0, 1), ("j", 5))]
-    out = dict()
-    for k, (idx, partial_v) in _combine_partition(iter(records), reducer):
-        out[k] = (idx, partial_v)
-    assert out == {"k": ((0, 0), 3), "j": ((0, 1), 5)}
 
+def test_combine_partition_accumulates_per_key():
+    records = [("k", 1), ("j", 5), ("k", 2)]
+    assert list(_combine_partition(2, iter(records), _sum_reducer, 100)) == [
+        ("k", ((2, 0), 3)),
+        ("j", ((2, 1), 5)),
+    ]
+    assert list(_combine_partition(0, iter([]), _sum_reducer, 100)) == []
     with pytest.raises(ElementCountError, match="combine=True"):
-        list(_combine_partition(iter([((0, 0), ("k", "s", "v"))]), reducer))
+        list(_combine_partition(0, iter([("k", "s", "v")]), _sum_reducer, 100))
+
+
+def test_combine_partition_folds_or_flushes_at_limit():
+    def calls(records, limit):
+        seen = []
+
+        def reducer(key, values):
+            seen.append((key, list(values)))
+            return _sum_reducer(key, values)
+
+        return list(_combine_partition(0, iter(records), reducer, limit)), seen
+
+    # few keys: the dict folds each key's values into one partial
+    out, seen = calls([("a", 1), ("b", 2), ("a", 3), ("a", 4), ("b", 5)], 4)
+    assert out == [("a", ((0, 0), 8)), ("b", ((0, 1), 7))]
+    assert seen[:2] == [("a", [1, 3, 4]), ("b", [2])]
+    assert seen[2:] == [("a", [8]), ("b", [2, 5])]
+    # keys alone fill the dict: it emits its partials, slots carry on
+    out, _ = calls([("a", 1), ("b", 2), ("a", 3), ("c", 4)], 2)
+    assert out == [
+        ("a", ((0, 0), 1)), ("b", ((0, 1), 2)),
+        ("a", ((0, 2), 3)), ("c", ((0, 3), 4)),
+    ]
 
 
 def _first_wins(stream, sort_with_value, reverse):
@@ -185,9 +258,12 @@ def test_collect_reraising_passes_unrelated_errors():
 
 
 def test_require_pairs_guards_arity():
-    assert list(_require_pairs(iter([("k", 1)]))) == [("k", 1)]
+    # the local path holds a combine task to (key, value) records
+    assert _local_group_and_sort(iter([("k", 1)]), False, False, _check_pair) == {
+        "k": [1]
+    }
     with pytest.raises(ElementCountError, match="combine=True"):
-        list(_require_pairs(iter([("k", "s", "v")])))
+        _local_group_and_sort(iter([("k", "s", "v")]), False, False, _check_pair)
 
 
 def test_local_group_and_sort_empty_stream_is_none():

@@ -131,6 +131,42 @@ def test_zip_stat_check_rereads_rewritten_archive(zipped):
     assert reads.count(str(archive)) == 1
 
 
+def _second_importer(archive):
+    """A second importer of ``archive`` (a package prefix inside it, as
+    pyspark.zip has one per package), registered like a path entry."""
+    path = os.path.join(str(archive), "pkg")
+    importer = zipimport.zipimporter(path)
+    sys.path_importer_cache[path] = importer
+    return importer
+
+
+@needs_eager_zip_invalidation
+def test_zip_stat_check_reads_shared_archive_once(zipped):
+    archive, _name, importer, reads = zipped
+    other = _second_importer(archive)
+    reads.clear()
+    session._check_zips_by_stat()  # install refreshes both importers
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) == 1
+    assert other._files is importer._files
+
+
+@needs_eager_zip_invalidation
+def test_zip_stat_check_rereads_shared_archive_once_per_rewrite(zipped):
+    archive, name, importer, reads = zipped
+    other = _second_importer(archive)
+    session._check_zips_by_stat()
+    for n in (2, 3):
+        _write_zip(archive, {name: 1, f"{name}_v{n}": n})
+        reads.clear()
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(str(archive)) == 1
+        for imp in (importer, other):
+            assert imp._files is zipimport._zip_directory_cache[str(archive)]
+            assert f"{name}_v{n}.py" in imp._files
+
+
 @needs_eager_zip_invalidation
 def test_zip_stat_check_empties_importer_of_deleted_archive(zipped):
     archive, _name, importer, reads = zipped

@@ -31,9 +31,11 @@ Spark RDDs.  The contract being preserved, with reference citations:
 
 * Stable ties, including under ``reverse=True`` — ties keep first-encounter
   order (Python ``list.sort`` stability, /root/reference/tinymr.py:336-343).
-  Spark shuffles do not guarantee arrival order, so every record carries an
-  encounter index assigned before the shuffle; within each key the list is
-  first restored to encounter order, then stably sorted.
+  Spark shuffles do not guarantee arrival order, but records arrive in
+  encounter order within a map partition, so each partition ships one
+  chunk per key (its values in encounter order) tagged with one position,
+  ``(partition_id, slot)``; within each key the chunks are put back in
+  position order and concatenated, then stably sorted.
 * Second round: reducer output is re-grouped (+ optionally re-sorted) by
   its own output keys; colliding output keys merge (reference
   tinymr.py:217-221).  ``__call__`` runs it on the driver over the
@@ -75,8 +77,10 @@ from __future__ import annotations
 
 import abc
 import re
+from collections import defaultdict
 from functools import partial
 from inspect import isgeneratorfunction
+from itertools import chain, islice
 from operator import itemgetter
 
 from pyspark.rdd import RDD
@@ -138,29 +142,18 @@ def _check_pair(rec):
             "combine=True requires (key, value) records; "
             "got arity {}. Example: {}".format(len(rec), rec)
         )
+    return 2
 
 
-def _require_pairs(stream):
-    """Local twin of ``_combine_partition``'s guard: combine=True demands
-    (key, value) records on every path, so input size never changes a
-    task's outcome."""
-    checked = False
-    for rec in stream:
-        if not checked:
-            _check_pair(rec)
-            checked = True
-        yield rec
-
-
-def _checked_first(it):
-    """Validate the first emission of a yield-style reducer call — the
-    local twin of run_reduce's per-call check."""
-    first = True
+def _checked_head(it, check):
+    """``(check(first_record), records)`` with the first record put back,
+    or ``(None, records)`` for an empty stream: the one arity check per
+    partition (executor-side — no driver peek job), per local stream or
+    per local reducer call."""
+    it = iter(it)
     for rec in it:
-        if first:
-            _check_arity(rec)
-            first = False
-        yield rec
+        return check(rec), chain((rec,), it)
+    return None, it
 
 
 def _checked_one(rec):
@@ -184,17 +177,24 @@ def _pool_wrap_reducer(key_values, reducer):
 
 def _checked_tuple(records):
     """Arity-check the first record of one pooled reducer call's
-    materialized output — the pooled twin of ``_checked_first``."""
+    materialized output — the pooled twin of ``_checked_head``."""
     if records:
         _check_arity(records[0])
     return records
 
 
+#: Payloads one map or combine partition holds in its dict before the map
+#: round flushes its chunks or the combine folds or flushes its partials,
+#: so the dict stays bounded ahead of ``groupByKey``'s spillable merger.
+#: Bound into each task on the driver, so every executor uses this value.
+_CHUNK_LIMIT = 1 << 16
+
+
 def _sort_key(has_sort, sort_with_value):
-    """The sort-matrix key over one payload, or ``None`` for no sort.
-    Payloads end in ``(s, v)`` or ``v`` — local ``(s, v)``/``(None, v)``,
-    shuffled ``(idx, s, v)``/``(idx, v)`` — so ``p[-2]``/``p[-1]`` fit
-    every shape."""
+    """The sort-matrix key over one payload that ends in ``(s, v)`` or
+    ``v`` — a triple record ``(k, s, v)``, a shuffled ``(idx, s, v)`` or
+    ``(idx, v)`` — so ``p[-2]``/``p[-1]`` fit every shape; ``None`` for
+    no sort."""
     if has_sort:
         if sort_with_value:
             return itemgetter(-2, -1)  # (sort, value)  [tinymr.py:327-328]
@@ -204,30 +204,82 @@ def _sort_key(has_sort, sort_with_value):
     return None
 
 
-def _local_group_and_sort(stream, sort_with_value, reverse):
-    """In-process twin of ``_group_and_sort`` for the local fast path:
-    insertion-ordered dict gives first-encounter key order, ``list.sort``
-    gives the same stable-tie behavior the distributed round reconstructs
-    via encounter indices.  Returns ``{key: [value, ...]}`` or ``None``
-    for an empty stream."""
-    groups: dict = {}
-    arity = None
-    for rec in stream:
-        if arity is None:
-            arity = _check_arity(rec)
-        if arity == 3:
-            groups.setdefault(rec[0], []).append((rec[1], rec[2]))
-        else:
-            groups.setdefault(rec[0], []).append((None, rec[1]))
+def _sorted_values(arity, payloads, sort_with_value, reverse):
+    """One key's payloads, given in encounter order, as its ordered value
+    list: one stable sort by the matrix key.  A pair stream's payloads
+    are its values (sorted by themselves under ``sort_with_value``); a
+    triple stream's are its whole records."""
+    if arity == 2:
+        if sort_with_value:
+            payloads.sort(reverse=reverse)
+        return payloads
+    payloads.sort(key=_sort_key(True, sort_with_value), reverse=reverse)
+    return [rec[2] for rec in payloads]
+
+
+def _local_group_and_sort(stream, sort_with_value, reverse, check=_check_arity):
+    """In-process twin of the distributed map round, for the local fast
+    path and for the second round of both call paths: an
+    insertion-ordered dict gives first-encounter key order and each key's
+    payloads in encounter order — the payloads ``_chunk_partition``
+    ships.  ``check`` validates the first record (``_check_pair`` holds
+    a combine task to its pairs contract on every path).  Returns
+    ``{key: [value, ...]}`` or ``None`` for an empty stream."""
+    arity, stream = _checked_head(stream, check)
     if arity is None:
         return None
-    sort_key = _sort_key(arity == 3, sort_with_value)
-    out: dict = {}
-    for key, payloads in groups.items():
-        if sort_key is not None:
-            payloads.sort(key=sort_key, reverse=reverse)
-        out[key] = [p[1] for p in payloads]
-    return out
+    groups = defaultdict(list)
+    if arity == 2:
+        for k, v in stream:
+            groups[k].append(v)
+    else:
+        for rec in stream:
+            groups[rec[0]].append(rec)
+    return {
+        k: _sorted_values(arity, payloads, sort_with_value, reverse)
+        for k, payloads in groups.items()
+    }
+
+
+def _chunk_partition(pid, it, limit):
+    """One partition of the map round as per-key chunks
+    ``(key, ((pid, slot), arity, payloads))``: a key's payloads in
+    encounter order, at its insertion slot in the partition's dict.
+    Records arrive in encounter order within a partition, so a chunk's
+    position orders it against the key's other chunks with no per-record
+    index.  A pair's payload is its value, a triple's the whole record
+    (``_sorted_values``).  The dict flushes its chunks after ``limit``
+    payloads and slots carry on from ``base``, so a key flushed twice
+    gets two chunks in order.  The first record is arity-checked."""
+    arity, it = _checked_head(it, _check_arity)
+    if arity is None:
+        return
+    base = 0
+    while True:
+        chunks = defaultdict(list)
+        if arity == 2:
+            for k, v in islice(it, limit):
+                chunks[k].append(v)
+        else:
+            for rec in islice(it, limit):
+                chunks[rec[0]].append(rec)
+        if not chunks:
+            return
+        for slot, (k, payloads) in enumerate(chunks.items(), base):
+            yield (k, ((pid, slot), arity, payloads))
+        base += len(chunks)
+
+
+def _finish_chunks(chunks, sort_with_value, reverse):
+    """One key's shuffled map chunks as ``(first_position, [value, ...])``:
+    the chunks in position order (Spark shuffle arrival order is
+    nondeterministic), their payloads concatenated into encounter order,
+    then one stable sort by the matrix key."""
+    chunks = sorted(chunks, key=itemgetter(0))
+    first, arity, payloads = chunks[0]
+    if len(chunks) > 1:
+        payloads = [p for chunk in chunks for p in chunk[2]]
+    return first, _sorted_values(arity, payloads, sort_with_value, reverse)
 
 
 def _kv_shape(t):
@@ -283,18 +335,6 @@ def _merge_winners(rows):
     return [rec for _key_idx, _idx, rec in rows]
 
 
-def _index_partition(pid, it):
-    """Tag records with their ``(partition_id, intra_partition_index)``
-    encounter index, arity-checking the partition's first record
-    (executor-side — no driver peek job)."""
-    checked = False
-    for i, rec in enumerate(it):
-        if not checked:
-            _check_arity(rec)
-            checked = True
-        yield ((pid, i), rec)
-
-
 def _run_reduce(kv, reducer, reducer_is_gen):
     """Apply the reducer to one grouped key, arity-checking the first
     emission and re-indexing outputs with a composite encounter index:
@@ -313,26 +353,41 @@ def _run_reduce(kv, reducer, reducer_is_gen):
         yield (first_idx + (0,), rec)
 
 
-def _combine_partition(it, reducer):
-    """Pre-reduce one partition for the map-side combine lowering,
-    carrying min encounter indices through so ordering survives."""
+def _combine_partition(pid, it, reducer, limit):
+    """Pre-reduce one partition for the map-side combine lowering: one
+    partial per key, ``(key, ((pid, slot), partial))``, at the key's
+    insertion slot as in ``_chunk_partition``.  When the dict holds
+    ``limit`` values it folds each key's values into one partial (the
+    associativity ``combine`` requires), unless its keys alone fill more
+    than half of ``limit``: then it emits its partials and starts over,
+    slots carrying on."""
+    _, it = _checked_head(it, _check_pair)
     acc: dict = {}
-    checked = False
-    for idx, rec in it:
-        if not checked:
-            _check_pair(rec)
-            checked = True
-        k, v = rec
-        slot = acc.get(k)
-        if slot is None:
-            acc[k] = [idx, [v]]
+    base = held = 0
+    for k, v in it:
+        values = acc.get(k)
+        if values is None:
+            acc[k] = [v]
         else:
-            if idx < slot[0]:
-                slot[0] = idx
-            slot[1].append(v)
-    for k, (min_idx, values) in acc.items():
-        out = reducer(k, values)
-        yield (k, (min_idx, out[-1]))
+            values.append(v)
+        held += 1
+        if held >= limit:
+            if 2 * len(acc) <= limit:
+                for key, vals in acc.items():
+                    vals[:] = [reducer(key, vals)[-1]]
+                held = len(acc)
+            else:
+                yield from _partials(pid, base, acc, reducer)
+                base += len(acc)
+                acc = {}
+                held = 0
+    yield from _partials(pid, base, acc, reducer)
+
+
+def _partials(pid, base, acc, reducer):
+    """The combine dict's keys as ``(key, ((pid, slot), partial))``."""
+    for slot, (k, values) in enumerate(acc.items(), base):
+        yield (k, ((pid, slot), reducer(k, values)[-1]))
 
 
 def _flatten_kv(kv):
@@ -344,32 +399,33 @@ def _flatten_kv(kv):
     return [(kv[0], kv[1])]
 
 
-def _group_and_sort(indexed, sort_with_value, reverse, num_partitions):
+def _group_and_sort(pairs, finish, num_partitions):
     """Distributed equivalent of ``_partition_and_sort``
     (/root/reference/tinymr.py:278-345).
 
-    ``indexed`` is ``RDD[(encounter_idx_tuple, record_tuple)]``.  Returns
-    ``RDD[(key, (first_encounter_idx, [value, ...]))]`` where the value
-    list reproduces the reference's per-key ordering exactly: encounter
-    order restored first (Spark shuffle arrival order is nondeterministic),
-    then one stable sort by the matrix key.  ``first_encounter_idx`` is
-    kept so downstream stages can reproduce first-encounter key ordering.
+    One ``groupByKey`` shuffle of ``pairs``, then ``finish`` orders each
+    key's group into ``(first_position, [value, ...])``, the value list in
+    the reference's per-key order; ``first_position`` lets downstream
+    stages reproduce first-encounter key ordering.
 
-    The 2-vs-3-tuple shape is read off each record map-side (payload
-    ``(idx, v)`` or ``(idx, s, v)``) rather than decided driver-side, so
-    no peek job is needed; arity is uniform per stream (mixed arity is
-    UB, exactly as in the reference — tinymr.py:301-308).
+    Each caller brings its own grouping unit: the map round ships one
+    chunk per key per partition (``_chunk_partition`` /
+    ``_finish_chunks``), the combine one partial per key per partition
+    (``_combine_partition`` / ``_finish_group``), and ``to_rdd``'s second
+    round one payload per reduced record (``_kv_shape`` /
+    ``_finish_group``), whose reduced stream is not in encounter order
+    within a partition.  The 2-vs-3-tuple shape is read off the records
+    executor-side, so no peek job is needed; arity is uniform per stream
+    (mixed arity is UB, exactly as in the reference — tinymr.py:301-308).
 
-    The per-record / per-group callables are module-level functions
-    (``_kv_shape`` / ``_finish_group``), not closures: they pickle by
-    reference into the task binary, and the coverage gate can exercise
-    them in-process (executor-side line events are invisible to a
-    driver-side tracer)."""
-    kvr = indexed.map(_kv_shape)
-    grouped = kvr.groupByKey(num_partitions) if num_partitions else kvr.groupByKey()
-    return grouped.mapValues(
-        partial(_finish_group, sort_with_value=sort_with_value, reverse=reverse)
+    The per-partition / per-group callables are module-level functions,
+    not closures: they pickle by reference into the task binary, and the
+    coverage gate can exercise them in-process (executor-side line
+    events are invisible to a driver-side tracer)."""
+    grouped = (
+        pairs.groupByKey(num_partitions) if num_partitions else pairs.groupByKey()
     )
+    return grouped.mapValues(finish)
 
 
 class MapReduce(abc.ABC):
@@ -487,12 +543,6 @@ class MapReduce(abc.ABC):
         else:
             mapped = rdd.map(mapper)
 
-        # Encounter index = (partition_id, intra_partition_index): compares
-        # lexicographically identical to a global zipWithIndex (partitions
-        # hold contiguous input slices) but needs NO extra count job and no
-        # caching of the full mapped stream — one pass, scale-safe.
-        indexed = mapped.mapPartitionsWithIndex(_index_partition)
-
         # Shuffle parallelism: explicit knob, else follow the input's split
         # count (a 100 TB scan with 10k splits gets 10k reducers; a tiny
         # 1-file input doesn't pay for 32 near-empty Python reduce tasks).
@@ -505,12 +555,21 @@ class MapReduce(abc.ABC):
             and not reducer_is_gen
             and not self.sort_map_with_value
         )
+        # Positions = (partition_id, slot of the key's chunk or partial in
+        # that partition): they compare like first-encounter order over a
+        # global zipWithIndex (partitions hold contiguous input slices)
+        # with no count job, no cached map output and no per-record tag.
         if use_combine:
-            grouped = self._grouped_with_combine(indexed, n_parts)
+            split = partial(_combine_partition, reducer=reducer, limit=_CHUNK_LIMIT)
+            finish = partial(_finish_group, sort_with_value=False, reverse=False)
         else:
-            grouped = _group_and_sort(
-                indexed, self.sort_map_with_value, self.sort_map_reverse, n_parts
+            split = partial(_chunk_partition, limit=_CHUNK_LIMIT)
+            finish = partial(
+                _finish_chunks,
+                sort_with_value=self.sort_map_with_value,
+                reverse=self.sort_map_reverse,
             )
+        grouped = _group_and_sort(mapped.mapPartitionsWithIndex(split), finish, n_parts)
 
         return grouped.flatMap(
             partial(_run_reduce, reducer=reducer, reducer_is_gen=reducer_is_gen)
@@ -523,9 +582,12 @@ class MapReduce(abc.ABC):
         ``RDD[(key, (first_idx, values))]`` with scalar extraction applied;
         empty streams simply collect to []."""
         grouped2 = _group_and_sort(
-            self._reduced(rdd),
-            self.sort_reduce_with_value,
-            self.sort_reduce_reverse,
+            self._reduced(rdd).map(_kv_shape),
+            partial(
+                _finish_group,
+                sort_with_value=self.sort_reduce_with_value,
+                reverse=self.sort_reduce_reverse,
+            ),
             self.num_partitions or rdd.getNumPartitions(),
         )
 
@@ -534,21 +596,6 @@ class MapReduce(abc.ABC):
             # (/root/reference/tinymr.py:223-227).
             grouped2 = grouped2.mapValues(lambda fv: (fv[0], fv[1][0]))
         return grouped2
-
-    def _grouped_with_combine(self, indexed, n_parts):
-        """Map-side combine lowering: pre-reduce each partition, then group the
-        per-partition partials.  Produces the same ``(key, (first_idx,
-        [values]))`` shape as ``_group_and_sort``, with the value list
-        holding partials instead of raw values — indistinguishable to an
-        associative reducer.  Encounter ordering is preserved by carrying
-        min encounter indices through the combine."""
-        partials = indexed.mapPartitions(
-            partial(_combine_partition, reducer=self.reducer)
-        )
-        grouped = partials.groupByKey(n_parts)
-        return grouped.mapValues(
-            partial(_finish_group, sort_with_value=False, reverse=False)
-        )
 
     def to_rdd(self, sequence, spark=None):
         """Scale path: run the task, return ``RDD[(key, values)]`` without
@@ -682,10 +729,9 @@ class MapReduce(abc.ABC):
                 mapped = (rec for item in items for rec in self.mapper(item))
         else:
             mapped = (mapper_map or map)(self.mapper, items)
-        if enforce_combine:
-            mapped = _require_pairs(mapped)
         grouped = _local_group_and_sort(
-            mapped, self.sort_map_with_value, self.sort_map_reverse
+            mapped, self.sort_map_with_value, self.sort_map_reverse,
+            _check_pair if enforce_combine else _check_arity,
         )
         if grouped is None:
             return self._finalize({})
@@ -707,7 +753,9 @@ class MapReduce(abc.ABC):
             reduced = (
                 rec
                 for key, values in grouped.items()
-                for rec in _checked_first(self.reducer(key, values))
+                for rec in _checked_head(
+                    self.reducer(key, values), _check_arity
+                )[1]
             )
         else:
             reduced = (

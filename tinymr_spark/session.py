@@ -15,10 +15,11 @@ task, and on CPython 3.11 and 3.12 that makes every
 ``zipimport.zipimporter`` re-read its archive's whole directory: a
 worker holds about 18 of them (pyspark.zip, py4j, the spark-core jar,
 the shipped package zip, one importer per package inside each), so each
-task paid ~200 ms (4-core host) before any user code ran.  `_check_zips_by_stat` keys
-each importer's last read by the archive's ``(st_ino, st_size,
-st_mtime_ns)`` and re-reads only when that key changed; a changed or
-missing archive takes the stock path.  It is installed only when a task
+task paid ~200 ms (4-core host) before any user code ran.
+`_check_zips_by_stat` keys each archive's last read by its ``(st_ino,
+st_size, st_mtime_ns)`` and re-reads only when that key changed, once
+per archive however many importers share it; a changed or missing
+archive takes the stock path.  It is installed only when a task
 context is set, so the driver and user processes keep stock behaviour,
 and it does nothing on CPython 3.13+, whose ``invalidate_caches`` is
 already lazy.
@@ -38,14 +39,18 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 def _check_zips_by_stat() -> None:
     """Make ``zipimporter.invalidate_caches`` re-read an archive only when
-    its stat key changed since that importer's last read.
+    its stat key changed since the archive's last read.
 
-    The stat is taken before the read, so an archive replaced during a
-    read is seen as changed on the next call instead of being served
-    stale.  Importers that exist at install time are read once here, so
-    the next ``importlib.invalidate_caches()`` in this process reads
-    nothing.  Installing twice wraps once; on CPython 3.13+ this does
-    nothing.
+    The key is recorded per archive path, not per importer: pyspark.zip
+    has one importer per package inside it, and an importer whose
+    archive still has the key of its last read takes that read's
+    directory from ``zipimport._zip_directory_cache``.  The stat is taken
+    before the read, so an archive replaced during a read is seen as
+    changed on the next call instead of being served stale; a changed or
+    missing archive takes the stock path.  Importers that exist at
+    install time are refreshed here, so the next
+    ``importlib.invalidate_caches()`` in this process reads nothing.
+    Installing twice wraps once; on CPython 3.13+ this does nothing.
     """
     if sys.version_info >= (3, 13):
         return
@@ -54,6 +59,7 @@ def _check_zips_by_stat() -> None:
     stock = zipimport.zipimporter.invalidate_caches
     if hasattr(stock, "__wrapped__"):
         return
+    read_at: dict = {}  # archive path -> stat key of its last directory read
 
     @functools.wraps(stock)
     def invalidate_caches(self):
@@ -63,9 +69,12 @@ def _check_zips_by_stat() -> None:
             key = None
         else:
             key = (st.st_ino, st.st_size, st.st_mtime_ns)
-        if key is None or key != getattr(self, "_tinymr_stat_key", None):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is None or files is None or read_at.get(self.archive) != key:
             stock(self)
-            self._tinymr_stat_key = key
+            read_at[self.archive] = key
+        else:
+            self._files = files
 
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     for finder in list(sys.path_importer_cache.values()):
