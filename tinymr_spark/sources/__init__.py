@@ -381,34 +381,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so spark.sql() can be used."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def read_text(spark: SparkSession, paths) -> DataFrame:
-    """Multi-file text ingest (reference idiom I8, docs.rst:343-347 — the
-    mapper opened file paths itself; here the scan is the engine's)."""
-    return spark.read.text(paths)
-
-
-def read_json(spark: SparkSession, paths, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(paths)
-
-
-def read_csv(spark: SparkSession, paths, schema=None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(paths)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by=None, mode: str = "overwrite") -> None:
-    """Sink: parquet writer; partition_by enables partition pruning for
-    downstream readers (the 100 TB layout discipline)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

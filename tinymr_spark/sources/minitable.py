@@ -557,12 +557,6 @@ def _live_entries(path: str, version: int | None = None) -> list[tuple[str, dict
     return _replay(path, version).entries
 
 
-def table_constraints(path: str, version: int | None = None) -> dict[str, str]:
-    """The CHECK-constraint map {name: sql_boolean_expr} AS OF `version`
-    — write()/merge() enforce these on every new-row batch."""
-    return _replay(path, version).constraints
-
-
 def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     """ALTER TABLE ADD CONSTRAINT name CHECK (expr) — Delta's write-time
     data-quality contract.  Validates the EXISTING table first (a
@@ -611,20 +605,6 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     )
 
 
-def drop_constraint(path: str, name: str) -> int:
-    """ALTER TABLE DROP CONSTRAINT — records the map without `name`."""
-    cur = table_constraints(path)
-    if name not in cur:
-        raise ValueError(f"no constraint {name!r} on {path} (have {sorted(cur)})")
-    return commit(
-        path,
-        "meta",
-        [],
-        constraints={k: v for k, v in cur.items() if k != name},
-        data_change=False,
-    )
-
-
 def _enforce_constraints(df: DataFrame, constraints: dict[str, str], what: str) -> None:
     """Reject `df` if any row violates any CHECK constraint (one
     aggregate pass counting violations per constraint; SQL semantics —
@@ -660,12 +640,6 @@ def table_schema(path: str, version: int | None = None) -> dict | None:
     serves the OLD schema, reads at/after it serve the new one with
     nulls for files written before the change."""
     return _replay(path, version).schema
-
-
-def table_colmap(path: str, version: int | None = None) -> dict[str, str]:
-    """The column-mapping table {logical: physical} AS OF `version`;
-    empty when mapping was never activated (physical == logical)."""
-    return _replay(path, version).colmap
 
 
 def _generated_map(schema: dict | None) -> dict[str, str]:
@@ -718,11 +692,6 @@ def _identity_map(schema: dict | None) -> dict[str, tuple[int, int]]:
         if spec:
             out[f["name"]] = (int(spec["start"]), int(spec["step"]))
     return out
-
-
-def table_identity(path: str, version: int | None = None) -> dict[str, tuple[int, int]]:
-    """The identity-column map {col: (start, step)} AS OF `version`."""
-    return _identity_map(table_schema(path, version))
 
 
 def table_identity_hwm(path: str, version: int | None = None) -> dict[str, int]:
@@ -837,33 +806,13 @@ def _assign_identity(
     return out, last, pinned
 
 
-def table_partition_by(path: str, version: int | None = None) -> list[str] | None:
-    """The most recently recorded partition layout (LOGICAL column
-    names) as of `version` (latest when None), or None for an
-    unpartitioned table: the newest `partition_by` record wins, and an
-    `overwrite` record WITHOUT one resets the layout (the overwrite
-    re-laid the whole table out unpartitioned).  DML rewrites (update /
-    delete / delete_dv materialization) re-stage their output under
-    this layout so hive dirs and the exact `[v, v]` partition stats
-    survive row-level DML — without it, later retention deletes on
-    rewritten files would silently degrade from metadata-only
-    whole-drops to data rewrites (ADVICE r9).
-
-    A field of the one `_replay` fold: O(tail) from the newest
-    checkpoint, which carries the layout (None = authoritatively
-    unpartitioned), so a long-lived streaming-ingest table doesn't pay
-    an O(commits) log walk on every DML call (review r10).  An unknown
-    version raises, like table_schema."""
-    return _replay(path, version).partition_by
-
-
 def table_cluster_by(path: str, version: int | None = None) -> list[str] | None:
     """The table's recorded CLUSTERING KEYS as of `version` (Delta's
     liquid-style clusteringColumns): zorder() records its `by` list,
     OPTIMIZE consults it to keep compaction clustering-aware, rename
     re-points it, restore/clone carry their era's keys, and an
     overwrite without a record resets to None.  A field of the one
-    `_replay` fold, O(tail) like table_partition_by."""
+    `_replay` fold, O(tail) from the newest checkpoint."""
     return _replay(path, version).cluster_by
 
 
@@ -1065,83 +1014,6 @@ def drop_column(path: str, name: str) -> int:
     )
 
 
-# Legal ALTER COLUMN TYPE widenings (Delta 3.x type widening, the
-# lossless subset): every old-era value is exactly representable in the
-# new type, and Spark 4's parquet reader upcasts old files natively, so
-# the change is PURE METADATA.  long->double is deliberately absent
-# (lossy past 2^53); integer->double is exact (int32 < 2^53).
-_WIDENINGS = {
-    "byte": {"short", "integer", "long", "double"},
-    "short": {"integer", "long", "double"},
-    "integer": {"long", "double"},
-    "float": {"double"},
-}
-
-
-def widen_column(path: str, col: str, new_type: str) -> int:
-    """ALTER TABLE ALTER COLUMN TYPE — widening only (Delta 3.x type
-    widening): a meta commit records the schema with `col`'s type
-    replaced; DATA FILES ARE UNTOUCHED — every reader types its scan
-    from the log schema (_read_files / the stream's _table_col_types),
-    and Spark's parquet reader (and the stream's arrow cast) upcast the
-    old files' narrower physical type natively.  AS-OF reads before
-    this commit still serve the old type (the schema timeline), bloom
-    probes stay valid (hashing is numerically normalized — a long
-    literal probes an int-era bloom's exact bits), and range stats
-    compare numerically.  Refused for narrowing/lossy transitions,
-    generated columns (the recorded expression's output type is part of
-    its contract), and identity columns (always long by construction).
-    Claims head+1 so a racing schema-evolving commit conflicts instead
-    of being silently overwritten."""
-    head, state = _ddl_head(path, "type widening")
-    schema = state.schema
-    names = [f["name"] for f in schema["fields"]]
-    if col not in names:
-        raise ValueError(f"no column {col!r} in {names}")
-    if col in _generated_map(schema):
-        raise ValueError(
-            f"cannot widen {col!r}: it is a generated column (the "
-            "recorded expression's output type is part of its contract)"
-        )
-    # an INPUT of a generated column is just as binding: the expression
-    # recomputes over the widened input and yields a wider type, which
-    # the immutable generated-column contract then rejects on EVERY
-    # later write — a bricked table with no repair path (review r12;
-    # the same class rename_column/drop_column refuse)
-    gen_blocked = _constraint_mentions(
-        {c: e for c, e in _generated_map(schema).items() if c != col}, col
-    )
-    if gen_blocked:
-        raise ValueError(
-            f"cannot widen {col!r}: it is an input of generated "
-            f"column(s) {gen_blocked} — their recorded expressions' "
-            "output types would change"
-        )
-    if col in _identity_map(schema):
-        raise ValueError(
-            f"cannot widen {col!r}: identity columns are always long"
-        )
-    cur = next(f["type"] for f in schema["fields"] if f["name"] == col)
-    if not isinstance(cur, str) or new_type not in _WIDENINGS.get(cur, ()):
-        raise ValueError(
-            f"cannot widen {col!r} from {cur!r} to {new_type!r} — legal "
-            f"widenings: { {k: sorted(v) for k, v in _WIDENINGS.items()} }"
-        )
-    new_schema = dict(schema)
-    new_schema["fields"] = [
-        ({**f, "type": new_type} if f["name"] == col else f)
-        for f in schema["fields"]
-    ]
-    return commit(
-        path,
-        "meta",
-        [],
-        schema=new_schema,
-        data_change=False,
-        expected_version=head + 1,
-    )
-
-
 # COLUMN DEFAULT VALUES (Delta's allowColumnDefaults / Spark's column
 # DEFAULT): `ALTER TABLE ADD COLUMN c t DEFAULT v` must serve `v` — not
 # NULL — for every row written BEFORE the column existed, while a
@@ -1172,8 +1044,9 @@ _INT_BITS = {"byte": 8, "short": 16, "integer": 32, "long": 64}
 
 def _default_sql_literal(value, type_str: str) -> str:
     """A stored default rendered as a deterministic SQL literal of the
-    column's CURRENT type — type widening re-renders automatically (an
-    int-era default reads back as the widened type's exact value)."""
+    column's CURRENT type — a column re-typed wider in the log schema
+    re-renders automatically (an int-era default reads back as the wider
+    type's exact value)."""
     if type_str == "string":
         return "'" + str(value).replace("'", "''") + "'"
     if type_str == "boolean":
@@ -1192,8 +1065,8 @@ def _default_sql_literal(value, type_str: str) -> str:
 def _default_map(schema: dict | None) -> dict[str, object]:
     """{logical column: EXISTENCE default} from the schema's field
     metadata — the constant served for files that predate the column,
-    fixed at ADD COLUMN time (Spark's rule: a later SET DEFAULT is
-    never retroactive).  Same timeline mechanics as _generated_map."""
+    fixed at ADD COLUMN time (Spark's rule: a later write-side default
+    is never retroactive).  Same timeline mechanics as _generated_map."""
     if not schema:
         return {}
     out: dict[str, object] = {}
@@ -1207,11 +1080,13 @@ def _default_map(schema: dict | None) -> dict[str, object]:
 def _write_default_map(schema: dict | None) -> dict[str, object]:
     """{logical column: CURRENT (write-side) default} — the constant a
     write that OMITS the column materializes.  At ADD COLUMN time both
-    defaults are the same value; ALTER COLUMN SET DEFAULT re-points
-    only this one (field metadata key `write_default`), exactly Spark's
+    defaults are the same value.  Tables on disk may also carry the two
+    field metadata keys an ALTER COLUMN SET/DROP DEFAULT verb once wrote:
+    `write_default` re-points only this side, and `write_default_dropped`
+    turns the ADD-time default off for writes.  That is Spark's
     CURRENT_DEFAULT vs EXISTS_DEFAULT split: pre-ADD files keep serving
     the ORIGINAL existence default, already-written files are untouched,
-    only future omitting writes see the new constant."""
+    only later omitting writes see the write-side constant."""
     if not schema:
         return {}
     out: dict[str, object] = {}
@@ -1224,138 +1099,47 @@ def _write_default_map(schema: dict | None) -> dict[str, object]:
     return out
 
 
-def _validate_default(value, type_: str, what: str = "default"):
-    """Type/range/finiteness validation shared by add_column and
-    set_default; returns the JSON-storable form."""
+def _validate_default(value, type_: str):
+    """Type/range/finiteness validation of an add_column DEFAULT;
+    returns the JSON-storable form."""
     import datetime
 
     if type_ == "string":
         if not isinstance(value, str):
-            raise ValueError(f"{what} for string column must be str, got {value!r}")
+            raise ValueError(f"default for string column must be str, got {value!r}")
         return value
     if type_ == "boolean":
         if not isinstance(value, bool):
-            raise ValueError(f"{what} for boolean column must be bool, got {value!r}")
+            raise ValueError(f"default for boolean column must be bool, got {value!r}")
         return value
     if type_ in _INT_BITS:
         if isinstance(value, bool) or not isinstance(value, int):
-            raise ValueError(f"{what} for {type_} column must be int, got {value!r}")
+            raise ValueError(f"default for {type_} column must be int, got {value!r}")
         bound = 1 << (_INT_BITS[type_] - 1)
         if not (-bound <= value < bound):
-            raise ValueError(f"{what} {value} out of range for {type_}")
+            raise ValueError(f"default {value} out of range for {type_}")
         return value
     if type_ in ("float", "double"):
         if isinstance(value, bool) or not isinstance(value, (int, float)):
-            raise ValueError(f"{what} for {type_} column must be numeric, got {value!r}")
+            raise ValueError(f"default for {type_} column must be numeric, got {value!r}")
         stored = float(value)
         if stored != stored or stored in (float("inf"), float("-inf")):
             raise ValueError("NaN/Inf defaults are not representable as SQL literals")
         return stored
     if type_ == "date":
         if not isinstance(value, datetime.date) or isinstance(value, datetime.datetime):
-            raise ValueError(f"{what} for date column must be datetime.date, got {value!r}")
+            raise ValueError(f"default for date column must be datetime.date, got {value!r}")
         return value.isoformat()
     if type_ == "timestamp":
         if not isinstance(value, datetime.datetime):
             raise ValueError(
-                f"{what} for timestamp column must be datetime.datetime, got {value!r}"
+                f"default for timestamp column must be datetime.datetime, got {value!r}"
             )
         return value.isoformat(sep=" ")
     raise ValueError(
-        f"columns of type {type_!r} cannot carry a {what} "
+        f"columns of type {type_!r} cannot carry a default "
         f"(supported: {sorted(_DEFAULT_SQL_TYPES)})"
     )
-
-
-def set_default(path: str, col: str, default) -> int:
-    """ALTER TABLE ALTER COLUMN ... SET DEFAULT — re-points the
-    WRITE-SIDE default only (Spark's CURRENT_DEFAULT): future writes
-    that omit the column materialize the new constant; files already
-    written are untouched, and pre-ADD files KEEP serving the column's
-    original existence default (SET DEFAULT is never retroactive —
-    Spark's documented rule).  Works on any scalar column, including
-    ones added without a default (their pre-ADD files keep serving
-    NULL).  Refused for generated/identity columns (their values are
-    never writer-omittable).  Pure metadata, claims head+1."""
-    head, state = _ddl_head(path, "SET DEFAULT")
-    schema = state.schema
-    names = [f["name"] for f in schema["fields"]]
-    if col not in names:
-        raise ValueError(f"no column {col!r} in {names}")
-    if col in _generated_map(schema):
-        raise ValueError(f"cannot set a default on generated column {col!r}")
-    if col in _identity_map(schema):
-        raise ValueError(f"cannot set a default on identity column {col!r}")
-    typ = next(f["type"] for f in schema["fields"] if f["name"] == col)
-    if not isinstance(typ, str):
-        raise ValueError(f"column {col!r} has a complex type — no default support")
-    stored = _validate_default(default, typ)
-
-    def _set(f):
-        md = {
-            k: v
-            for k, v in (f.get("metadata") or {}).items()
-            if k != "write_default_dropped"  # a re-SET clears the DROP marker
-        }
-        return {**f, "metadata": {**md, "write_default": stored}}
-
-    new_schema = dict(schema)
-    new_schema["fields"] = [
-        (_set(f) if f["name"] == col else f) for f in schema["fields"]
-    ]
-    return commit(
-        path, "meta", [], schema=new_schema,
-        data_change=False, expected_version=head + 1,
-    )
-
-
-def drop_default(path: str, col: str) -> int:
-    """ALTER TABLE ALTER COLUMN ... DROP DEFAULT — removes the
-    WRITE-SIDE default: future omitting writes stage NULL again.  The
-    EXISTENCE default (fixed at ADD COLUMN time) is deliberately kept —
-    pre-ADD files were written under that contract and dropping it
-    would retroactively change committed history (Spark keeps
-    EXISTS_DEFAULT for the column's life too).  Pure metadata."""
-    head, state = _ddl_head(path, "DROP DEFAULT")
-    schema = state.schema
-    names = [f["name"] for f in schema["fields"]]
-    if col not in names:
-        raise ValueError(f"no column {col!r} in {names}")
-    fld = next(f for f in schema["fields"] if f["name"] == col)
-    md = fld.get("metadata") or {}
-    if "write_default" not in md and "default" not in md:
-        raise ValueError(f"column {col!r} has no default to drop")
-    new_md = dict(md)
-    new_md.pop("write_default", None)
-    # an ADD-time default keeps serving pre-ADD files (existence), but
-    # stops materializing on omitting writes: record an explicit
-    # write-side NULL marker by... the absence of write_default with
-    # `default` present means "materialize default", so mark it off.
-    if "default" in md:
-        new_md["write_default_dropped"] = True
-    new_schema = dict(schema)
-    new_schema["fields"] = [
-        ({**f, "metadata": new_md} if f["name"] == col else f)
-        for f in schema["fields"]
-    ]
-    return commit(
-        path, "meta", [], schema=new_schema,
-        data_change=False, expected_version=head + 1,
-    )
-
-
-def table_defaults(path: str, version: int | None = None) -> dict[str, object]:
-    """The EXISTENCE-default map {col: value} AS OF `version` (what
-    pre-ADD files serve); empty when the table has no defaulted
-    columns."""
-    return _default_map(table_schema(path, version))
-
-
-def table_write_defaults(path: str, version: int | None = None) -> dict[str, object]:
-    """The WRITE-SIDE default map {col: value} AS OF `version` (what an
-    omitting write materializes) — differs from table_defaults after an
-    ALTER COLUMN SET/DROP DEFAULT."""
-    return _write_default_map(table_schema(path, version))
 
 
 def _with_exists_defaults(schema: dict) -> dict:
@@ -4701,8 +4485,6 @@ def zorder(
     (interleaved range-bucket ids); the reference engine
     (/root/reference/tinymr.py) has no storage layer — this extends
     the lakehouse surface that replaces its in-memory dicts."""
-    from pyspark.sql import functions as F
-
     if not by or len(set(by)) != len(by):
         raise ValueError("zorder needs a non-empty list of distinct columns")
     if not 2 <= buckets <= 4096:

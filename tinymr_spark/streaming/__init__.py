@@ -13,7 +13,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1216,83 +1215,6 @@ def q159_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = staged("tinymr_spark_semstream", src, build)
     back = spark.read.option("basePath", out).parquet(out)
     return back.drop("batch")
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state v2 API): richer
-# than applyInPandasWithState (q92) — typed ValueState/ListState/MapState
-# handles, timers, TTL.  Its state server speaks protobuf between the JVM
-# and Python; this container has no `google.protobuf`, so the operator is
-# GATED: building the plan raises loudly here, and the composition is
-# covered by an import-gated test that runs wherever protobuf exists.
-# ---------------------------------------------------------------------------
-def tws_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-class _UserTypeStatsProcessor:
-    """StatefulProcessor computing per-user event count, distinct-type
-    count (MapState) and value total (ValueState).  Defined duck-typed at
-    module level so it pickles by reference to executors; subclassing
-    StatefulProcessor happens lazily in user_type_stats_tws."""
-
-    def init(self, handle):
-        self.totals = handle.getValueState("totals", "n bigint, total double")
-        self.per_type = handle.getMapState("per_type", "event_type string", "cnt bigint")
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        n, total = self.totals.get() or (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            for et, c in pdf.groupby("event_type").size().items():
-                prev = (
-                    self.per_type.get_value((et,))
-                    if self.per_type.contains_key((et,))
-                    else None
-                )
-                self.per_type.update_value((et,), (int((prev[0] if prev else 0) + c),))
-        self.totals.update((n, total))
-        n_types = sum(1 for _ in self.per_type.keys())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "n_types": [n_types],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_type_stats_tws(stream: DataFrame) -> DataFrame:
-    """Per-user stats via transformWithStateInPandas.  Raises where the
-    protobuf dependency is missing — loud-seam policy: stubs must fail
-    loudly, never fake (tinybmp.decode_bmp does the same for malformed
-    payloads)."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf (state-server "
-            "protocol), which this container does not ship; use "
-            "stateful_user_totals (applyInPandasWithState, q92) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc = type("UserTypeStats", (StatefulProcessor,), dict(_UserTypeStatsProcessor.__dict__))()
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType="user_id bigint, n_events bigint, n_types int, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import hashlib
 import math
+import re
 import sys
 import time
+from collections import Counter
 from dataclasses import dataclass
 from datetime import date, datetime
 from pathlib import Path
@@ -223,6 +225,47 @@ EXPECTED_DUPS: dict[str, dict[str, int]] = {
 }
 
 
+def dup_signatures(plan: str) -> dict[str, int]:
+    """Duplicated-pipeline smell detector over a FINAL (post-AQE) plan
+    string: Generate/FileScan/Python-eval lines that appear 2+ times,
+    at any depth or branch of the tree, once their ids are normalized —
+    expr ids (`#12`, `#12L`), exchange plan ids (`plan_id=7`),
+    whole-stage-codegen ids (`*(3)`) and the process-wide counter in
+    lambda variable names (`lambda x_21`).
+    Literals, bracketed ones like `tok#3[0]` included, stay as they are.
+
+    Pass the executedPlan of a QueryExecution that has run (collect() on
+    the DataFrame itself — a separate noop-write command builds a fresh
+    QE and leaves isFinalPlan=false).  explain() cannot do this job: AQE
+    ReuseExchange only shows in the executed plan, and the r15 audit
+    found both error directions in initial-plan reasoning — self-joins
+    that DO reuse at runtime, and shared code that column pruning
+    silently re-expands into duplicate full pipelines (q38/q145/q106).
+
+    Spark cuts a scan's file list at `spark.sql.maxMetadataStringLength`
+    (100 chars by default), which can make reads of two versions of one
+    table print alike; raise it before planning for an exact answer.  A
+    returned key drops the scan's table identifier and file list (temp
+    staging roots, data dirs, version hashes), so a pinned result holds
+    on any host; lines are matched with both."""
+    final = plan.split("== Initial Plan ==")[0]
+    sigs = Counter(
+        re.sub(r"(#|plan_id=|\*\(|lambda \w+_)\d+L?", r"\1x", line.lstrip(" :+-"))
+        for line in final.splitlines()
+        if "Generate explode" in line
+        or "FileScan" in line
+        or "ArrowEvalPython" in line
+        or "BatchEvalPython" in line
+    )
+    dups: Counter[str] = Counter()
+    for sig, n in sigs.items():
+        if n > 1:
+            key = re.sub(r"^(FileScan \w+ )[^\[ ]+\[", r"\1[", sig)
+            key = re.sub(r"Location: (\w+)\(.*?(?=, PartitionFilters: )", r"Location: \1", key)
+            dups[key] += n
+    return dict(dups)
+
+
 def norm_cell(v):
     if v is None:
         return "\x00NULL"
@@ -299,8 +342,6 @@ def check_query(spark, con, sf_dir: str, name: str, fn, oracle: str) -> Check:
     """Build `fn` once, read its plan, collect it once, read the final
     plan of the same QueryExecution, and compare with `oracle` on DuckDB
     connection `con`."""
-    from tinymr_spark.plans import dup_signatures
-
     # Spark cuts a scan's file list at 100 chars by default, so reads of
     # two versions of one table would print alike
     key = "spark.sql.maxMetadataStringLength"
