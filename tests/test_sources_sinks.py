@@ -3947,16 +3947,19 @@ def test_minitable_verbs_open_each_tail_record_once(spark, tmp_path, monkeypatch
         ("delete_dv", lambda: minitable.delete_dv(spark, path, [("k", "=", 33)])),
         ("optimize", lambda: minitable.optimize(spark, path, 1 << 30, 1 << 30)),
     ]
-    for name, run in verbs:
-        head = minitable.versions(path)[-1]
-        tail = head - max(minitable.checkpoint_versions(path))
-        del opened[:]
-        assert run() is not None, name
-        assert minitable.versions(path)[-1] == head + 1, name
-        # no measured commit may land on an auto-checkpoint version
-        assert (head + 1) % minitable.AUTO_CHECKPOINT_INTERVAL, name
-        assert len(opened) == tail + 1, (name, tail, opened)
 
+    def measure(verbs):
+        for name, run in verbs:
+            head = minitable.versions(path)[-1]
+            tail = head - max(minitable.checkpoint_versions(path))
+            del opened[:]
+            assert run() is not None, name
+            assert minitable.versions(path)[-1] == head + 1, name
+            # no measured commit may land on an auto-checkpoint version
+            assert (head + 1) % minitable.AUTO_CHECKPOINT_INTERVAL, name
+            assert len(opened) == tail + 1, (name, tail, opened)
+
+    measure(verbs)
     # (16, 19] = the delete, the deletion-vector delete and the optimize
     head = minitable.versions(path)[-1]
     assert head == 19
@@ -3964,6 +3967,132 @@ def test_minitable_verbs_open_each_tail_record_once(spark, tmp_path, monkeypatch
     feed = minitable.change_feed(spark, path, 16, 19)
     assert sorted(r["k"] for r in feed.collect()) == [33, 47]
     assert len(opened) <= (16 - 10) + 3, opened
+
+    # v20 (an auto-checkpoint) and v21 are unmeasured appends, so the
+    # two verbs below each fold a tail of T >= 1 records
+    for lo in (2000, 2010):
+        minitable.write(
+            spark,
+            spark.range(lo, lo + 10).select(
+                F.col("id").alias("k"), (F.col("id") * 0.5).alias("v")
+            ),
+            path,
+            "append",
+            stats_cols=["k"],
+        )
+    assert minitable.checkpoint_versions(path) == [10, 20]
+    measure(
+        [
+            (
+                "replace_where",
+                lambda: minitable.replace_where(
+                    spark,
+                    spark.createDataFrame([(2001, 7.0)], "k bigint, v double"),
+                    path,
+                    [("k", ">=", 2000), ("k", "<", 2010)],
+                ),
+            ),
+            ("zorder", lambda: minitable.zorder(spark, path, ["k", "v"])),
+        ]
+    )
+
+
+def test_minitable_merge_schema_records_no_foreign_default(spark, tmp_path):
+    """merge(merge_schema=True) takes a new column from a frame read off
+    ANOTHER table exactly as write(merge_schema=True) does: the other
+    table's column default (and the scan's EXISTS_DEFAULT stamps) is not
+    recorded, so this table's old rows and later appends that omit the
+    column serve NULL, not the foreign default."""
+    from tinymr_spark.sources import minitable
+
+    other = str(tmp_path / "other")
+    minitable.write(
+        spark, spark.createDataFrame([(9, 1.0)], "k bigint, v double"), other,
+        "overwrite",
+    )
+    minitable.add_column(other, "tier", "string", default="gold")
+    got = {}
+    for verb in ("write", "merge"):
+        path = str(tmp_path / verb)
+        minitable.write(
+            spark,
+            spark.createDataFrame([(5, 2.0), (6, 3.0)], "k bigint, v double"),
+            path,
+            "overwrite",
+        )
+        foreign = minitable.read(spark, other)
+        if verb == "merge":
+            minitable.merge(spark, foreign, path, key="k", merge_schema=True)
+        else:
+            minitable.write(spark, foreign, path, "append", merge_schema=True)
+        minitable.write(
+            spark, spark.createDataFrame([(7, 4.0)], "k bigint, v double"), path,
+            "append", merge_schema=True,
+        )
+        (tier,) = [
+            f for f in minitable.table_schema(path)["fields"] if f["name"] == "tier"
+        ]
+        rows = sorted((r["k"], r["tier"]) for r in minitable.read(spark, path).collect())
+        got[verb] = (tier["metadata"], rows)
+    assert got["write"] == ({}, [(5, None), (6, None), (7, None), (9, "gold")])
+    assert got["merge"] == got["write"]
+
+
+def test_minitable_rewrites_commit_no_zero_row_file(spark, tmp_path):
+    """No rewrite commits a zero-row file: a replace_where with an empty
+    batch (a pure scoped delete) stages no insert file, and a delete_dv
+    materialization whose file lost every row stages no survivor file.
+    Reads and change feeds over those commits are what they were when
+    the empty files were committed."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tinymr_spark.sources import minitable
+
+    def live_rows(path):
+        return [
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f, _st in minitable._replay(path).entries
+        ]
+
+    def feed(path, lo, hi):
+        return sorted(
+            (r["k"], r["_change_type"], r["_commit_version"])
+            for r in minitable.change_feed(spark, path, lo, hi).collect()
+        )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+
+    rw = str(tmp_path / "rw")
+    minitable.write(spark, rows(0, 5).coalesce(1), rw, "overwrite", stats_cols=["k"])
+    minitable.write(spark, rows(5, 10).coalesce(1), rw, "append", stats_cols=["k"])
+    v, info = minitable.replace_where(
+        spark, spark.createDataFrame([], "k bigint, v double"), rw, [("k", "<", 4)]
+    )
+    assert all(n > 0 for n in live_rows(rw)), live_rows(rw)
+    assert info["inserted_files"] == 0, info
+    assert sorted(r["k"] for r in minitable.read(spark, rw).collect()) == list(
+        range(4, 10)
+    )
+    assert feed(rw, 1, v) == [(k, "delete", v) for k in range(4)]
+
+    dv = str(tmp_path / "dv")
+    minitable.write(spark, rows(0, 5).coalesce(1), dv, "overwrite", stats_cols=["k"])
+    minitable.write(spark, rows(5, 10).coalesce(1), dv, "append", stats_cols=["k"])
+    v1, _ = minitable.delete_dv(spark, dv, [("v", "<", 2.0)], materialize_fraction=0.5)
+    v2, info = minitable.delete_dv(
+        spark, dv, [("v", "<", 5.0)], materialize_fraction=0.5
+    )
+    assert all(n > 0 for n in live_rows(dv)), live_rows(dv)
+    assert info["materialized"] == 1, info
+    assert sorted(r["k"] for r in minitable.read(spark, dv).collect()) == list(
+        range(5, 10)
+    )
+    assert feed(dv, 1, v2) == sorted(
+        [(k, "delete", v1) for k in range(2)] + [(k, "delete", v2) for k in range(2, 5)]
+    )
 
 
 def test_minitable_merge_pure_insert_recomputes_generated(spark, tmp_path):

@@ -45,6 +45,22 @@ checkpoint stay exact.  The reference has no I/O at all
 (/root/reference/tinymr.py:156-230); versioned tables are
 beyond-reference surface (SURVEY.md §2.3), the snapshot-isolation
 follow-on the q141/q124 manifest commits pointed at.
+
+Each decision of the write contract has one home, which every verb
+(write, merge, update, delete, delete_dv, replace_where, optimize,
+zorder) calls: `_head` is the one head read a verb or DDL commit plans
+against; `_stage_logical` stages a logical-named frame under physical
+names and the table's partition layout and collects its stats and
+blooms; `_drop_empty_parts` holds the ZERO-ROW RULE — only a
+table-creating or appending `write()` may keep one empty file (a 0-row
+commit must still carry its schema), every rewrite, materialization
+and change-data stage drops them all; `_check_staged` validates CHECK
+constraints and generated columns on the staged bytes;
+`_allocate_identity` hands out identity ids from the recorded
+high-water mark; `_incoming_field` strips another table's contract
+metadata (`_CONTRACT_KEYS`) from an incoming field; and
+`_predicate_tiers` splits a predicate delete's files into untouched,
+whole and straddling.
 """
 
 from __future__ import annotations
@@ -576,9 +592,7 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     re-invokes against the new head."""
     from pyspark.sql import functions as F
 
-    vs0 = versions(path)
-    head = vs0[-1] if vs0 else None
-    state = _replay(path, head)
+    head, state = _head(path)
     cur = state.constraints
     if name in cur:
         raise ValueError(f"constraint {name!r} already exists on {path}")
@@ -666,17 +680,40 @@ def table_generated(path: str, version: int | None = None) -> dict[str, str]:
     return _generated_map(table_schema(path, version))
 
 
-def _generated_checks(schema: dict | None) -> dict[str, str]:
-    """The generation invariant as CHECK-shaped expressions: a row
+def _check_staged(
+    spark: SparkSession,
+    path: str,
+    rels: list[str],
+    schema: dict | None,
+    colmap: dict[str, str],
+    constraints: dict[str, str],
+    gen_cols: list[str],
+    what: str,
+) -> None:
+    """Validate the STAGED files `rels` — the exact bytes that will
+    commit, not the incoming DataFrame (a nondeterministic frame would
+    otherwise stage a different materialization than the one validated)
+    — against the CHECK `constraints` plus the generation invariant of
+    the generated columns `gen_cols`, as CHECK-shaped expressions: a row
     satisfies `col <=> (expr)` (null-safe equality, so a NULL generated
-    value only passes when the expression is NULL too).  Every staged-
-    output validation path (write / merge) enforces these alongside the
-    user CHECK constraints — a writer-supplied value that disagrees
-    with the expression is rejected loudly, Delta's contract."""
-    return {
-        f"generated:{c}": f"`{c}` <=> ({e})"
-        for c, e in _generated_map(schema).items()
+    value only passes when the expression is NULL too; a writer-supplied
+    value that disagrees is rejected loudly, Delta's contract).  The
+    scan is typed by `schema`, the table's (possibly merged) log schema,
+    not inference: a merge_schema append that legitimately omits an
+    evolved column referenced by a constraint must resolve it as NULL
+    (SQL CHECK passes), not fail analysis.  Nothing staged or nothing to
+    check: no scan."""
+    gen = _generated_map(schema)
+    checks = {
+        **constraints,
+        **{f"generated:{c}": f"`{c}` <=> ({gen[c]})" for c in gen_cols},
     }
+    if rels and checks:
+        _enforce_constraints(
+            _read_files(spark, [os.path.join(path, r) for r in rels], schema, colmap),
+            checks,
+            what,
+        )
 
 
 def _identity_map(schema: dict | None) -> dict[str, tuple[int, int]]:
@@ -806,6 +843,30 @@ def _assign_identity(
     return out, last, pinned
 
 
+def _allocate_identity(
+    df: DataFrame,
+    idmap: dict[str, tuple[int, int]],
+    hwm: dict[str, int],
+    only_missing: bool = False,
+) -> tuple[DataFrame, dict[str, int] | None, list[DataFrame]]:
+    """Assign every identity column of `idmap` ({col: (start, step)})
+    densely, continuing from the recorded high-water marks `hwm` (a
+    column without a mark starts at `start`).  Returns (df_with_ids,
+    new marks, pins): the marks are None when no mark moved, because a
+    commit records — and later conflicts on — allocation only when ids
+    were actually handed out; an EMPTY batch (routine in streaming
+    foreachBatch, a pure scoped replace_where, a no-insert merge)
+    commutes with concurrent allocators like any non-allocating commit.
+    The caller MUST unpersist the pins once the output is staged."""
+    new_hwm = dict(hwm)
+    pins: list[DataFrame] = []
+    for c, (i_start, i_step) in sorted(idmap.items()):
+        nxt = hwm.get(c, i_start - i_step) + i_step
+        df, new_hwm[c], pin = _assign_identity(df, c, nxt, i_step, only_missing)
+        pins.append(pin)
+    return df, (new_hwm if new_hwm != hwm else None), pins
+
+
 def table_cluster_by(path: str, version: int | None = None) -> list[str] | None:
     """The table's recorded CLUSTERING KEYS as of `version` (Delta's
     liquid-style clusteringColumns): zorder() records its `by` list,
@@ -867,16 +928,20 @@ def _constraint_mentions(constraints: dict[str, str], col: str) -> list[str]:
     return sorted(n for n, e in constraints.items() if pat.search(e))
 
 
-def _ddl_head(path: str, what: str) -> tuple[int, _State]:
-    """The head version and its one `_replay` state for a column-DDL
-    meta commit (which claims head+1 and needs the schema timeline)."""
+def _head(path: str, ddl: str | None = None) -> tuple[int | None, _State]:
+    """The head version (None before v0) and its one `_replay` state —
+    the single head read every verb plans against and claims head+1
+    from.  `ddl` names a column-DDL meta commit, which also needs a
+    committed table with the schema timeline."""
     vs = versions(path)
     if not vs:
-        raise ValueError(f"minitable {path} has no commits")
+        if ddl:
+            raise ValueError(f"minitable {path} has no commits")
+        return None, _State.empty()
     state = _replay(path, vs[-1])
-    if state.schema is None:
+    if ddl and state.schema is None:
         raise ValueError(
-            f"minitable {path} has no recorded schema — {what} needs "
+            f"minitable {path} has no recorded schema — {ddl} needs "
             "the schema timeline (write with this library first)"
         )
     return vs[-1], state
@@ -893,7 +958,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     a CHECK constraint (the recorded expression would silently break).
     Claims head+1: racing a schema-evolving append must conflict, not
     silently drop its column from the recorded map."""
-    head, state = _ddl_head(path, "column mapping")
+    head, state = _head(path, "column mapping")
     schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
@@ -965,7 +1030,7 @@ def drop_column(path: str, name: str) -> int:
     (write() assigns one when mapping is active), so the dropped data
     never resurrects.  Refused for the last column or a constrained
     column."""
-    head, state = _ddl_head(path, "column mapping")
+    head, state = _head(path, "column mapping")
     schema = state.schema
     names = [f["name"] for f in schema["fields"]]
     if name not in names:
@@ -1175,7 +1240,7 @@ def add_column(path: str, name: str, type_: str, default=None) -> int:
     physical name (a dropped column's data must never resurrect).
     Claims head+1 so a racing schema-evolving commit conflicts instead
     of being silently overwritten."""
-    head, state = _ddl_head(path, "ADD COLUMN")
+    head, state = _head(path, "ADD COLUMN")
     schema, colmap = state.schema, state.colmap
     names = [f["name"] for f in schema["fields"]]
     if name in names:
@@ -1395,12 +1460,14 @@ def _stage(
     path: str,
     kind: str = "part",
     partition_by: list[str] | None = None,
+    keep_one: bool = False,
 ) -> list[str]:
     """Write `df` as new part files under a unique attempt prefix BEFORE
     any commit record exists, so a crash between write and commit leaves
     only invisible orphans (the q141 manifest argument).  Returns the
-    staged relpaths in sorted (deterministic) order.  `kind` names the
-    prefix ("part" data, "cdf" change-data).
+    staged relpaths in sorted (deterministic) order, zero-row files
+    dropped (`keep_one`: see _drop_empty_parts).  `kind` names the
+    prefix ("part" data, "cdf" change-data, "dv" deletion vectors).
 
     `partition_by` lays the files out hive-style (`__p_{col}={val}/`
     directories) by writing a DUPLICATE of each partition column: the
@@ -1447,27 +1514,30 @@ def _stage(
                 unique = f[: -len(".parquet")] + f"-{uuid.uuid4().hex[:8]}.parquet"
                 os.rename(os.path.join(root, f), os.path.join(root, unique))
                 rels.append(os.path.relpath(os.path.join(root, unique), path))
-        return _drop_empty_parts(path, sorted(rels))
+        return _drop_empty_parts(path, sorted(rels), keep_one)
     df.write.mode("overwrite").parquet(staging)
     return _drop_empty_parts(
         path,
         sorted(
             f"{attempt}/{f}" for f in os.listdir(staging) if f.endswith(".parquet")
         ),
+        keep_one,
     )
 
 
-def _drop_empty_parts(path: str, rels: list[str]) -> list[str]:
-    """Remove ZERO-ROW staged part files before they are ever committed —
-    Spark's writer emits one part per task, so a 2-row frame on a
-    4-slot session stages dead files that no later DELETE can ever
-    touch (no rows match) and that accumulate in the log forever (the
-    r13 model fuzz surfaced one; a streaming sink's short micro-batches
-    dribble them structurally).  Row counts come from the parquet
-    FOOTER (O(staged files) metadata reads, no data I/O).  When EVERY
-    staged file is empty (a 0-row frame), ONE empty file is kept so the
-    commit's semantics are unchanged: the table stays readable with its
-    schema, exactly as before."""
+def _drop_empty_parts(path: str, rels: list[str], keep_one: bool) -> list[str]:
+    """THE ZERO-ROW RULE: remove zero-row staged files before they are
+    ever committed — Spark's writer emits one part per task, so a 2-row
+    frame on a 4-slot session stages dead files that no later DELETE
+    can ever touch (no rows match) and that accumulate in the log
+    forever (the DML model fuzz surfaced one; a streaming sink's short
+    micro-batches dribble them structurally; a no-op merge, an empty
+    scoped replace_where or a materialization whose file lost every row
+    would add one per call).  Row counts come from the parquet FOOTER
+    (O(staged files) metadata reads, no data I/O), once per staged file.
+    `keep_one` is write()'s alone: when EVERY staged file is empty (a
+    0-row table creation or append), ONE empty file is kept so the
+    commit still carries the schema and the table stays readable."""
     import pyarrow.parquet as pq
 
     live = [
@@ -1477,12 +1547,52 @@ def _drop_empty_parts(path: str, rels: list[str]) -> list[str]:
     ]
     if live == rels:
         return rels
-    if not live and rels:
-        live = rels[:1]  # keep one: an all-empty stage is a real 0-row write
+    if keep_one and not live:
+        live = rels[:1]  # an all-empty write is a real 0-row write
     for r in rels:
         if r not in live:
             os.remove(os.path.join(path, r))
     return live
+
+
+def _stage_logical(
+    df: DataFrame,
+    path: str,
+    colmap: dict[str, str],
+    partition_by: list[str] | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    kind: str = "part",
+    keep_one: bool = False,
+) -> tuple[list[str], dict[str, dict] | None]:
+    """Stage a LOGICAL-named frame and collect its stats — the one
+    staging step of every write and rewrite.  Data files ALWAYS carry
+    physical names (_to_physical), laid out under the logical
+    `partition_by` (a rewrite passes the table's RECORDED layout:
+    otherwise the hive dirs and exact [v, v] partition stats are lost on
+    the rewritten files and later retention deletes degrade from
+    metadata-only whole-drops to rewrites).  The partition
+    columns join `stats_cols`, so every staged file records its
+    partition values.  Stats and blooms are collected from the footers
+    under physical names; None when no column asks for them.  Returns
+    (relpaths, stats)."""
+    if partition_by:
+        stats_cols = sorted(set(stats_cols or []) | set(partition_by))
+    rels = _stage(
+        _to_physical(df, colmap),
+        path,
+        kind,
+        [colmap.get(c, c) for c in partition_by] if partition_by else None,
+        keep_one,
+    )
+    if not (stats_cols or bloom_cols):
+        return rels, None
+    return rels, _collect_stats(
+        path,
+        rels,
+        [colmap.get(c, c) for c in stats_cols or ()],
+        [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
+    )
 
 
 # --- per-file BLOOM FILTERS for point-lookup skipping -----------------------
@@ -1674,6 +1784,44 @@ def _collect_stats(
     return out
 
 
+# Field-metadata keys that carry a TABLE's write contract: generation
+# and identity specs, the row-tracking marker, and column defaults with
+# the scan's EXISTS_DEFAULT/CURRENT_DEFAULT stamps.  A frame derived from
+# another minitable's read() carries that table's keys through
+# StructType.fromJson; recording them would import a contract the user
+# never declared here (a foreign generation expression recomputed, a
+# foreign default served for old rows and materialized into later
+# appends — Delta likewise strips generation expressions on evolution).
+# THIS table's contracts ride its own log schema (_merge_schemas keeps
+# prev's fields verbatim) and the gen/ident maps stamped at write.
+_CONTRACT_KEYS = frozenset(
+    {
+        "generated",
+        "identity",
+        "row_id",
+        "default",
+        "write_default",
+        "write_default_dropped",
+        "EXISTS_DEFAULT",
+        "CURRENT_DEFAULT",
+    }
+)
+
+
+def _incoming_field(f: dict) -> dict:
+    """A writer's or merge source's field as a table field: nullable
+    (schema evolution itself introduces nulls — old files lack new
+    columns — and writer-side nullability is an artifact of how the
+    DataFrame was derived, not a table contract) and stripped of
+    `_CONTRACT_KEYS`."""
+    md = f.get("metadata") or {}
+    return {
+        **f,
+        "nullable": True,
+        "metadata": {k: v for k, v in md.items() if k not in _CONTRACT_KEYS},
+    }
+
+
 def _merge_schemas(prev: dict, cur: dict) -> dict:
     """SCHEMA EVOLUTION (ADD COLUMN): the union schema — prev's fields in
     their order, then cur's new fields appended.  A column present in
@@ -1794,24 +1942,40 @@ def write(
     commute with everything else."""
 
     def _merged_schema(prev: dict | None, cur: dict) -> dict:
-        if action != "append" or prev is None or prev == cur:
-            return cur
-        cur_names = {f["name"] for f in cur["fields"]}
-        prev_names = {f["name"] for f in prev["fields"]}
-        if not merge_schema and (
-            cur_names != prev_names
-            or _merge_schemas(prev, cur)["fields"] != prev["fields"]
-        ):
-            raise ValueError(
-                f"append schema {sorted(cur_names)} differs from table "
-                f"schema {sorted(prev_names)} — pass merge_schema=True "
-                "for additive evolution"
-            )
-        return _merge_schemas(prev, cur)
+        """The schema this write records on top of `prev` (the read
+        snapshot's, or the head's on rebase), stamped with THIS table's
+        generation/identity contracts from the gen/ident maps — the
+        re-merge on rebase must re-apply them when this write is the one
+        introducing them."""
+        merged = cur
+        if action == "append" and prev is not None and prev != cur:
+            cur_names = {f["name"] for f in cur["fields"]}
+            prev_names = {f["name"] for f in prev["fields"]}
+            merged = _merge_schemas(prev, cur)
+            if not merge_schema and (
+                cur_names != prev_names or merged["fields"] != prev["fields"]
+            ):
+                raise ValueError(
+                    f"append schema {sorted(cur_names)} differs from table "
+                    f"schema {sorted(prev_names)} — pass merge_schema=True "
+                    "for additive evolution"
+                )
+        if not (gen or ident):
+            return merged
+        fields = []
+        for f in merged["fields"]:
+            md = dict(f.get("metadata") or {})
+            if f["name"] in gen:
+                md["generated"] = gen[f["name"]]
+            if f["name"] in ident:
+                s0, s1 = ident[f["name"]]
+                md["identity"] = {"start": s0, "step": s1}
+                if row_tracking and f["name"] == "_row_id":
+                    md["row_id"] = True
+            fields.append({**f, "metadata": md})
+        return {**merged, "fields": fields}
 
-    vs0 = versions(path)
-    read_version = vs0[-1] if vs0 else None
-    base = _replay(path, read_version)
+    read_version, base = _head(path)
     prev_schema, constraints, colmap = base.schema, base.constraints, base.colmap
 
     inherited_layout = False
@@ -1913,7 +2077,7 @@ def write(
                     f"identity column {c!r} of {path} is already declared as "
                     f"{ident_prev[c]} — identity specs are immutable"
                 )
-        elif action == "append" and vs0:
+        elif action == "append" and read_version is not None:
             # Delta's rule: identity columns exist from table creation —
             # introducing one mid-life would leave every existing row
             # (and any concurrently-staged batch) with NULL ids
@@ -1928,78 +2092,23 @@ def write(
     both = sorted(set(ident) & set(gen))
     if both:
         raise ValueError(f"column(s) {both} cannot be both generated and identity")
+    supplied = sorted(set(ident) & set(df.columns))
+    if supplied:
+        raise ValueError(
+            f"identity column {supplied[0]!r} is GENERATED ALWAYS — the "
+            "writer cannot supply its values"
+        )
     # an overwrite is a NEW table: allocation restarts at `start` (the
-    # spec reset and the mark reset travel together)
+    # spec reset and the mark reset travel together).  So an OVERWRITE
+    # that declares identity always records its marks — from the empty
+    # base every mark moves, even for an empty initial batch: the mark
+    # reset IS the record.
     hwm_base = base.identity_hwm if action == "append" else {}
-    ident_hwm_out: dict[str, int] | None = None
-    id_pins: list[DataFrame] = []
-    new_hwm = dict(hwm_base)
-    for c, (i_start, i_step) in sorted(ident.items()):
-        if c in df.columns:
-            raise ValueError(
-                f"identity column {c!r} is GENERATED ALWAYS — the writer "
-                "cannot supply its values"
-            )
-        nxt = hwm_base.get(c, i_start - i_step) + i_step
-        df, last, pin = _assign_identity(df, c, nxt, i_step)
-        id_pins.append(pin)
-        new_hwm[c] = last
-    if new_hwm != hwm_base or (ident and action != "append"):
-        # record allocation only when ids were actually handed out — an
-        # EMPTY append batch (routine in streaming foreachBatch) must
-        # commute with concurrent allocators (review r10, the class
-        # merge and replace_where already guard).  An OVERWRITE that
-        # declares identity always records: the mark reset IS the
-        # record, even for an empty initial batch.
-        ident_hwm_out = new_hwm
+    df, ident_hwm_out, id_pins = _allocate_identity(df, ident, hwm_base)
 
-    # Record all fields nullable: schema evolution itself introduces
-    # nulls (old files lack new columns), and writer-side nullability is
-    # an artifact of how the DataFrame was derived, not a table contract.
     cur = df.schema.jsonValue()
-    for f in cur["fields"]:
-        f["nullable"] = True
-        # STRIP generated/identity marks riding in from the writer's
-        # DataFrame (review r10, same class as merge evolution's fix): a
-        # batch derived from another minitable's read() carries that
-        # table's field metadata through StructType.fromJson, and
-        # recording it would import a contract the user never declared
-        # here.  THIS table's contracts are stamped explicitly below
-        # from the gen/ident maps.
-        f["metadata"] = {
-            k: v
-            for k, v in (f.get("metadata") or {}).items()
-            if k
-            not in (
-                "generated",
-                "identity",
-                "row_id",
-                # a batch derived from a read() carries the scan's
-                # default stamps; THIS table's defaults ride prev_schema
-                # through _merge_schemas, never the writer's frame
-                "default",
-                "write_default",
-                "write_default_dropped",
-                "EXISTS_DEFAULT",
-                "CURRENT_DEFAULT",
-            )
-        }
+    cur["fields"] = [_incoming_field(f) for f in cur["fields"]]
     schema = _merged_schema(prev_schema, cur)
-    if gen or ident:
-        for f in schema["fields"]:
-            if f["name"] in gen:
-                f["metadata"] = {
-                    **(f.get("metadata") or {}),
-                    "generated": gen[f["name"]],
-                }
-            if f["name"] in ident:
-                s0, s1 = ident[f["name"]]
-                f["metadata"] = {
-                    **(f.get("metadata") or {}),
-                    "identity": {"start": s0, "step": s1},
-                }
-                if row_tracking and f["name"] == "_row_id":
-                    f["metadata"]["row_id"] = True
 
     def _evolve_colmap(base_cm: dict, stage_cm: dict | None = None):
         """With mapping active, every schema field needs a physical
@@ -2071,42 +2180,17 @@ def write(
         # after generated-column materialization, so the everyday
         # `day GENERATED AS ...` partition column still inherits.
         partition_by = None
-    if partition_by:
-        stats_cols = sorted(set(stats_cols or []) | set(partition_by))
-    added = _stage(
-        _to_physical(df, stage_map),
-        path,
-        partition_by=(
-            [stage_map.get(c, c) for c in partition_by] if partition_by else None
-        ),
+    added, stats = _stage_logical(
+        df, path, stage_map, partition_by, stats_cols, bloom_cols, keep_one=True
     )
     for pin in id_pins:  # ids are in the staged parquet now
         pin.unpersist(False)
     # writer-PROVIDED generated columns are validated on the staged
     # bytes alongside the CHECK constraints (materialized ones are
     # correct by construction and skip the scan)
-    gen_checks = {f"generated:{c}": f"`{c}` <=> ({gen[c]})" for c in gen_provided}
-    if constraints or gen_checks:
-        # typed by the MERGED log schema, not inference: a merge_schema
-        # append that legitimately omits an evolved column referenced by
-        # a constraint must resolve it as NULL (SQL CHECK passes), not
-        # fail analysis (ADVICE r8)
-        _enforce_constraints(
-            _read_files(
-                spark, [os.path.join(path, a) for a in added], schema, stage_map
-            ),
-            {**constraints, **gen_checks},
-            f"{action} batch",
-        )
-    stats = (
-        _collect_stats(
-            path,
-            added,
-            [stage_map.get(c, c) for c in (stats_cols or [])],
-            [stage_map.get(c, c) for c in bloom_cols] if bloom_cols else None,
-        )
-        if (stats_cols or bloom_cols)
-        else None
+    _check_staged(
+        spark, path, added, schema, stage_map, constraints, gen_provided,
+        f"{action} batch",
     )
     expected = (read_version + 1) if read_version is not None else 0
     while True:
@@ -2124,8 +2208,7 @@ def write(
                 identity_hwm=ident_hwm_out,
             )
         except CommitConflict:
-            head = versions(path)[-1]
-            at_head = _replay(path, head)
+            head, at_head = _head(path)
             head_schema = at_head.schema
             if action == "append":
                 # UNCONDITIONAL identity checks (review r10: a writer
@@ -2164,23 +2247,6 @@ def write(
                     "this write against the new head"
                 )
             schema = _merged_schema(head_schema, cur)
-            if gen or ident:
-                # re-apply generation/identity metadata lost by the
-                # re-merge when THIS write is the one introducing them
-                for f in schema["fields"]:
-                    if f["name"] in gen:
-                        f["metadata"] = {
-                            **(f.get("metadata") or {}),
-                            "generated": gen[f["name"]],
-                        }
-                    if f["name"] in ident:
-                        s0, s1 = ident[f["name"]]
-                        f["metadata"] = {
-                            **(f.get("metadata") or {}),
-                            "identity": {"start": s0, "step": s1},
-                        }
-                        if row_tracking and f["name"] == "_row_id":
-                            f["metadata"]["row_id"] = True
             # staged files are physical-named and stay valid across a
             # concurrent rename (physical names never change); re-derive
             # the recorded map against the head, keeping our already-
@@ -2188,17 +2254,10 @@ def write(
             _sm, colmap_out = _evolve_colmap(at_head.colmap, stage_map)
             if at_head.constraints != constraints:
                 constraints = at_head.constraints
-                if constraints or gen_checks:
-                    _enforce_constraints(
-                        _read_files(
-                            spark,
-                            [os.path.join(path, a) for a in added],
-                            schema,
-                            stage_map,
-                        ),
-                        {**constraints, **gen_checks},
-                        f"{action} batch",
-                    )
+                _check_staged(
+                    spark, path, added, schema, stage_map, constraints,
+                    gen_provided, f"{action} batch",
+                )
             expected = head + 1
 
 
@@ -2843,13 +2902,8 @@ def _merge_impl(
     if bounds[0] is None:
         raise ValueError("merge source is empty — nothing to upsert")
     smin, smax = bounds[0], bounds[1]
-    all_versions = versions(path)
-    if not all_versions:
-        raise ValueError(f"minitable {path} is empty — write() the initial version")
-    read_version = all_versions[-1]
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
-    constraints = state.constraints
     if not entries:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     key_range = [(key, ">=", smin), (key, "<=", smax)]
@@ -2874,21 +2928,7 @@ def _merge_impl(
     schema_base: dict | None = None
     schema_out: dict | None = None
     extras = [
-        # STRIP generated/identity marks from source metadata (review
-        # r10): a source derived from another minitable's read() carries
-        # that table's field metadata through StructType.fromJson, and
-        # importing a foreign generation/identity contract would make
-        # _regen_m recompute expressions the user never declared here
-        # (Delta likewise strips generation expressions on evolution)
-        dict(
-            f,
-            nullable=True,
-            metadata={
-                k: v
-                for k, v in (f.get("metadata") or {}).items()
-                if k not in ("generated", "identity", "row_id")
-            },
-        )
+        _incoming_field(f)
         for f in source.schema.jsonValue()["fields"]
         if f["name"] not in set(cols)
     ]
@@ -3186,102 +3226,41 @@ def _merge_impl(
             )
         if collect_cdf:
             cdf_df = merged.withColumn("_change_type", F.lit("insert"))
-    ident_hwm_out: dict[str, int] | None = None
-    id_pins: list[DataFrame] = []
-    if idmap:
-        # fresh ids for the INSERT rows only (NULL slots), continuing
-        # from the recorded mark; matched/carried rows kept theirs
-        id_hwm_base = state.identity_hwm
-        new_hwm = dict(id_hwm_base)
-        for c, (i_start, i_step) in sorted(idmap.items()):
-            nxt = id_hwm_base.get(c, i_start - i_step) + i_step
-            merged, last, pin = _assign_identity(
-                merged, c, nxt, i_step, only_missing=True
-            )
-            id_pins.append(pin)
-            new_hwm[c] = last
-        if new_hwm != id_hwm_base:
-            # record (and later conflict on) allocation ONLY when ids
-            # were actually handed out — a no-insert merge commutes with
-            # other writers exactly like any non-allocating commit
-            # (review r10: unconditional recording made provably
-            # disjoint merges conflict spuriously)
-            ident_hwm_out = new_hwm
-    # preserve the recorded partition layout on the rewrite (ADVICE r9
-    # — see update()); partition columns join the collected stats so
-    # metadata-only retention keeps working on merged files
-    part_by = state.partition_by
-    if part_by:
-        stats_cols = sorted(set(stats_cols or []) | set(part_by))
-    added = _stage(
-        _to_physical(merged, colmap),
-        path,
-        partition_by=[colmap.get(c, c) for c in part_by] if part_by else None,
+    # fresh ids for the INSERT rows only (NULL slots), continuing from
+    # the recorded mark; matched/carried rows kept theirs
+    merged, ident_hwm_out, id_pins = _allocate_identity(
+        merged, idmap, state.identity_hwm, only_missing=True
+    )
+    # A merge can stage ZERO landing rows (every source row delete-
+    # flagged, or a conditional merge whose matches all passed through);
+    # the staging drops such files like every rewrite's.  The key joins
+    # the collected stats: they prune the next merge's candidates.
+    added, stats = _stage_logical(
+        merged, path, colmap, state.partition_by, [key, *(stats_cols or [])],
+        bloom_cols,
     )
     for pin in id_pins:  # ids are in the staged parquet now
         pin.unpersist(False)
-    # A merge can stage ZERO landing rows (every source row delete-
-    # flagged, or a conditional merge whose matches all passed through):
-    # committing the empty part file would add a dead file to the live
-    # set — and one per no-op merge, forever in every scan's plan.  Drop
-    # empties from the commit (one footer read per staged file, the same
-    # O(files) driver metadata class as _collect_stats below).
-    import pyarrow.parquet as pq
-
-    empties = [
-        a
-        for a in added
-        if pq.ParquetFile(os.path.join(path, a)).metadata.num_rows == 0
-    ]
-    for a in empties:
-        os.remove(os.path.join(path, a))  # never committed: orphan otherwise
-    added = [a for a in added if a not in set(empties)]
-    # CHECK constraints validate the STAGED bytes (the exact rows that
-    # will commit): staged merge output holds only landing rows —
-    # delete-flagged source rows never materialize, and carried-over
-    # target rows passed at their own write time (add_constraint
-    # validates the existing table)
-    gen_checks = _generated_checks(schema)
-    if (constraints or gen_checks) and added:  # zero landing rows: nothing to check
-        _enforce_constraints(
-            _read_files(
-                spark, [os.path.join(path, a) for a in added], schema, colmap
-            ),
-            {**constraints, **gen_checks},
-            "merge output",
-        )
+    # staged merge output holds only landing rows — delete-flagged
+    # source rows never materialize, and carried-over target rows passed
+    # at their own write time (add_constraint validates the existing
+    # table)
+    _check_staged(
+        spark, path, added, schema, colmap, state.constraints, list(gen),
+        "merge output",
+    )
+    # a fully pass-through conditional merge stages no change rows:
+    # `cdf=[file]` would read as "has change data" to the stream
+    # source's no-op-merge skip
     cdf_files = (
-        _stage(_to_physical(cdf_df, colmap), path, kind="cdf")
+        _stage_logical(cdf_df, path, colmap, kind="cdf")[0] or None
         if cdf_df is not None
         else None
     )
-    if cdf_files:
-        # same empties-drop as the data files above (review r12): a
-        # fully pass-through conditional merge stages a ZERO-ROW change
-        # file; committing it would leave a dead file in the log forever
-        # and defeat the stream source's no-op-merge skip (cdf=[file]
-        # reads as "has change data" to a feed that then refuses or
-        # plans a rowless partition per trigger range)
-        cdf_empty = {
-            c
-            for c in cdf_files
-            if pq.ParquetFile(os.path.join(path, c)).metadata.num_rows == 0
-        }
-        for c in cdf_empty:
-            os.remove(os.path.join(path, c))
-        cdf_files = [c for c in cdf_files if c not in cdf_empty] or None
     if joined is not None and collect_cdf:
         joined.unpersist()
     if probe_pin is not None:  # rewrite + cdf staged; probe pairs done
         probe_pin.unpersist(False)
-    want_stats = sorted(
-        {colmap.get(c, c) for c in {key, *(stats_cols or [])}} if colmap
-        else {key, *(stats_cols or [])}
-    )
-    phys_blooms = (
-        [colmap.get(c, c) for c in bloom_cols] if (bloom_cols and colmap) else bloom_cols
-    )
-    stats = _collect_stats(path, added, want_stats, phys_blooms)
     return _commit_serializable(
         path,
         added,
@@ -3349,13 +3328,8 @@ def update(
         raise ValueError("update() needs at least one SET column")
     where = list(where or [])
     _check_where(where, "update")
-    all_versions = versions(path)
-    if not all_versions:
-        raise ValueError(f"minitable {path} is empty — write() the initial version")
-    read_version = all_versions[-1]
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
-    constraints = state.constraints
     if not entries:
         raise ValueError(f"minitable {path} is empty — write() the initial version")
     cols = (
@@ -3396,13 +3370,6 @@ def update(
     if not touched:
         return None
     rows_updated = sum(n for n, _total in per_file.values())
-    # rewrites must preserve the table's recorded partition layout —
-    # otherwise the hive dirs and exact [v, v] partition stats are lost
-    # on the touched files and later retention deletes degrade from
-    # metadata-only whole-drops to rewrites (ADVICE r9)
-    part_by = state.partition_by
-    if part_by:
-        stats_cols = sorted(set(stats_cols or []) | set(part_by))
     base = _read_files_dv(spark, path, touched, schema, dvs, colmap=colmap)
     tgt_types = {f.name: f.dataType for f in base.schema.fields}
     upd = [
@@ -3432,19 +3399,14 @@ def update(
         # pre/post images and the rewrite all derive from the same
         # touched-file scan: persist it so the files are read once
         base = base.persist()
-    added = _stage(
-        _to_physical(_regen(base.select(*upd)), colmap),
-        path,
-        partition_by=[colmap.get(c, c) for c in part_by] if part_by else None,
+    added, stats = _stage_logical(
+        _regen(base.select(*upd)), path, colmap, state.partition_by,
+        stats_cols, bloom_cols,
     )
-    if constraints:
-        _enforce_constraints(
-            _read_files(
-                spark, [os.path.join(path, a) for a in added], schema, colmap
-            ),
-            constraints,
-            "update output",
-        )
+    _check_staged(
+        spark, path, added, schema, colmap, state.constraints, [],
+        "update output",
+    )
     cdf_files = None
     if collect_cdf:
         ct = "_change_type"
@@ -3455,18 +3417,8 @@ def update(
                 _regen(matched.select(*upd)).withColumn(ct, F.lit("update_postimage"))
             )
         )
-        cdf_files = _stage(_to_physical(cdf_df, colmap), path, kind="cdf")
+        cdf_files = _stage_logical(cdf_df, path, colmap, kind="cdf")[0]
         base.unpersist()
-    stats = (
-        _collect_stats(
-            path,
-            added,
-            [colmap.get(c, c) for c in (stats_cols or [])],
-            [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
-        )
-        if (stats_cols or bloom_cols)
-        else None
-    )
     version = _commit_serializable(
         path,
         added,
@@ -3532,6 +3484,20 @@ def _file_fully_matches(stats: dict | None, where: list[tuple]) -> bool:
     return True
 
 
+def _predicate_tiers(
+    entries: list[tuple[str, dict | None]], pw: list[tuple]
+) -> tuple[list[str], list[str]]:
+    """The stats-only half of every predicate delete's plan (delete,
+    replace_where and delete_dv): files whose stats prove no match stay
+    untouched, files that provably match WHOLLY drop by metadata, the
+    rest straddle.  `pw` is the PHYSICAL conjunction.  Returns
+    (whole, straddle)."""
+    candidates = [(f, st) for f, st in entries if _file_survives(st, pw)]
+    whole = [f for f, st in candidates if _file_fully_matches(st, pw)]
+    whole_set = set(whole)  # membership test must stay O(1) at large live-file counts
+    return whole, [f for f, _st in candidates if f not in whole_set]
+
+
 def _plan_predicate_removal(
     spark: SparkSession,
     path: str,
@@ -3543,12 +3509,13 @@ def _plan_predicate_removal(
     pw: list[tuple],
 ) -> tuple[list[str], list[str]]:
     """The three-tier predicate-DELETE plan SHARED by delete() and
-    replace_where() (delete_dv keeps its row-marking variant): files
-    whose stats prove no match stay untouched, files that provably
-    match WHOLLY drop by metadata, and straddlers are probed (predicate
-    columns only, so parquet column pruning applies; file identity via
-    a basename column captured BEFORE the DV join — input_file_name()
-    refuses multi-source plans) so only genuine match-holders rewrite.
+    replace_where() (delete_dv shares _predicate_tiers and marks rows
+    instead of probing): files whose stats prove no match stay
+    untouched, files that provably match WHOLLY drop by metadata, and
+    straddlers are probed (predicate columns only, so parquet column
+    pruning applies; file identity via a basename column captured
+    BEFORE the DV join — input_file_name() refuses multi-source plans)
+    so only genuine match-holders rewrite.
     One definition because the probe's subtleties are correctness-
     critical (review r10): a fix applied to one caller must reach all.
     Returns (whole, touched).
@@ -3558,10 +3525,7 @@ def _plan_predicate_removal(
     not prove it, but the probe just did — rewriting it would stage an
     empty survivor file that lives in the log forever (r13, model-fuzz
     finding)."""
-    candidates = [(f, st) for f, st in entries if _file_survives(st, pw)]
-    whole = [f for f, st in candidates if _file_fully_matches(st, pw)]
-    whole_set = set(whole)  # membership test must stay O(1) at large live-file counts
-    straddle = [f for f, st in candidates if f not in whole_set]
+    whole, straddle = _predicate_tiers(entries, pw)
     touched: list[str] = []
     if straddle:
         counts = _probe_matching_files(
@@ -3628,24 +3592,27 @@ def _stage_survivors(
     spark: SparkSession,
     path: str,
     touched: list[str],
-    schema: dict | None,
-    dvs: dict[str, str],
-    colmap: dict[str, str],
+    state: _State,
     where: list[tuple],
-    phys_parts: list[str] | None,
-) -> list[str]:
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
+) -> tuple[list[str], dict[str, dict] | None]:
     """Rewrite `touched` files WITHOUT their predicate-matching rows —
     the straddler tier's exact path, shared by delete() and
     replace_where().  ~cond is NULL (not True) on rows where a
     predicate column is NULL, but SQL DELETE keeps rows the predicate
     doesn't MATCH and NULL doesn't match — coalesce so NULL-predicate
-    rows survive the rewrite (ADVICE r7).  Stages under the caller's
-    (physical) partition layout."""
+    rows survive the rewrite.  Staged like every rewrite
+    (_stage_logical, the table's recorded layout); returns (relpaths,
+    stats)."""
     from pyspark.sql import functions as F
 
-    survivors = _read_files_dv(spark, path, touched, schema, dvs, colmap=colmap)
-    survivors = survivors.where(~F.coalesce(_where_cond(where), F.lit(False)))
-    return _stage(_to_physical(survivors, colmap), path, partition_by=phys_parts)
+    survivors = _read_files_dv(
+        spark, path, touched, state.schema, state.dvs, colmap=state.colmap
+    ).where(~F.coalesce(_where_cond(where), F.lit(False)))
+    return _stage_logical(
+        survivors, path, state.colmap, state.partition_by, stats_cols, bloom_cols
+    )
 
 
 def delete(
@@ -3685,9 +3652,7 @@ def delete(
     from pyspark.sql import functions as F
 
     _check_where(where, "delete")
-    all_versions = versions(path)
-    read_version = all_versions[-1] if all_versions else None
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
     whole, touched = _plan_predicate_removal(
@@ -3695,21 +3660,13 @@ def delete(
     )
     if not whole and not touched:
         return None
-    added: list[str] = []
-    if touched:
-        # preserve the recorded partition layout on rewrites (ADVICE r9
-        # — see update())
-        part_by = state.partition_by
-        if part_by:
-            stats_cols = sorted(set(stats_cols or []) | set(part_by))
-        added = _stage_survivors(
-            spark, path, touched, schema, dvs, colmap, where,
-            [colmap.get(c, c) for c in part_by] if part_by else None,
-        )
+    added, stats = (
+        _stage_survivors(spark, path, touched, state, where, stats_cols, bloom_cols)
+        if touched
+        else ([], None)
+    )
     cdf_rels: list[str] | None = None
     if collect_cdf:
-        from pyspark.sql import functions as F
-
         old_rows = (
             _read_files_dv(
                 spark, path, whole + touched, schema, dvs, colmap=colmap
@@ -3717,17 +3674,7 @@ def delete(
             .where(F.coalesce(_where_cond(where), F.lit(False)))
             .withColumn("_change_type", F.lit("delete"))
         )
-        cdf_rels = _stage(_to_physical(old_rows, colmap), path, kind="cdf")
-    stats = (
-        _collect_stats(
-            path,
-            added,
-            [colmap.get(c, c) for c in (stats_cols or [])],
-            [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
-        )
-        if added and (stats_cols or bloom_cols)
-        else None
-    )
+        cdf_rels = _stage_logical(old_rows, path, colmap, kind="cdf")[0]
     version = _commit_serializable(
         path,
         added,
@@ -3780,15 +3727,10 @@ def delete_dv(
     from pyspark.sql import functions as F
 
     _check_where(where, "delete")
-    all_versions = versions(path)
-    read_version = all_versions[-1] if all_versions else None
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
-    candidates = [(f, st) for f, st in entries if _file_survives(st, pw)]
-    whole = [f for f, st in candidates if _file_fully_matches(st, pw)]
-    whole_set = set(whole)  # membership test must stay O(1) at large live-file counts
-    straddle = [f for f, st in candidates if f not in whole_set]
+    whole, straddle = _predicate_tiers(entries, pw)
     new_dv_map: dict[str, str] = {}
     rows_marked = 0
     vectorized: list[str] = []
@@ -3848,28 +3790,22 @@ def delete_dv(
     # read.  Footer num_rows is an O(touched files) driver metadata
     # read; the rewrite cost is O(surviving rows of crossed files).
     # `stats_cols`/`bloom_cols` re-collect skipping stats for the
-    # rewritten survivors (a partitioned table passes its partition
-    # columns here so metadata-only pruning survives materialization).
+    # rewritten survivors: without them the materialization would
+    # permanently degrade pruning on exactly the files it rewrote
+    # (stats-less files survive every prune and can never whole-drop).
+    # A file that lost EVERY row stages no survivor file at all.
     materialized: list[str] = []
     added: list[str] = []
     mat_stats: dict | None = None
     if materialize_fraction is not None and new_dv_map:
         import pyarrow.parquet as pq
 
-        by_base = {r.rsplit("/", 1)[-1]: r for r in straddle}
         for rel in sorted(new_dv_map):
             n_total = pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
             n_dead = per_file.get(rel.rsplit("/", 1)[-1], 0)
             if n_total and n_dead / n_total > materialize_fraction:
                 materialized.append(rel)
         if materialized:
-            # preserve the recorded partition layout on materialization
-            # rewrites (ADVICE r9 — see update()); partition columns are
-            # force-included in the re-collected stats so metadata-only
-            # retention drops keep working on the rewritten files
-            part_by = state.partition_by
-            if part_by:
-                stats_cols = sorted(set(stats_cols or []) | set(part_by))
             dv_file = next(iter(new_dv_map.values()))
             survivors = _read_files_dv(
                 spark,
@@ -3879,24 +3815,9 @@ def delete_dv(
                 {rel: dv_file for rel in materialized},
                 colmap=colmap,
             )
-            added = _stage(
-                _to_physical(survivors, colmap),
-                path,
-                partition_by=(
-                    [colmap.get(c, c) for c in part_by] if part_by else None
-                ),
+            added, mat_stats = _stage_logical(
+                survivors, path, colmap, state.partition_by, stats_cols, bloom_cols
             )
-            # re-collect stats for the rewritten survivors: without them
-            # the materialization would permanently degrade pruning on
-            # exactly the files it rewrote (stats-less files survive
-            # every prune and can never whole-drop)
-            if stats_cols or bloom_cols:
-                mat_stats = _collect_stats(
-                    path,
-                    added,
-                    [colmap.get(c, c) for c in (stats_cols or [])],
-                    [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
-                )
             # materialized rels STAY in the recorded map even though the
             # commit removes them: "removed AND mapped" is how the change
             # feed tells a materialization (deletes = the DV diff) from a
@@ -3983,26 +3904,19 @@ def replace_where(
     from pyspark.sql import functions as F
 
     _check_where(where, "replace_where")
-    all_versions = versions(path)
-    if not all_versions:
+    read_version, state = _head(path)
+    if read_version is None:
         raise ValueError(
             f"replace_where needs an existing minitable at {path}; "
             "create the table with write() first"
         )
-    read_version = all_versions[-1]
-    state = _replay(path, read_version)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
-    constraints = state.constraints
     if schema is None:
         raise ValueError(
             f"minitable {path} has no recorded schema — replace_where "
             "cannot validate the batch against the table contract"
         )
     pw = _phys_where(where, colmap)  # stats are keyed by physical names
-    part_by = state.partition_by
-    phys_parts = [colmap.get(c, c) for c in part_by] if part_by else None
-    if part_by:
-        stats_cols = sorted(set(stats_cols or []) | set(part_by))
 
     # -- INSERT side: the table contract applied to the incoming batch --
     gen = _generated_map(schema)
@@ -4025,54 +3939,47 @@ def replace_where(
             f"table schema {sorted(table_cols)} — this verb restates "
             "rows, it does not evolve schema"
         )
-    hwm_base = state.identity_hwm
-    ident_hwm_out: dict[str, int] | None = None
-    id_pins: list[DataFrame] = []
-    new_hwm = dict(hwm_base)
-    for c, (i_start, i_step) in sorted(ident.items()):
-        nxt = hwm_base.get(c, i_start - i_step) + i_step
-        df, last, pin = _assign_identity(df, c, nxt, i_step)
-        id_pins.append(pin)
-        new_hwm[c] = last
-    if new_hwm != hwm_base:
-        # record (and later conflict on) allocation ONLY when ids were
-        # actually handed out — an EMPTY restatement batch (a legal pure
-        # scoped delete) commutes with other writers exactly like any
-        # non-allocating commit (review r10, same class as merge's fix)
-        ident_hwm_out = new_hwm
-    new_rels = _stage(_to_physical(df, colmap), path, partition_by=phys_parts)
+    # an EMPTY restatement batch (a legal pure scoped delete) allocates
+    # nothing and stages nothing: no predicate scan, no insert changes
+    df, ident_hwm_out, id_pins = _allocate_identity(df, ident, state.identity_hwm)
+    new_rels, new_stats = _stage_logical(
+        df, path, colmap, state.partition_by, stats_cols, bloom_cols
+    )
     for pin in id_pins:  # ids are in the staged parquet now
         pin.unpersist(False)
-    staged = _read_files(
-        spark, [os.path.join(path, r) for r in new_rels], schema, colmap
+    staged = None
+    if new_rels:
+        staged = _read_files(
+            spark, [os.path.join(path, r) for r in new_rels], schema, colmap
+        )
+        n_viol = staged.where(~F.coalesce(_where_cond(where), F.lit(False))).count()
+        if n_viol:
+            raise ValueError(
+                f"replace_where batch breaks its own predicate: {n_viol} "
+                f"staged row(s) do not match {where} — every inserted row "
+                "must fall inside the replaced range (Delta's contract)"
+            )
+    _check_staged(
+        spark, path, new_rels, schema, colmap, state.constraints, gen_provided,
+        "replace_where batch",
     )
-    n_viol = staged.where(~F.coalesce(_where_cond(where), F.lit(False))).count()
-    if n_viol:
-        raise ValueError(
-            f"replace_where batch breaks its own predicate: {n_viol} "
-            f"staged row(s) do not match {where} — every inserted row "
-            "must fall inside the replaced range (Delta's contract)"
-        )
-    gen_checks = {f"generated:{c}": f"`{c}` <=> ({gen[c]})" for c in gen_provided}
-    if constraints or gen_checks:
-        _enforce_constraints(
-            staged, {**constraints, **gen_checks}, "replace_where batch"
-        )
 
     # -- DELETE side: the same three cost tiers as delete(), one shared
     # planner (review r10: the probe's subtleties must live once) ------
     whole, touched = _plan_predicate_removal(
         spark, path, entries, schema, dvs, colmap, where, pw
     )
-    rewritten: list[str] = []
-    if touched:
-        rewritten = _stage_survivors(
-            spark, path, touched, schema, dvs, colmap, where, phys_parts
-        )
+    rewritten, rw_stats = (
+        _stage_survivors(spark, path, touched, state, where, stats_cols, bloom_cols)
+        if touched
+        else ([], None)
+    )
 
     cdf_rels: list[str] | None = None
     if collect_cdf:
-        pieces = [staged.withColumn("_change_type", F.lit("insert"))]
+        pieces = []
+        if staged is not None:
+            pieces.append(staged.withColumn("_change_type", F.lit("insert")))
         if whole or touched:
             pieces.append(
                 _read_files_dv(
@@ -4081,23 +3988,21 @@ def replace_where(
                 .where(F.coalesce(_where_cond(where), F.lit(False)))
                 .withColumn("_change_type", F.lit("delete"))
             )
-        cdf_df = pieces[0] if len(pieces) == 1 else pieces[0].unionByName(pieces[1])
-        cdf_rels = _stage(_to_physical(cdf_df, colmap), path, kind="cdf")
-
-    added = rewritten + new_rels
-    stats = (
-        _collect_stats(
-            path,
-            added,
-            [colmap.get(c, c) for c in (stats_cols or [])],
-            [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
+        cdf_rels = (
+            _stage_logical(
+                pieces[0] if len(pieces) == 1 else pieces[0].unionByName(pieces[1]),
+                path,
+                colmap,
+                kind="cdf",
+            )[0]
+            if pieces
+            else []
         )
-        if (stats_cols or bloom_cols)
-        else None
-    )
+
+    stats = {**(rw_stats or {}), **(new_stats or {})}
     version = _commit_serializable(
         path,
-        added,
+        rewritten + new_rels,
         whole + touched,
         read_version,
         pw,  # a concurrent in-scope append would be replaced unseen
@@ -4164,15 +4069,18 @@ def _stage_zordered(
     colmap: dict[str, str],
     partition_by: list[str] | None,
     rows_est: int,
-) -> list[str]:
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+) -> tuple[list[str], dict[str, dict] | None]:
     """The Z-cluster WRITE, shared by zorder() and clustering-aware
     OPTIMIZE: per-column range-bucket boundaries from a bounded
     reservoir sample (RangePartitioner's design — quantile buckets, so
     skew still spreads; NULLs cluster in bucket 0), bucket ids
     interleaved into one Z-value by a pure-integer codegen expression,
     repartitionByRange on (partition cols, Z) so staged files are
-    aligned curve rectangles nested inside the hive layout.  Returns
-    the staged relpaths; the caller owns stats and the commit."""
+    aligned curve rectangles nested inside the hive layout.  Staged
+    like every rewrite (_stage_logical); returns (relpaths, stats), the
+    caller owns the commit."""
     from pyspark.sql import functions as F
 
     bits = (buckets - 1).bit_length()
@@ -4224,10 +4132,9 @@ def _stage_zordered(
         .sortWithinPartitions(*range_keys)
         .drop("__z", *zb_cols)
     )
-    phys_parts = (
-        [colmap.get(c, c) for c in partition_by] if partition_by else None
+    return _stage_logical(
+        clustered, path, colmap, partition_by, stats_cols, bloom_cols
     )
-    return _stage(_to_physical(clustered, colmap), path, partition_by=phys_parts)
 
 
 def optimize(
@@ -4293,9 +4200,7 @@ def optimize(
     never filters rows, any file subset is row-invariant-safe; a file
     with no stats conservatively stays IN scope (it might hold matching
     rows, and over-compacting is harmless)."""
-    all_versions = versions(path)
-    read_version = all_versions[-1] if all_versions else None
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     if where:
         _check_where(where, "optimize")
@@ -4307,8 +4212,6 @@ def optimize(
         # partitioned table must not pack bins across partitions or
         # stage stats-less mixed-value files
         partition_by = state.partition_by
-    if partition_by:
-        stats_cols = sorted(set(stats_cols or []) | set(partition_by))
     phys_parts = (
         [colmap.get(c, c) for c in partition_by] if partition_by else None
     )
@@ -4346,20 +4249,14 @@ def optimize(
         # list recorded by a coarse-bucketed zorder() must not overflow
         # here (review r10: Java masks shifts mod 64, silent garbage)
         zbuckets = 1 << max(1, min(4, 63 // len(cluster_by)))
-        added = _stage_zordered(
+        added, stats = _stage_zordered(
             spark, path, df, cluster_by, zbuckets, n_out, colmap,
-            partition_by, rows_est,
-        )
-        z_stats = sorted(set(stats_cols or []) | set(cluster_by))
-        stats2 = _collect_stats(
-            path, added,
-            [colmap.get(c, c) for c in z_stats],
-            [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
+            partition_by, rows_est, [*(stats_cols or []), *cluster_by], bloom_cols,
         )
         version = _commit_serializable(
             path, added, rels, read_version,
             None,  # row-invariant: concurrent appends commute
-            stats=stats2 or None,
+            stats=stats,
             data_change=False,
             constraint_sensitive=False,
         )
@@ -4389,17 +4286,11 @@ def optimize(
         packed = _read_files_dv(
             spark, path, b, schema, dvs, colmap=colmap
         ).coalesce(1)
-        rels = _stage(_to_physical(packed, colmap), path, partition_by=phys_parts)
+        rels, bin_stats = _stage_logical(
+            packed, path, colmap, partition_by, stats_cols, bloom_cols
+        )
         added.extend(rels)
-        if stats_cols or bloom_cols:
-            stats.update(
-                _collect_stats(
-                    path,
-                    rels,
-                    [colmap.get(c, c) for c in (stats_cols or [])],
-                    [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
-                )
-            )
+        stats.update(bin_stats or {})
     version = _commit_serializable(
         path,
         added,
@@ -4495,9 +4386,7 @@ def zorder(
             f"zorder key too wide: {len(by)} columns x {bits} bits "
             "per column must fit in 63 bits"
         )
-    all_versions = versions(path)
-    read_version = all_versions[-1] if all_versions else None
-    state = _replay(path, read_version)
+    read_version, state = _head(path)
     entries, schema, dvs, colmap = state.entries, state.schema, state.dvs, state.colmap
     partition_by = state.partition_by
     overlap = set(by) & set(partition_by or ())
@@ -4526,18 +4415,11 @@ def zorder(
     rows_est = _rows_estimate(df, by_stats, scope)
     scope_bytes = sum(os.path.getsize(os.path.join(path, r)) for r in scope)
     n_out = n_files or max(1, -(-scope_bytes // target_bytes))
-    added = _stage_zordered(
-        spark, path, df, by, buckets, n_out, colmap, partition_by, rows_est
-    )
-
     # -- stats on the by-columns are the product; commit row-invariant,
     # RECORDING the clustering keys so OPTIMIZE keeps maintaining them.
-    stats_cols = sorted(set(stats_cols or []) | set(by) | set(partition_by or []))
-    stats = _collect_stats(
-        path,
-        added,
-        [colmap.get(c, c) for c in stats_cols],
-        [colmap.get(c, c) for c in bloom_cols] if bloom_cols else None,
+    added, stats = _stage_zordered(
+        spark, path, df, by, buckets, n_out, colmap, partition_by, rows_est,
+        [*(stats_cols or []), *by], bloom_cols,
     )
     version = _commit_serializable(
         path,
@@ -4545,7 +4427,7 @@ def zorder(
         list(scope),
         read_version,
         None,  # row-invariant: concurrent appends commute
-        stats=stats or None,
+        stats=stats,
         data_change=False,
         constraint_sensitive=False,
         cluster_by=list(by),
